@@ -33,8 +33,6 @@ keeps 6 fractional digits with 10× headroom).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,9 +44,7 @@ from pyspark.sql import functions as F
 # graph (1e9 nodes) stays on the spill-safe SMJ/SHJ path. The node count is
 # already measured by every entry point (overflow pre-check / adaptive
 # scale), so the gate costs nothing extra.
-PR_BROADCAST_MAX_NODES = int(
-    os.environ.get("SPARK_GRAFT_PR_BROADCAST_MAX_NODES", "2000000")
-)
+PR_BROADCAST_MAX_NODES = 2_000_000
 
 
 def pagerank(
@@ -85,7 +81,8 @@ def pagerank(
         n_iter, scale, checkpoint_interval, damping_pct
     )
     ed, nodes = _edge_frames(edges)
-    n_nodes = _check_overflow_bound(nodes, scale, damping_pct)
+    n_nodes = nodes.count()
+    _check_overflow_bound(n_nodes, scale, damping_pct)
     base = ((100 - damping_pct) * scale) // 100
     based = nodes.select("node", F.lit(base).cast("long").alias("base"))
     ranks = nodes.select("node", F.lit(scale).cast("long").alias("pr"))
@@ -152,20 +149,19 @@ def pagerank_adaptive(
 
 
 def _check_overflow_bound(
-    mass_carriers: DataFrame, scale: int, damping_pct: int, what: str = "graph"
+    n: int, scale: int, damping_pct: int, what: str = "graph"
 ) -> None:
     """Enforce the module docstring's overflow bound with a NAMED error.
-    Total fixed-point mass never exceeds |mass carriers|·scale (every node
-    for plain PageRank, the SEEDS for the personalized variant — teleport
-    only lands there) and the widest intermediate is
+    Total fixed-point mass never exceeds n·scale, n = |mass carriers|
+    (every node for plain PageRank, the SEEDS for the personalized
+    variant — teleport only lands there) and the widest intermediate is
     ``damping_pct · Σ incoming``, so worst-case mass concentration (a
     mega-hub receiving everything) needs
     ``n · scale · damping_pct < 2**63`` — otherwise ANSI mode raises an
     opaque BIGINT overflow mid-iteration on exactly the skewed graphs the
-    operator exists for (found by the probe's --mega-hub rehearsal). The
-    count is one action on an already-materialized frame; it is RETURNED
-    so callers can reuse it (r13: the broadcast-ranks gate)."""
-    n = mass_carriers.count()
+    operator exists for (found by a mega-hub rehearsal). Callers count
+    the carriers on an already-materialized frame and reuse that count
+    (r13: the broadcast-ranks gate)."""
     if n * scale * damping_pct >= 2**63:
         max_scale = (2**63 - 1) // max(n * damping_pct, 1)
         raise ValueError(
@@ -174,7 +170,6 @@ def _check_overflow_bound(
             f"mass concentration exceeds 2^63. Use scale <= {max_scale} "
             "(rank precision is relative to scale, so 1e6+ is still ample)."
         )
-    return n
 
 
 def _validate_knobs(
@@ -311,12 +306,13 @@ def personalized_pagerank(
     ).localCheckpoint(eager=True)
     # PPR's total mass is bounded by the SEED count (teleport only lands on
     # seeds), not the node count — the plain-pagerank bound would falsely
-    # reject a small whitelist on a huge graph
-    _check_overflow_bound(
-        marked.filter(F.col("_seed")), scale, damping_pct,
-        what="seed whitelist",
-    )
-    n_nodes = marked.count()  # broadcast gate keys on the FULL rank table
+    # reject a small whitelist on a huge graph. The broadcast gate keys on
+    # the FULL rank table: both counts come from one aggregate.
+    counts = marked.agg(
+        F.count(F.lit(1)).alias("n_nodes"), F.count_if("_seed").alias("n_seeds")
+    ).head()
+    _check_overflow_bound(counts.n_seeds, scale, damping_pct, what="seed whitelist")
+    n_nodes = counts.n_nodes
     based = marked.select(
         "node",
         F.when(F.col("_seed"), F.lit(base)).otherwise(F.lit(0))

@@ -1527,7 +1527,8 @@ def ivf_pq_topk(
     # sorted-collect array (silent score corruption). Aggregate into a map
     # keyed by the slot index, then lay out the dense array by slot; empty
     # slots get 0.0 (codes never reference a dropped cell, so the fill
-    # value is unreachable). Per-query work only (|Q| rows); the hot
+    # value is unreachable). try_element_at makes NULL-on-miss explicit,
+    # whatever the ANSI setting. Per-query work only (|Q| rows); the hot
     # per-candidate fold below is unchanged.
     lut_arr = (
         lut.groupBy("q_id")
@@ -1545,7 +1546,7 @@ def ivf_pq_topk(
             "q_id",
             F.transform(
                 F.sequence(F.lit(0), F.lit(PQ_M * PQ_K - 1)),
-                lambda i: F.coalesce(F.element_at("_lutmap", i), F.lit(0.0)),
+                lambda i: F.coalesce(F.try_element_at("_lutmap", i), F.lit(0.0)),
             ).alias("pdots"),
         )
     )

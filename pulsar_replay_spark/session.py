@@ -19,15 +19,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the cores this process may run
+    on — never more threads than the box gives us."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(app_name: str = "pulsar-replay-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -41,15 +47,12 @@ def get_spark(app_name: str = "pulsar-replay-spark", cpus: int | None = None) ->
         # exactly when the per-partition hash table provably fits (the
         # OOM-safety condition), and stays SMJ otherwise. Scale-adaptive by
         # construction: at 100 TB fact⋈fact partitions exceed the threshold
-        # and keep the spill-safe SMJ. THIS FACTORY'S default is 128m
-        # (Spark's own default is 0 = off); env-overridable per deployment.
-        # Memory note: the build side of each concurrent task can hold up to
-        # the threshold, so budget ~threshold × concurrent tasks of executor
-        # memory headroom when raising it.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "128m"),
-        )
+        # and keep the spill-safe SMJ. This factory sets 128m (Spark's own
+        # default is 0 = off). Memory note: the build side of each
+        # concurrent task can hold up to the threshold, so budget
+        # ~threshold × concurrent tasks of executor memory headroom when
+        # raising it.
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # events.ts has shipped both as parquet TIMESTAMP(NANOS) (which the
         # vectorized reader only accepts as a raw long under this conf) and as

@@ -2263,13 +2263,13 @@ def _dup_span_store_meta_write(
 
 
 # bloom_fpp='auto' policy constants, sourced from the measured crossover
-# (tools/bloom_crossover_probe.py, SCALE.md r11): the plain leg's
+# (SCALE.md r11): the plain leg's
 # per-batch DISTINCT SHUFFLE of the index's gh column wins at ≤8.5M index
 # grams (−11%) and loses from 25.4M (+6%, then 2.6× at 50.9M). 16M is the
 # geometric midpoint √(8.5M·25.4M) ≈ 14.7M rounded up — inside the
 # measured bracket, conservative toward plain (the cheap-to-be-wrong
 # side: near the crossover both legs are within ~10%). fpp=0.01 is the
-# probe's measured setting (~1% candidate shuffle, selectivity section).
+# measured setting (~1% candidate shuffle, SCALE.md r11 selectivity table).
 AUTO_BLOOM_MIN_INDEX_GRAMS = 16_000_000
 AUTO_BLOOM_FPP = 0.01
 

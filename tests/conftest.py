@@ -17,8 +17,8 @@ def pytest_configure(config):
         "markers",
         "slow: heavyweight integration tests (multi-second Spark pipelines) "
         "— skipped by default so the suite fits the verification window; "
-        "run them with SPARK_GRAFT_FULL_TESTS=1 (required before any round "
-        "is recorded — see OPTIMIZATION_r13.md)",
+        "set SPARK_GRAFT_FULL_TESTS=1 to run them (required before any "
+        "performance or correctness record is made)",
     )
 
 

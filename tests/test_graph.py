@@ -272,10 +272,33 @@ def test_personalized_pagerank_tiny_scale_keeps_seed_identity(spark):
     assert any(v > 0 for v in got.values())
 
 
+def test_personalized_pagerank_counts_nodes_and_seeds_in_one_action(spark):
+    """The node count (broadcast gate) and the seed count (overflow bound)
+    come from ONE aggregate over the checkpointed marked frame. Before the
+    fold, a separate marked.count() ran next to the seed count: 32 jobs
+    for this call, where each count is two jobs under AQE (shuffle map
+    stage + result). The result stays bit-exact vs the mirror."""
+    from pulsar_replay_spark.operators.graph import personalized_pagerank
+
+    sc = spark.sparkContext
+    edges = [(0, 1), (1, 2), (2, 0), (10, 11), (11, 10), (3, 10)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    seeds = spark.createDataFrame([(0,)], "node long")
+    group = "test-ppr-job-count"
+    sc.setJobGroup(group, "personalized_pagerank")
+    try:
+        ppr = personalized_pagerank(df, seeds, n_iter=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 30
+    got = {r["node"]: r["rank_fp"] for r in ppr.collect()}
+    assert got == naive_personalized_pagerank(edges, [0], n_iter=4)
+
+
 def test_pagerank_overflow_bound_raises_named_error(spark):
     """A scale violating n·scale·damping < 2^63 must fail with the NAMED
     bound error before any iteration runs — not an opaque ANSI BIGINT
-    overflow mid-job on a skewed graph (found by the probe's mega-hub
+    overflow mid-job on a skewed graph (found by a mega-hub
     rehearsal at 300k nodes × 1e12 scale)."""
     from pulsar_replay_spark.operators.graph import pagerank, personalized_pagerank
 

@@ -283,8 +283,8 @@ def test_semantic_dedup_threshold_monotone(spark, embeddings):
 
 
 def test_benched_ann_candidate_fraction_and_recall(spark, embeddings):
-    """Gate on the BENCHED ANN configuration (bench.py's ann_ivf_scaled_topk):
-    corpus-scaled (n_cells, n_probe) must keep the MEASURED candidate-scan
+    """Gate on the served ANN configuration, corpus-scaled IVF: the
+    ivf_params (n_cells, n_probe) must keep the MEASURED candidate-scan
     fraction under 10% of the corpus while holding the recall floor — the r2
     verdict's fix for the 4-bucket LSH headline that scanned ~68%."""
     n = embeddings.count()

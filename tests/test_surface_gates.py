@@ -101,3 +101,20 @@ def test_broker_facing_paths_fail_at_connector_boundary(spark):
     with pytest.raises(Exception) as e2:
         pc.write_replay(env, "pulsar://x:6650", "http://x:8080")
     assert "pulsar" in str(e2.value).lower() or "DATA_SOURCE" in str(e2.value)
+
+
+def test_default_cpus_follows_env_else_affinity(monkeypatch):
+    """get_spark's core count: $SPARK_GRAFT_CPUS when set, else the cores
+    this process may run on — never a fixed count that oversubscribes a
+    smaller box."""
+    import os
+
+    from pulsar_replay_spark.session import default_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert default_cpus() == 5
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert default_cpus() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert default_cpus() == 3

@@ -70,7 +70,7 @@ def test_no_ungated_query_functions():
     listed = {f for _, f in VARIANTS}
     refs = subprocess.run(
         ["grep", "-roh", "-E", r"\bq_?\w+\b",
-         "tests/", "__spark_entry__.py", "bench.py", "tools/",
+         "tests/", "__spark_entry__.py", "tools/",
          "pulsar_replay_spark/"],
         capture_output=True, text=True,
     ).stdout.split()

@@ -677,3 +677,70 @@ def test_semantic_decontaminate_from_index(spark, embeddings, tmp_path):
         ).collect()
     }
     assert any(d == 777777 and bounded[(d, e)] == 1.0 for d, e in bounded)
+
+
+def test_ivf_pq_store_serve_with_dropped_codebook_cell(spark, tmp_path):
+    """Gap-tolerant LUT: when Lloyd refinement drops an empty codebook
+    cell, the served ADC must still read every other (m, cell) slot at
+    its own index. The codebook seed is the PQ_K lowest vec_ids, so
+    giving vec 1 the same subspace-0 block as vec 0 leaves (m=0, cell=1)
+    with no assignments (ties go to the lower cell). With rerank == k and
+    every cell probed, the served ids are the ADC top-k, which a numpy
+    ADC over the store's own codebooks and codes must reproduce (0.0 in
+    the missing slot); the served sims are the exact cosines of those ids."""
+    import numpy as np
+
+    pq_m, pq_k = similarity.PQ_M, similarity.PQ_K
+    k, n_cells = 5, 4
+    rng = np.random.default_rng(11)
+    vecs = rng.standard_normal((200, similarity.DIM)).astype("float32")
+    sub = similarity.DIM // pq_m
+    vecs[1, :sub] = vecs[0, :sub]
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    store = str(tmp_path / "pq_gap")
+    vecstore.ivf_index_build(emb, store, n_cells=n_cells, pq=True)
+
+    books = {
+        (r.m, r.cell): np.asarray(r.centroid, dtype="float64")
+        for r in spark.read.parquet(f"{store}/codebooks").collect()
+    }
+    assert len(books) == pq_m * pq_k - 1 and (0, 1) not in books
+    stored = spark.read.parquet(f"{store}/codes").collect()
+    ids = np.array([r.vec_id for r in stored])
+    packed = np.array([r.packed_codes for r in stored])
+    codes = np.stack([(packed // pq_k**m) % pq_k for m in range(pq_m)], axis=1)
+    approx_norm = np.array([r.approx_norm for r in stored])
+    assert 1 not in set(codes[:, 0])
+
+    q_ids = [3, 50, 97, 144, 191]
+    q = emb.filter(F.col("vec_id").isin(q_ids))
+    served = vecstore.ivf_pq_topk_from_index(
+        spark, store, q, k=k, n_probe=n_cells, rerank=k
+    ).collect()
+
+    x = vecs.astype("float64")
+    unit = x / np.linalg.norm(x, axis=1, keepdims=True)
+    for qid in q_ids:
+        qv = x[qid]
+        lut = np.zeros(pq_m * pq_k)
+        for (m, cell), c in books.items():
+            lut[m * pq_k + cell] = qv[m * sub : (m + 1) * sub] @ c
+        adot = lut[np.arange(pq_m) * pq_k + codes].sum(axis=1)
+        asim = adot / (np.linalg.norm(qv) * approx_norm)
+        asim[ids == qid] = -np.inf
+        order = np.lexsort((ids, -asim))
+        # the top-k boundary is not a float near-tie
+        assert asim[order[k - 1]] - asim[order[k]] > 1e-9
+        want_ids = ids[order[:k]]
+        got = sorted(
+            ((r.rk, r.neighbor_id, r.sim) for r in served if r.q_id == qid)
+        )
+        assert {n for _, n, _ in got} == set(want_ids.tolist()), qid
+        for _, n, sim in got:
+            exact = round(float(unit[qid] @ unit[n]), 3)
+            assert sim == pytest.approx(exact, abs=1e-3)
+        sims = [s for _, _, s in got]
+        assert sims == sorted(sims, reverse=True)

@@ -1,7 +1,7 @@
-"""Dump `.explain("formatted")` for contract/bench queries to plans/<tag>/.
+"""Dump `.explain("formatted")` for contract queries to plans/<tag>/.
 
-Usage: python tools/plan_dump.py <tag> [query ...]     (default: all bench
-headline rows + every registered contract query)
+Usage: python tools/plan_dump.py <tag> [query ...]     (default: every
+registered contract query)
 
 Writes plans/<tag>/<query>_<suffix>.txt where <suffix> comes from
 `--suffix=before|after` or `--suffix before|after` (default `before`).
