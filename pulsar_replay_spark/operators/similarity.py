@@ -12,15 +12,17 @@ Two paths, per the standard scale playbook:
   at 100 TB this is the only tractable shape. Recall vs brute force is pinned
   in tests/test_similarity.py.
 
-Everything is built-in higher-order functions — hyperplanes are *expressions*
-(md5-seeded), so the DuckDB oracle reproduces signatures exactly.
+Hyperplanes are md5-derived constants, so the DuckDB oracle reproduces
+signatures exactly. The scoring, signature and cell-assignment kernels run
+in numpy over Arrow batches, folding every dot product sequentially over
+dims (the IEEE-754 add order of the JVM ``aggregate`` fold and DuckDB's
+loop). Their outputs are pinned for bit equality to the numpy reference in
+``tests/ann_reference.py``.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -53,12 +55,13 @@ _H = _hyperplane_matrix()
 
 def _require_lsh_dim(df: DataFrame, what: str) -> None:
     """The hyperplane pool (and its DuckDB oracle twin) is pinned to
-    ``DIM``-dim embeddings. Any other width silently DEGENERATES instead of
-    erroring — the JVM zip_with pads with nulls (every signature 0: the
-    whole corpus lands in one bucket and the 'ANN' join goes O(N²)), the
-    Arrow kernel truncates or throws an opaque broadcast error. One bounded
-    first() per operator call buys a named failure instead. (Checks the
-    first row; a ragged corpus still fails inside the kernels.)"""
+    ``DIM``-dim embeddings. Any other width DEGENERATES instead of
+    erroring — the projection fold hashes only the first ``DIM`` dims of a
+    wider vector, and a narrower one throws an opaque broadcast error. The
+    two signature producers (``lsh_signatures``, ``lsh_table_buckets``) each
+    pay one bounded first() for a named failure instead, so every LSH
+    operator checks exactly once. (Checks the first row; a ragged corpus
+    still fails inside the kernels.)"""
     row = df.select(F.size(F.col("embedding")).alias("d")).first()
     if row is not None and row["d"] != DIM:
         raise ValueError(
@@ -68,39 +71,17 @@ def _require_lsh_dim(df: DataFrame, what: str) -> None:
         )
 
 
-def lsh_signature(vec: Column) -> Column:
-    """B-bit signature as a long: bit p = [⟨v, h_p⟩ > 0]. Hyperplanes are
-    literal arrays (see ``_hyperplane_matrix``) — the projection is a pure
-    zip_with/aggregate over codegen'd constants."""
-    bits = []
-    for p in range(N_PLANES):
-        plane = F.array(*[F.lit(h) for h in _H[p]])
-        proj = F.aggregate(
-            F.zip_with(vec, plane, lambda x, h: x.cast("double") * h),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj > 0, F.lit(2**p)).otherwise(F.lit(0)))
-    return reduce(lambda a, b: a + b, bits).cast("long")
+def lsh_signatures(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, sig): the B-bit signature for every vector, bit p =
+    [⟨v, h_p⟩ > 0].
 
-
-def lsh_signatures(embeddings: DataFrame, impl: str = "arrow") -> DataFrame:
-    """(vec_id, sig): the B-bit signature for every vector.
-
-    ``impl="arrow"`` (default): the ``nearest_cells`` discipline — the
-    constant planes matrix rides the mapInPandas closure; numpy folds each
-    projection SEQUENTIALLY over dims (identical IEEE order to the JVM
-    zip_with/aggregate, so the strict ``proj > 0`` bit decisions are
-    bit-identical — equality-gated in tests) while vectorizing the
-    N·planes axis. Signatures are integers, so downstream joins/oracles
-    are untouched. ``impl="jvm"`` keeps the expression form as the
-    oracle-reference."""
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(f"impl must be 'arrow' or 'jvm', got {impl!r}")
-    if impl == "jvm":
-        return embeddings.select(
-            "vec_id", lsh_signature(F.col("embedding")).alias("sig")
-        )
+    The ``nearest_cells`` discipline: the constant planes matrix rides the
+    mapInPandas closure; numpy folds each projection SEQUENTIALLY over dims
+    (the IEEE order of the DuckDB oracle's fold, so the strict ``proj > 0``
+    bit decisions are exact — pinned to the numpy reference in tests) while
+    vectorizing the N·planes axis. Raises ValueError at call time unless
+    the embeddings are ``DIM``-dim."""
+    _require_lsh_dim(embeddings, "embeddings")
     import numpy as np
     import pandas as pd
 
@@ -190,14 +171,13 @@ def _fold_dots(Q, N, dim):
 
 
 def _cross_sims_batches(batches, *, q_ids, Q, q_norm, dim, k, chunk=1024):
-    """Arrow-batch kernel behind ``_cross_topk(impl="arrow")``: the query
-    matrix ships in the closure (the broadcast-sized side), each corpus
-    batch folds sims sequentially over dims (bit-identical to the HOF —
-    the ``nearest_cells`` discipline) in corpus-chunks that bound the
-    |Q|×chunk matrix, and each chunk is pre-cut to the lossless 2e-6
-    ε-band around every query's in-chunk k-th best raw sim (see
-    ``_cell_pair_sims``) so ~k rows per (query, chunk) reach the global
-    top-k window. Module-level for unit-testability."""
+    """Arrow-batch kernel behind ``_cross_topk``: the query matrix ships in
+    the closure (the broadcast-sized side), each corpus batch folds sims
+    sequentially over dims (the ``nearest_cells`` discipline) in
+    corpus-chunks that bound the |Q|×chunk matrix, and each chunk is
+    pre-cut to the lossless 2e-6 ε-band around every query's in-chunk k-th
+    best raw sim (see ``_cell_pair_sims``) so ~k rows per (query, chunk)
+    reach the global top-k window. Module-level for unit-testability."""
     import numpy as np
     import pandas as pd
 
@@ -235,7 +215,6 @@ def _cross_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    impl: str = "arrow",
     chunk: int = 1024,
 ) -> DataFrame:
     """Exact cosine top-k of ``queries`` against a DISJOINT corpus — the
@@ -243,71 +222,37 @@ def _cross_topk(
     spaces are different corpora and may collide numerically) and with the
     full round-6 sim kept for downstream margin arithmetic.
 
-    ``impl="arrow"`` (default): the query side — broadcast-sized by this
-    path's contract; the JVM formulation ships the very same rows to every
-    executor via ``F.broadcast`` — collects into a mapInPandas closure and
-    the corpus folds against it in numpy (bit-identical, equality-gated);
-    raw doubles are rounded JVM-side by the same ``F.round``. ``impl="jvm"``
-    keeps the HOF-expression reference formulation. ``chunk`` bounds the
+    The query side — broadcast-sized by this path's contract — collects
+    into a mapInPandas closure and the corpus folds against it in numpy;
+    raw doubles are rounded JVM-side by ``F.round``. ``chunk`` bounds the
     |Q|×chunk sim slab per corpus chunk (exposed for the equality gate to
     force many per-chunk cuts)."""
-    from pulsar_replay_spark.functions.vectors import dot, norm
+    import functools
 
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(f"impl must be 'arrow' or 'jvm', got {impl!r}")
-    if impl == "arrow":
-        import functools
+    import numpy as np
 
-        import numpy as np
-
-        rows = queries.select("vec_id", "embedding").collect()
-        if not rows:
-            spark = corpus.sparkSession
-            return spark.createDataFrame(
-                [], "q_id long, n_id long, sim6 double, rk int"
-            )
-        q_ids = np.array([r["vec_id"] for r in rows], dtype="int64")
-        Q = np.stack([np.asarray(r["embedding"], dtype="float64") for r in rows])
-        dim = Q.shape[1]
-        q_norm = _fold_norms(Q, dim)
-        z = np.flatnonzero(q_norm == 0.0)
-        if len(z):
-            raise ValueError(
-                f"zero-norm query embedding (vec_id={int(q_ids[z[0]])}): "
-                "cosine is undefined — filter degenerate vectors upstream"
-            )
-        run = functools.partial(
-            _cross_sims_batches,
-            q_ids=q_ids,
-            Q=Q,
-            q_norm=q_norm,
-            dim=dim,
-            k=k,
-            chunk=chunk,
+    rows = queries.select("vec_id", "embedding").collect()
+    if not rows:
+        spark = corpus.sparkSession
+        return spark.createDataFrame([], "q_id long, n_id long, sim6 double, rk int")
+    q_ids = np.array([r["vec_id"] for r in rows], dtype="int64")
+    Q = np.stack([np.asarray(r["embedding"], dtype="float64") for r in rows])
+    dim = Q.shape[1]
+    q_norm = _fold_norms(Q, dim)
+    z = np.flatnonzero(q_norm == 0.0)
+    if len(z):
+        raise ValueError(
+            f"zero-norm query embedding (vec_id={int(q_ids[z[0]])}): "
+            "cosine is undefined — filter degenerate vectors upstream"
         )
-        sims = (
-            corpus.select(F.col("vec_id").alias("n_id"), "embedding")
-            .mapInPandas(run, schema="q_id long, n_id long, raw_sim double")
-            .withColumn("sim6", F.round(F.col("raw_sim"), 6))
-        )
-    else:
-        q = queries.select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            norm(F.col("embedding")).alias("q_norm"),
-        )
-        cand = corpus.select(
-            F.col("vec_id").alias("n_id"),
-            F.col("embedding").alias("n_emb"),
-            norm(F.col("embedding")).alias("n_norm"),
-        )
-        sims = cand.join(F.broadcast(q)).withColumn(
-            "sim6",
-            F.round(
-                dot(F.col("q_emb"), F.col("n_emb")) / (F.col("q_norm") * F.col("n_norm")),
-                6,
-            ),
-        )
+    run = functools.partial(
+        _cross_sims_batches, q_ids=q_ids, Q=Q, q_norm=q_norm, dim=dim, k=k, chunk=chunk
+    )
+    sims = (
+        corpus.select(F.col("vec_id").alias("n_id"), "embedding")
+        .mapInPandas(run, schema="q_id long, n_id long, raw_sim double")
+        .withColumn("sim6", F.round(F.col("raw_sim"), 6))
+    )
     w = Window.partitionBy("q_id").orderBy(F.desc("sim6"), "n_id")
     return (
         sims.withColumn("rk", F.row_number().over(w))
@@ -594,7 +539,6 @@ def lsh_table_buckets(
     embeddings: DataFrame,
     n_tables: int = N_TABLES,
     bits_per_table: int = BITS_PER_TABLE,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(vec_id, table, bucket) at an ARBITRARY (L, b) geometry — the
     corpus-scaled generalization of ``lsh_tables``.
@@ -606,53 +550,16 @@ def lsh_table_buckets(
     sliced from one shared long, so L·b is not capped at 63 bits; only
     b ≤ 62 is required.
 
-    ``impl="arrow"``: one corpus pass — numpy folds all L·b projections
-    sequentially over dims (the ``lsh_signatures`` bit-exactness recipe)
-    and emits the exploded (vec_id, table, bucket) rows directly.
-    ``impl="jvm"``: the HOF expression twin, kept as the equality oracle."""
+    One corpus pass: numpy folds all L·b projections sequentially over dims
+    (the ``lsh_signatures`` bit-exactness recipe) and emits the exploded
+    (vec_id, table, bucket) rows directly. Raises ValueError at call time
+    unless the embeddings are ``DIM``-dim."""
     if bits_per_table < 1 or bits_per_table > 62:
         raise ValueError(f"bits_per_table must be in [1, 62], got {bits_per_table}")
     if n_tables < 1:
         raise ValueError(f"n_tables must be >= 1, got {n_tables}")
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(f"impl must be 'arrow' or 'jvm', got {impl!r}")
     _require_lsh_dim(embeddings, "embeddings")
     n_planes = n_tables * bits_per_table
-    if impl == "jvm":
-        h = _hyperplane_matrix(n_planes)
-
-        def proj(p: int) -> Column:
-            plane = F.array(*[F.lit(x) for x in h[p]])
-            return F.aggregate(
-                F.zip_with(F.col("embedding"), plane, lambda x, hh: x.cast("double") * hh),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-
-        tables = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("table"),
-                    reduce(
-                        lambda a, bb: a + bb,
-                        [
-                            F.when(
-                                proj(t * bits_per_table + i) > 0, F.lit(2**i)
-                            ).otherwise(F.lit(0))
-                            for i in range(bits_per_table)
-                        ],
-                    )
-                    .cast("long")
-                    .alias("bucket"),
-                )
-                for t in range(n_tables)
-            ]
-        )
-        return embeddings.select("vec_id", F.explode(tables).alias("tb")).select(
-            "vec_id",
-            F.col("tb.table").alias("table"),
-            F.col("tb.bucket").alias("bucket"),
-        )
 
     import numpy as np
     import pandas as pd
@@ -734,7 +641,6 @@ def lsh_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    impl: str = "arrow",
     n_shards: int | None = None,
     n_tables: int | None = None,
     bits_per_table: int | None = None,
@@ -744,20 +650,18 @@ def lsh_topk(
     table (the scale path — the table join shuffles (table, bucket) keys,
     never the full cross product).
 
-    ``impl="arrow"`` (default): in-bucket pair scoring reuses the IVF
-    cogroup kernel (``_cell_pair_sims``) — same bit-equality discipline and
-    lossless per-group ε-band k-cut; the multi-table collision dedup moves
-    AFTER scoring (duplicate pairs carry identical sims, so the surviving
-    copy is value-identical). The cogroup key is (table, bucket, shard):
+    In-bucket pair scoring reuses the IVF cogroup kernel
+    (``_cell_pair_sims``) — same sequential-fold numerics and lossless
+    per-group ε-band k-cut; the multi-table collision dedup runs AFTER
+    scoring (duplicate pairs carry identical sims, so the surviving copy is
+    value-identical). The cogroup key is (table, bucket, shard):
     with only tables×2^bits bucket keys, an unsharded cogroup would cap
     parallelism at that key count AND np.stack a ~corpus/2^bits-row group
     per Python worker — candidates sub-shard by pmod(n_id, n_shards) and
     queries replicate into every shard, so each (q, n) pair still meets
     exactly once (in n's shard) while group size and parallelism scale with
     ``n_shards`` (size ≈ |corpus|·tables/(keys·n_shards) — raise it until
-    groups fit a worker). ``impl="jvm"``: the HOF broadcast-join reference
-    formulation (no group materialization; parallelism = corpus
-    partitions).
+    groups fit a worker).
 
     ``multiprobe=1`` (Lv et al., VLDB '07 shape, radius-1 sequence): each
     QUERY additionally probes the b buckets at hamming distance 1 from its
@@ -770,26 +674,11 @@ def lsh_topk(
     absorbs the fan-out (measured at 20k: recall 0.28 → 0.37 at ~5%
     scanned).
 
-    ``impl="auto"``: pick by measured bucket occupancy — the Arrow cogroup
-    kernel amortizes per-group Python overhead only when buckets are FAT
-    (one Arrow crossing scores the whole bucket; measured 2.5 s vs JVM
-    9.4 s at the 4×2 geometry, and 3.8 s vs 9.5 s at (7,7) on 2k vectors,
-    occupancy ~16), while DEEP geometries shatter into tens of thousands
-    of ~5-row groups where per-group overhead dominates (15.8 s vs JVM
-    3.6 s at 12×12, occupancy ~5) — occupancy ≥ 8 rows/bucket routes to
-    arrow, below to the JVM broadcast-join form (the cutover sits between
-    the two measured regimes). Both impls are bit-identical
-    (equality-gated), so the switch is plan-only.
-
     Column contract: ``queries`` must be CORPUS MEMBERS — candidates come
     from the corpus bucket table joined on vec_id, so an out-of-corpus
     query vector has no signature and silently yields zero rows. For
     fresh/out-of-corpus query vectors use ``ivf_topk``/``ivf_pq_topk``
     (they signature the query side directly)."""
-    from pulsar_replay_spark.functions.vectors import dot, norm
-
-    if impl not in ("arrow", "jvm", "auto"):
-        raise ValueError(f"impl must be 'arrow', 'jvm' or 'auto', got {impl!r}")
     if (n_tables is None) != (bits_per_table is None):
         raise ValueError("pass n_tables and bits_per_table together (lsh_params)")
     if multiprobe not in (0, 1):
@@ -809,89 +698,54 @@ def lsh_topk(
     # 20k-vector stress). Default geometry keeps the oracle-pinned fixed
     # (4×2) contract tables; a corpus-scaled (n_tables, bits_per_table)
     # from ``lsh_params`` is the serving path (bounded candidate fraction).
-    _require_lsh_dim(embeddings, "embeddings")
+    # Both producers run the DIM check (one first() job).
     t = (
         lsh_tables(embeddings)
         if n_tables is None
         else lsh_table_buckets(embeddings, n_tables, bits_per_table)
     ).localCheckpoint(eager=True)
     b_eff = BITS_PER_TABLE if bits_per_table is None else bits_per_table
-    if impl == "auto":
-        l_eff = N_TABLES if n_tables is None else n_tables
-        # t is already materialized: the count is a cheap scan of the
-        # checkpointed rows, and N = |t| / L
-        occupancy = t.count() / l_eff / (1 << b_eff)
-        impl = "arrow" if occupancy >= 8 else "jvm"
-
-    def expand_probes(qt: DataFrame) -> DataFrame:
-        return _expand_probe_buckets(qt, b_eff) if multiprobe else qt
-
-    if impl == "arrow":
-        cand = embeddings.join(t, "vec_id").select(
-            F.col("vec_id").alias("n_id"),
-            F.col("embedding").alias("n_emb"),
-            "table",
-            "bucket",
-            F.pmod(F.col("vec_id"), F.lit(n_shards)).alias("shard"),
+    cand = embeddings.join(t, "vec_id").select(
+        F.col("vec_id").alias("n_id"),
+        F.col("embedding").alias("n_emb"),
+        "table",
+        "bucket",
+        F.pmod(F.col("vec_id"), F.lit(n_shards)).alias("shard"),
+    )
+    # toDF re-aliases the attribute ids: both cogroup sides descend from
+    # the same checkpointed bucket table, and same-exprId group keys trip
+    # the ambiguous-self-join check.
+    # The sequence bounds cast to LONG so the exploded shard matches the
+    # candidate side's pmod(long) EXACTLY: cogroup aligns each side's
+    # groups by hash-partitioning its own key columns, and Murmur3 of an
+    # INT 14 differs from Murmur3 of a LONG 14 — mismatched key dtypes
+    # silently routed the two sides of the same (table, bucket, shard)
+    # group to different partitions and dropped the pairs. Invisible at
+    # sf0.001/sf0.01 (AQE coalesced the tiny shuffles to one partition,
+    # where alignment is trivial) — caught at sf0.1 by the multi-SF
+    # equality gate this bug added.
+    q = queries.join(t.toDF("vec_id", "table", "bucket"), "vec_id")
+    if multiprobe:
+        q = _expand_probe_buckets(q, b_eff)
+    q = q.select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        "table",
+        "bucket",
+        F.explode(
+            F.sequence(F.lit(0).cast("long"), F.lit(n_shards - 1).cast("long"))
+        ).alias("shard"),
+    )
+    sims = (
+        cand.groupBy("table", "bucket", "shard")
+        .cogroup(q.groupBy("table", "bucket", "shard"))
+        .applyInPandas(
+            lambda left, right: _cell_pair_sims(left, right, k=k),
+            schema="q_id long, n_id long, raw_sim double",
         )
-        # toDF re-aliases the attribute ids: both cogroup sides descend from
-        # the same checkpointed bucket table, and same-exprId group keys trip
-        # the ambiguous-self-join check.
-        # The sequence bounds cast to LONG so the exploded shard matches the
-        # candidate side's pmod(long) EXACTLY: cogroup aligns each side's
-        # groups by hash-partitioning its own key columns, and Murmur3 of an
-        # INT 14 differs from Murmur3 of a LONG 14 — mismatched key dtypes
-        # silently routed the two sides of the same (table, bucket, shard)
-        # group to different partitions and dropped the pairs. Invisible at
-        # sf0.001/sf0.01 (AQE coalesced the tiny shuffles to one partition,
-        # where alignment is trivial) — caught at sf0.1 by the multi-SF
-        # arrow≡jvm gate this bug added.
-        q = expand_probes(
-            queries.join(t.toDF("vec_id", "table", "bucket"), "vec_id")
-        ).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            "table",
-            "bucket",
-            F.explode(
-                F.sequence(F.lit(0).cast("long"), F.lit(n_shards - 1).cast("long"))
-            ).alias("shard"),
-        )
-        sims = (
-            cand.groupBy("table", "bucket", "shard")
-            .cogroup(q.groupBy("table", "bucket", "shard"))
-            .applyInPandas(
-                lambda left, right: _cell_pair_sims(left, right, k=k),
-                schema="q_id long, n_id long, raw_sim double",
-            )
-            .dropDuplicates(["q_id", "n_id"])  # collapse multi-table collisions
-            .withColumn("sim6", F.round(F.col("raw_sim"), 6))
-        )
-    else:
-        cand = embeddings.join(t, "vec_id").select(
-            F.col("vec_id").alias("n_id"),
-            F.col("embedding").alias("n_emb"),
-            norm(F.col("embedding")).alias("n_norm"),
-            "table",
-            "bucket",
-        )
-        q = expand_probes(queries.join(t, "vec_id")).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            norm(F.col("embedding")).alias("q_norm"),
-            "table",
-            "bucket",
-        )
-        pairs = (
-            cand.join(F.broadcast(q), ["table", "bucket"])
-            .filter(F.col("q_id") != F.col("n_id"))
-            .select("q_id", "q_emb", "q_norm", "n_id", "n_emb", "n_norm")
-            .dropDuplicates(["q_id", "n_id"])  # collapse multi-table collisions
-        )
-        sims = pairs.withColumn(
-            "sim6",
-            F.round(dot(F.col("q_emb"), F.col("n_emb")) / (F.col("q_norm") * F.col("n_norm")), 6),
-        )
+        .dropDuplicates(["q_id", "n_id"])  # collapse multi-table collisions
+        .withColumn("sim6", F.round(F.col("raw_sim"), 6))
+    )
     w = Window.partitionBy("q_id").orderBy(F.desc("sim6"), "n_id")
     return (
         sims.withColumn("rk", F.row_number().over(w))
@@ -969,8 +823,8 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame, n_probe: int = 1) ->
     """(vec_id, cell_id) for each vector's ``n_probe`` nearest centroids by
     RAW cosine (cell_id tie-break). ``n_probe == 1`` — the corpus/build side,
     the O(N·cells·dim) term of every IVF/PQ/k-means build — routes through
-    the Arrow-vectorized ``nearest_cells`` (bit-identical to the JVM fold,
-    gated in tests). The multi-probe query side keeps the broadcast join +
+    the Arrow-vectorized ``nearest_cells`` (pinned bit-for-bit to the numpy
+    reference in tests). The multi-probe query side keeps the broadcast join +
     window form: |Q| is small, and the shuffle carries only
     (vec_id, cell_id, sim) — Catalyst prunes the vectors out before the
     exchange."""
@@ -1062,16 +916,17 @@ def assignment_cohesion(embeddings: DataFrame, centroids: DataFrame) -> DataFram
 
 def _cell_pair_sims(cand_pdf, q_pdf, chunk: int = 4096, k: int | None = None):
     """Per-cell raw cosine of every (query, candidate) pair — the cogrouped
-    Arrow kernel behind ``ivf_topk(impl="arrow")``. Module-level (not a
+    Arrow kernel behind ``ivf_topk`` and ``lsh_topk``. Module-level (not a
     closure) so the numerics and the empty-side guard are unit-testable
     without a Spark job.
 
     Bit-exactness discipline (the ``nearest_cells`` recipe): norms and dots
     fold SEQUENTIALLY over dims (``acc += X[:, d] * Y[:, d]``) — the same
-    IEEE-754 add order as the JVM HOF fold — and the raw double is emitted
-    UNROUNDED; the caller applies the same ``F.round`` the JVM path uses, so
-    the two impls are bit-identical (gated in tests). Candidates are scanned
-    in chunks to bound the |Q|×chunk sim matrix under a hot (skewed) cell.
+    IEEE-754 add order as the JVM HOF ``dot`` — and the raw double is
+    emitted UNROUNDED; the caller applies ``F.round`` JVM-side, so every
+    rounded value is pinned bit-for-bit to the numpy reference in tests.
+    Candidates are scanned in chunks to bound the |Q|×chunk sim matrix
+    under a hot (skewed) cell.
 
     ``k``: provably LOSSLESS per-(query, cell) pre-cut (the semantic_dedup
     safe-superset trick): only rows with raw > (cell's k-th best raw for the
@@ -1111,9 +966,9 @@ def _cell_pair_sims(cand_pdf, q_pdf, chunk: int = 4096, k: int | None = None):
     q_norm = _fold_norms(Q, dim)
     q_ids = q_pdf["q_id"].to_numpy(dtype="int64")
     n_ids = cand_pdf["n_id"].to_numpy(dtype="int64")
-    # zero-norm vectors make cosine undefined; the JVM reference impl (and
-    # every other cosine path in this module) raises DIVIDE_BY_ZERO under
-    # ANSI — fail the same way, but with a named, actionable error
+    # zero-norm vectors make cosine undefined; every HOF cosine path in
+    # this module raises DIVIDE_BY_ZERO under ANSI — fail the same way, but
+    # with a named, actionable error
     for side, nrm, ids in (("candidate", n_norm, n_ids), ("query", q_norm, q_ids)):
         z = np.flatnonzero(nrm == 0.0)
         if len(z):
@@ -1126,7 +981,7 @@ def _cell_pair_sims(cand_pdf, q_pdf, chunk: int = 4096, k: int | None = None):
         # dedup BEFORE the cut: duplicate rows in user-supplied cells frames
         # (e.g. unioned index snapshots) would otherwise occupy several of
         # the k per-query slots and inflate kth past a genuine winner — the
-        # jvm impl dedups before ranking and must stay equal
+        # exact top-k dedups before ranking and this cut must stay lossless
         df = df.drop_duplicates(["q_id", "n_id"])
         # NaN sims (zero-norm vectors: 0/0) sort FIRST under the JVM's
         # F.desc, so they are top-k candidates — never cut them, and keep
@@ -1176,7 +1031,6 @@ def ivf_topk(
     centroids: DataFrame | None = None,
     corpus_cells: DataFrame | None = None,
     query_cells: DataFrame | None = None,
-    impl: str = "arrow",
     corpus_assigned: DataFrame | None = None,
 ) -> DataFrame:
     """ANN top-k via IVF: corpus vectors live in their 1 nearest cell; each
@@ -1189,18 +1043,12 @@ def ivf_topk(
     DIFFERENT space than the rerank (e.g. ``pca.pca_ivf_topk`` assigns in
     the reduced space but reranks with the original vectors here).
 
-    ``impl="arrow"`` (default): in-cell pair scoring runs as a cogrouped
-    ``applyInPandas`` over cell_id — each cell's vectors cross Arrow ONCE
-    (never per pair), numpy folds the sims sequentially over dims
-    (bit-identical to the HOF fold — the ``nearest_cells`` discipline,
-    equality-gated), and only (q_id, n_id, raw_sim) reaches the top-k
-    window, so the sort never shuffles embeddings. Measured 19 s → ~4 s on
-    the 10k×10k sweep. ``impl="jvm"``: the HOF-expression reference
-    formulation, kept for the bit-equality gate."""
-    from pulsar_replay_spark.functions.vectors import dot, norm
-
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(f"impl must be 'arrow' or 'jvm', got {impl!r}")
+    In-cell pair scoring runs as a cogrouped ``applyInPandas`` over
+    cell_id — each cell's vectors cross Arrow ONCE (never per pair), numpy
+    folds the sims sequentially over dims (the ``nearest_cells``
+    discipline), and only (q_id, n_id, raw_sim) reaches the top-k window,
+    so the sort never shuffles embeddings. Measured 19 s → ~4 s on the
+    10k×10k sweep against the former HOF broadcast-join formulation."""
     cents = centroids if centroids is not None else ivf_centroids(embeddings, n_cells)
     # ``cells``: optional precomputed (vec_id, cell_id) assignment of EXACTLY
     # this embeddings frame under ``cents`` — assignment is a pure function
@@ -1220,53 +1068,29 @@ def ivf_topk(
     if query_cells is None:
         query_cells = ivf_assign(queries, cents, n_probe=n_probe)
 
-    if impl == "arrow":
-        cand = corpus_assigned.select(
-            F.col("vec_id").alias("n_id"),
-            F.col("embedding").alias("n_emb"),
-            "cell_id",
+    cand = corpus_assigned.select(
+        F.col("vec_id").alias("n_id"),
+        F.col("embedding").alias("n_emb"),
+        "cell_id",
+    )
+    q = queries.join(query_cells, "vec_id").select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        "cell_id",
+    )
+    raw = (
+        cand.groupBy("cell_id")
+        .cogroup(q.groupBy("cell_id"))
+        .applyInPandas(
+            # exactly two params: a third (even defaulted, like the
+            # kernel's chunk knob) makes Spark pass (key, left, right)
+            lambda left, right: _cell_pair_sims(left, right, k=k),
+            schema="q_id long, n_id long, raw_sim double",
         )
-        q = queries.join(query_cells, "vec_id").select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            "cell_id",
-        )
-        raw = (
-            cand.groupBy("cell_id")
-            .cogroup(q.groupBy("cell_id"))
-            .applyInPandas(
-                # exactly two params: a third (even defaulted, like the
-                # kernel's chunk knob) makes Spark pass (key, left, right)
-                lambda left, right: _cell_pair_sims(left, right, k=k),
-                schema="q_id long, n_id long, raw_sim double",
-            )
-        )
-        sims = raw.dropDuplicates(["q_id", "n_id"]).withColumn(
-            "sim6", F.round(F.col("raw_sim"), 6)
-        )
-    else:
-        cand = corpus_assigned.select(
-            F.col("vec_id").alias("n_id"),
-            F.col("embedding").alias("n_emb"),
-            norm(F.col("embedding")).alias("n_norm"),
-            "cell_id",
-        )
-        q = queries.join(query_cells, "vec_id").select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            norm(F.col("embedding")).alias("q_norm"),
-            "cell_id",
-        )
-        pairs = (
-            cand.join(F.broadcast(q), "cell_id")
-            .filter(F.col("q_id") != F.col("n_id"))
-            .drop("cell_id")
-            .dropDuplicates(["q_id", "n_id"])
-        )
-        sims = pairs.withColumn(
-            "sim6",
-            F.round(dot(F.col("q_emb"), F.col("n_emb")) / (F.col("q_norm") * F.col("n_norm")), 6),
-        )
+    )
+    sims = raw.dropDuplicates(["q_id", "n_id"]).withColumn(
+        "sim6", F.round(F.col("raw_sim"), 6)
+    )
     w = Window.partitionBy("q_id").orderBy(F.desc("sim6"), "n_id")
     return (
         sims.withColumn("rk", F.row_number().over(w))
@@ -1682,56 +1506,23 @@ def embedding_near_dup_pairs_lsh(
 # ---------------------------------------------------------------------------
 
 
-def nearest_cells(
-    embeddings: DataFrame, cents: DataFrame, impl: str = "arrow"
-) -> DataFrame:
+def nearest_cells(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, cell_id): each vector's nearest centroid by RAW cosine,
     exact float ties broken by lowest cell_id.
 
-    ``impl="arrow"``: the production path. Centroids collect to the driver —
-    bounded by n_cells (the same already-broadcast-sized relation every IVF
-    path holds in memory) — and ship to executors inside a mapInPandas
-    closure. Per Arrow batch, numpy folds the dot SEQUENTIALLY over dims
-    (``acc += V[:,d]*C[:,d]``) — the identical IEEE-754 add order as the JVM
-    HOF fold and the DuckDB ``list_inner_product`` loop, so the two impls
-    are bit-identical (gated in tests), while vectorizing over the N·cells
-    pair axis: ~100ns/element interpreted HOF becomes SIMD, a measured
+    Centroids collect to the driver — bounded by n_cells (the same
+    already-broadcast-sized relation every IVF path holds in memory) — and
+    ship to executors inside a mapInPandas closure. Per Arrow batch, numpy
+    folds the dot SEQUENTIALLY over dims (``acc += V[:,d]*C[:,d]``) — the
+    IEEE-754 add order of the DuckDB ``list_inner_product`` loop, and of
+    the numpy reference the assignment is pinned to bit-for-bit in
+    tests/ann_reference.py — while vectorizing over the N·cells pair axis:
+    SIMD instead of ~100ns/element interpreted HOF, a measured
     order-of-magnitude win that GROWS with n_cells (the assignment is the
     O(N·cells·dim) term every IVF/k-means/SemDeDup build pays). Cells are
     scanned in ascending-cell_id chunks with a strict ``>`` running argmax,
     so chunking never changes the tie-break; chunk size bounds memory at
-    batch_rows × 4096 doubles however many cells exist.
-
-    ``impl="jvm"``: the oracle-reference formulation (broadcast join + HOF
-    dot + max(struct) argmax) — kept for the bit-equality gate and for
-    environments without Arrow."""
-    from pulsar_replay_spark.functions.vectors import dot, norm
-
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(f"impl must be 'arrow' or 'jvm', got {impl!r}")
-    if impl == "jvm":
-        raw = dot(F.col("embedding"), F.col("centroid")) / (
-            F.col("v_norm") * F.col("c_norm")
-        )
-        return (
-            embeddings.select(
-                "vec_id", "embedding", norm(F.col("embedding")).alias("v_norm")
-            )
-            .join(
-                F.broadcast(
-                    cents.select(
-                        "cell_id", "centroid", norm(F.col("centroid")).alias("c_norm")
-                    )
-                )
-            )
-            .select("vec_id", "cell_id", raw.alias("csim"))
-            .groupBy("vec_id")
-            .agg(
-                F.max(F.struct(F.col("csim"), (-F.col("cell_id")).alias("negc"))).alias("m")
-            )
-            .select("vec_id", (-F.col("m.negc")).alias("cell_id"))
-        )
-
+    batch_rows × 4096 doubles however many cells exist."""
     import functools
 
     import numpy as np
@@ -1744,7 +1535,7 @@ def nearest_cells(
     c_norm = _fold_norms(C, dim)
     # a zero-norm CENTROID would NaN an entire chunk's sims and make the
     # running argmax skip it for every vector — fail loudly on the driver
-    # (the JVM twin raises DIVIDE_BY_ZERO under ANSI; same failure, named)
+    # (a HOF cosine raises DIVIDE_BY_ZERO under ANSI; same failure, named)
     z = np.flatnonzero(c_norm == 0.0)
     if len(z):
         raise ValueError(
@@ -1761,7 +1552,7 @@ def nearest_cells(
 
 
 def _nearest_cells_batches(batches, *, cell_ids, C, c_norm, dim, chunk=4096):
-    """Arrow-batch fold behind ``nearest_cells(impl="arrow")`` — module-level
+    """Arrow-batch fold behind ``nearest_cells`` — module-level
     (not a closure) so the zero-row-batch guard and the sequential-fold
     numerics are unit-testable without a Spark job."""
     import numpy as np

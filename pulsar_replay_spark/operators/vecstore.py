@@ -335,7 +335,6 @@ def ivf_topk_from_index(
     queries: DataFrame,
     k: int = 5,
     n_probe: int = 4,
-    impl: str = "arrow",
 ) -> DataFrame:
     """``ivf_topk`` served from the store — same output contract
     (q_id, neighbor_id, sim, rk), pinned byte-equal to the in-session
@@ -369,7 +368,6 @@ def ivf_topk_from_index(
         k=k,
         centroids=cents,
         query_cells=query_cells,
-        impl=impl,
         corpus_assigned=vectors,
     )
 

@@ -1,13 +1,11 @@
 """Hypothesis property gates for the Arrow scoring kernels: the numpy
-sequential-dim fold must be BIT-identical to a plain-python IEEE-754
-left-fold mirror (the same op order the JVM HOF and DuckDB's
+sequential-dim fold must be BIT-identical to the IEEE-754 left-fold mirror
+in ``tests/ann_reference.py`` (the same op order the JVM HOF and DuckDB's
 list_inner_product execute) on arbitrary float32 inputs, and the lossless
 ε-band cuts must never drop a row the exact rounded top-k needs. Pure
 numpy — no Spark session, so these run in milliseconds."""
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pandas as pd
@@ -18,6 +16,7 @@ from pulsar_replay_spark.operators.similarity import (
     _cell_pair_sims,
     _cross_sims_batches,
 )
+from tests.ann_reference import cosines, spark_round
 
 finite_f32 = st.floats(
     min_value=-100.0, max_value=100.0, allow_nan=False, width=32
@@ -26,20 +25,6 @@ finite_f32 = st.floats(
 
 def _vec(dim):
     return st.lists(finite_f32, min_size=dim, max_size=dim)
-
-
-def _python_cosine(a, b):
-    """The JVM HOF mirror: sequential left-fold in plain python doubles."""
-    dot = 0.0
-    na = 0.0
-    nb = 0.0
-    for x, y in zip(a, b):
-        dot += float(np.float32(x)) * float(np.float32(y))
-    for x in a:
-        na += float(np.float32(x)) * float(np.float32(x))
-    for y in b:
-        nb += float(np.float32(y)) * float(np.float32(y))
-    return dot / (math.sqrt(na) * math.sqrt(nb))
 
 
 @settings(max_examples=40, deadline=None)
@@ -71,9 +56,9 @@ def test_cell_pair_sims_bitwise_matches_python_fold_mirror(corpora):
     got = {(r.q_id, r.n_id): r.raw_sim for r in out.itertuples()}
     assert len(got) == len(cands) * len(qs)
     for qi, qv in enumerate(qs):
-        for ni, nv in enumerate(cands):
-            expected = _python_cosine(qv, nv)
-            assert got[(100 + qi, ni)] == expected  # BIT equality, not approx
+        expected = cosines(qv, cands)
+        for ni in range(len(cands)):
+            assert got[(100 + qi, ni)] == expected[ni]  # BIT equality, not approx
 
 
 @settings(max_examples=25, deadline=None)
@@ -116,9 +101,7 @@ def test_cross_sims_chunked_cut_preserves_exact_rounded_topk(params):
     # the exact rounded-then-ranked top-k over ALL pairs must be a subset of
     # what the chunked ε-band cut emitted
     for qi, qv in enumerate(qs):
-        sims = [
-            (round(_python_cosine(qv, nv), 6), ni) for ni, nv in enumerate(corpus)
-        ]
+        sims = [(spark_round(s, 6), ni) for ni, s in enumerate(cosines(qv, corpus))]
         sims.sort(key=lambda t: (-t[0], t[1]))
         want = {ni for _, ni in sims[:k]}
         have = set(emitted[emitted["q_id"] == qi]["n_id"])

@@ -43,13 +43,21 @@ def test_extract_features_real_decode_raises(spark, documents):
 
 
 def test_feature_pipeline_composes_with_similarity(spark, documents):
-    """Features feed the similarity operators (schema contract)."""
-    from pulsar_replay_spark.operators.similarity import lsh_signature
+    """Features feed the dim-agnostic similarity operators (schema
+    contract): the 8-dim features rank through brute_force_topk and every
+    query gets neighbours."""
+    from pulsar_replay_spark.operators.similarity import brute_force_topk
 
     media = multimodal.as_media(documents.limit(20))
-    feats = multimodal.extract_features(media)
-    sigs = feats.select("doc_id", lsh_signature(F.col("feature")).alias("bucket"))
-    assert sigs.count() == 20
+    feats = multimodal.extract_features(media).select(
+        F.col("doc_id").alias("vec_id"), F.col("feature").alias("embedding")
+    )
+    assert feats.count() == 20
+    queries = feats.orderBy("vec_id").limit(4)
+    q_ids = {r["vec_id"] for r in queries.collect()}
+    got = brute_force_topk(feats, queries, k=3).collect()
+    assert {r["q_id"] for r in got} == q_ids
+    assert len(got) == 3 * len(q_ids)
 
 
 def test_frame_sample_multiplicity_and_determinism(spark, documents):

@@ -1,4 +1,7 @@
-"""Similarity-search tests: brute-force correctness vs numpy, LSH recall."""
+"""Similarity-search tests: brute-force correctness vs numpy, LSH recall,
+and bit equality of the Arrow kernels to the numpy reference in
+``tests/ann_reference.py`` (the ``*_bitwise_equals_jvm`` gates: the
+reference reproduces the JVM fold order and ``F.round``)."""
 
 from __future__ import annotations
 
@@ -7,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators import similarity
+from tests import ann_reference as ref
 
 
 @pytest.fixture(scope="module")
@@ -15,6 +19,38 @@ def emb_np(embeddings):
     ids = np.array([r["vec_id"] for r in rows])
     mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
     return ids, mat
+
+
+def _vecs(df, id_col="vec_id", vec_col="embedding"):
+    return ref.vectors(df.select(id_col, vec_col).collect())
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _ivf_reference(corpus, queries, cents, k, n_probe, corpus_cells=None):
+    """Reference IVF top-k rows: corpus vectors in their nearest cell (or in
+    the given ``corpus_cells`` rows), each query probing its ``n_probe``
+    nearest cells."""
+    vecs, q_vecs = _vecs(corpus), _vecs(queries)
+    cv = _vecs(cents, "cell_id", "centroid")
+    if corpus_cells is None:
+        pairs = [(v, cs[0]) for v, cs in ref.nearest_cells(vecs, cv).items()]
+    else:
+        pairs = [tuple(r) for r in corpus_cells.select("vec_id", "cell_id").collect()]
+    probes = [(q, c) for q, cs in ref.nearest_cells(q_vecs, cv, n_probe).items() for c in cs]
+    return ref.topk_rows(q_vecs, vecs, ref.cell_candidates(pairs, probes), k)
+
+
+def _lsh_reference(corpus, queries, k, n_tables=4, bits=2, multiprobe=0):
+    """Reference LSH top-k rows: candidates share a bucket with the query in
+    any table (plus its one-bit-flip buckets under multiprobe)."""
+    vecs = _vecs(corpus)
+    q_ids = [r["vec_id"] for r in queries.select("vec_id").collect()]
+    buckets = ref.lsh_table_buckets(vecs, n_tables, bits)
+    cands = ref.lsh_candidates(buckets, q_ids, bits, multiprobe)
+    return ref.topk_rows(vecs, vecs, cands, k)
 
 
 def _numpy_topk(ids, mat, q_idx, k=5):
@@ -238,23 +274,21 @@ def test_semantic_dedup_matches_numpy(spark, embeddings, emb_np):
 
 
 def test_nearest_cells_arrow_bitwise_equals_jvm(spark, embeddings):
-    """The Arrow assignment's sequential-over-dims numpy fold must reproduce
-    the JVM HOF fold bit-for-bit — the gate that lets the fast path carry
-    the oracle-checked semantics. Probed at two cell counts (chunked argmax
-    path included via many cells)."""
+    """The Arrow assignment's sequential-over-dims numpy fold must pick the
+    reference's nearest cell (raw cosine, lowest cell_id on ties) for every
+    vector — the gate that lets the fast path carry the oracle-checked
+    semantics. Probed at two cell counts."""
+    vecs = _vecs(embeddings)
     for n_cells in (4, 64):
         cents = similarity.ivf_centroids(embeddings, n_cells).localCheckpoint(
             eager=True
         )
-        a = {
+        got = {
             r["vec_id"]: r["cell_id"]
-            for r in similarity.nearest_cells(embeddings, cents, "arrow").collect()
+            for r in similarity.nearest_cells(embeddings, cents).collect()
         }
-        j = {
-            r["vec_id"]: r["cell_id"]
-            for r in similarity.nearest_cells(embeddings, cents, "jvm").collect()
-        }
-        assert a == j
+        want = ref.nearest_cells(vecs, _vecs(cents, "cell_id", "centroid"))
+        assert got == {v: cs[0] for v, cs in want.items()}
 
 
 def test_semdedup_cells_linear_rule():
@@ -328,7 +362,7 @@ def test_nearest_cells_arrow_plan_is_shuffle_free(spark, embeddings):
     join: the O(N·cells·dim) build term reads the corpus exactly once."""
     cents = similarity.ivf_centroids(embeddings, 16).localCheckpoint(eager=True)
     plan = (
-        similarity.nearest_cells(embeddings, cents, "arrow")
+        similarity.nearest_cells(embeddings, cents)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -339,23 +373,15 @@ def test_nearest_cells_arrow_plan_is_shuffle_free(spark, embeddings):
 
 
 def test_lsh_signatures_arrow_bitwise_equals_jvm(spark, embeddings):
-    """The Arrow signature path's sequential-dim fold must reproduce the JVM
-    expression's projections bit-for-bit — same gate discipline as
-    nearest_cells, here deciding the strict proj > 0 sign bits."""
-    a = {
-        r["vec_id"]: r["sig"]
-        for r in similarity.lsh_signatures(embeddings, "arrow").collect()
-    }
-    j = {
-        r["vec_id"]: r["sig"]
-        for r in similarity.lsh_signatures(embeddings, "jvm").collect()
-    }
-    assert a == j
+    """The Arrow signature path's sequential-dim fold must reproduce the
+    reference projections' strict proj > 0 sign bits for every vector."""
+    got = {r["vec_id"]: r["sig"] for r in similarity.lsh_signatures(embeddings).collect()}
+    assert got == ref.lsh_signatures(_vecs(embeddings))
 
 
 def test_nearest_cells_batch_fold_skips_zero_row_batches(spark):
     """Regression pin for the r5 empty-Arrow-batch guard: the batch fold
-    behind nearest_cells(impl="arrow") must skip zero-row frames (np.stack
+    behind nearest_cells must skip zero-row frames (np.stack
     raises on an empty sequence) and still assign every real row — exercised
     at the unit level because Spark plans in this environment never emit the
     zero-row batches Arrow permits."""
@@ -571,38 +597,21 @@ def test_bitext_candidates_ivf_rejects_shared_prebuilt_index(spark, embeddings):
 
 
 def test_ivf_topk_arrow_bitwise_equals_jvm(spark, embeddings):
-    """The cogrouped Arrow pair-scoring must reproduce the JVM HOF
-    formulation EXACTLY — ids, ranks, and rounded sims — at two geometries
-    (shared prebuilt centroids so both impls rank identical candidate
-    sets; raw doubles fold in the same IEEE order, rounding stays F.round
-    on both sides)."""
-    queries = embeddings.limit(7)
+    """The cogrouped Arrow pair-scoring must reproduce the reference IVF
+    top-k EXACTLY — ids, ranks, and rounded sims — at two geometries over
+    shared prebuilt centroids."""
+    queries = embeddings.limit(7).localCheckpoint(eager=True)
     for n_cells, n_probe in ((4, 2), (16, 4)):
         cents = similarity.ivf_centroids(embeddings, n_cells).localCheckpoint(
             eager=True
         )
-        a = sorted(
-            map(
-                tuple,
-                similarity.ivf_topk(
-                    embeddings, queries, k=5, n_probe=n_probe, centroids=cents
-                ).collect(),
+        got = _rows(
+            similarity.ivf_topk(
+                embeddings, queries, k=5, n_probe=n_probe, centroids=cents
             )
         )
-        j = sorted(
-            map(
-                tuple,
-                similarity.ivf_topk(
-                    embeddings,
-                    queries,
-                    k=5,
-                    n_probe=n_probe,
-                    centroids=cents,
-                    impl="jvm",
-                ).collect(),
-            )
-        )
-        assert a == j and len(a) > 0
+        assert got == _ivf_reference(embeddings, queries, cents, 5, n_probe)
+        assert len(got) > 0
 
 
 def test_cell_pair_sims_unit_kernel():
@@ -710,7 +719,7 @@ def test_ivf_topk_duplicate_index_rows_cannot_inflate_the_cut(spark):
     """Duplicated rows in a user-supplied corpus_cells frame (e.g. unioned
     index snapshots) must not occupy k-cut slots: the kernel dedups
     (q_id, n_id) BEFORE the kth statistic, staying exactly equal to the
-    JVM impl (which dedups before ranking)."""
+    reference top-k (whose candidate sets collapse duplicates)."""
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -722,29 +731,18 @@ def test_ivf_topk_duplicate_index_rows_cannot_inflate_the_cut(spark):
     dup_cells = cells.unionByName(cells)  # planted duplicate index rows
 
     for corpus_cells in (cells, dup_cells):
-        a = sorted(
-            map(
-                tuple,
-                similarity.ivf_topk(
-                    emb, queries, k=3, n_probe=2, centroids=cents,
-                    corpus_cells=corpus_cells,
-                ).collect(),
+        got = _rows(
+            similarity.ivf_topk(
+                emb, queries, k=3, n_probe=2, centroids=cents,
+                corpus_cells=corpus_cells,
             )
         )
-        j = sorted(
-            map(
-                tuple,
-                similarity.ivf_topk(
-                    emb, queries, k=3, n_probe=2, centroids=cents,
-                    corpus_cells=corpus_cells, impl="jvm",
-                ).collect(),
-            )
-        )
-        assert a == j and len(a) > 0
+        want = _ivf_reference(emb, queries, cents, 3, 2, corpus_cells=corpus_cells)
+        assert got == want and len(got) > 0
 
 
 def test_ivf_topk_zero_norm_vector_raises_named_error(spark):
-    """Cosine is undefined for zero-norm vectors; under ANSI the JVM impl
+    """Cosine is undefined for zero-norm vectors; under ANSI a HOF cosine
     raises DIVIDE_BY_ZERO, so the Arrow kernel must fail the same inputs
     LOUDLY (named error), never silently emit or drop NaN pairs."""
     import numpy as np
@@ -772,18 +770,18 @@ def test_bitext_candidates_ivf_half_pinned_geometry_stays_bounded(spark, embeddi
 
 def test_cross_topk_arrow_bitwise_equals_jvm(spark, embeddings):
     """The closure-shipped query matrix + per-chunk ε-band pre-cut must
-    reproduce the JVM broadcast-join formulation EXACTLY (ids, round-6
-    sims, ranks) — including at a tiny chunk size that forces many
-    per-chunk cuts."""
+    reproduce the reference all-pairs top-k EXACTLY (ids, round-6 sims,
+    ranks; no self-pair exclusion across the two corpora) — including at a
+    tiny chunk size that forces many per-chunk cuts."""
     from pulsar_replay_spark.operators.similarity import _cross_topk
 
     a = embeddings.filter(F.col("vec_id") % 2 == 0)
     b = embeddings.filter(F.col("vec_id") % 2 == 1)
-    jvm = sorted(map(tuple, _cross_topk(b, a, 4, impl="jvm").collect()))
-    assert len(jvm) > 0
+    a_vecs, b_vecs = _vecs(a), _vecs(b)
+    want = ref.topk(a_vecs, b_vecs, {q: b_vecs.keys() for q in a_vecs}, 4, exclude_self=False)
+    assert len(want) > 0
     for chunk in (1024, 7):  # 7 << |b| forces many per-chunk cuts end-to-end
-        arrow = sorted(map(tuple, _cross_topk(b, a, 4, chunk=chunk).collect()))
-        assert arrow == jvm
+        assert _rows(_cross_topk(b, a, 4, chunk=chunk)) == want
 
 
 def test_cross_sims_batches_chunking_is_lossless():
@@ -824,23 +822,13 @@ def test_cross_sims_batches_chunking_is_lossless():
 def test_lsh_topk_arrow_bitwise_equals_jvm(spark, embeddings):
     """The cogrouped (table, bucket) Arrow scoring — including the
     score-then-dedup reordering for multi-table collisions and the
-    per-group k-cut — must equal the JVM broadcast-join formulation
-    exactly."""
+    per-group k-cut — must equal the reference LSH top-k exactly."""
     queries = embeddings.filter(F.col("vec_id") % 37 == 0)  # deterministic set
-    j = sorted(
-        map(tuple, similarity.lsh_topk(embeddings, queries, k=5, impl="jvm").collect())
-    )
-    assert len(j) > 0
+    want = _lsh_reference(embeddings, queries, 5)
+    assert len(want) > 0
     for n_shards in (16, 3):  # sharded cogroup must not change results
-        a = sorted(
-            map(
-                tuple,
-                similarity.lsh_topk(
-                    embeddings, queries, k=5, n_shards=n_shards
-                ).collect(),
-            )
-        )
-        assert a == j
+        got = _rows(similarity.lsh_topk(embeddings, queries, k=5, n_shards=n_shards))
+        assert got == want
 
 
 def test_lsh_params_scaling_rule():
@@ -867,21 +855,18 @@ def test_lsh_table_buckets_default_geometry_equals_lsh_tables(spark, embeddings)
     """At the contract (4 tables × 2 bits) geometry the generalized
     per-table packer must be bit-for-bit the fixed shiftright slicing of the
     shared signature (same md5 plane pool, same global plane indices) — the
-    oracle-pinned ann_lsh_topk row depends on it; and the Arrow packer must
-    equal its JVM expression twin at a non-default geometry too."""
-    new = sorted(map(tuple, similarity.lsh_table_buckets(embeddings, 4, 2).collect()))
-    old = sorted(map(tuple, similarity.lsh_tables(embeddings).collect()))
+    oracle-pinned ann_lsh_topk row depends on it; and the packer must equal
+    the reference buckets at a non-default geometry too."""
+    new = _rows(similarity.lsh_table_buckets(embeddings, 4, 2))
+    old = _rows(similarity.lsh_tables(embeddings))
     assert new == old and len(new) > 0
-    a = sorted(
-        map(tuple, similarity.lsh_table_buckets(embeddings, 3, 5).collect())
+    got = _rows(similarity.lsh_table_buckets(embeddings, 3, 5))
+    want = sorted(
+        (v, t, b)
+        for v, bs in ref.lsh_table_buckets(_vecs(embeddings), 3, 5).items()
+        for t, b in enumerate(bs)
     )
-    j = sorted(
-        map(
-            tuple,
-            similarity.lsh_table_buckets(embeddings, 3, 5, impl="jvm").collect(),
-        )
-    )
-    assert a == j and len(a) > 0
+    assert got == want and len(got) > 0
 
 
 def test_lsh_scaled_geometry_fraction_and_near_dup_recall(spark, embeddings):
@@ -929,40 +914,21 @@ def test_lsh_topk_arrow_equals_jvm_at_multi_partition_scale(spark):
     landed on different partitions and the pairs silently vanished. AQE
     coalesced the sf0.001/sf0.01 shuffles to ONE partition where alignment
     is trivial — so this gate runs at sf0.1 (2000 vectors, real multi-
-    partition shuffles) at BOTH geometries and across shard counts."""
+    partition shuffles) at BOTH geometries and across shard counts, each
+    against the reference top-k."""
     emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 200 == 0)
-    a = sorted(map(tuple, similarity.lsh_topk(emb, queries, k=5).collect()))
-    j = sorted(
-        map(tuple, similarity.lsh_topk(emb, queries, k=5, impl="jvm").collect())
-    )
-    assert a == j and len(a) > 0
+    got = _rows(similarity.lsh_topk(emb, queries, k=5))
+    assert got == _lsh_reference(emb, queries, 5) and len(got) > 0
     length, b = similarity.lsh_params(emb.count())
-    sa = sorted(
-        map(
-            tuple,
+    want = _lsh_reference(emb, queries, 5, length, b)
+    for n_shards in (None, 1):
+        got = _rows(
             similarity.lsh_topk(
-                emb, queries, k=5, n_tables=length, bits_per_table=b
-            ).collect(),
+                emb, queries, k=5, n_tables=length, bits_per_table=b, n_shards=n_shards
+            )
         )
-    )
-    sj = sorted(
-        map(
-            tuple,
-            similarity.lsh_topk(
-                emb, queries, k=5, impl="jvm", n_tables=length, bits_per_table=b
-            ).collect(),
-        )
-    )
-    s1 = sorted(
-        map(
-            tuple,
-            similarity.lsh_topk(
-                emb, queries, k=5, n_tables=length, bits_per_table=b, n_shards=1
-            ).collect(),
-        )
-    )
-    assert sa == sj == s1 and len(sa) > 0
+        assert got == want and len(got) > 0
 
 
 @pytest.mark.slow
@@ -970,8 +936,8 @@ def test_lsh_multiprobe_expands_candidates_losslessly(spark, embeddings):
     """Radius-1 multiprobe strictly grows the candidate set, so every rank's
     sim is monotonically >= the single-probe one (a superset can only
     improve top-k), measured candidate fraction stays under the
-    multiprobe-aware lsh_params bound, arrow == jvm, and radius > 1 is
-    rejected."""
+    multiprobe-aware lsh_params bound, the rows equal the reference
+    multiprobe top-k, and radius > 1 is rejected."""
     n = embeddings.count()
     length, b = similarity.lsh_params(n, multiprobe=1)
     assert length * (b + 1) / 2**b <= 1 / 16 + 1e-12
@@ -995,36 +961,11 @@ def test_lsh_multiprobe_expands_candidates_losslessly(spark, embeddings):
     assert len(probed) >= len(base)
     for key, sim in base.items():
         assert key in probed and probed[key] >= sim, key
-    jvm = {
-        (r["q_id"], r["rk"]): r["sim"]
-        for r in similarity.lsh_topk(
-            embeddings, queries, k=3, impl="jvm",
-            n_tables=length, bits_per_table=b, multiprobe=1,
-        ).collect()
-    }
-    assert jvm == probed
+    want = _lsh_reference(embeddings, queries, 3, length, b, multiprobe=1)
+    assert _rows(probed_df) == want
 
     with pytest.raises(ValueError, match="multiprobe"):
         similarity.lsh_topk(embeddings, queries, multiprobe=2)
-
-
-def test_lsh_impl_auto_routes_by_bucket_occupancy(spark, embeddings):
-    """impl='auto' must pick the Arrow cogroup kernel for FAT buckets (the
-    4x2 geometry: one Arrow crossing per bucket amortizes) and the JVM
-    broadcast-join form for THIN ones (deep geometry: per-group Python
-    overhead dominates) — visible in the physical plan; values are
-    impl-invariant by the equality gates."""
-    queries = embeddings.filter(F.col("vec_id") % 100 == 0)
-    fat = similarity.lsh_topk(embeddings, queries, k=3, impl="auto")
-    assert "FlatMapCoGroupsInPandas" in (
-        fat._jdf.queryExecution().executedPlan().toString()
-    )
-    thin = similarity.lsh_topk(
-        embeddings, queries, k=3, impl="auto", n_tables=12, bits_per_table=12
-    )
-    assert "FlatMapCoGroupsInPandas" not in (
-        thin._jdf.queryExecution().executedPlan().toString()
-    )
 
 
 def test_ivf_topk_arrow_equals_jvm_at_multi_partition_scale(spark):
@@ -1039,24 +980,12 @@ def test_ivf_topk_arrow_equals_jvm_at_multi_partition_scale(spark):
     cents = similarity.kmeans_refine(emb, n_cells, n_iter=1).localCheckpoint(
         eager=True
     )
-    a = sorted(
-        map(
-            tuple,
-            similarity.ivf_topk(
-                emb, queries, k=5, n_cells=n_cells, n_probe=n_probe, centroids=cents
-            ).collect(),
+    got = _rows(
+        similarity.ivf_topk(
+            emb, queries, k=5, n_cells=n_cells, n_probe=n_probe, centroids=cents
         )
     )
-    j = sorted(
-        map(
-            tuple,
-            similarity.ivf_topk(
-                emb, queries, k=5, n_cells=n_cells, n_probe=n_probe,
-                centroids=cents, impl="jvm",
-            ).collect(),
-        )
-    )
-    assert a == j and len(a) > 0
+    assert got == _ivf_reference(emb, queries, cents, 5, n_probe) and len(got) > 0
 
 
 def test_incremental_semantic_dedup_equals_full_recompute(spark, embeddings):
@@ -1107,17 +1036,43 @@ def test_incremental_semantic_dedup_equals_full_recompute(spark, embeddings):
 
 def test_lsh_rejects_non_contract_dim(spark):
     """The hyperplane pool (and its DuckDB oracle twin) is pinned to 64-dim
-    embeddings; any other width previously DEGENERATED silently (all
-    signatures 0 -> one bucket -> O(N^2) join). Named error now."""
+    embeddings; any other width previously DEGENERATED silently (a wider
+    vector hashed only its first 64 dims, a narrower one failed with an
+    opaque broadcast error). Both signature producers raise a named error
+    at call time, so every LSH operator does."""
     from pulsar_replay_spark.operators import similarity
 
-    bad = spark.createDataFrame(
-        [(i, [0.1] * 128) for i in range(4)], "vec_id long, embedding array<float>"
-    )
+    def frame(dim):
+        return spark.createDataFrame(
+            [(i, [0.1] * dim) for i in range(4)], "vec_id long, embedding array<float>"
+        )
+
+    bad = frame(128)
     with pytest.raises(ValueError, match="pinned to 64-dim"):
         similarity.lsh_table_buckets(bad)
     with pytest.raises(ValueError, match="pinned to 64-dim"):
         similarity.lsh_topk(bad, bad.limit(1))
+    for dim in (128, 32):
+        with pytest.raises(ValueError, match=f"dim={dim}"):
+            similarity.lsh_buckets(frame(dim))
+
+
+def test_scaled_lsh_topk_runs_one_dim_check_job(spark, embeddings):
+    """Building a scaled lsh_topk runs exactly two Spark jobs: one dim-check
+    first() inside lsh_table_buckets and the bucket-table localCheckpoint.
+    The check used to run in lsh_topk as well (three jobs)."""
+    sc = spark.sparkContext
+    n = embeddings.count()
+    length, b = similarity.lsh_params(n)
+    queries = embeddings.filter(F.col("vec_id") % 50 == 0)
+    group = "test-scaled-lsh-dim-check"
+    sc.setJobGroup(group, "lsh_topk construction")
+    try:
+        out = similarity.lsh_topk(embeddings, queries, k=3, n_tables=length, bits_per_table=b)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert out.count() > 0
 
 
 def test_nearest_cells_rejects_zero_norm(spark, embeddings):
