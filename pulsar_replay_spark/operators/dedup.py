@@ -14,8 +14,10 @@ designed scale-first:
   strategy that avoids O(n²) pairs; frequency-capping hot shingles (not needed
   at test SF) is the standard skew guard.
 
-Every hash is md5-derived so the DuckDB oracle reproduces results exactly
-(Spark's xxhash64/hash have no DuckDB equivalent).
+Every hash that reaches an output is md5-derived so the DuckDB oracle
+reproduces results exactly (Spark's xxhash64/hash have no DuckDB
+equivalent). The exact-substring k-gram hash is internal: it only decides
+which grams are equal, and the oracle groups the gram text itself.
 """
 
 from __future__ import annotations
@@ -1376,7 +1378,7 @@ def span_decon_scrub(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
 # covered by a duplicated k-gram. (⇐ a duplicated k-gram IS such a span;
 # ⇒ any length-L ≥ k duplicated span covers each of its tokens with at
 # least one of its k-windows, and every window of a repeat is itself a
-# repeat.) So ONE positioned-k-gram shuffle — each row (md5(k-gram),
+# repeat.) So ONE positioned-k-gram shuffle — each row (hash(k-gram),
 # doc_id, pos), 16-byte key, linear in corpus tokens — computes exactly
 # the duplicated-span coverage the suffix array would, and merging the
 # covered [pos, pos+k-1] intervals per doc recovers the maximal spans with
@@ -1386,7 +1388,7 @@ def span_decon_scrub(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
 
 
 def _positioned_kgram_hashes(
-    docs: DataFrame, k: int, casefold: bool = False, impl: str = "md5"
+    docs: DataFrame, k: int, casefold: bool = False
 ) -> DataFrame:
     """(doc_id, pos, gh): a hash of every k-token window at 0-based token
     position ``pos``. Docs shorter than k tokens emit nothing (they cannot
@@ -1396,42 +1398,34 @@ def _positioned_kgram_hashes(
     preserves token count, so positions still index the ORIGINAL tokens
     and the scrub removes the original-case text.
 
-    ``impl`` picks the kernel (the arrow/jvm kernel-knob pattern; both
-    emit the same (doc_id, pos, gh) relation and the SAME downstream
-    spans — gated bit-identical in tests — but the gh VALUES differ, so
-    a persisted gram store must be probed with its build-time impl):
+    The kernel is an Arrow-batched polynomial rolling hash over per-token
+    codepoint-polynomial values (``_rolling_kgram_batch``, where the math
+    and its property gates live): O(1) per position after an O(tokens)
+    pass, the Lee et al. suffix-array cost model re-expressed for Spark.
+    4 independent 31-bit prime channels ≈ 124 hash bits (≥96 keeps 10^12
+    grams birthday-safe; 64 bits would not). gh VALUES are part of a
+    persisted gram store's contract (``KGRAM_KERNEL_TAG``).
 
-    - ``'md5'`` (default): whole-stage-codegen JVM expression — builds
-      each k-gram string (slice + array_join) and md5s it. Zero Python,
-      but O(k) char work per token position, and the marks plan runs the
-      subtree twice — at k=20 that's ~40x the char traffic of one scan.
-    - ``'rolling'``: Arrow-batched polynomial rolling hash over per-token
-      codepoint-polynomial values (length-aware since kernel tag
-      'rolling2' — NUL-bearing tokens hash distinctly) — O(1) per
-      position after an O(tokens) pass,
-      the Lee et al. suffix-array cost model re-expressed for Spark.
-      4 independent 31-bit prime channels ≈ 124 hash bits (≥96 keeps
-      10^12 grams birthday-safe; 64 bits would not). One MapInPandas
-      node; everything downstream is unchanged JVM."""
-    if impl == "rolling":
-        return _rolling_kgram_hashes(docs, k, casefold)
-    if impl != "md5":
-        raise ValueError(
-            f"positioned k-gram impl must be 'md5'|'rolling', got {impl!r}"
-        )
-    raw = F.split(F.coalesce("text", F.lit("")), " ")
-    toks = docs.select(
-        "doc_id",
-        (F.transform(raw, lambda t: F.lower(t)) if casefold else raw).alias(
-            "t"
-        ),
-    )
-    win = F.transform(
-        F.sequence(F.lit(0), F.size("t") - k),
-        lambda i: F.md5(F.array_join(F.slice("t", i + 1, k), " ")),
-    )
-    return toks.filter(F.size("t") >= k).select(
-        "doc_id", F.posexplode(win).alias("pos", "gh")
+    The result comes back MATERIALIZED (one eager ``localCheckpoint``):
+    the kernel's MapInPandas runs exactly once per call, and every
+    consumer downstream reads the (doc_id, pos, gh) blocks — hash + two
+    ints per token, no text — instead of sending the corpus across the
+    JVM↔Arrow boundary once per consumer. ``k`` < 1 raises ``ValueError``
+    here, at call time."""
+    if k < 1:
+        raise ValueError(f"min_tokens must be >= 1, got {k}")
+    doc_id_type = docs.schema["doc_id"].dataType.simpleString()
+
+    def kernel(batches):
+        for pdf in batches:
+            out = _rolling_kgram_batch(pdf, k, casefold)
+            if len(out):
+                yield out
+
+    return (
+        docs.select("doc_id", "text")
+        .mapInPandas(kernel, schema=f"doc_id {doc_id_type}, pos int, gh string")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -1452,20 +1446,13 @@ _ROLL_RADIXES = (131, 137, 139, 149)
 # Versioned kernel tag for persisted gram stores: hash VALUES are part of
 # a store's on-disk contract, so a kernel fix that changes them must bump
 # the tag — 'rolling2' is the r12 length-aware NUL fix. A store whose
-# _meta froze pre-fix 'rolling' refuses a post-fix resume with a named
-# error instead of silently never matching the resident index.
-_ROLL_KERNEL_TAG = "rolling2"
-
-
-def kernel_meta_tag(impl: str) -> str:
-    """The tag frozen into a gram store's ``_meta`` for hash kernel
-    ``impl`` ('md5' is value-stable and keeps its own name; 'rolling'
-    maps to the current versioned tag)."""
-    return _ROLL_KERNEL_TAG if impl == "rolling" else impl
+# _meta names any other kernel refuses a resume with a named error
+# instead of silently never matching the resident index.
+KGRAM_KERNEL_TAG = "rolling2"
 
 
 def _rolling_kgram_batch(pdf, k: int, casefold: bool = False):
-    """One Arrow batch of the ``impl='rolling'`` kernel — module-level so
+    """One Arrow batch of the positioned k-gram kernel — module-level so
     the math is unit/property-testable without Spark (the
     ``_cell_pair_sims`` discipline): (doc_id, pos, gh) pandas frame for
     every k-token window of every doc in ``pdf`` (doc_id, text).
@@ -1604,31 +1591,11 @@ def _rolling_kgram_batch(pdf, k: int, casefold: bool = False):
     )
 
 
-def _rolling_kgram_hashes(
-    docs: DataFrame, k: int, casefold: bool = False
-) -> DataFrame:
-    """The ``impl='rolling'`` distributed wrapper: one MapInPandas over
-    (doc_id, text), each Arrow batch through ``_rolling_kgram_batch``
-    (where the math and its property gates live)."""
-    doc_id_type = docs.schema["doc_id"].dataType.simpleString()
-
-    def kernel(batches):
-        for pdf in batches:
-            out = _rolling_kgram_batch(pdf, k, casefold)
-            if len(out):
-                yield out
-
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, schema=f"doc_id {doc_id_type}, pos int, gh string"
-    )
-
-
 def dup_span_marks(
     docs: DataFrame,
     min_tokens: int = 20,
     keep: str = "first",
     casefold: bool = False,
-    impl: str = "md5",
 ) -> DataFrame:
     """(doc_id, spans: array<struct<start,end>>, n_dup_tokens): each doc's
     MAXIMAL duplicated-span intervals (0-based token indices, inclusive) of
@@ -1650,32 +1617,21 @@ def dup_span_marks(
     positions (bounded by doc length, never key-global); interval merging
     is a per-row higher-order aggregate. No suffix text ever shuffles.
 
-    Deliberate tradeoff: the gram explode+hash subtree executes TWICE
-    (once under the duplicate agg, once on the join probe side) — the
-    alternatives are worse at scale: materializing the gram table costs
-    corpus-token-scale IO, and a count-over-window(gh) formulation
-    computes grams once but serializes every occurrence of a hot
-    boilerplate gram onto one window reducer — exactly the skew the
-    map-side-combined agg absorbs (the `chunk_dedup_marks` argument).
-    CPU-bound profiles can halve the recompute by swapping md5 of the
-    joined k-gram string for a rolling hash; keep ≥96 hash bits — 10^12
-    grams birthday-collide a 64-bit space, and a collision falsely marks
-    a span as duplicated."""
+    Single materialization: the gram relation feeds BOTH the duplicate
+    agg and the join probe side, and ``_positioned_kgram_hashes`` returns
+    it already checkpointed, so the Arrow kernel runs once per call and
+    both consumers read the (doc_id, pos, gh) blocks. Recomputing instead
+    would send the whole corpus across the JVM↔Arrow boundary twice per
+    marks pass; a count-over-window(gh) formulation would compute grams
+    once but serialize every occurrence of a hot boilerplate gram onto
+    one window reducer — exactly the skew the map-side-combined agg
+    absorbs (the `chunk_dedup_marks` argument). Keep ≥96 hash bits —
+    10^12 grams birthday-collide a 64-bit space, and a collision falsely
+    marks a span as duplicated."""
     if keep not in ("first", "none"):
         raise ValueError(f"dup_span_marks: keep must be 'first'|'none', got {keep!r}")
     k = int(min_tokens)
-    grams = _positioned_kgram_hashes(docs, k, casefold, impl)
-    if impl == "rolling":
-        # r13 (guide §4/§5): the gram relation feeds BOTH the duplicate agg
-        # and the join probe side; without materialization the MapInPandas
-        # kernel subtree executes TWICE — the whole corpus crosses the
-        # JVM↔Arrow boundary two times per marks pass (r12 driver run: 2.3×
-        # slower at 32 cores than the md5 twin whose recompute is pure
-        # codegen). One eager localCheckpoint runs the kernel once; the
-        # (doc_id, pos, gh) blocks — hash + two ints per token, no text —
-        # feed both consumers. md5 keeps the recompute deliberately (its
-        # second pass is cheap JVM work; materializing costs token-scale IO).
-        grams = grams.localCheckpoint(eager=True)
+    grams = _positioned_kgram_hashes(docs, k, casefold)
     dup = (
         grams.groupBy("gh")
         .agg(
@@ -1737,7 +1693,6 @@ def dup_span_scrub(
     min_tokens: int = 20,
     keep: str = "first",
     casefold: bool = False,
-    impl: str = "md5",
 ) -> DataFrame:
     """End product of any-length exact-substring dedup: every doc's text
     with its marked duplicate spans removed — (doc_id, cleaned_text,
@@ -1752,7 +1707,7 @@ def dup_span_scrub(
     intervals: O(tokens · spans) per row in whole-stage codegen, no token
     explode, no per-token shuffle."""
     return _scrub_against_spans(
-        docs, dup_span_marks(docs, min_tokens, keep, casefold, impl)
+        docs, dup_span_marks(docs, min_tokens, keep, casefold)
     )
 
 
@@ -1793,7 +1748,6 @@ def dup_span_stats(
     min_tokens: int = 20,
     keep: str = "none",
     casefold: bool = False,
-    impl: str = "md5",
 ) -> DataFrame:
     """1-row corpus duplication diagnostics — the Lee et al. paper's
     headline measurement ("how much of this corpus is duplicated text?")
@@ -1802,7 +1756,7 @@ def dup_span_stats(
     EVERY occurrence of duplicated content (the "X% of tokens sit inside
     a repeat" reading); ``keep='first'`` counts only what a scrub would
     remove. Cost = one ``dup_span_marks`` pass + one global agg."""
-    marks = dup_span_marks(docs, min_tokens, keep, casefold, impl)
+    marks = dup_span_marks(docs, min_tokens, keep, casefold)
     toks = F.split(F.coalesce("text", F.lit("")), " ")
     per_doc = docs.select(
         "doc_id", F.size(toks).cast("bigint").alias("n_toks")
@@ -1827,7 +1781,6 @@ def incremental_dup_span_scrub(
     gram_index: DataFrame,
     min_tokens: int = 20,
     casefold: bool = False,
-    impl: str = "md5",
     bloom_fpp: "float | None" = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The streaming-growth twin of ``dup_span_scrub`` (the
@@ -1846,10 +1799,14 @@ def incremental_dup_span_scrub(
     ``dup_span_scrub`` over their union EXACTLY (pinned in tests): the
     global first occurrence is the first batch's first occurrence.
 
-    ``casefold``/``impl`` must match the index's BUILD-TIME settings —
-    the hashes only compare equal under the same normalization and the
-    same kernel (``dup_span_ingest_sink`` records both in the store's
-    ``_meta`` and refuses a mismatched resume).
+    ``casefold`` must match the index's BUILD-TIME setting, and the index
+    must hold this kernel's hashes — they only compare equal under the
+    same normalization and the same kernel (``dup_span_ingest_sink``
+    records both in the store's ``_meta`` and refuses a mismatched
+    resume). The batch's grams are materialized once
+    (``_positioned_kgram_hashes``), so the seen-join, the first-occurrence
+    agg, the Bloom build and both returned frames read them without
+    re-running the kernel.
 
     Scale posture: the probe is one equi-join of the batch's grams against
     the index on the 16-byte hash — batch-sized build side, so AQE
@@ -1864,7 +1821,7 @@ def incremental_dup_span_scrub(
     index grams the exact equi-join then fails to match — the scrub is
     IDENTICAL with or without the prefilter (pinned in tests)."""
     k = int(min_tokens)
-    grams = _positioned_kgram_hashes(docs, k, casefold, impl)
+    grams = _positioned_kgram_hashes(docs, k, casefold)
     index_gh = gram_index.select("gh")
     if bloom_fpp is not None:
         from pulsar_replay_spark.operators.bloom import (
@@ -1875,7 +1832,7 @@ def incremental_dup_span_scrub(
 
         batch_gh = grams.select("gh").distinct().localCheckpoint(eager=True)
         n_bits, n_hashes = bloom_params(max(1, batch_gh.count()), bloom_fpp)
-        # gh is itself a uniform 128-bit hex hash (md5 or rolling), so the
+        # gh is itself a uniform 128-bit hex hash, so the
         # filter uses the vectorized hex128 kind — no per-key md5 anywhere
         bitmap = bloom_build(batch_gh, "gh", n_bits, n_hashes, key_kind="hex128")
         index_gh = bloom_might_contain(

@@ -1522,17 +1522,7 @@ def q_dup_span_scrub_none(spark, sf_dir):
 
 @register("dup_span_scrub", DUP_SPAN_ORACLE)
 def q_dup_span_scrub(spark, sf_dir):
-    # r12 optimization (guide §4.2): impl='rolling' — the Arrow-batched
-    # O(1)/position rolling-hash kernel (length-aware 'rolling2', the NUL
-    # fix) replaces the md5 JVM expression that rebuilt + hashed each
-    # k-gram STRING at every position, TWICE (the marks plan's documented
-    # double subtree). Spans — and so every output row — are impl-invariant
-    # (bit-identical gates in test_dedup/test_kernel_properties; the DuckDB
-    # oracle groups gram text directly and never sees gh values). Measured
-    # at sf0.1: 3.44 s (md5) → 2.28 s (rolling), −34%.
-    return dedup.dup_span_scrub(
-        _planted_clone_docs(spark, sf_dir), min_tokens=10, impl="rolling"
-    )
+    return dedup.dup_span_scrub(_planted_clone_docs(spark, sf_dir), min_tokens=10)
 
 
 # ---------------------------------------------------------------------------

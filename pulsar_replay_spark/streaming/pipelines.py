@@ -2254,10 +2254,12 @@ def _dup_span_store_meta(
 
 
 def _dup_span_store_meta_write(
-    spark: SparkSession, store_dir: str, min_tokens: int, casefold: bool, impl: str
+    spark: SparkSession, store_dir: str, min_tokens: int, casefold: bool, kernel: str
 ) -> None:
+    # the column keeps its historical name: the stored kernel tag is how a
+    # store built by another kernel gets detected on resume
     spark.createDataFrame(
-        [(int(min_tokens), bool(casefold), impl)],
+        [(int(min_tokens), bool(casefold), kernel)],
         "min_tokens int, casefold boolean, impl string",
     ).write.mode("overwrite").parquet(f"{store_dir}/_meta")
 
@@ -2336,7 +2338,6 @@ def dup_span_ingest_sink(
     checkpoint_dir: str,
     min_tokens: int = 20,
     casefold: bool = False,
-    impl: str = "md5",
     bloom_fpp: "float | str | None" = None,
 ):
     """Continuous any-length exact-substring dedup (r10): grow a k-gram
@@ -2361,11 +2362,14 @@ def dup_span_ingest_sink(
     EXACTLY (pinned in tests). Crash retries overwrite themselves
     (dynamic partition overwrite on batch_id, reads exclude own batch).
 
-    ``casefold``/``impl`` select the gram normalization and hash kernel
-    (see ``dedup.dup_span_marks``); both are FROZEN into the store's
-    ``_meta`` on first write — hashes only compare equal under the
-    build-time settings, so resuming with different ones raises instead
-    of silently never matching. ``bloom_fpp`` enables the per-batch Bloom
+    ``min_tokens`` (≥ 1, checked up front) and ``casefold`` select the
+    gram length and normalization; both are FROZEN into the store's
+    ``_meta`` on first write, together with the hash kernel's versioned
+    tag (``dedup.KGRAM_KERNEL_TAG``). Hashes only compare equal under the
+    build-time settings, so resuming with different ones — or against a
+    store built by another kernel, or one that holds grams but no
+    ``_meta`` and so cannot say which kernel built it — raises instead of
+    silently never matching. ``bloom_fpp`` enables the per-batch Bloom
     prefilter on the index probe (``dedup.incremental_dup_span_scrub``) —
     output-identical by construction, index-side join input tracks batch
     size. ``bloom_fpp='auto'`` (r12) picks per batch: the sink keeps a
@@ -2379,13 +2383,13 @@ def dup_span_ingest_sink(
     (string ids ingest as cleanly as longs; a type change mid-stream
     fails the schema'd read loudly, not by miscast)."""
     from pulsar_replay_spark.operators.dedup import (
+        KGRAM_KERNEL_TAG,
         incremental_dup_span_scrub,
-        kernel_meta_tag,
     )
 
-    if impl not in ("md5", "rolling"):
+    if int(min_tokens) < 1:
         raise ValueError(
-            f"dup_span_ingest_sink: impl must be 'md5'|'rolling', got {impl!r}"
+            f"dup_span_ingest_sink: min_tokens must be >= 1, got {min_tokens!r}"
         )
     if isinstance(bloom_fpp, str) and bloom_fpp != "auto":
         raise ValueError(
@@ -2402,15 +2406,20 @@ def dup_span_ingest_sink(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         meta = _dup_span_store_meta(spark, store_dir)
-        # _meta freezes the VERSIONED kernel tag, not the user knob: a
-        # kernel fix that changes hash values bumps the tag (r12:
-        # 'rolling' -> 'rolling2'), so a pre-fix store refuses a post-fix
-        # resume here instead of silently never matching.
+        # _meta freezes the VERSIONED kernel tag: a kernel fix that changes
+        # hash values bumps it (r12: 'rolling' -> 'rolling2'), so a store
+        # built by any other kernel refuses a resume here instead of
+        # silently never matching. A store holding grams but no _meta
+        # (written before r11) cannot name its kernel and is refused too.
         want = {
             "min_tokens": int(min_tokens),
             "casefold": bool(casefold),
-            "impl": kernel_meta_tag(impl),
+            "impl": KGRAM_KERNEL_TAG,
         }
+        if meta is None and (
+            read_parquet_or_empty(spark, store_dir, "gh string").head(1)
+        ):
+            meta = "an unknown kernel (grams but no _meta)"
         if meta is not None and meta != want:
             raise ValueError(
                 f"dup_span_ingest_sink: store at {store_dir} was built with "
@@ -2419,7 +2428,7 @@ def dup_span_ingest_sink(
             )
         if meta is None:
             _dup_span_store_meta_write(
-                spark, store_dir, min_tokens, casefold, kernel_meta_tag(impl)
+                spark, store_dir, min_tokens, casefold, KGRAM_KERNEL_TAG
             )
         batch = batch_df.select("doc_id", "text").localCheckpoint(eager=True)
         idx = (
@@ -2446,7 +2455,6 @@ def dup_span_ingest_sink(
             idx,
             min_tokens=min_tokens,
             casefold=casefold,
-            impl=impl,
             bloom_fpp=effective_fpp,
         )
         (

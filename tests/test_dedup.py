@@ -867,6 +867,74 @@ def _dup_span_fixture(spark):
     return spark.createDataFrame([Row(doc_id=d, text=t) for d, t in rows])
 
 
+def _dup_span_reference(rows, k, keep="first", casefold=False):
+    """Brute-force python mirror of the exact-substring family (imports no
+    engine code): enumerate EVERY k-gram of every doc, and for each gram
+    occurring more than once cover [pos, pos+k-1] at all its occurrences
+    but the first (min doc_id, pos) under keep='first', at all of them
+    under keep='none'. ``casefold`` compares lowercased tokens; the scrub
+    removes the original tokens. ``rows`` is [(doc_id, text)]. Returns
+    the engine's three shapes:
+    - scrub {doc_id: (cleaned_text, n_tokens, n_kept_tokens)}, every doc
+      (span-free docs keep their text byte-exact);
+    - marks {doc_id: ([(start, end)], n_dup_tokens)}, docs with a span,
+      maximal runs of covered positions;
+    - stats (n_docs, n_tokens, n_dup_tokens, n_docs_with_dups)."""
+    from collections import defaultdict
+
+    toks = {d: (text or "").split(" ") for d, text in rows}
+    occ = defaultdict(list)
+    for d, t in toks.items():
+        key = [tok.lower() for tok in t] if casefold else t
+        for p in range(len(t) - k + 1):
+            occ[tuple(key[p : p + k])].append((d, p))
+    skip = 1 if keep == "first" else 0
+    covered = defaultdict(set)
+    for positions in occ.values():
+        if len(positions) > 1:
+            for d, p in sorted(positions)[skip:]:
+                covered[d].update(range(p, p + k))
+    scrub, marks = {}, {}
+    for d, text in rows:
+        t, cov = toks[d], covered[d]
+        kept = [tok for i, tok in enumerate(t) if i not in cov]
+        scrub[d] = (" ".join(kept) if cov else text or "", len(t), len(kept))
+        if cov:
+            runs = []
+            for i in sorted(cov):
+                if runs and i == runs[-1][1] + 1:
+                    runs[-1][1] = i
+                else:
+                    runs.append([i, i])
+            marks[d] = ([tuple(r) for r in runs], len(cov))
+    stats = (
+        len(rows),
+        sum(len(t) for t in toks.values()),
+        sum(len(c) for c in covered.values()),
+        len(marks),
+    )
+    return scrub, marks, stats
+
+
+def _dup_span_engine(docs, k, keep="first", casefold=False):
+    """The engine's scrub, marks and stats in ``_dup_span_reference``'s
+    shapes (stats adds dup_token_ratio last)."""
+    scrub = {
+        r.doc_id: (r.cleaned_text, r.n_tokens, r.n_kept_tokens)
+        for r in dedup.dup_span_scrub(docs, k, keep, casefold).collect()
+    }
+    marks = {
+        r.doc_id: ([(s["start"], s["end"]) for s in r.spans], r.n_dup_tokens)
+        for r in dedup.dup_span_marks(docs, k, keep, casefold).collect()
+    }
+    s = dedup.dup_span_stats(docs, k, keep, casefold).collect()[0]
+    stats = (
+        s.n_docs, s.n_tokens, s.n_dup_tokens, s.n_docs_with_dups,
+        s.dup_token_ratio,
+    )
+    return scrub, marks, stats
+
+
 def test_dup_span_marks_exact_boundaries(spark):
     from pulsar_replay_spark.operators import dedup
 
@@ -893,38 +961,19 @@ def test_dup_span_marks_exact_boundaries(spark):
 
     with pytest.raises(ValueError, match="keep"):
         dedup.dup_span_marks(docs, 10, keep="bogus")
+    # k < 1 has no k-grams to speak of: refused at call time, not as
+    # inverted spans (0) or a worker IndexError (-1)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="min_tokens"):
+            dedup.dup_span_marks(docs, bad)
 
 
 def test_dup_span_scrub_matches_python_mirror(spark):
-    """Brute-force python oracle: enumerate ALL k-grams, find duplicated
+    """Brute-force python reference: enumerate ALL k-grams, find duplicated
     ones, scrub non-first occurrences — the engine must agree token for
     token on the planted fixture (and every doc must appear)."""
-    from collections import defaultdict
-
-    from pulsar_replay_spark.operators import dedup
-
     docs = _dup_span_fixture(spark)
-    rows = {r.doc_id: r.text for r in docs.collect()}
-    k = 10
-    occ = defaultdict(list)
-    for d in sorted(rows):
-        t = rows[d].split(" ")
-        for p in range(len(t) - k + 1):
-            occ[" ".join(t[p : p + k])].append((d, p))
-    scrubbed_pos = defaultdict(set)
-    for g, positions in occ.items():
-        if len(positions) > 1:
-            for d, p in positions[1:]:  # first (min doc_id, pos) kept
-                scrubbed_pos[d].update(range(p, p + k))
-    want = {}
-    for d in sorted(rows):
-        t = rows[d].split(" ")
-        kept = [tok for i, tok in enumerate(t) if i not in scrubbed_pos[d]]
-        want[d] = (
-            rows[d] if not scrubbed_pos[d] else " ".join(kept),
-            len(t),
-            len(kept),
-        )
+    want, _, _ = _dup_span_reference([tuple(r) for r in docs.collect()], 10)
     got = {
         r.doc_id: (r.cleaned_text, r.n_tokens, r.n_kept_tokens)
         for r in dedup.dup_span_scrub(docs, min_tokens=10).collect()
@@ -959,8 +1008,9 @@ def test_dup_span_vs_chunk_dedup_straddling_repeat(spark):
 
 
 def test_dup_span_plan_no_cartesian_no_python(spark):
-    from pulsar_replay_spark.operators import dedup
-
+    """No cartesian product and no row-at-a-time Python in the scrub plan
+    (the k-gram kernel is one Arrow MapInPandas, already materialized
+    before this plan — see test_dup_span_kernel_runs_once_per_call)."""
     docs = _dup_span_fixture(spark)
     plan = (
         dedup.dup_span_scrub(docs, min_tokens=10)
@@ -1007,31 +1057,25 @@ def test_dup_span_casefold_matches_case_variant_repeats(spark):
 
 
 def test_dup_span_deterministic_under_repartitioning(spark):
-    from pulsar_replay_spark.operators import dedup
-
+    """The scrub does not depend on how the corpus is partitioned into
+    the kernel's Arrow batches."""
     docs = _dup_span_fixture(spark)
     a = sorted(
-        (r.doc_id, r.cleaned_text, r.n_tokens, r.n_kept_tokens)
-        for r in dedup.dup_span_scrub(docs, min_tokens=10).collect()
+        tuple(r) for r in dedup.dup_span_scrub(docs, min_tokens=10).collect()
     )
     b = sorted(
-        (r.doc_id, r.cleaned_text, r.n_tokens, r.n_kept_tokens)
+        tuple(r)
         for r in dedup.dup_span_scrub(docs.repartition(13), min_tokens=10).collect()
     )
     assert a == b
 
 
-@pytest.mark.parametrize("impl", ["md5", "rolling"])
-def test_dup_span_randomized_brute_force_equivalence(spark, impl):
+def test_dup_span_randomized_brute_force_equivalence(spark):
     """Seeded randomized gate for the coverage lemma: small random corpora
     with planted random-length repeats at random alignments — the engine's
-    scrub must equal the brute-force python enumeration of ALL duplicated
-    k-grams, for every seed — under BOTH k-gram hash kernels (the r11
-    rolling-hash fast path is gated by the same oracle as the md5 path)."""
+    scrub must equal the brute-force reference's enumeration of ALL
+    duplicated k-grams, for every seed."""
     import random
-    from collections import defaultdict
-
-    from pulsar_replay_spark.operators import dedup
 
     k = 5
     for seed in (11, 23, 47):
@@ -1051,115 +1095,64 @@ def test_dup_span_randomized_brute_force_equivalence(spark, impl):
                 at = rng.randint(0, len(tgt))
                 rows[d] = (d, " ".join(tgt[:at] + base[s : s + L] + tgt[at:]))
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-        occ = defaultdict(list)
-        for d, text in rows:
-            t = text.split(" ")
-            for p in range(len(t) - k + 1):
-                occ[" ".join(t[p : p + k])].append((d, p))
-        scrubbed_pos = defaultdict(set)
-        for positions in occ.values():
-            if len(positions) > 1:
-                for d, p in sorted(positions)[1:]:
-                    scrubbed_pos[d].update(range(p, p + k))
-        want = {}
-        for d, text in rows:
-            t = text.split(" ")
-            kept = [tok for i, tok in enumerate(t) if i not in scrubbed_pos[d]]
-            want[d] = (text if not scrubbed_pos[d] else " ".join(kept), len(t), len(kept))
+        want, _, _ = _dup_span_reference(rows, k)
         got = {
             r.doc_id: (r.cleaned_text, r.n_tokens, r.n_kept_tokens)
-            for r in dedup.dup_span_scrub(docs, min_tokens=k, impl=impl).collect()
+            for r in dedup.dup_span_scrub(docs, min_tokens=k).collect()
         }
         assert got == want, f"seed {seed}"
 
 
 def test_dup_span_rolling_bit_identical_planted(spark):
-    """The r11 verdict's done-gate for the rolling-hash fast path: spans,
-    scrubs and stats from impl='rolling' are BIT-IDENTICAL to the md5
-    path on the planted fixture AND the contract corpus (documents +
-    the 11/25/63-token clones q:`dup_span_scrub` registers), across both
-    keep legs and the casefold knob. Hash VALUES differ by construction;
-    only collisions could make the relations differ, and 4x31-bit
-    channels make that 2^-124-improbable."""
+    """The rolling k-gram kernel's spans, scrubs and stats are
+    BIT-IDENTICAL to the brute-force reference on the planted fixture AND
+    the contract corpus (documents + the 11/25/63-token clones
+    q:`dup_span_scrub` registers), across both keep legs and the casefold
+    knob. The reference compares gram TEXT; only a hash collision could
+    make the engine differ, and 4x31-bit channels make that
+    2^-124-improbable."""
     from pulsar_replay_spark import queries_llm
-    from pulsar_replay_spark.operators import dedup
 
     fixture = _dup_span_fixture(spark)
     contract = queries_llm._planted_clone_docs(spark, SF_SMOKE)
-    for docs, k in ((fixture, 10), (contract, 10)):
+    for name, docs in (("fixture", fixture), ("contract", contract)):
+        rows = [(r.doc_id, r.text) for r in docs.collect()]
         for keep in ("first", "none"):
             for casefold in (False, True):
-                md5 = sorted(
-                    (r.doc_id, r.cleaned_text, r.n_tokens, r.n_kept_tokens)
-                    for r in dedup.dup_span_scrub(
-                        docs, k, keep=keep, casefold=casefold
-                    ).collect()
+                scrub, marks, stats = _dup_span_reference(rows, 10, keep, casefold)
+                g_scrub, g_marks, g_stats = _dup_span_engine(
+                    docs, 10, keep, casefold
                 )
-                rolling = sorted(
-                    (r.doc_id, r.cleaned_text, r.n_tokens, r.n_kept_tokens)
-                    for r in dedup.dup_span_scrub(
-                        docs, k, keep=keep, casefold=casefold, impl="rolling"
-                    ).collect()
-                )
-                assert md5 == rolling, (keep, casefold)
-    m5 = {
-        r.doc_id: ([(s["start"], s["end"]) for s in r.spans], r.n_dup_tokens)
-        for r in dedup.dup_span_marks(fixture, 10).collect()
-    }
-    ro = {
-        r.doc_id: ([(s["start"], s["end"]) for s in r.spans], r.n_dup_tokens)
-        for r in dedup.dup_span_marks(fixture, 10, impl="rolling").collect()
-    }
-    assert m5 == ro
-    s_md5 = dedup.dup_span_stats(fixture, 10).collect()[0]
-    s_roll = dedup.dup_span_stats(fixture, 10, impl="rolling").collect()[0]
-    assert s_md5 == s_roll
-    with pytest.raises(ValueError, match="impl"):
-        dedup.dup_span_marks(fixture, 10, impl="sha9000").count()
+                where = (name, keep, casefold)
+                assert g_scrub == scrub, where
+                assert g_marks == marks, where
+                assert g_stats[:4] == stats, where
+                assert abs(g_stats[4] - stats[2] / stats[1]) < 1e-6, where
+        assert marks, name  # the corpus actually carries repeats
 
 
-def test_dup_span_rolling_deterministic_and_plan_shape(spark):
-    """Rolling kernel output is partitioning-invariant, and its plan keeps
-    the md5 path's guarantees: no cartesian product, no row-at-a-time
-    Python (the ONE Arrow MapInPandas node is the kernel itself — the
-    declared exception, same as the ANN arrow kernels)."""
-    from pulsar_replay_spark.operators import dedup
-
+def test_dup_span_kernel_runs_once_per_call(spark):
+    """The Arrow k-gram kernel runs ONCE per call: every consumer of the
+    gram relation — the one-shot duplicate agg and join probe; the
+    incremental seen-join, first-occurrence agg and Bloom build — reads
+    the materialized (doc_id, pos, gh) blocks, so no executed plan the
+    caller receives holds a MapInPandas subtree (re-running the kernel
+    would send the corpus across the JVM↔Arrow boundary per consumer)."""
     docs = _dup_span_fixture(spark)
-    a = sorted(
-        tuple(r)
-        for r in dedup.dup_span_scrub(docs, 10, impl="rolling").collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in dedup.dup_span_scrub(
-            docs.repartition(13), 10, impl="rolling"
-        ).collect()
-    )
-    assert a == b
-    plan = (
-        dedup.dup_span_scrub(docs, min_tokens=10, impl="rolling")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    # r13 single-pass gate: the gram kernel is eagerly localCheckpoint-ed
-    # inside dup_span_marks, so the downstream plan reads the materialized
-    # (doc_id, pos, gh) blocks — ZERO MapInPandas subtrees remain (the r12
-    # shape ran the kernel in TWO subtrees: agg side + join probe side).
-    assert "MapInPandas" not in plan
-    assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
-    # the kernel itself is still the one Arrow node of the gram stage
-    gram_plan = (
-        dedup._positioned_kgram_hashes(docs, 10, impl="rolling")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert gram_plan.count("MapInPandas") == 1
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    one_shot = plan(dedup.dup_span_scrub(docs, min_tokens=10))
+    assert "MapInPandas" not in one_shot
+    assert "ExistingRDD" in one_shot  # reads the checkpointed grams
+    idx = spark.createDataFrame([], "gh string, doc_id long, pos int")
+    for bloom_fpp in (None, 0.01):
+        scrubbed, new_grams = dedup.incremental_dup_span_scrub(
+            docs, idx, min_tokens=10, bloom_fpp=bloom_fpp
+        )
+        for out in (scrubbed, new_grams):
+            assert "MapInPandas" not in plan(out), bloom_fpp
 
 
 def test_dup_span_stats_counts_exactly(spark):
@@ -1225,16 +1218,14 @@ def test_incremental_dup_span_equals_one_shot(spark):
     assert n_grams[1] < 200  # batch 2 (docs 3-5) is mostly repeats of doc 1
 
 
-@pytest.mark.parametrize("impl", ["md5", "rolling"])
-def test_incremental_dup_span_bloom_casefold_equals_one_shot(spark, impl):
+def test_incremental_dup_span_bloom_casefold_equals_one_shot(spark):
     """r11: the Bloom-prefiltered index probe (bloom_fpp) and the casefold
     knob on the incremental path reproduce the one-shot scrub EXACTLY —
     Bloom has no false negatives, and its false positives are index grams
     the exact equi-join discards, so the prefilter is output-invariant by
-    construction; casefold/impl plumb through so a casefolded or
-    rolling-hashed one-shot has a byte-equal streaming twin. The index
-    growth (new_grams) is also pinned identical with and without the
-    prefilter."""
+    construction; casefold plumbs through so a casefolded one-shot has a
+    byte-equal streaming twin. The index growth (new_grams) is also
+    pinned identical with and without the prefilter."""
     from pulsar_replay_spark.operators import dedup
 
     lower = " ".join(f"word{i}" for i in range(14))
@@ -1248,9 +1239,7 @@ def test_incremental_dup_span_bloom_casefold_equals_one_shot(spark, impl):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     one_shot = {
         r.doc_id: (r.cleaned_text, r.n_tokens, r.n_kept_tokens)
-        for r in dedup.dup_span_scrub(
-            docs, min_tokens=10, casefold=True, impl=impl
-        ).collect()
+        for r in dedup.dup_span_scrub(docs, min_tokens=10, casefold=True).collect()
     }
     assert one_shot[3][0] == "tail0 tail1"  # the knob is load-bearing
 
@@ -1259,11 +1248,10 @@ def test_incremental_dup_span_bloom_casefold_equals_one_shot(spark, impl):
     for lo, hi in ((1, 2), (3, 4)):
         batch = docs.filter(F.col("doc_id").between(lo, hi))
         scrubbed, new_grams = dedup.incremental_dup_span_scrub(
-            batch, idx, min_tokens=10, casefold=True, impl=impl,
-            bloom_fpp=0.01,
+            batch, idx, min_tokens=10, casefold=True, bloom_fpp=0.01
         )
         _, new_grams_nobloom = dedup.incremental_dup_span_scrub(
-            batch, idx, min_tokens=10, casefold=True, impl=impl
+            batch, idx, min_tokens=10, casefold=True
         )
         assert sorted(map(tuple, new_grams.collect())) == sorted(
             map(tuple, new_grams_nobloom.collect())

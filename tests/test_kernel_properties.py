@@ -202,10 +202,3 @@ def test_rolling_kgram_nul_tokens_do_not_collide():
     pdf = pd.DataFrame({"doc_id": [0, 1], "text": ["x\x00 y", "x\x00 y"]})
     out = _rolling_kgram_batch(pdf, 2, False)
     assert len(out) == 2 and out["gh"].nunique() == 1
-
-
-def test_kernel_meta_tag_versions_rolling():
-    from pulsar_replay_spark.operators.dedup import kernel_meta_tag
-
-    assert kernel_meta_tag("md5") == "md5"
-    assert kernel_meta_tag("rolling") == "rolling2"

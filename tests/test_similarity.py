@@ -1,7 +1,7 @@
 """Similarity-search tests: brute-force correctness vs numpy, LSH recall,
 and bit equality of the Arrow kernels to the numpy reference in
-``tests/ann_reference.py`` (the ``*_bitwise_equals_jvm`` gates: the
-reference reproduces the JVM fold order and ``F.round``)."""
+``tests/ann_reference.py`` (the ``*_equals_reference`` gates: the
+reference reproduces the engine's fold order and ``F.round``)."""
 
 from __future__ import annotations
 
@@ -273,7 +273,7 @@ def test_semantic_dedup_matches_numpy(spark, embeddings, emb_np):
     assert any(not r["keep"] for r in got)
 
 
-def test_nearest_cells_arrow_bitwise_equals_jvm(spark, embeddings):
+def test_nearest_cells_equals_reference(spark, embeddings):
     """The Arrow assignment's sequential-over-dims numpy fold must pick the
     reference's nearest cell (raw cosine, lowest cell_id on ties) for every
     vector — the gate that lets the fast path carry the oracle-checked
@@ -372,7 +372,7 @@ def test_nearest_cells_arrow_plan_is_shuffle_free(spark, embeddings):
     assert "Join" not in plan
 
 
-def test_lsh_signatures_arrow_bitwise_equals_jvm(spark, embeddings):
+def test_lsh_signatures_equals_reference(spark, embeddings):
     """The Arrow signature path's sequential-dim fold must reproduce the
     reference projections' strict proj > 0 sign bits for every vector."""
     got = {r["vec_id"]: r["sig"] for r in similarity.lsh_signatures(embeddings).collect()}
@@ -596,7 +596,7 @@ def test_bitext_candidates_ivf_rejects_shared_prebuilt_index(spark, embeddings):
         similarity.bitext_candidates_ivf(a, b, k=2, centroids=cents)
 
 
-def test_ivf_topk_arrow_bitwise_equals_jvm(spark, embeddings):
+def test_ivf_topk_equals_reference(spark, embeddings):
     """The cogrouped Arrow pair-scoring must reproduce the reference IVF
     top-k EXACTLY — ids, ranks, and rounded sims — at two geometries over
     shared prebuilt centroids."""
@@ -768,7 +768,7 @@ def test_bitext_candidates_ivf_half_pinned_geometry_stays_bounded(spark, embeddi
     assert out.count() > 0  # runs, and with the bounded probe geometry
 
 
-def test_cross_topk_arrow_bitwise_equals_jvm(spark, embeddings):
+def test_cross_topk_equals_reference(spark, embeddings):
     """The closure-shipped query matrix + per-chunk ε-band pre-cut must
     reproduce the reference all-pairs top-k EXACTLY (ids, round-6 sims,
     ranks; no self-pair exclusion across the two corpora) — including at a
@@ -819,7 +819,7 @@ def test_cross_sims_batches_chunking_is_lossless():
     assert list(_cross_sims_batches(iter([pdf]), **kw0)) == []
 
 
-def test_lsh_topk_arrow_bitwise_equals_jvm(spark, embeddings):
+def test_lsh_topk_equals_reference(spark, embeddings):
     """The cogrouped (table, bucket) Arrow scoring — including the
     score-then-dedup reordering for multi-table collisions and the
     per-group k-cut — must equal the reference LSH top-k exactly."""
@@ -906,7 +906,7 @@ def test_lsh_scaled_geometry_fraction_and_near_dup_recall(spark, embeddings):
     assert recall >= 0.8, f"planted-clone recall {recall:.2f} below floor"
 
 
-def test_lsh_topk_arrow_equals_jvm_at_multi_partition_scale(spark):
+def test_lsh_topk_at_multi_partition_scale_equals_reference(spark):
     """Regression gate for the cogroup key-dtype misalignment (r7): the
     exploded query-side shard was INT while the candidate side's pmod was
     LONG; cogroup hash-partitions each side's own key columns, and
@@ -968,7 +968,7 @@ def test_lsh_multiprobe_expands_candidates_losslessly(spark, embeddings):
         similarity.lsh_topk(embeddings, queries, multiprobe=2)
 
 
-def test_ivf_topk_arrow_equals_jvm_at_multi_partition_scale(spark):
+def test_ivf_topk_at_multi_partition_scale_equals_reference(spark):
     """Insurance against the cogroup key-dtype class at sf0.1 for the IVF
     family too: its cell_id keys come from the same ivf_assign on both
     sides (consistent by construction), but this is the gate that would

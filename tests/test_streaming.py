@@ -1810,11 +1810,13 @@ def test_dup_span_sink_knobs_meta_guard_and_string_ids(
 ):
     """r11 sink hardening: (1) a STRING-doc_id stream ingests cleanly (the
     gram store takes the stream's doc_id type instead of hardcoding long);
-    (2) casefold/impl/bloom_fpp plumb through and the accumulated store
-    still equals the matching one-shot scrub; (3) the build-time knobs are
-    frozen in the store's _meta — resuming with different knobs raises
-    instead of silently never matching hashes; (4) compaction carries
-    _meta forward."""
+    (2) casefold/bloom_fpp plumb through and the accumulated store still
+    equals the matching one-shot scrub; (3) the build-time knobs and the
+    kernel tag are frozen in the store's _meta — resuming with different
+    knobs, against another kernel's store, or against a store holding
+    grams but no _meta raises instead of silently never matching hashes;
+    (4) compaction carries _meta forward; (5) min_tokens < 1 is refused
+    up front."""
     from pulsar_replay_spark.operators import dedup
 
     lower = " ".join(f"word{i}" for i in range(14))
@@ -1845,7 +1847,6 @@ def test_dup_span_sink_knobs_meta_guard_and_string_ids(
         str(tmp_path_factory.mktemp("dupspan_meta_ck")),
         min_tokens=10,
         casefold=True,
-        impl="rolling",
         bloom_fpp=0.01,
     ).awaitTermination(120)
 
@@ -1856,16 +1857,14 @@ def test_dup_span_sink_knobs_meta_guard_and_string_ids(
     docs = spark.createDataFrame(rows, schema)
     want = {
         r.doc_id: (r.cleaned_text, r.n_tokens, r.n_kept_tokens)
-        for r in dedup.dup_span_scrub(
-            docs, min_tokens=10, casefold=True, impl="rolling"
-        ).collect()
+        for r in dedup.dup_span_scrub(docs, min_tokens=10, casefold=True).collect()
     }
     assert got == want
     assert got["doc_c"][0] == "tail0 tail1"  # cross-batch casefolded scrub
     idx = spark.read.parquet(store)
     assert dict(idx.dtypes)["doc_id"] == "string"
     # _meta freezes the VERSIONED kernel tag ('rolling2' = the r12
-    # length-aware NUL fix), not the user-facing knob name
+    # length-aware NUL fix)
     assert pipelines._dup_span_store_meta(spark, store) == {
         "min_tokens": 10,
         "casefold": True,
@@ -1886,29 +1885,45 @@ def test_dup_span_sink_knobs_meta_guard_and_string_ids(
             store,
             str(tmp_path_factory.mktemp("dupspan_meta_out2")),
             str(tmp_path_factory.mktemp("dupspan_meta_ck2")),
-            min_tokens=10,  # same k, but byte-strict md5 vs the store's
+            min_tokens=10,  # same k, but byte-strict vs the store's casefold
         ).awaitTermination(120)
 
-    # a PRE-FIX rolling store (meta impl='rolling', hash values from the
-    # NUL-colliding r11 kernel) refuses a post-fix resume — its resident
-    # hashes would never match the fixed kernel's
-    prefix_store = str(tmp_path_factory.mktemp("dupspan_meta_prefix"))
-    pipelines._dup_span_store_meta_write(spark, prefix_store, 10, True, "rolling")
-    stream3 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    with pytest.raises(StreamingQueryException, match="built with"):
+    def refused(store_dir):
+        with pytest.raises(StreamingQueryException, match="built with"):
+            pipelines.dup_span_ingest_sink(
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(f"{src}/*"),
+                store_dir,
+                str(tmp_path_factory.mktemp("dupspan_meta_out3")),
+                str(tmp_path_factory.mktemp("dupspan_meta_ck3")),
+                min_tokens=10,
+                casefold=True,
+            ).awaitTermination(120)
+
+    # a store built by another kernel — the NUL-colliding pre-r12
+    # 'rolling' or the retired 'md5' — refuses a resume: its resident
+    # hashes would never match this kernel's
+    for old_kernel in ("rolling", "md5"):
+        old_store = str(tmp_path_factory.mktemp(f"dupspan_meta_{old_kernel}"))
+        pipelines._dup_span_store_meta_write(spark, old_store, 10, True, old_kernel)
+        refused(old_store)
+
+    # a store holding grams but no _meta (written before r11) cannot name
+    # its kernel — refused too, not resumed and silently never matched
+    bare_store = str(tmp_path_factory.mktemp("dupspan_meta_bare"))
+    spark.createDataFrame(
+        [("0" * 32, "doc_z", 0, 0)],
+        "gh string, doc_id string, pos int, batch_id long",
+    ).write.partitionBy("batch_id").parquet(bare_store, mode="overwrite")
+    refused(bare_store)
+    assert pipelines._dup_span_store_meta(spark, bare_store) is None
+
+    with pytest.raises(ValueError, match="min_tokens"):
         pipelines.dup_span_ingest_sink(
-            stream3,
-            prefix_store,
-            str(tmp_path_factory.mktemp("dupspan_meta_out3")),
-            str(tmp_path_factory.mktemp("dupspan_meta_ck3")),
-            min_tokens=10,
-            casefold=True,
-            impl="rolling",
-        ).awaitTermination(120)
+            stream2, store, out, str(tmp_path_factory.mktemp("ck_k0")),
+            min_tokens=0,
+        )
 
     # compaction carries the meta forward
     compact = str(tmp_path_factory.mktemp("dupspan_meta_compact"))
