@@ -867,14 +867,52 @@ def _dup_span_fixture(spark):
     return spark.createDataFrame([Row(doc_id=d, text=t) for d, t in rows])
 
 
-def _dup_span_reference(rows, k, keep="first", casefold=False):
+def _md5_gram_key(gram):
+    """A gram's identity as the md5 of its space-joined text (tokens hold
+    no spaces, so the join is injective for a fixed k)."""
+    import hashlib
+
+    return hashlib.md5(" ".join(gram).encode("utf-8")).hexdigest()
+
+
+# The persisted 'rolling2' gram-hash contract, restated as constants so
+# the scalar spec below imports no engine code.
+_ROLLING2_PRIMES = (2147483647, 2147483629, 2147483587, 2147483563)
+_ROLLING2_BASES = (1000003, 999983, 1000033, 1000037)
+_ROLLING2_RADIXES = (131, 137, 139, 149)
+
+
+def _rolling2_gram_key(gram):
+    """Scalar spec of the engine's 'rolling2' gh: per channel c a token's
+    value is sum((ord(ch_j) + 1) * R_c**j) mod p_c, a gram's hash is
+    sum(v_c(tok_j) * B_c**(k-1-j)) mod p_c, and gh is the four channels
+    as big-endian 8-hex-digit words."""
+    words = []
+    for p, b, r in zip(_ROLLING2_PRIMES, _ROLLING2_BASES, _ROLLING2_RADIXES):
+        h = 0
+        for tok in gram:
+            v = sum((ord(ch) + 1) * pow(r, j, p) for j, ch in enumerate(tok)) % p
+            h = (h * b + v) % p
+        words.append(f"{h:08x}")
+    return "".join(words)
+
+
+# Both gram identities the reference can group occurrences by.
+_GRAM_KEYS = pytest.mark.parametrize(
+    "gram_key", [_md5_gram_key, _rolling2_gram_key], ids=["md5", "rolling"]
+)
+
+
+def _dup_span_reference(rows, k, keep="first", casefold=False, gram_key=tuple):
     """Brute-force python mirror of the exact-substring family (imports no
     engine code): enumerate EVERY k-gram of every doc, and for each gram
     occurring more than once cover [pos, pos+k-1] at all its occurrences
     but the first (min doc_id, pos) under keep='first', at all of them
     under keep='none'. ``casefold`` compares lowercased tokens; the scrub
-    removes the original tokens. ``rows`` is [(doc_id, text)]. Returns
-    the engine's three shapes:
+    removes the original tokens. ``gram_key`` maps a gram's token list to
+    the identity occurrences are grouped by (the tokens themselves by
+    default). ``rows`` is [(doc_id, text)]. Returns the engine's three
+    shapes:
     - scrub {doc_id: (cleaned_text, n_tokens, n_kept_tokens)}, every doc
       (span-free docs keep their text byte-exact);
     - marks {doc_id: ([(start, end)], n_dup_tokens)}, docs with a span,
@@ -887,7 +925,7 @@ def _dup_span_reference(rows, k, keep="first", casefold=False):
     for d, t in toks.items():
         key = [tok.lower() for tok in t] if casefold else t
         for p in range(len(t) - k + 1):
-            occ[tuple(key[p : p + k])].append((d, p))
+            occ[gram_key(key[p : p + k])].append((d, p))
     skip = 1 if keep == "first" else 0
     covered = defaultdict(set)
     for positions in occ.values():
@@ -1070,11 +1108,15 @@ def test_dup_span_deterministic_under_repartitioning(spark):
     assert a == b
 
 
-def test_dup_span_randomized_brute_force_equivalence(spark):
+@_GRAM_KEYS
+def test_dup_span_randomized_brute_force_equivalence(spark, gram_key):
     """Seeded randomized gate for the coverage lemma: small random corpora
     with planted random-length repeats at random alignments — the engine's
     scrub must equal the brute-force reference's enumeration of ALL
-    duplicated k-grams, for every seed."""
+    duplicated k-grams, for every seed, whether the reference groups
+    grams by md5 of their text or by the scalar 'rolling2' spec. Under
+    the rolling spec the engine's gh VALUES (a persisted store's
+    contract) must also equal the spec at every position."""
     import random
 
     k = 5
@@ -1095,12 +1137,17 @@ def test_dup_span_randomized_brute_force_equivalence(spark):
                 at = rng.randint(0, len(tgt))
                 rows[d] = (d, " ".join(tgt[:at] + base[s : s + L] + tgt[at:]))
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        want, _, _ = _dup_span_reference(rows, k)
+        want, _, _ = _dup_span_reference(rows, k, gram_key=gram_key)
         got = {
             r.doc_id: (r.cleaned_text, r.n_tokens, r.n_kept_tokens)
             for r in dedup.dup_span_scrub(docs, min_tokens=k).collect()
         }
         assert got == want, f"seed {seed}"
+        if gram_key is _rolling2_gram_key:
+            toks = dict(rows)
+            for r in dedup._positioned_kgram_hashes(docs, k).collect():
+                gram = toks[r.doc_id].split(" ")[r.pos : r.pos + k]
+                assert r.gh == gram_key(gram), f"seed {seed} {r.doc_id}@{r.pos}"
 
 
 def test_dup_span_rolling_bit_identical_planted(spark):
@@ -1218,14 +1265,16 @@ def test_incremental_dup_span_equals_one_shot(spark):
     assert n_grams[1] < 200  # batch 2 (docs 3-5) is mostly repeats of doc 1
 
 
-def test_incremental_dup_span_bloom_casefold_equals_one_shot(spark):
+@_GRAM_KEYS
+def test_incremental_dup_span_bloom_casefold_equals_one_shot(spark, gram_key):
     """r11: the Bloom-prefiltered index probe (bloom_fpp) and the casefold
     knob on the incremental path reproduce the one-shot scrub EXACTLY —
     Bloom has no false negatives, and its false positives are index grams
     the exact equi-join discards, so the prefilter is output-invariant by
     construction; casefold plumbs through so a casefolded one-shot has a
     byte-equal streaming twin. The index growth (new_grams) is also
-    pinned identical with and without the prefilter."""
+    pinned identical with and without the prefilter, and the one-shot
+    itself equals the brute-force reference under either gram key."""
     from pulsar_replay_spark.operators import dedup
 
     lower = " ".join(f"word{i}" for i in range(14))
@@ -1242,6 +1291,8 @@ def test_incremental_dup_span_bloom_casefold_equals_one_shot(spark):
         for r in dedup.dup_span_scrub(docs, min_tokens=10, casefold=True).collect()
     }
     assert one_shot[3][0] == "tail0 tail1"  # the knob is load-bearing
+    want, _, _ = _dup_span_reference(rows, 10, casefold=True, gram_key=gram_key)
+    assert one_shot == want
 
     got = {}
     idx = spark.createDataFrame([], "gh string, doc_id long, pos int")
