@@ -296,12 +296,19 @@ def dsir_bucket_log_ratio(
     import math
 
     n_buckets = 16**hex_chars
-    t = target_feats.groupBy("bucket").agg(F.sum("cnt").alias("tc")).persist()
-    r = raw_feats.groupBy("bucket").agg(F.sum("cnt").alias("rc")).persist()
-    # totals come from the already-persisted bucket aggregates, so each
-    # corpus's feature explode runs exactly once in here
-    t_total = t.agg(F.sum("tc")).first()[0] or 0
-    r_total = r.agg(F.sum("rc")).first()[0] or 0
+    # (bucket, tc, rc) is ≤ 16^hex rows: pinned once, it feeds both totals
+    # (one action) and the ratio, so each corpus's feature explode runs
+    # exactly once in here
+    counts = (
+        target_feats.groupBy("bucket")
+        .agg(F.sum("cnt").alias("tc"))
+        .join(raw_feats.groupBy("bucket").agg(F.sum("cnt").alias("rc")),
+              "bucket", "full")
+        .localCheckpoint(eager=True)
+    )
+    totals = counts.agg(F.sum("tc"), F.sum("rc")).first()
+    t_total = totals[0] or 0
+    r_total = totals[1] or 0
     log_ratio = F.log(
         (F.coalesce(F.col("tc"), F.lit(0)) + F.lit(alpha))
         / F.lit(float(t_total + alpha * n_buckets))
@@ -309,16 +316,10 @@ def dsir_bucket_log_ratio(
         (F.coalesce(F.col("rc"), F.lit(0)) + F.lit(alpha))
         / F.lit(float(r_total + alpha * n_buckets))
     )
-    # the ratio table IS the trained model artifact (≤ 16^hex rows): pin it
-    # so every downstream scoring plan broadcasts a materialized tiny frame
-    # instead of re-running both corpus aggregations per consumer
-    ratio = (
-        t.join(r, "bucket", "full")
-        .select("bucket", log_ratio.alias("log_ratio"))
-        .localCheckpoint(eager=True)
-    )
-    t.unpersist()
-    r.unpersist()
+    # the ratio table IS the trained model artifact: a projection of the
+    # pinned counts, so every downstream scoring plan broadcasts a
+    # materialized tiny frame instead of re-running both aggregations
+    ratio = counts.select("bucket", log_ratio.alias("log_ratio"))
     default = math.log(alpha / (t_total + alpha * n_buckets)) - math.log(
         alpha / (r_total + alpha * n_buckets)
     )
@@ -371,9 +372,10 @@ def dsir_log_weights(
     text) still return a row (logw 0.0 for zero features).
 
     The raw corpus's n-gram explode (md5 per gram — the dominant CPU) runs
-    ONCE: the per-doc feature frame is persisted, the ratio aggregation
-    reduces it (materializing the cache via its own totals actions), the
-    scoring join reuses it, and the weights are pinned before release —
+    ONCE: the per-doc feature frame is persisted, the ratio's pinned
+    bucket counts reduce it (materializing the cache in that one
+    checkpoint job), the scoring join reuses it, and the weights are
+    pinned before release —
     the ``minhash_candidate_pairs`` cache discipline (measured ~20% off
     weight-computation wall time at sf0.1 — the explode partly pipelines
     with its aggregations, so the saved pass isn't free-standing). Scoring

@@ -14,9 +14,12 @@ survives, budget respected, splits partition the selection, packed tokens
 conserve the train split).
 
 Scale posture: stages communicate by doc_id frames (anti-join / semi-join
-joins on the primary key); no stage re-reads text it does not need, and the
-expensive artifacts (dedup clusters, DSIR ratio) are built once by their
-own operators' cache discipline.
+joins on the primary key) and no stage re-reads text it does not need.
+Each reported stage of ``curate_corpus`` is computed once: it is locally
+checkpointed as it is built, so the next stage, the funnel report's count
+and the caller's collects read its blocks. Lazy stage frames would re-run
+the whole upstream lineage (shingles, MinHash, DSIR features) once per
+consumer; the operators' own caches pin only their internal artifacts.
 """
 
 from __future__ import annotations
@@ -56,8 +59,18 @@ def curate_corpus(
 ) -> dict:
     """Run the full funnel; returns every stage frame plus a funnel report.
 
-    Keys: deduped, decontaminated, filtered, scored, selected, split,
-    packed, report (stage, n_docs rows in pipeline order)."""
+    Keys: deduped, decontaminated, filtered, selected, split, packed,
+    report (stage, n_docs rows in pipeline order), and leakage with
+    ``check_leakage``.
+
+    Every reported stage frame (``deduped``, ``decontaminated``,
+    ``filtered``, ``selected``, each optional stage and the train docs
+    packing reads) is an eager local checkpoint: the call runs the
+    funnel's heavy work, and the returned frames only read stored blocks.
+    ``split``, ``packed`` and ``report`` stay lazy projections of them.
+    The blocks live until the returned frames are garbage-collected. That
+    suits ``local[N]``; on a cluster a lost executor loses its blocks, and
+    a frame that read them fails."""
     stages: list[tuple[str, DataFrame]] = [("input", docs)]
 
     # optional Unicode repair FIRST (r9): mojibake fix + NFC so every
@@ -68,8 +81,7 @@ def curate_corpus(
     if fix_text:
         from pulsar_replay_spark.operators.textnorm import repair_corpus
 
-        docs = repair_corpus(docs)
-        stages.append(("text_repaired", docs))
+        docs = _stage(stages, "text_repaired", repair_corpus(docs))
 
     # optional lang enrichment (r10): fill NULL lang rows under a trained
     # char-n-gram model (classifier.lang_classifier_train artifact) BEFORE
@@ -80,8 +92,7 @@ def curate_corpus(
     if lang_model is not None:
         from pulsar_replay_spark.operators.classifier import enrich_lang
 
-        docs = enrich_lang(docs, lang_model)
-        stages.append(("lang_enriched", docs))
+        docs = _stage(stages, "lang_enriched", enrich_lang(docs, lang_model))
 
     # optional URL-level pre-dedup: canonicalized source URLs shed exact
     # re-fetches BEFORE any text is hashed (the crawl pipeline's cheapest
@@ -90,11 +101,11 @@ def curate_corpus(
         from pulsar_replay_spark.functions.urls import url_dedup_marks
 
         keep_ids = url_dedup_marks(docs).filter(F.col("keep")).select("doc_id")
-        docs = docs.join(keep_ids, "doc_id", "left_semi")
-        stages.append(("url_deduped", docs))
+        docs = _stage(
+            stages, "url_deduped", docs.join(keep_ids, "doc_id", "left_semi")
+        )
 
-    deduped = dedup.dedup_corpus(docs)
-    stages.append(("deduped", deduped))
+    deduped = _stage(stages, "deduped", dedup.dedup_corpus(docs))
 
     # optional any-length exact-substring scrub (r10, Lee et al.
     # arXiv:2107.06499): after doc-level dedup, remove every duplicated
@@ -103,17 +114,16 @@ def curate_corpus(
     # to nothing leave the corpus; n_chars recomputed over surviving text.
     if dup_span_tokens is not None:
         scrubbed = dedup.dup_span_scrub(deduped, min_tokens=dup_span_tokens)
-        deduped = (
-            deduped.drop("text", "n_chars")
-            .join(
-                scrubbed.filter(F.length("cleaned_text") > 0).select(
-                    "doc_id", F.col("cleaned_text").alias("text")
-                ),
-                "doc_id",
-            )
-            .withColumn("n_chars", F.length("text").cast("long"))
+        kept_text = scrubbed.filter(F.length("cleaned_text") > 0).select(
+            "doc_id", F.col("cleaned_text").alias("text")
         )
-        stages.append(("dup_span_scrubbed", deduped))
+        deduped = _stage(
+            stages,
+            "dup_span_scrubbed",
+            deduped.drop("text", "n_chars")
+            .join(kept_text, "doc_id")
+            .withColumn("n_chars", F.length("text").cast("long")),
+        )
 
     if benchmark is not None and decontaminate_policy == "scrub":
         # r9 span policy: remove only the contaminated token spans and keep
@@ -138,7 +148,7 @@ def curate_corpus(
         decontaminated = deduped.join(clean_ids, "doc_id", "left_semi")
     else:
         decontaminated = deduped
-    stages.append(("decontaminated", decontaminated))
+    decontaminated = _stage(stages, "decontaminated", decontaminated)
 
     # optional second decontamination lever: BM25 against the benchmark —
     # catches the paraphrase that shares its RARE VOCABULARY with an eval
@@ -160,10 +170,11 @@ def curate_corpus(
             max_df_ratio=lexical_max_df_ratio,
             broadcast_queries=lexical_broadcast_queries,
         )
-        decontaminated = decontaminated.join(
-            flagged.select("doc_id"), "doc_id", "left_anti"
+        decontaminated = _stage(
+            stages,
+            "lexically_decontaminated",
+            decontaminated.join(flagged.select("doc_id"), "doc_id", "left_anti"),
         )
-        stages.append(("lexically_decontaminated", decontaminated))
 
     # optional host-authority floor (graph.domain_rank over the crawl's
     # link graph): drop docs whose source host sits in the bottom
@@ -182,8 +193,11 @@ def curate_corpus(
         keep_ids = pri.filter(
             F.col("domain_rank_fp").isNull() | (F.col("domain_rank_fp") >= thr)
         ).select("doc_id")
-        decontaminated = decontaminated.join(keep_ids, "doc_id", "left_semi")
-        stages.append(("domain_filtered", decontaminated))
+        decontaminated = _stage(
+            stages,
+            "domain_filtered",
+            decontaminated.join(keep_ids, "doc_id", "left_semi"),
+        )
 
     # optional compression gate: deflate-ratio outliers (templated spam /
     # encoded junk) out before the quantile floor — a junk-heavy source
@@ -192,10 +206,10 @@ def curate_corpus(
     # the short-doc caveat (pair with a length floor).
     if compression_filter:
         lo, hi = compression_bounds
-        decontaminated, _rej = quality.compression_gate(
+        kept, _rej = quality.compression_gate(
             decontaminated, min_ratio=lo, max_ratio=hi
         )
-        stages.append(("compression_filtered", decontaminated))
+        decontaminated = _stage(stages, "compression_filtered", kept)
 
     # per-source quality floor on TTR — cheap, text-local, runs before any
     # model scoring so the scorer never sees the bottom tail
@@ -205,8 +219,9 @@ def curate_corpus(
         curation.default_quality_score(F.col("text")).alias("score"),
     )
     kept_ids = quality.drop_bottom_quantile(ttr, drop_quantile).select("doc_id")
-    filtered = decontaminated.join(kept_ids, "doc_id", "left_semi")
-    stages.append(("filtered", filtered))
+    filtered = _stage(
+        stages, "filtered", decontaminated.join(kept_ids, "doc_id", "left_semi")
+    )
 
     # optional CCNet LM tier filter: train a corpus bigram LM over the
     # surviving docs and drop each language's least-fluent tertile ('tail');
@@ -214,8 +229,9 @@ def curate_corpus(
     if drop_lm_tail:
         buckets = quality.ccnet_buckets(filtered)
         keep_ids = buckets.filter(F.col("bucket") != "tail").select("doc_id")
-        filtered = filtered.join(keep_ids, "doc_id", "left_semi")
-        stages.append(("lm_filtered", filtered))
+        filtered = _stage(
+            stages, "lm_filtered", filtered.join(keep_ids, "doc_id", "left_semi")
+        )
 
     # optional SemDeDup stage without a learned encoder: feature-hashed doc
     # vectors feed the embedding-level semantic dedup (the bootstrap
@@ -229,8 +245,9 @@ def curate_corpus(
         keep_vec = verdicts.filter(F.col("keep")).select(
             F.col("vec_id").alias("doc_id")
         )
-        filtered = filtered.join(keep_vec, "doc_id", "left_semi")
-        stages.append(("semantic_deduped", filtered))
+        filtered = _stage(
+            stages, "semantic_deduped", filtered.join(keep_vec, "doc_id", "left_semi")
+        )
 
     # selection score: DSIR log importance weight against the target corpus
     # when given (round to 4 decimals — the bounded-cardinality property
@@ -244,17 +261,20 @@ def curate_corpus(
     else:
         scored = filtered
         score_col = None
-    selected = curation.select_within_token_budget(
-        scored, budget_tokens, score=score_col
+    selected = _stage(
+        stages,
+        "selected",
+        curation.select_within_token_budget(scored, budget_tokens, score=score_col),
     )
-    stages.append(("selected", selected))
 
     split = curation.hash_split(selected)
     train_ids = split.filter(F.col("split") == "train").select("doc_id")
-    train_docs = filtered.join(train_ids, "doc_id", "left_semi")
+    train_docs = _stage(
+        stages, "train", filtered.join(train_ids, "doc_id", "left_semi")
+    )
     packed = packing.pack_token_stream(train_docs, seq_len=seq_len, n_shards=n_shards)
 
-    report = _funnel_report(stages + [("train", train_docs)])
+    report = _funnel_report(stages)
     out = {
         "deduped": deduped,
         "decontaminated": decontaminated,
@@ -272,6 +292,21 @@ def curate_corpus(
         sel_docs = filtered.join(selected.select("doc_id"), "doc_id", "left_semi")
         out["leakage"] = curation.split_leakage_report(sel_docs, split)
     return out
+
+
+def _stage(
+    stages: list[tuple[str, DataFrame]], name: str, df: DataFrame
+) -> DataFrame:
+    """Materialize one reported funnel stage and record it under ``name``.
+
+    Every later stage, the report's count and the caller's collects then
+    read the stage's blocks instead of re-running its lineage (shingles,
+    MinHash, the benchmark overlap, the quality quantile). A local
+    checkpoint, not persist: the frame outlives this call, so nothing here
+    could know when to release a cache."""
+    df = df.localCheckpoint(eager=True)
+    stages.append((name, df))
+    return df
 
 
 def _funnel_report(stages: list[tuple[str, DataFrame]]) -> DataFrame:

@@ -137,6 +137,24 @@ def test_unseen_buckets_score_default(spark):
     assert abs(scored.logw - n_feats * default) < 1e-9
 
 
+def test_bucket_log_ratio_takes_both_totals_in_one_action(spark, documents, target):
+    """Both corpus totals come from ONE aggregate over the checkpointed
+    (bucket, tc, rc) counts, and the ratio is a projection of them. Before
+    the fold each side's bucket aggregate was persisted and summed by its
+    own first() job: 10 jobs for this call, now 6. The weights built on
+    this ratio stay pinned to the DuckDB oracle above."""
+    sc = spark.sparkContext
+    group = "test-dsir-ratio-job-count"
+    sc.setJobGroup(group, "dsir_bucket_log_ratio")
+    try:
+        curation.dsir_bucket_log_ratio(
+            curation.dsir_bucket_counts(target), curation.dsir_features(documents)
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+
+
 def test_deterministic_under_repartition(documents, target, weights):
     again = {
         r.doc_id: r.logw

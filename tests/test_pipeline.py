@@ -6,6 +6,9 @@ conserves exactly the train split's tokens."""
 
 from __future__ import annotations
 
+import re
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,17 +19,97 @@ BUDGET = 15_000
 
 
 @pytest.fixture(scope="module")
-def result(documents):
+def funnel(spark, documents):
+    """One curate_corpus call plus the ``packed`` and ``report`` collects,
+    run in one job group. The job count is read right away: the status
+    store keeps only the most recent jobs."""
     benchmark = documents.filter(F.col("doc_id") % 40 == 0).select(
         (F.col("doc_id") + 500_000).alias("doc_id"), "text"
     )
     target = documents.filter(F.col("lang") == "es")
-    return (
-        pipeline.curate_corpus(
+    sc = spark.sparkContext
+    group = "test-curate-corpus-job-count"
+    sc.setJobGroup(group, "curate_corpus")
+    try:
+        res = pipeline.curate_corpus(
             documents, benchmark=benchmark, target=target, budget_tokens=BUDGET
-        ),
-        documents,
-        benchmark,
+        )
+        res["packed"].collect()
+        res["report"].collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return SimpleNamespace(
+        res=res,
+        benchmark=benchmark,
+        jobs=len(sc.statusTracker().getJobIdsForGroup(group)),
+    )
+
+
+@pytest.fixture(scope="module")
+def result(funnel, documents):
+    return funnel.res, documents, funnel.benchmark
+
+
+def test_funnel_job_count(funnel):
+    """Each reported stage is checkpointed once inside curate_corpus, so
+    the call plus the packed and report collects runs 54 jobs. With lazy
+    stage frames the two collects re-ran the dedup, overlap, quality and
+    DSIR lineages: 85 jobs."""
+    assert funnel.jobs == 54
+
+
+def test_collects_rerun_no_stage_lineage(funnel):
+    """After the collects, the executed plans of packed and report hold no
+    Generate node: no shingle, MinHash or DSIR explode runs again outside
+    curate_corpus. With lazy stage frames they held 20 and 40."""
+    for key in ("packed", "report"):
+        plan = funnel.res[key]._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"\bGenerate\b", plan), key
+
+
+def _assert_report_matches_frames(res, frame_rows):
+    """Each report row named in ``frame_rows`` counts the returned frame
+    that stage produced, and the train row counts the packed docs."""
+    report = {r.stage: r.n_docs for r in res["report"].collect()}
+    for frame, stage in frame_rows.items():
+        assert report[stage] == res[frame].count(), (frame, stage)
+    packed_ids = res["packed"].select("doc_id").distinct().count()
+    assert report["train"] == packed_ids
+
+
+def test_report_counts_match_returned_frames(result):
+    res, _, _ = result
+    _assert_report_matches_frames(
+        res,
+        {f: f for f in ("deduped", "decontaminated", "filtered", "selected")},
+    )
+
+
+def test_report_counts_match_returned_frames_with_optional_stages(documents):
+    """With optional stages the returned ``decontaminated`` frame is the
+    last stage of its family (``compression_filtered``)."""
+    res = pipeline.curate_corpus(
+        documents, url_dedup=True, compression_filter=True, budget_tokens=10_000
+    )
+    stages = [r.stage for r in res["report"].orderBy("stage_idx").collect()]
+    assert stages == [
+        "input",
+        "url_deduped",
+        "deduped",
+        "decontaminated",
+        "compression_filtered",
+        "filtered",
+        "selected",
+        "train",
+    ]
+    _assert_report_matches_frames(
+        res,
+        {
+            "deduped": "deduped",
+            "decontaminated": "compression_filtered",
+            "filtered": "filtered",
+            "selected": "selected",
+        },
     )
 
 
