@@ -35,15 +35,21 @@ Query-term weighting follows Lucene: query term frequency is ignored
 (DISTINCT terms per query); the k3 saturation term of original Okapi is a
 no-op for the short queries this mines and is omitted on both engine and
 oracle sides.
+
+The maintained postings store (below) serves small stores from a
+driver-resident snapshot, gated on store bytes and query rows; see the
+store section and ``operators/resident.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
 from pulsar_replay_spark.functions.text import tokens
+from pulsar_replay_spark.operators import resident
 
 K1 = 1.2
 B = 0.75
@@ -433,6 +439,15 @@ def anchor_retrieval_pairs(
 # from the store are pinned BYTE-EQUAL to the query-bounded scan
 # (test_retrieval.py): same postings rows, same df, same stats, same
 # micro-unit integer sums, via the shared ``_score_from_postings`` tail.
+#
+# Small stores serve from driver memory (``operators/resident.py``): at
+# most ``resident.MAX_STORE_BYTES`` under store_dir and at most
+# ``resident.MAX_QUERY_ROWS`` query rows, ``bm25_topk_from_index`` computes
+# every stored posting's contribution once per store version (the job-free
+# part-file listing, renamed by every write) and (k1, b), and scores each
+# batch in process with exact integer sums. The snapshot costs a few times
+# the store's bytes of driver heap; bigger stores keep the bucket-pruned
+# Spark serve.
 # ---------------------------------------------------------------------------
 
 N_TERM_BUCKETS = 64
@@ -532,11 +547,13 @@ def _store_n_buckets(spark, store_dir: str) -> "int | None":
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(f"{store_dir}/meta").head().n_buckets
+        # the known schema skips the schema-inference job
+        r = spark.read.schema("n_buckets int").parquet(f"{store_dir}/meta").head()
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
+        if "PATH_NOT_FOUND" in str(e):
             return None
         raise
+    return None if r is None else r.n_buckets
 
 
 def index_doc_stats(spark, store_dir: str) -> DataFrame:
@@ -609,6 +626,84 @@ def bm25_scores_from_index(
     )
 
 
+def _bm25_snapshot(spark, store_dir: str, k1: float, b: float) -> dict:
+    """Every distinct stored posting's micro-unit contribution ``c_u`` —
+    the serve's own ``_contribution_u`` over the store's distinct postings,
+    their df and ``index_doc_stats`` — sorted by term, with a
+    term → (row slice, df) index."""
+    import numpy as np
+
+    if _store_n_buckets(spark, store_dir) is None:
+        raise FileNotFoundError(f"no postings store at {store_dir}")
+    postings = (
+        spark.read.parquet(f"{store_dir}/postings")
+        .select("term", "doc_id", "tf", "dl")
+        .distinct()
+    )
+    df_t = postings.groupBy("term").agg(F.count("*").cast("long").alias("df"))
+    pdf = (
+        postings.join(df_t, "term")
+        .join(F.broadcast(index_doc_stats(spark, store_dir)))
+        .select("term", "doc_id", _contribution_u(k1, b).alias("c_u"), "df", "n_docs")
+        .toPandas()
+        .sort_values("term", kind="mergesort")
+    )
+    terms, starts = np.unique(pdf["term"].to_numpy(dtype=object), return_index=True)
+    ends = np.append(starts[1:], len(pdf))
+    dfs = pdf["df"].to_numpy()
+    return {
+        "doc_field": postings.schema["doc_id"],
+        "n_docs": int(pdf["n_docs"].iloc[0]) if len(pdf) else 0,
+        "doc_id": pdf["doc_id"].to_numpy(dtype="int64"),
+        "c_u": pdf["c_u"].to_numpy(dtype="int64"),
+        "terms": {
+            t: (int(lo), int(hi), int(dfs[lo]))
+            for t, lo, hi in zip(terms, starts, ends)
+        },
+    }
+
+
+def _resident_bm25_topk(
+    spark, snap: dict, rows: list, query_field, k: int, max_df_ratio
+) -> DataFrame:
+    """The Spark serve's arithmetic on a snapshot: DISTINCT non-empty
+    ``split(" ")`` terms per query_id, the ``max_df_ratio`` cap, exact
+    integer sums of ``c_u``, (score_u DESC, doc_id) ranking and the
+    ``F.round``-4 display score."""
+    import numpy as np
+
+    terms_of: dict = {}
+    for r in rows:
+        if r.query is not None:
+            terms_of.setdefault(r.query_id, set()).update(
+                t for t in r.query.split(" ") if t
+            )
+    cap = None if max_df_ratio is None else snap["n_docs"] * max_df_ratio
+    out = []
+    for qid, terms in terms_of.items():
+        hits = [snap["terms"][t] for t in terms if t in snap["terms"]]
+        spans = [(lo, hi) for lo, hi, df in hits if cap is None or df <= cap]
+        if not spans:
+            continue
+        ids = np.concatenate([snap["doc_id"][lo:hi] for lo, hi in spans])
+        c_u = np.concatenate([snap["c_u"][lo:hi] for lo, hi in spans])
+        docs, inv = np.unique(ids, return_inverse=True)
+        score_u = np.zeros(len(docs), dtype="int64")
+        np.add.at(score_u, inv, c_u)
+        for rk, i in enumerate(np.lexsort((docs, -score_u))[:k], 1):
+            score = resident.round_half_up(int(score_u[i]) / SCALE, 4)
+            out.append((qid, int(docs[i]), score, rk))
+    schema = StructType(
+        [
+            StructField("query_id", query_field.dataType, query_field.nullable),
+            snap["doc_field"],
+            StructField("score", DoubleType()),
+            StructField("rk", IntegerType(), nullable=False),
+        ]
+    )
+    return spark.createDataFrame(out, schema)
+
+
 def bm25_topk_from_index(
     spark,
     store_dir: str,
@@ -619,7 +714,28 @@ def bm25_topk_from_index(
     max_df_ratio: float | None = None,
     broadcast_queries: bool = True,
 ) -> DataFrame:
-    """``bm25_topk`` served from the maintained store."""
+    """``bm25_topk`` served from the maintained store.
+
+    A store of at most ``resident.MAX_STORE_BYTES`` on disk, queried with
+    at most ``resident.MAX_QUERY_ROWS`` rows, is served in process instead
+    (``_resident_bm25_topk``): every stored (term, doc) contribution is
+    computed once per store version and (k1, b) by the Spark expressions
+    below and held in driver memory, so each batch costs one query collect
+    plus the caller's action on the returned local frame. Rows and schema
+    equal this Spark serve's (pinned in tests); ``broadcast_queries`` only
+    shapes the Spark plan."""
+    version = resident.store_version(spark, store_dir)
+    if version is not None and version[1] <= resident.MAX_STORE_BYTES:
+        rows = resident.bounded_rows(queries, ["query_id", "query"])
+        if rows is not None:
+            snap = resident.snapshot(
+                ("bm25", store_dir, k1, b),
+                version,
+                lambda: _bm25_snapshot(spark, store_dir, k1, b),
+            )
+            return _resident_bm25_topk(
+                spark, snap, rows, queries.schema["query_id"], k, max_df_ratio
+            )
     return _topk_of_scores(
         bm25_scores_from_index(
             spark, store_dir, queries, k1, b, max_df_ratio, broadcast_queries

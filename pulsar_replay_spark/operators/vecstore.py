@@ -28,6 +28,16 @@ so old assignments never churn and serving stays byte-equal to the
 in-session ``ivf_topk`` over the same centroids (pinned in tests).
 Re-train = build a fresh store and swap directories.
 
+Small stores are served from driver memory (``operators/resident.py``):
+when the store directory holds at most ``resident.MAX_STORE_BYTES`` on disk
+and the query frame at most ``resident.MAX_QUERY_ROWS`` rows,
+``ivf_topk_from_index`` loads the centroids and latest-wins vectors once
+per store version — keyed by the job-free listing of the store's part
+files, which every write renames — and answers each batch in process with
+the same kernels. The snapshot costs a few times the store's bytes of
+driver heap. Larger stores and batches take the partition-pruned Spark
+serve described above.
+
 Lifecycle mirrors the postings store: one-shot build and streaming ingest
 land idempotent ``batch_id`` partitions (dynamic partition overwrite — a
 crash-retried batch clobbers only itself; ``BASE_BATCH_ID = -1`` keeps the
@@ -45,7 +55,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
+from pulsar_replay_spark.operators import resident
 from pulsar_replay_spark.operators.similarity import (
     ivf_assign,
     ivf_centroids,
@@ -99,17 +117,20 @@ def _store_meta(spark: SparkSession, store_dir: str) -> "dict | None":
     from pyspark.errors import AnalysisException
 
     try:
-        r = spark.read.parquet(f"{store_dir}/meta").head()
-        # pq joined the meta in r12 — pre-r12 stores read back as plain
-        return {
-            "n_cells": int(r.n_cells),
-            "dim": int(r.dim),
-            "pq": bool(getattr(r, "pq", False)),
-        }
+        # the known schema skips the schema-inference job; pq joined the
+        # meta in r12, so a pre-r12 meta reads pq as NULL → plain store
+        r = (
+            spark.read.schema("n_cells int, dim int, pq boolean")
+            .parquet(f"{store_dir}/meta")
+            .head()
+        )
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
+        if "PATH_NOT_FOUND" in str(e):
             return None
         raise
+    if r is None:
+        return None
+    return {"n_cells": int(r.n_cells), "dim": int(r.dim), "pq": bool(r.pq)}
 
 
 def ivf_index_build(
@@ -329,6 +350,105 @@ def store_centroids(spark: SparkSession, store_dir: str) -> DataFrame:
     return spark.read.parquet(f"{store_dir}/centroids")
 
 
+_IVF_TOPK_SCHEMA = StructType(
+    [
+        StructField("q_id", LongType()),
+        StructField("neighbor_id", LongType()),
+        StructField("sim", DoubleType()),
+        StructField("rk", IntegerType(), nullable=False),
+    ]
+)
+
+
+def _ivf_snapshot(spark: SparkSession, store_dir: str) -> dict:
+    """The store as the Spark serve reads it — frozen centroids and the
+    latest-wins, deduplicated vectors (``_store_vectors_latest``) — held
+    as numpy centroids and one (n_id, n_emb) pandas frame per cell."""
+    import numpy as np
+
+    from pulsar_replay_spark.operators.similarity import _fold_norms
+
+    cents = store_centroids(spark, store_dir).orderBy("cell_id").collect()
+    C = np.stack([np.asarray(r.centroid, dtype="float64") for r in cents])
+    vecs = _store_vectors_latest(spark, store_dir).toPandas()
+    vecs = vecs.rename(columns={"vec_id": "n_id", "embedding": "n_emb"})
+    return {
+        "cell_ids": np.array([r.cell_id for r in cents], dtype="int64"),
+        "C": C,
+        "c_norm": _fold_norms(C, C.shape[1]),
+        "cells": {
+            int(cid): g[["n_id", "n_emb"]].reset_index(drop=True)
+            for cid, g in vecs.groupby("cell_id")
+        },
+    }
+
+
+def _resident_ivf_topk(
+    spark: SparkSession, snap: dict, rows: list, k: int, n_probe: int
+) -> DataFrame:
+    """The Spark serve's arithmetic on a snapshot: raw-cosine ``n_probe``
+    assignment with the shared sequential folds (the HOF ``dot``/``norm``
+    add order) and the cell_id tie-break, the cogroup kernel
+    ``_cell_pair_sims`` per probed cell, then the (q_id, n_id) dedup and
+    the ``F.round``-6 (sim6 DESC, n_id) ranking."""
+    import numpy as np
+    import pandas as pd
+
+    from pulsar_replay_spark.operators.similarity import (
+        _cell_pair_sims,
+        _fold_dots,
+        _fold_norms,
+    )
+
+    rows = [r for r in rows if r.vec_id is not None]  # the join drops them
+    if not rows:
+        return spark.createDataFrame([], _IVF_TOPK_SCHEMA)
+    q_ids = np.array([r.vec_id for r in rows], dtype="int64")
+    Q = np.stack([np.asarray(r.embedding, dtype="float64") for r in rows])
+    q_norm = _fold_norms(Q, Q.shape[1])
+    cell_ids, c_norm = snap["cell_ids"], snap["c_norm"]
+    for what, nrm, ids in (
+        ("embedding (vec_id", q_norm, q_ids),
+        ("centroid (cell_id", c_norm, cell_ids),
+    ):
+        z = np.flatnonzero(nrm == 0.0)
+        if len(z):
+            raise ValueError(
+                f"zero-norm {what}={int(ids[z[0]])}): cosine is undefined "
+                "— filter degenerate vectors upstream"
+            )
+    sims = _fold_dots(Q, snap["C"], Q.shape[1]) / (q_norm[:, None] * c_norm)
+    probing: dict = {}
+    for qi, s in enumerate(sims):
+        for ci in np.lexsort((cell_ids, -s))[:n_probe]:
+            probing.setdefault(int(cell_ids[ci]), []).append(qi)
+    parts = [
+        _cell_pair_sims(
+            snap["cells"][cid],
+            pd.DataFrame({"q_id": q_ids[qis], "q_emb": list(Q[qis])}),
+            k=k,
+        )
+        for cid, qis in probing.items()
+        if cid in snap["cells"]
+    ]
+    if not parts:
+        return spark.createDataFrame([], _IVF_TOPK_SCHEMA)
+    raw = pd.concat(parts, ignore_index=True).drop_duplicates(["q_id", "n_id"])
+    raw["sim6"] = [resident.round_half_up(x, 6) for x in raw["raw_sim"]]
+    raw = raw.sort_values(
+        ["q_id", "sim6", "n_id"], ascending=[True, False, True], kind="mergesort"
+    )
+    raw["rk"] = raw.groupby("q_id").cumcount() + 1
+    top = raw[raw["rk"] <= k]
+    return spark.createDataFrame(
+        [
+            (int(q), int(n), resident.round_half_up(s, 3), int(rk))
+            for q, n, s, rk in zip(top["q_id"], top["n_id"], top["sim6"], top["rk"])
+        ],
+        _IVF_TOPK_SCHEMA,
+    )
+
+
 def ivf_topk_from_index(
     spark: SparkSession,
     store_dir: str,
@@ -343,7 +463,25 @@ def ivf_topk_from_index(
     distinct cell ids (bounded collect) become a partition filter, the
     centroids ride in as the frozen artifact, and the stored (vec_id,
     cell_id) partition column IS the corpus assignment — the
-    O(N·cells·dim) assignment never reruns at serve time."""
+    O(N·cells·dim) assignment never reruns at serve time.
+
+    A store of at most ``resident.MAX_STORE_BYTES`` on disk, queried with
+    at most ``resident.MAX_QUERY_ROWS`` rows, is served in process instead
+    (``_resident_ivf_topk``): its centroids and latest-wins vectors load
+    into driver memory once per store version (the job-free file listing,
+    see ``operators/resident.py``), and each batch then costs one query
+    collect plus the caller's action on the returned local frame. Rows and
+    schema equal this Spark serve's (pinned in tests)."""
+    version = resident.store_version(spark, store_dir)
+    if version is not None and version[1] <= resident.MAX_STORE_BYTES:
+        rows = resident.bounded_rows(queries, ["vec_id", "embedding"])
+        if rows is not None:
+            snap = resident.snapshot(
+                ("ivf", store_dir),
+                version,
+                lambda: _ivf_snapshot(spark, store_dir),
+            )
+            return _resident_ivf_topk(spark, snap, rows, k, n_probe)
     cents = store_centroids(spark, store_dir)
     # r13 (guide §5): the query assignment is ≤ |Q|·n_probe rows — collect
     # it ONCE and rebuild the frame as a local relation instead of paying a

@@ -54,6 +54,14 @@ def get_spark(app_name: str = "pulsar-replay-spark", cpus: int | None = None) ->
         # raising it.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Partition discovery lists a directory level on the driver while it
+        # holds at most this many children; above it Spark starts a listing
+        # JOB (64 tasks, ~0.5 s here) per level. Spark's default of 32 made
+        # every read of a 64-cell store root pay one such job per batch_id
+        # directory, and the stores' job-free version listing
+        # (operators/resident.py) relies on the serial listing. Stores at
+        # cluster scale (2^15 cells) still list in parallel.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # events.ts has shipped both as parquet TIMESTAMP(NANOS) (which the
         # vectorized reader only accepts as a raw long under this conf) and as
         # TIMESTAMP(MICROS) (read natively). Setting nanosAsLong is harmless in

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pulsar_replay_spark.operators import similarity, vecstore
+from pulsar_replay_spark.operators import resident, similarity, vecstore
 
 N_CELLS = 16
 N_PROBE = 4
@@ -28,7 +28,9 @@ def _queries(embeddings):
     )
 
 
-def test_ivf_store_serve_equals_in_session(spark, embeddings, tmp_path):
+def test_ivf_store_serve_equals_in_session(
+    spark, embeddings, tmp_path, monkeypatch
+):
     """build → serve == the in-session ivf_topk over the SAME centroids
     (exact rows: ids, sims, ranks), and the serve plan partition-prunes
     the vectors scan on cell_id."""
@@ -45,7 +47,9 @@ def test_ivf_store_serve_equals_in_session(spark, embeddings, tmp_path):
     assert _rows(served) == _rows(in_session)
 
     # partition pruning is structural: the vectors scan carries a cell_id
-    # partition filter (the probed-cells bounded collect became the prune)
+    # partition filter (the probed-cells bounded collect became the prune).
+    # The plan gates read the Spark serve, the one above the byte gate.
+    monkeypatch.setattr(resident, "MAX_STORE_BYTES", 0)
     plan = (
         vecstore.ivf_topk_from_index(spark, store, q, k=5, n_probe=N_PROBE)
         ._jdf.queryExecution()
@@ -153,7 +157,7 @@ def test_ivf_store_compact_latest_wins_and_expire(
 
 
 def test_ivf_store_serve_latest_wins_before_compaction(
-    spark, embeddings, tmp_path
+    spark, embeddings, tmp_path, monkeypatch
 ):
     """r11 ADVICE regression: a vec_id re-ingested with a CHANGED
     embedding moves cells, and until compaction the store holds BOTH
@@ -192,6 +196,8 @@ def test_ivf_store_serve_latest_wins_before_compaction(
     # r13 plan gates (the C5 fast path's OTHER half): the multi-batch store
     # must KEEP the latest-wins semi-join, while its compacted (one-batch)
     # twin serves without it
+    # (on the Spark serve, the one above the byte gate)
+    monkeypatch.setattr(resident, "MAX_STORE_BYTES", 0)
     multi_plan = (
         vecstore.ivf_topk_from_index(spark, store, q, k=5, n_probe=N_PROBE)
         ._jdf.queryExecution().executedPlan().toString()
@@ -744,3 +750,35 @@ def test_ivf_pq_store_serve_with_dropped_codebook_cell(spark, tmp_path):
             assert sim == pytest.approx(exact, abs=1e-3)
         sims = [s for _, _, s in got]
         assert sims == sorted(sims, reverse=True)
+
+
+def test_store_meta_known_schema_reads_pre_pq_meta(spark, tmp_path):
+    """The meta reads with its known schema (no inference job): a meta
+    written before ``pq`` joined it reads as a plain store; a missing or
+    empty meta directory means no store."""
+    old = str(tmp_path / "old")
+    spark.createDataFrame([(16, 64)], "n_cells int, dim int").write.parquet(
+        f"{old}/meta"
+    )
+    assert vecstore._store_meta(spark, old) == {"n_cells": 16, "dim": 64, "pq": False}
+    assert vecstore._store_meta(spark, str(tmp_path / "missing")) is None
+    (tmp_path / "empty" / "meta").mkdir(parents=True)
+    assert vecstore._store_meta(spark, str(tmp_path / "empty")) is None
+
+
+def test_ivf_growth_batch_job_count(spark, embeddings, tmp_path):
+    """A growth batch into a one-batch, 64-cell store runs 10 jobs: the
+    meta read skips schema inference and the 64-cell partition root lists
+    on the driver. It ran 12 before both."""
+    emb = embeddings.select("vec_id", "embedding")
+    store = str(tmp_path / "cells64")
+    vecstore.ivf_index_build(emb.filter(F.col("vec_id") < 400), store, n_cells=64)
+    growth = emb.filter(F.col("vec_id") >= 400).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "test-vecstore-growth-job-count"
+    sc.setJobGroup(group, "ivf_index_build growth")
+    try:
+        vecstore.ivf_index_build(growth, store, batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 10

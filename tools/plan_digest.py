@@ -95,8 +95,12 @@ def main() -> None:
     # prebuilt index) — digest them too so PLANS.md shows the served plans.
     from pyspark.sql import functions as F
 
-    from pulsar_replay_spark.operators import similarity
+    from pulsar_replay_spark.operators import resident, similarity
 
+    # Stores this small are served in process (operators/resident.py), as
+    # a local relation with no plan to digest: a byte gate of 0 selects the
+    # Spark serve, the plan every store above the gate runs.
+    resident.MAX_STORE_BYTES = 0
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     n_cells, n_probe = similarity.ivf_params(emb.count())
     cents = similarity.kmeans_refine(emb, n_cells, n_iter=2)
