@@ -17,6 +17,12 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
+def split_tokens(text: str) -> list:
+    """``tokens`` on a driver-side string: each single space splits, so
+    runs of spaces leave empty tokens exactly as ``F.split`` does."""
+    return text.split(" ")
+
+
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 

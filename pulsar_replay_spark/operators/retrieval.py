@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
-from pulsar_replay_spark.functions.text import tokens
+from pulsar_replay_spark.functions.text import split_tokens, tokens
 from pulsar_replay_spark.operators import resident
 
 K1 = 1.2
@@ -66,6 +66,11 @@ def query_terms(queries: DataFrame) -> DataFrame:
         .filter(F.col("term") != "")
         .distinct()
     )
+
+
+def _query_term_set(query: "str | None") -> set:
+    """``query_terms`` for one driver-side query string."""
+    return set() if query is None else {t for t in split_tokens(query) if t}
 
 
 def doc_stats(docs: DataFrame) -> DataFrame:
@@ -159,6 +164,14 @@ def _score_from_postings(
     )
 
 
+def _under_df_cap(df: int, n_docs: int, max_df_ratio: "float | None") -> bool:
+    """``_score_from_postings``'s ``max_df_ratio`` filter for one term."""
+    return max_df_ratio is None or df <= n_docs * max_df_ratio
+
+
+SCORE_DIGITS = 4  # the display score's rounding; ranking uses score_u
+
+
 def _topk_of_scores(scores: DataFrame, k: int) -> DataFrame:
     """Deterministic top-k tail over a (query_id, doc_id, score_u) frame:
     (score_u DESC, doc_id) total order; score is the display-rounded float,
@@ -170,10 +183,29 @@ def _topk_of_scores(scores: DataFrame, k: int) -> DataFrame:
         .select(
             "query_id",
             "doc_id",
-            F.round(F.col("score_u") / F.lit(float(SCALE)), 4).alias("score"),
+            F.round(F.col("score_u") / F.lit(float(SCALE)), SCORE_DIGITS).alias(
+                "score"
+            ),
             "rk",
         )
     )
+
+
+def _topk_rows(doc_ids, score_u, k: int) -> list:
+    """``_topk_of_scores`` for one query's numpy (doc_id, score_u) arrays:
+    (doc_id, score, rk) tuples in the same order, with ``F.round``'s
+    HALF_UP display score."""
+    import numpy as np
+
+    order = np.lexsort((doc_ids, -score_u))[:k]
+    return [
+        (
+            int(doc_ids[i]),
+            resident.round_half_up(int(score_u[i]) / SCALE, SCORE_DIGITS),
+            rk,
+        )
+        for rk, i in enumerate(order, 1)
+    ]
 
 
 def bm25_scores(
@@ -445,8 +477,9 @@ def anchor_retrieval_pairs(
 # ``resident.MAX_QUERY_ROWS`` query rows, ``bm25_topk_from_index`` computes
 # every stored posting's contribution once per store version (the job-free
 # part-file listing, renamed by every write) and (k1, b), and scores each
-# batch in process with exact integer sums. The snapshot costs a few times
-# the store's bytes of driver heap; bigger stores keep the bucket-pruned
+# batch in process with exact integer sums. The snapshot takes about 8×
+# the store's on-disk bytes of driver memory (measured up to a 17 MB
+# store, the table in ``resident.py``); bigger stores keep the bucket-pruned
 # Spark serve.
 # ---------------------------------------------------------------------------
 
@@ -666,23 +699,23 @@ def _bm25_snapshot(spark, store_dir: str, k1: float, b: float) -> dict:
 def _resident_bm25_topk(
     spark, snap: dict, rows: list, query_field, k: int, max_df_ratio
 ) -> DataFrame:
-    """The Spark serve's arithmetic on a snapshot: DISTINCT non-empty
-    ``split(" ")`` terms per query_id, the ``max_df_ratio`` cap, exact
-    integer sums of ``c_u``, (score_u DESC, doc_id) ranking and the
-    ``F.round``-4 display score."""
+    """The Spark serve on a snapshot, through the driver-side twins of its
+    steps: ``_query_term_set`` (``query_terms``), ``_under_df_cap`` (the
+    ``max_df_ratio`` filter), exact integer sums of the stored ``c_u``, and
+    ``_topk_rows`` (``_topk_of_scores``)."""
     import numpy as np
 
     terms_of: dict = {}
     for r in rows:
-        if r.query is not None:
-            terms_of.setdefault(r.query_id, set()).update(
-                t for t in r.query.split(" ") if t
-            )
-    cap = None if max_df_ratio is None else snap["n_docs"] * max_df_ratio
+        terms_of.setdefault(r.query_id, set()).update(_query_term_set(r.query))
     out = []
     for qid, terms in terms_of.items():
         hits = [snap["terms"][t] for t in terms if t in snap["terms"]]
-        spans = [(lo, hi) for lo, hi, df in hits if cap is None or df <= cap]
+        spans = [
+            (lo, hi)
+            for lo, hi, df in hits
+            if _under_df_cap(df, snap["n_docs"], max_df_ratio)
+        ]
         if not spans:
             continue
         ids = np.concatenate([snap["doc_id"][lo:hi] for lo, hi in spans])
@@ -690,9 +723,7 @@ def _resident_bm25_topk(
         docs, inv = np.unique(ids, return_inverse=True)
         score_u = np.zeros(len(docs), dtype="int64")
         np.add.at(score_u, inv, c_u)
-        for rk, i in enumerate(np.lexsort((docs, -score_u))[:k], 1):
-            score = resident.round_half_up(int(score_u[i]) / SCALE, 4)
-            out.append((qid, int(docs[i]), score, rk))
+        out.extend((qid, *row) for row in _topk_rows(docs, score_u, k))
     schema = StructType(
         [
             StructField("query_id", query_field.dataType, query_field.nullable),

@@ -170,6 +170,29 @@ def _fold_dots(Q, N, dim):
     return acc
 
 
+def _zero_norm_error(what: str, ident: int, key: str = "vec_id") -> ValueError:
+    """The named error every cosine path here raises for a zero-norm vector
+    — cosine is undefined there, and a JVM HOF cosine would fail with a
+    bare DIVIDE_BY_ZERO under ANSI instead."""
+    fix = (
+        "refine or filter degenerate centroids upstream"
+        if key == "cell_id"
+        else "filter degenerate vectors upstream"
+    )
+    return ValueError(
+        f"zero-norm {what} ({key}={ident}): cosine is undefined — {fix}"
+    )
+
+
+def _require_nonzero_norms(norms, ids, what: str, key: str = "vec_id") -> None:
+    """Raise ``_zero_norm_error`` for the first zero in ``norms``."""
+    import numpy as np
+
+    z = np.flatnonzero(norms == 0.0)
+    if len(z):
+        raise _zero_norm_error(what, int(ids[z[0]]), key)
+
+
 def _cross_sims_batches(batches, *, q_ids, Q, q_norm, dim, k, chunk=1024):
     """Arrow-batch kernel behind ``_cross_topk``: the query matrix ships in
     the closure (the broadcast-sized side), each corpus batch folds sims
@@ -187,12 +210,7 @@ def _cross_sims_batches(batches, *, q_ids, Q, q_norm, dim, k, chunk=1024):
         N = np.stack([np.asarray(v, dtype="float64") for v in pdf["embedding"]])
         n_ids = pdf["n_id"].to_numpy(dtype="int64")
         n_norm = _fold_norms(N, dim)
-        z = np.flatnonzero(n_norm == 0.0)
-        if len(z):
-            raise ValueError(
-                f"zero-norm corpus embedding (vec_id={int(n_ids[z[0]])}): "
-                "cosine is undefined — filter degenerate vectors upstream"
-            )
+        _require_nonzero_norms(n_norm, n_ids, "corpus embedding")
         for lo in range(0, len(N), chunk):
             Nc, nn = N[lo : lo + chunk], n_norm[lo : lo + chunk]
             sims = _fold_dots(Q, Nc, dim) / (q_norm[:, None] * nn[None, :])
@@ -239,12 +257,7 @@ def _cross_topk(
     Q = np.stack([np.asarray(r["embedding"], dtype="float64") for r in rows])
     dim = Q.shape[1]
     q_norm = _fold_norms(Q, dim)
-    z = np.flatnonzero(q_norm == 0.0)
-    if len(z):
-        raise ValueError(
-            f"zero-norm query embedding (vec_id={int(q_ids[z[0]])}): "
-            "cosine is undefined — filter degenerate vectors upstream"
-        )
+    _require_nonzero_norms(q_norm, q_ids, "query embedding")
     run = functools.partial(
         _cross_sims_batches, q_ids=q_ids, Q=Q, q_norm=q_norm, dim=dim, k=k, chunk=chunk
     )
@@ -851,6 +864,18 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame, n_probe: int = 1) ->
     )
 
 
+def _probe_cells(Q, q_norm, C, c_norm, cell_ids, n_probe: int) -> list:
+    """``ivf_assign`` on the driver, for the resident serve: per query row
+    of ``Q``, the cell ids of its ``n_probe`` highest raw cosines to the
+    centroids ``C`` — the shared folds in the same dot / (v_norm · c_norm)
+    order, ties to the lower cell_id (``nearest_cells``'s ascending strict
+    ``>`` scan picks the same cell at ``n_probe == 1``)."""
+    import numpy as np
+
+    sims = _fold_dots(Q, C, Q.shape[1]) / (q_norm[:, None] * c_norm)
+    return [cell_ids[np.lexsort((cell_ids, -s))[:n_probe]] for s in sims]
+
+
 def kmeans_refine(
     embeddings: DataFrame, n_cells: int = N_CELLS, n_iter: int = 2
 ) -> DataFrame:
@@ -970,12 +995,7 @@ def _cell_pair_sims(cand_pdf, q_pdf, chunk: int = 4096, k: int | None = None):
     # this module raises DIVIDE_BY_ZERO under ANSI — fail the same way, but
     # with a named, actionable error
     for side, nrm, ids in (("candidate", n_norm, n_ids), ("query", q_norm, q_ids)):
-        z = np.flatnonzero(nrm == 0.0)
-        if len(z):
-            raise ValueError(
-                f"zero-norm {side} embedding (vec_id={int(ids[z[0]])}): cosine "
-                "is undefined — filter degenerate vectors upstream"
-            )
+        _require_nonzero_norms(nrm, ids, f"{side} embedding")
     def kcut(df):
         """The lossless ε-band cut vs the per-query k-th best of ``df``."""
         # dedup BEFORE the cut: duplicate rows in user-supplied cells frames
@@ -1097,6 +1117,26 @@ def ivf_topk(
         .filter(F.col("rk") <= k)
         .select("q_id", F.col("n_id").alias("neighbor_id"), F.round("sim6", 3).alias("sim"), "rk")
     )
+
+
+def _topk_of_pair_sims(raw, k: int) -> list:
+    """``ivf_topk``'s tail on a pandas (q_id, n_id, raw_sim) frame, for the
+    resident serve: the (q_id, n_id) dedup, ``F.round`` to 6 digits, the
+    (sim6 DESC, n_id) rank and the 3-digit display sim, as
+    (q_id, neighbor_id, sim, rk) tuples."""
+    from pulsar_replay_spark.operators.resident import round_half_up
+
+    raw = raw.drop_duplicates(["q_id", "n_id"])
+    raw = raw.assign(sim6=[round_half_up(x, 6) for x in raw["raw_sim"]])
+    raw = raw.sort_values(
+        ["q_id", "sim6", "n_id"], ascending=[True, False, True], kind="mergesort"
+    )
+    raw["rk"] = raw.groupby("q_id").cumcount() + 1
+    top = raw[raw["rk"] <= k]
+    return [
+        (int(q), int(n), round_half_up(s, 3), int(rk))
+        for q, n, s, rk in zip(top["q_id"], top["n_id"], top["sim6"], top["rk"])
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -1536,12 +1576,7 @@ def nearest_cells(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
     # a zero-norm CENTROID would NaN an entire chunk's sims and make the
     # running argmax skip it for every vector — fail loudly on the driver
     # (a HOF cosine raises DIVIDE_BY_ZERO under ANSI; same failure, named)
-    z = np.flatnonzero(c_norm == 0.0)
-    if len(z):
-        raise ValueError(
-            f"zero-norm centroid (cell_id={int(cell_ids[z[0]])}): cosine is "
-            "undefined — refine or filter degenerate centroids upstream"
-        )
+    _require_nonzero_norms(c_norm, cell_ids, "centroid", key="cell_id")
 
     run = functools.partial(
         _nearest_cells_batches, cell_ids=cell_ids, C=C, c_norm=c_norm, dim=dim
@@ -1567,13 +1602,7 @@ def _nearest_cells_batches(batches, *, cell_ids, C, c_norm, dim, chunk=4096):
         # leaves best_cell at its 0 init — a possibly-nonexistent cell the
         # downstream cell join would silently drop. Raise named instead
         # (the convention of every cosine kernel in this module).
-        z = np.flatnonzero(v_norm == 0.0)
-        if len(z):
-            vid = int(pdf["vec_id"].iloc[int(z[0])])
-            raise ValueError(
-                f"zero-norm embedding (vec_id={vid}): cosine is undefined "
-                "— filter degenerate vectors upstream"
-            )
+        _require_nonzero_norms(v_norm, pdf["vec_id"].to_numpy(), "embedding")
         best_sim = np.full(len(V), -np.inf)
         best_cell = np.zeros(len(V), dtype="int64")
         for lo in range(0, len(cell_ids), chunk):

@@ -34,8 +34,9 @@ and the query frame at most ``resident.MAX_QUERY_ROWS`` rows,
 ``ivf_topk_from_index`` loads the centroids and latest-wins vectors once
 per store version — keyed by the job-free listing of the store's part
 files, which every write renames — and answers each batch in process with
-the same kernels. The snapshot costs a few times the store's bytes of
-driver heap. Larger stores and batches take the partition-pruned Spark
+the same kernels. The snapshot takes about 1.5× the store's on-disk
+bytes of driver memory (measured up to a 76 MB store, the table in
+``resident.py``). Larger stores and batches take the partition-pruned Spark
 serve described above.
 
 Lifecycle mirrors the postings store: one-shot build and streaming ingest
@@ -386,18 +387,19 @@ def _ivf_snapshot(spark: SparkSession, store_dir: str) -> dict:
 def _resident_ivf_topk(
     spark: SparkSession, snap: dict, rows: list, k: int, n_probe: int
 ) -> DataFrame:
-    """The Spark serve's arithmetic on a snapshot: raw-cosine ``n_probe``
-    assignment with the shared sequential folds (the HOF ``dot``/``norm``
-    add order) and the cell_id tie-break, the cogroup kernel
-    ``_cell_pair_sims`` per probed cell, then the (q_id, n_id) dedup and
-    the ``F.round``-6 (sim6 DESC, n_id) ranking."""
+    """The Spark serve on a snapshot, through the driver-side twins of its
+    steps in ``similarity``: ``_probe_cells`` (``ivf_assign``), the cogroup
+    kernel ``_cell_pair_sims`` per probed cell, and ``_topk_of_pair_sims``
+    (``ivf_topk``'s dedup, rounding and rank)."""
     import numpy as np
     import pandas as pd
 
     from pulsar_replay_spark.operators.similarity import (
         _cell_pair_sims,
-        _fold_dots,
         _fold_norms,
+        _probe_cells,
+        _require_nonzero_norms,
+        _topk_of_pair_sims,
     )
 
     rows = [r for r in rows if r.vec_id is not None]  # the join drops them
@@ -406,22 +408,15 @@ def _resident_ivf_topk(
     q_ids = np.array([r.vec_id for r in rows], dtype="int64")
     Q = np.stack([np.asarray(r.embedding, dtype="float64") for r in rows])
     q_norm = _fold_norms(Q, Q.shape[1])
+    _require_nonzero_norms(q_norm, q_ids, "embedding")
     cell_ids, c_norm = snap["cell_ids"], snap["c_norm"]
-    for what, nrm, ids in (
-        ("embedding (vec_id", q_norm, q_ids),
-        ("centroid (cell_id", c_norm, cell_ids),
-    ):
-        z = np.flatnonzero(nrm == 0.0)
-        if len(z):
-            raise ValueError(
-                f"zero-norm {what}={int(ids[z[0]])}): cosine is undefined "
-                "— filter degenerate vectors upstream"
-            )
-    sims = _fold_dots(Q, snap["C"], Q.shape[1]) / (q_norm[:, None] * c_norm)
+    _require_nonzero_norms(c_norm, cell_ids, "centroid", key="cell_id")
     probing: dict = {}
-    for qi, s in enumerate(sims):
-        for ci in np.lexsort((cell_ids, -s))[:n_probe]:
-            probing.setdefault(int(cell_ids[ci]), []).append(qi)
+    for qi, cells in enumerate(
+        _probe_cells(Q, q_norm, snap["C"], c_norm, cell_ids, n_probe)
+    ):
+        for cid in cells:
+            probing.setdefault(int(cid), []).append(qi)
     parts = [
         _cell_pair_sims(
             snap["cells"][cid],
@@ -433,20 +428,35 @@ def _resident_ivf_topk(
     ]
     if not parts:
         return spark.createDataFrame([], _IVF_TOPK_SCHEMA)
-    raw = pd.concat(parts, ignore_index=True).drop_duplicates(["q_id", "n_id"])
-    raw["sim6"] = [resident.round_half_up(x, 6) for x in raw["raw_sim"]]
-    raw = raw.sort_values(
-        ["q_id", "sim6", "n_id"], ascending=[True, False, True], kind="mergesort"
-    )
-    raw["rk"] = raw.groupby("q_id").cumcount() + 1
-    top = raw[raw["rk"] <= k]
     return spark.createDataFrame(
-        [
-            (int(q), int(n), resident.round_half_up(s, 3), int(rk))
-            for q, n, s, rk in zip(top["q_id"], top["n_id"], top["sim6"], top["rk"])
-        ],
+        _topk_of_pair_sims(pd.concat(parts, ignore_index=True), k),
         _IVF_TOPK_SCHEMA,
     )
+
+
+def _assign_queries(queries: DataFrame, cents: DataFrame, n_probe: int) -> list:
+    """``ivf_assign``'s (vec_id, cell_id) rows for the query frame, in one
+    collect. A zero-norm query raises the resident serve's named
+    ``ValueError`` instead of the HOF cosine's ``DIVIDE_BY_ZERO``
+    (``n_probe > 1``) or a worker-wrapped error (``nearest_cells``): its
+    rows skip the assignment and come back with a null cell_id."""
+    from pulsar_replay_spark.functions.vectors import norm
+    from pulsar_replay_spark.operators.similarity import _zero_norm_error
+
+    zero = F.coalesce(norm(F.col("embedding")) == 0.0, F.lit(False))
+    rows = (
+        ivf_assign(queries.filter(~zero), cents, n_probe=n_probe)
+        .unionByName(
+            queries.filter(zero).select(
+                "vec_id", F.lit(None).cast("long").alias("cell_id")
+            )
+        )
+        .collect()
+    )
+    for r in rows:
+        if r.cell_id is None:
+            raise _zero_norm_error("embedding", r.vec_id)
+    return rows
 
 
 def ivf_topk_from_index(
@@ -487,7 +497,7 @@ def ivf_topk_from_index(
     # it ONCE and rebuild the frame as a local relation instead of paying a
     # localCheckpoint job AND a distinct-collect job (two serial jobs → one;
     # the bounded-collect posture is unchanged, only the job count).
-    assigned = ivf_assign(queries, cents, n_probe=n_probe).collect()
+    assigned = _assign_queries(queries, cents, n_probe)
     cell_ids = sorted({r.cell_id for r in assigned})
     query_cells = spark.createDataFrame(
         [(r.vec_id, r.cell_id) for r in assigned], "vec_id long, cell_id long"

@@ -116,15 +116,24 @@ def bm25_store(spark, documents, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def text_queries(spark, documents):
-    """The first six tokens of 12 docs, plus a query with no stored term."""
+    """The first six tokens of 12 docs, plus a query with no stored term
+    and one whose tokens are joined by a tab and a double space (only
+    single spaces split, so the tab-joined pair is one unstored term)."""
     head = documents.orderBy("doc_id").limit(12).select(
         F.col("doc_id").alias("query_id"),
         F.array_join(F.slice(F.split("text", " "), 1, 6), " ").alias("query"),
     )
+    words = F.split("query", " ")
+    spaced = head.limit(1).select(
+        F.lit(998).cast("long").alias("query_id"),
+        F.concat_ws(
+            "  ", F.array_join(F.slice(words, 1, 2), "\t"), words[2]
+        ).alias("query"),
+    )
     unseen = spark.createDataFrame(
         [(999, "zzz-unseen nothing-stored")], "query_id long, query string"
     )
-    return head.unionByName(unseen).localCheckpoint(eager=True)
+    return head.unionByName(spaced).unionByName(unseen).localCheckpoint(eager=True)
 
 
 @pytest.mark.parametrize(
@@ -149,8 +158,8 @@ def test_resident_ivf_empty_and_zero_norm_queries(
     spark, ivf_stores, dense_queries, monkeypatch
 ):
     """An empty query frame serves an empty frame of the Spark schema; a
-    zero-norm query raises the ValueError the Spark assignment kernel
-    raises (at n_probe=1, where the Spark serve assigns in numpy too)."""
+    zero-norm query raises the same named ValueError on both paths and at
+    every n_probe (the Spark serve checks query norms before assigning)."""
     path = ivf_stores["one"]
     got, ref = _resident_and_spark(
         monkeypatch,
@@ -162,13 +171,16 @@ def test_resident_ivf_empty_and_zero_norm_queries(
 
     zero = spark.createDataFrame(
         [(1, [0.0] * 64)], "vec_id long, embedding array<float>"
-    )
-    msg = r"zero-norm embedding \(vec_id=1\)"
-    with pytest.raises(ValueError, match=msg):
-        vecstore.ivf_topk_from_index(spark, path, zero, k=5, n_probe=N_PROBE)
-    monkeypatch.setattr(resident, "MAX_STORE_BYTES", 0)
-    with pytest.raises(Exception, match=msg):
-        vecstore.ivf_topk_from_index(spark, path, zero, k=5, n_probe=1).collect()
+    ).unionByName(dense_queries.limit(3))
+    msg = r"^zero-norm embedding \(vec_id=1\): cosine is undefined"
+    for byte_gate in (resident.MAX_STORE_BYTES, 0):
+        for n_probe in (1, N_PROBE):
+            with monkeypatch.context() as m:
+                m.setattr(resident, "MAX_STORE_BYTES", byte_gate)
+                with pytest.raises(ValueError, match=msg):
+                    vecstore.ivf_topk_from_index(
+                        spark, path, zero, k=5, n_probe=n_probe
+                    )
 
 
 def test_resident_bm25_equals_spark_serve(

@@ -28,6 +28,15 @@ def _queries(embeddings):
     )
 
 
+def _spark_served(monkeypatch, spark, store, q, **kw):
+    """Rows of the Spark serve, the path every store above
+    ``resident.MAX_STORE_BYTES`` takes (a byte gate of 0 selects it); the
+    fixture stores here are small enough for the resident path."""
+    with monkeypatch.context() as m:
+        m.setattr(resident, "MAX_STORE_BYTES", 0)
+        return _rows(vecstore.ivf_topk_from_index(spark, store, q, **kw))
+
+
 def test_ivf_store_serve_equals_in_session(
     spark, embeddings, tmp_path, monkeypatch
 ):
@@ -48,14 +57,14 @@ def test_ivf_store_serve_equals_in_session(
 
     # partition pruning is structural: the vectors scan carries a cell_id
     # partition filter (the probed-cells bounded collect became the prune).
-    # The plan gates read the Spark serve, the one above the byte gate.
+    # The plan gates read the Spark serve, the one above the byte gate; it
+    # is pinned to the in-session path directly too.
     monkeypatch.setattr(resident, "MAX_STORE_BYTES", 0)
-    plan = (
-        vecstore.ivf_topk_from_index(spark, store, q, k=5, n_probe=N_PROBE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    spark_served = vecstore.ivf_topk_from_index(
+        spark, store, q, k=5, n_probe=N_PROBE
     )
+    assert _rows(spark_served) == _rows(in_session)
+    plan = spark_served._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "cell_id" in plan
     assert "CartesianProduct" not in plan
 
@@ -92,7 +101,7 @@ def test_ivf_store_planted_vector_surfaces(spark, embeddings, tmp_path):
 
 
 def test_ivf_store_ingest_equals_one_shot_and_guards(
-    spark, embeddings, tmp_path
+    spark, embeddings, tmp_path, monkeypatch
 ):
     """vec_id-ordered growth batches (first batch carries the lowest ids,
     so it freezes the SAME centroids the one-shot build picks) serve
@@ -108,8 +117,9 @@ def test_ivf_store_ingest_equals_one_shot_and_guards(
     vecstore.ivf_index_build(b1, grown, batch_id=1)  # frozen centroids
 
     q = _queries(embeddings)
-    assert _rows(
-        vecstore.ivf_topk_from_index(spark, grown, q, k=5, n_probe=N_PROBE)
+    # the grown store through the Spark serve, the one-shot in process
+    assert _spark_served(
+        monkeypatch, spark, grown, q, k=5, n_probe=N_PROBE
     ) == _rows(
         vecstore.ivf_topk_from_index(spark, one, q, k=5, n_probe=N_PROBE)
     )
@@ -124,7 +134,7 @@ def test_ivf_store_ingest_equals_one_shot_and_guards(
 
 
 def test_ivf_store_compact_latest_wins_and_expire(
-    spark, embeddings, tmp_path
+    spark, embeddings, tmp_path, monkeypatch
 ):
     """A re-ingested vec_id supersedes its older copy after compaction
     (latest batch wins); serving from the compacted store equals serving
@@ -145,8 +155,8 @@ def test_ivf_store_compact_latest_wins_and_expire(
     got = vecstore.ivf_topk_from_index(spark, compacted, q, k=3, n_probe=N_PROBE)
     top = got.filter(F.col("rk") == 1).collect()[0]
     assert top.neighbor_id == 3 and top.sim == pytest.approx(1.0, abs=1e-6)
-    assert _rows(got) == _rows(
-        vecstore.ivf_topk_from_index(spark, store, q, k=3, n_probe=N_PROBE)
+    assert _rows(got) == _spark_served(
+        monkeypatch, spark, store, q, k=3, n_probe=N_PROBE
     )
 
     expired = str(tmp_path / "expired")
@@ -182,12 +192,17 @@ def test_ivf_store_serve_latest_wins_before_compaction(
     vecstore.ivf_store_compact(spark, store, compacted)
 
     for probe in (q, old3):
-        assert _rows(
+        served = _rows(
             vecstore.ivf_topk_from_index(spark, store, probe, k=5, n_probe=N_PROBE)
-        ) == _rows(
+        )
+        assert served == _rows(
             vecstore.ivf_topk_from_index(
                 spark, compacted, probe, k=5, n_probe=N_PROBE
             )
+        )
+        # the Spark serve applies latest-wins through its semi-join
+        assert served == _spark_served(
+            monkeypatch, spark, store, probe, k=5, n_probe=N_PROBE
         )
     # the stale copy must not serve sim 1.0 against its OLD embedding
     got = vecstore.ivf_topk_from_index(spark, store, old3, k=5, n_probe=N_PROBE)
@@ -243,7 +258,7 @@ def test_ivf_index_build_empty_frame_raises(spark, tmp_path):
         vecstore.ivf_index_build(empty, str(tmp_path / "e"))
 
 
-def test_ivf_ingest_sink_streaming(spark, embeddings, tmp_path):
+def test_ivf_ingest_sink_streaming(spark, embeddings, tmp_path, monkeypatch):
     """The streaming sink grows the store batch by batch (frozen centroids
     after batch 0) and serving equals the one-shot build over the union —
     the postings_ingest_sink discipline on the dense side."""
@@ -267,8 +282,8 @@ def test_ivf_ingest_sink_streaming(spark, embeddings, tmp_path):
     one = str(tmp_path / "one")
     vecstore.ivf_index_build(emb, one, n_cells=N_CELLS)
     q = _queries(embeddings)
-    assert _rows(
-        vecstore.ivf_topk_from_index(spark, store, q, k=5, n_probe=N_PROBE)
+    assert _spark_served(
+        monkeypatch, spark, store, q, k=5, n_probe=N_PROBE
     ) == _rows(vecstore.ivf_topk_from_index(spark, one, q, k=5, n_probe=N_PROBE))
 
 
@@ -467,7 +482,7 @@ def test_ivf_store_cohesion_diagnostic(spark, embeddings, tmp_path):
 
 @pytest.mark.slow
 def test_ivf_store_retrain_closes_the_cohesion_loop(
-    spark, embeddings, tmp_path
+    spark, embeddings, tmp_path, monkeypatch
 ):
     """r12: the retrain action — a store whose ingest drifted away from
     the frozen build-day centroids (cohesion drop) is rebuilt from its
@@ -503,8 +518,8 @@ def test_ivf_store_retrain_closes_the_cohesion_loop(
     )
     vecstore.ivf_index_build(folded, fresh, n_cells=N_CELLS, kmeans_iters=2)
     q = _queries(embeddings).limit(2).localCheckpoint(eager=True)
-    assert _rows(
-        vecstore.ivf_topk_from_index(spark, out, q, k=5, n_probe=N_PROBE)
+    assert _spark_served(
+        monkeypatch, spark, out, q, k=5, n_probe=N_PROBE
     ) == _rows(
         vecstore.ivf_topk_from_index(spark, fresh, q, k=5, n_probe=N_PROBE)
     )
