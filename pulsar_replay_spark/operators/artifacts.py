@@ -1,6 +1,7 @@
 """Model-artifact persistence: every build-once index/model in the engine
-(IVF coarse quantizer, PQ index, DSIR ratio table, BPE merge list, PCA
-model) saved to and loaded from a plain parquet directory layout.
+(IVF coarse quantizer, PQ index, DSIR ratio table, PCA model, linear
+classifier, Bloom filter) saved to and loaded from a plain parquet
+directory layout.
 
 This is the production seam the serving operators document ("at 100 TB the
 index lives as a parquet artifact; the localCheckpoint is the in-session
@@ -81,25 +82,6 @@ def load_dsir_model(spark: SparkSession, path: str) -> tuple[DataFrame, float]:
     return ratio, default
 
 
-# --- BPE merge list --------------------------------------------------------
-
-
-def save_bpe_merges(
-    spark: SparkSession, merges: list[tuple[str, str]], path: str
-) -> None:
-    df = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)], "rank long, a string, b string"
-    )
-    _write(df, f"{path}/merges")
-
-
-def load_bpe_merges(spark: SparkSession, path: str) -> list[tuple[str, str]]:
-    """The ordered merge list — feed straight into
-    ``bpe.bpe_segment_words`` / ``bpe.bpe_token_counts``."""
-    rows = spark.read.parquet(f"{path}/merges").orderBy("rank").collect()
-    return [(r.a, r.b) for r in rows]
-
-
 # --- PCA model -------------------------------------------------------------
 
 
@@ -172,28 +154,3 @@ def save_bloom(spark: SparkSession, bitmap: bytes, n_hashes: int, path: str) -> 
 def load_bloom(spark: SparkSession, path: str) -> tuple[bytes, int]:
     row = spark.read.parquet(f"{path}/bloom").first()
     return bytes(row["bitmap"]), row["n_hashes"]
-
-
-# --- Unigram tokenizer model ----------------------------------------------
-
-
-def save_unigram_model(model: DataFrame, path: str) -> None:
-    """(piece, logp) inventory from ``unigram.unigram_train``."""
-    _write(model.select("piece", "logp"), f"{path}/pieces")
-
-
-def load_unigram_model(spark: SparkSession, path: str) -> DataFrame:
-    """Eagerly pinned — feed straight into ``unigram.unigram_segment_words``
-    / ``unigram.unigram_token_counts``."""
-    return _read(spark, f"{path}/pieces")
-
-
-def save_wordpiece_vocab(vocab: DataFrame, path: str) -> None:
-    """(piece, cnt) inventory from ``wordpiece.wordpiece_vocab``."""
-    _write(vocab.select("piece", "cnt"), f"{path}/pieces")
-
-
-def load_wordpiece_vocab(spark: SparkSession, path: str) -> DataFrame:
-    """Eagerly pinned — feed straight into ``wordpiece_segment_words`` /
-    ``wordpiece_token_counts``."""
-    return _read(spark, f"{path}/pieces")

@@ -34,35 +34,13 @@ from pyspark.sql.window import Window
 from pulsar_replay_spark.functions.text import token_count
 
 
-def _sharded_lengths(
-    docs: DataFrame, n_shards: int, lengths: DataFrame | None = None
-) -> DataFrame:
+def _sharded_lengths(docs: DataFrame, n_shards: int) -> DataFrame:
     """(doc_id, shard, n_tokens): hex-prefix shard key — identical
-    arithmetic in DuckDB (substr(md5(..),1,2)), uniform by construction.
-
-    ``lengths`` (doc_id, n_tokens) substitutes a TRAINED tokenizer's counts
-    (``bpe_token_counts`` / ``unigram_token_counts`` output) for the
-    whitespace default — training sequences are packed in tokenizer tokens,
-    not words; the join is doc_id-keyed and the packing plan is unchanged.
-
-    The lengths join is INNER on purpose (r9 audit): a doc absent from
-    ``lengths`` has no token count in the packing unit and CANNOT be
-    packed consistently — it is excluded from the packed output, not
-    silently given a wrong length (whitespace-count fallback would mix
-    units inside one shard). Anti-join your docs against ``lengths`` first
-    if you need the unencodable rows surfaced; the encode store's
-    quarantine is where they normally land."""
+    arithmetic in DuckDB (substr(md5(..),1,2)), uniform by construction —
+    and the whitespace token count of ``text``."""
     shard = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
     ).cast("int") % n_shards
-    if lengths is not None:
-        n_col = [c for c in lengths.columns if c != "doc_id"][0]
-        return docs.select("doc_id", shard.alias("shard")).join(
-            lengths.select(
-                "doc_id", F.col(n_col).cast("bigint").alias("n_tokens")
-            ),
-            "doc_id",
-        )
     return docs.select(
         "doc_id",
         shard.alias("shard"),
@@ -71,10 +49,7 @@ def _sharded_lengths(
 
 
 def pack_token_stream(
-    docs: DataFrame,
-    seq_len: int = 512,
-    n_shards: int = 16,
-    lengths: DataFrame | None = None,
+    docs: DataFrame, seq_len: int = 512, n_shards: int = 16
 ) -> DataFrame:
     """Concat-and-cut packing: within each shard, documents concatenate in
     doc_id order into one token stream cut every ``seq_len`` tokens.
@@ -85,7 +60,7 @@ def pack_token_stream(
     straddles a cut when they differ — the trainer splits it there).
     Sequences are exactly ``seq_len`` tokens except each shard's tail.
     """
-    lens = _sharded_lengths(docs, n_shards, lengths)
+    lens = _sharded_lengths(docs, n_shards)
     w = (
         Window.partitionBy("shard")
         .orderBy("doc_id")

@@ -2725,59 +2725,6 @@ def embedding_drift_from_index(
     return psi_drift(ref_hist, cur_hist, eps=eps)
 
 
-def encode_ingest_sink(
-    docs_stream: DataFrame,
-    merges: list,
-    piece_ids: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-):
-    """Continuous token-id encoding — the last mile of the streaming
-    training-data story: documents micro-batches (e.g. the curation sink's
-    accepted output re-streamed, or any documents drop-folder) encode under
-    a FROZEN tokenizer (``merges`` + ``piece_ids`` built on the training
-    corpus — the ``bpe_encode_docs`` frozen-table contract, which is what
-    makes stream ≡ one-shot exact) and append as one idempotent batch_id
-    partition of (doc_id, token_ids, n_tokens). A crash-retried batch
-    overwrites itself; a trainer reads the folded store
-    (``read_encoded_store``) or feeds it to ``packing.pack_token_stream``
-    via its ``lengths=`` seam."""
-    from pulsar_replay_spark.operators.bpe import bpe_encode_docs
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = bpe_encode_docs(batch_df, merges, piece_ids=piece_ids)
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_encoded_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    """(doc_id, token_ids, n_tokens) from the maintained encoded store —
-    DISTINCT by doc_id content (an exact re-ingest of a content-addressed
-    doc re-encodes identically under the frozen tokenizer, so duplicates
-    are byte-equal rows; latest-wins is unnecessary by construction)."""
-    return (
-        read_parquet_or_empty(
-            spark,
-            store_dir,
-            "doc_id long, token_ids array<long>, n_tokens long, batch_id long",
-        )
-        .select("doc_id", "token_ids", "n_tokens")
-        .distinct()
-    )
-
-
 def postings_ingest_sink(
     docs_stream: DataFrame,
     store_dir: str,

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pulsar_replay_spark.operators import artifacts, bpe, curation, pca, similarity
+from pulsar_replay_spark.operators import artifacts, curation, pca, similarity
 
 
 def _rows(df):
@@ -61,17 +61,6 @@ def test_dsir_model_roundtrip_and_scoring(spark, documents, tmp_path):
     assert _rows(curation.dsir_score(documents, lratio, ldefault)) == _rows(
         curation.dsir_score(documents, ratio, default)
     )
-
-
-def test_bpe_merges_roundtrip_and_segmentation(spark, documents, tmp_path):
-    merges = bpe.bpe_train(bpe.word_freqs(documents), 6)
-    artifacts.save_bpe_merges(spark, merges, str(tmp_path / "bpe"))
-    loaded = artifacts.load_bpe_merges(spark, str(tmp_path / "bpe"))
-    assert loaded == merges  # order is the tokenizer — must survive exactly
-    wf = bpe.word_freqs(documents)
-    assert _rows(
-        bpe.bpe_segment_words(wf, loaded).select("word", "bpe")
-    ) == _rows(bpe.bpe_segment_words(wf, merges).select("word", "bpe"))
 
 
 def test_pca_model_roundtrip_and_projection(spark, embeddings, tmp_path):

@@ -250,43 +250,3 @@ def test_batches_property_model(documents, spark):
             ).collect()
         }
         assert got == model(rows, 4, 16, 4), rows
-
-
-def test_pack_with_trained_tokenizer_lengths(documents, spark):
-    """Packing under a TRAINED tokenizer's counts: spans conserve the
-    trained totals per shard, the plan is still shard-parallel, and the
-    default path is unchanged when lengths is omitted."""
-    from pulsar_replay_spark.operators import bpe, unigram
-
-    wf = bpe.word_freqs(documents)
-    model = unigram.unigram_train(wf, vocab_size=80, n_iters=1)
-    lens = unigram.unigram_token_counts(documents, model)
-    packed = packing.pack_token_stream(documents, SEQ_LEN, 4, lengths=lens)
-    rows = packed.collect()
-    total = lens.agg(F.sum("n_pieces")).first()[0]
-    assert sum(r["n_tokens"] for r in rows) == total
-    per_doc = {r["doc_id"]: r["n_pieces"] for r in lens.collect()}
-    for r in rows:
-        assert r["n_tokens"] == per_doc[r["doc_id"]]
-        assert r["end_tok"] - r["start_tok"] == r["n_tokens"]
-    plan = packing.pack_token_stream(
-        documents, SEQ_LEN, 4, lengths=lens
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(shard" in plan
-
-
-def test_pack_lengths_seam_excludes_unmeasured_docs(documents, spark):
-    """r9 audit pin: the lengths join is INNER by contract — a doc with no
-    token count in the packing unit is EXCLUDED from the packed output (a
-    whitespace fallback would mix units inside a shard), and the packed
-    totals account exactly for the measured docs."""
-    lens = documents.select(
-        "doc_id", (F.length("text") % 7 + 1).cast("bigint").alias("n_tokens")
-    ).filter(F.col("doc_id") % 2 == 0)  # half the corpus unmeasured
-    packed = packing.pack_token_stream(documents, SEQ_LEN, 4, lengths=lens)
-    packed_ids = {r["doc_id"] for r in packed.collect()}
-    measured_ids = {r["doc_id"] for r in lens.collect()}
-    assert packed_ids <= measured_ids
-    assert packed_ids == measured_ids  # every measured doc IS packed
-    total = packed.agg(F.sum("n_tokens")).first()[0]
-    assert total == lens.agg(F.sum("n_tokens")).first()[0]

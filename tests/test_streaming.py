@@ -2324,62 +2324,6 @@ def test_embedding_drift_from_maintained_ivf_index(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_encode_ingest_sink_matches_one_shot(spark, tmp_path, documents):
-    """Continuous token-id encoding: the stream-grown encoded store equals
-    one-shot bpe_encode_docs over the union of all batches (the frozen
-    piece table makes encoding a pure row function), and a crash-retried
-    batch partition leaves the read unchanged."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pulsar_replay_spark.operators import bpe
-    from pulsar_replay_spark.streaming.pipelines import (
-        encode_ingest_sink,
-        read_encoded_store,
-    )
-
-    docs = documents.limit(60).select("doc_id", "text").localCheckpoint()
-    merges = bpe.bpe_train_local(bpe.word_freqs(docs), 12)
-    tbl = bpe.bpe_piece_ids(docs, merges).localCheckpoint(eager=True)
-
-    src = str(tmp_path / "docs_src")
-    docs.repartition(3).write.mode("overwrite").parquet(src)
-    store = str(tmp_path / "encoded")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = encode_ingest_sink(stream, merges, tbl, store, str(tmp_path / "ck"))
-    q.awaitTermination()
-
-    got = {
-        r.doc_id: (list(r.token_ids), r.n_tokens)
-        for r in read_encoded_store(spark, store).collect()
-    }
-    want = {
-        r.doc_id: (list(r.token_ids), r.n_tokens)
-        for r in bpe.bpe_encode_docs(docs, merges, piece_ids=tbl).collect()
-    }
-    assert got == want and len(got) == 60
-
-    # crash-retry: rewrite one batch partition; the folded read is unchanged
-    part = sorted(glob.glob(os.path.join(store, "batch_id=*")))[0]
-    bid = int(part.rsplit("=", 1)[1])
-    rows = spark.read.parquet(part).withColumn("batch_id", F.lit(bid))
-    rows.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("batch_id").parquet(store)
-    again = {
-        r.doc_id: (list(r.token_ids), r.n_tokens)
-        for r in read_encoded_store(spark, store).collect()
-    }
-    assert again == want
-
-
-@pytest.mark.slow
 def test_curation_ingest_sink_continuous_decontamination(spark, tmp_path_factory):
     """r9: the sink's decontamination stage against a FIXED eval suite —
     policy 'scrub' stores the quoting doc minus the quote (scored on the

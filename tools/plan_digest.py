@@ -266,13 +266,6 @@ def main() -> None:
     llm_serving["span_scrub_corpus (serve)"] = _dd.span_decon_scrub(
         docs, _span_bench
     )
-    from pulsar_replay_spark.operators import bpe, unigram
-
-    wf = bpe.word_freqs(docs).localCheckpoint(eager=True)
-    um = unigram.unigram_train(wf, vocab_size=100, n_iters=1)
-    llm_serving["unigram_token_counts (serve)"] = unigram.unigram_token_counts(
-        docs, um
-    )
     from pulsar_replay_spark.operators import multimodal
 
     media = multimodal.as_media(docs).filter(F.col("media_type") == "video/mp4")
