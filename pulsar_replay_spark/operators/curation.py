@@ -7,22 +7,20 @@ Selection rule: within each source, rank documents by (score DESC, doc_id)
 and keep the maximal prefix whose cumulative token count stays ≤ budget
 (whole documents only — no splitting at the budget edge).
 
-Two implementations of the SAME rule:
+``select_within_token_budget`` implements it in two phases. Phase 1
+aggregates tokens per (source, score) — scores are round(·, 4)
+expressions, so the frame is ≤ |sources|·10⁴ rows however large the
+corpus — and a window over that TINY frame finds each bucket's
+cumulative start. Phase 2 broadcast-joins the candidate buckets back
+(buckets already past budget never join) and resolves the budget edge
+with a window partitioned by (source, score) — far finer than a
+per-source sort, so no single reducer ever sees a whole source. The
+corpus-side work is one broadcast join + one bounded window; only
+bucket boundaries, never the full source ordering, are centralized.
 
-- ``select_within_token_budget`` (the scale path): two phases. Phase 1
-  aggregates tokens per (source, score) — scores are round(·, 4)
-  expressions, so the frame is ≤ |sources|·10⁴ rows however large the
-  corpus — and a window over that TINY frame finds each bucket's
-  cumulative start. Phase 2 broadcast-joins the candidate buckets back
-  (buckets already past budget never join) and resolves the budget edge
-  with a window partitioned by (source, score) — far finer than a
-  per-source sort, so no single reducer ever sees a whole source. The
-  corpus-side work is one broadcast join + one bounded window; only
-  bucket boundaries, never the full source ordering, are centralized.
-- ``select_within_token_budget_naive``: the one-window-per-source
-  formulation (the spec, and the DuckDB-oracle twin). Correct anywhere a
-  source fits one task's sort — the equality gate in tests proves the
-  scale path implements exactly this semantics.
+The one-window-per-source formulation of the rule (the spec, and the
+DuckDB-oracle twin) lives in ``tests/spec_reference.py``; the equality
+gate in tests proves the scale path implements exactly this semantics.
 """
 
 from __future__ import annotations
@@ -76,23 +74,6 @@ def select_within_token_budget(
     return (
         scored.join(F.broadcast(cands), ["source", "score"])
         .withColumn("cum_tokens", F.col("cum_before") + F.sum("n_tokens").over(wd))
-        .filter(F.col("cum_tokens") <= budget_tokens)
-        .select("doc_id", "source", "n_tokens", "score", "cum_tokens")
-    )
-
-
-def select_within_token_budget_naive(
-    docs: DataFrame, budget_tokens: int, score: Column | None = None
-) -> DataFrame:
-    """Spec twin: one window per source (score DESC, doc_id)."""
-    w = (
-        Window.partitionBy("source")
-        .orderBy(F.desc("score"), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        _scored(docs, score)
-        .withColumn("cum_tokens", F.sum("n_tokens").over(w))
         .filter(F.col("cum_tokens") <= budget_tokens)
         .select("doc_id", "source", "n_tokens", "score", "cum_tokens")
     )

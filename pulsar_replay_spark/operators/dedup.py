@@ -498,9 +498,8 @@ def incremental_hamming_pairs(
 ) -> DataFrame:
     """The signature-agnostic half of ``incremental_simhash_pairs``: probe a
     NEW (doc_id, simhash) batch against the persisted store with the banded
-    block join + XOR verify — shared by the text SimHash family and the
-    perceptual dHash family (``multimodal.incremental_frame_pairs``), so
-    every bit-signature store gets the same incremental discipline."""
+    block join + XOR verify, so every bit-signature store gets the same
+    incremental discipline."""
     nb = _simhash_blocks(new_sigs, max_hamming, bits)
     eb = _simhash_blocks(existing_sigs, max_hamming, bits)
     ham = F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig"))).cast("int")
@@ -547,8 +546,8 @@ def incremental_hamming_pairs(
 # ---------------------------------------------------------------------------
 # Multi-word signatures: the mitigation the 56-bit dHash selectivity ceiling
 # documents — one long holds ≤63 usable bits, so wider signatures (dHash
-# grid > 8, long audio fingerprints) pack little-endian into SIG_WORD_BITS-
-# bit words of an array<long>. The banded pigeonhole join is unchanged in
+# grid > 8) pack little-endian into SIG_WORD_BITS-bit words of an
+# array<long>. The banded pigeonhole join is unchanged in
 # SHAPE (blocks over the concatenated bit string, equi-join on (blk, val),
 # exact XOR-popcount verify); only block extraction (may span a word
 # boundary) and the hamming fold (zip_with + aggregate, pure JVM

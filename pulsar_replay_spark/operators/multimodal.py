@@ -1,33 +1,25 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` + typed metadata.
+"""Multimodal columns: media as an opaque ``binary`` payload plus typed
+metadata, video frame sampling, and perceptual (dHash) image dedup.
 
 The Spark-side plumbing is real — schema, partition-friendly batch iteration,
-Arrow-batched ``mapInPandas`` signatures — while the actual media decode is
-STUBBED (no image/audio libraries in this container): ``decode_media`` raises
-``NotImplementedError`` unless ``fake=True``, in which case a deterministic
-fake feature vector is derived from the bytes so tests can pin the pipeline
-shape end-to-end.
+Arrow-batched ``mapInPandas`` signatures — while the media decode is a
+deterministic fake (the engine ships no image/video decoder): frames are
+byte slices of the payload and thumbnails are nearest-sampled from them, so
+tests can pin the pipeline shape end-to-end.
 
-At scale: media blobs ride in parquet binary columns; decode/feature-extract
-runs as ``mapInPandas`` (one Arrow batch per call — the batch, not the row, is
-the unit of Python overhead), and feature outputs are small fixed-width
+At scale: media blobs ride in parquet binary columns; decode runs as
+``mapInPandas`` (one Arrow batch per call — the batch, not the row, is the
+unit of Python overhead), and signature outputs are small fixed-width
 columns so downstream joins/aggs never shuffle raw bytes.
 """
 
 from __future__ import annotations
 
-import hashlib
-import struct
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "doc_id long, media_type string, byte_len long, sha256 string, width int, height int"
-)
-FEATURE_DIM = 8
-FEATURE_SCHEMA = f"doc_id long, feature array<float>"
 
 
 def as_media(docs: DataFrame) -> DataFrame:
@@ -46,374 +38,26 @@ def as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-_EXT_MIME = {
-    "png": "image/png",
-    "jpg": "image/jpeg",
-    "jpeg": "image/jpeg",
-    "gif": "image/gif",
-    "bmp": "image/bmp",
-    "wav": "audio/wav",
-    "flac": "audio/flac",
-    "mp3": "audio/mpeg",
-    "mp4": "video/mp4",
-    "mov": "video/quicktime",
-    "webm": "video/webm",
-}
-
-
-def read_media_dir(
-    spark,
-    path: str,
-    pattern: str | None = None,
-    recursive: bool = False,
-    dedupe_content: bool = True,
-) -> DataFrame:
-    """Ingest raw media FILES via Spark's ``binaryFile`` source into the
-    media-row contract the rest of the tier consumes (``as_media``'s shape:
-    doc_id, payload, media_type, byte_len, sha256 — plus ``source_path`` for
-    lineage). media_type comes from the file extension as a ROUTING hint
-    only; ``parse_media_headers`` still sniffs magic bytes and never trusts
-    it. doc_id is a 60-bit slice of the CONTENT sha256 (the text tier's
-    content-addressing discipline): re-ingests keep ids — and any
-    ``hash_split`` deal — stable even when the mount point or path prefix
-    changes, and byte-identical files collapse to ONE row per doc_id
-    (``dedupe_content``, default on: keeper = min source_path, so doc_id
-    stays a unique key for every downstream frame/feature join — duplicate
-    keys would silently multiply rows through the item_id joins). Pass
-    ``dedupe_content=False`` to keep every copy for per-copy lineage work.
-
-    Scale shape: binaryFile parallelizes ACROSS files — a file is never
-    split — so individual payloads must fit an executor (right for
-    images/clips; shard hour-long masters upstream). Small files batch into
-    tasks under ``spark.sql.files.maxPartitionBytes``; ``pathGlobFilter``
-    prunes at LISTING time (nothing is read then dropped); the source
-    supports column pruning, so metadata-only readers never fetch content.
-    """
-    reader = spark.read.format("binaryFile")
-    if pattern is not None:
-        reader = reader.option("pathGlobFilter", pattern)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    out = media_contract_projection(reader.load(path))
-    if not dedupe_content:
-        return out
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy("source_path")
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def media_contract_projection(files: DataFrame) -> DataFrame:
-    """(path, content) → the media-row contract (doc_id, payload,
-    media_type, byte_len, sha256, source_path) — THE id-derivation contract
-    (60-bit content-sha256 slice, ``_EXT_MIME`` extension hint), shared by
-    batch ``read_media_dir`` and the streaming ``media_dir_stream`` so
-    their ids can never fork (the streaming funnel's exact-dedup absorption
-    equality rests on it). Pure projection: valid on batch and streaming
-    frames alike."""
-    ext = F.lower(F.regexp_extract(F.col("path"), r"\.([^./\\]+)$", 1))
-    mime = F.create_map(
-        *[F.lit(x) for kv in sorted(_EXT_MIME.items()) for x in kv]
-    )
-    return files.select(
-        F.conv(F.substring(F.sha2(F.col("content"), 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("content").alias("payload"),
-        F.coalesce(mime[ext], F.lit("application/octet-stream")).alias("media_type"),
-        F.octet_length(F.col("content")).alias("byte_len"),
-        F.sha2(F.col("content"), 256).alias("sha256"),
-        F.col("path").alias("source_path"),
-    )
-
-
-def _fake_decode(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a real decoder: 8 floats from sha256 bytes."""
-    digest = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in digest[:FEATURE_DIM]]
-
-
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    """Arrow-batched feature extraction over the binary payload column.
-
-    ``fake=False`` is the seam where a real decoder (PIL/ffmpeg/torchaudio)
-    would plug in; it raises here because those libs are absent.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not fake:
-            # Real path: PIL-decoded per-channel statistics. Import inside
-            # the UDF (executor-side) and fail with a named dependency so a
-            # toolchain-less cluster degrades loudly, not wrongly.
-            try:
-                import io
-
-                from PIL import Image
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real media decode requires Pillow (PIL) on the executors"
-                ) from e
-
-            def real_decode(payload: bytes) -> list[float]:
-                img = Image.open(io.BytesIO(payload)).convert("RGB")
-                import numpy as np
-
-                arr = np.asarray(img, dtype=np.float64) / 255.0
-                # 8 deterministic features: per-channel mean+std, luminance
-                # mean, aspect ratio — stable across PIL versions.
-                means = arr.mean(axis=(0, 1))
-                stds = arr.std(axis=(0, 1))
-                lum = float(arr.mean())
-                aspect = img.width / img.height
-                return [*means.tolist(), *stds.tolist(), lum, aspect][:FEATURE_DIM]
-
-        for pdf in batches:
-            if fake:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "feature": [_fake_decode(bytes(p)) for p in pdf["payload"]],
-                    }
-                )
-                continue
-            ids, feats = [], []
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                # undecodable bytes skip the row, never fail the task
-                try:
-                    feats.append(real_decode(bytes(p)))
-                    ids.append(doc_id)
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "feature": pd.Series(feats, dtype="object"),
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-HEADER_SCHEMA = (
-    "doc_id long, container string, width int, height int, channels int, "
-    "sample_rate int, bit_depth int, duration_ms long, parse_ok boolean"
-)
-
-
-def _mp4_box_size(buf: bytes, p: int, end: int) -> tuple[int, int]:
-    # ISO 14496-12 §4.2: size==1 → 64-bit largesize follows the type;
-    # size==0 → box extends to the end of file.
-    # Returns (total box size, header length); (0, _) = stop.
-    sz = struct.unpack(">I", buf[p : p + 4])[0]
-    if sz == 1:
-        if p + 16 > end:
-            return 0, 16
-        return struct.unpack(">Q", buf[p + 8 : p + 16])[0], 16
-    if sz == 0:
-        return end - p, 8
-    return sz, 8
-
-
-def _parse_one_media(b: bytes) -> dict:
-    """Single-payload header decode behind ``parse_media_headers`` —
-    module-level (not a per-partition closure) so robustness is directly
-    fuzzable, with no per-row import or function construction: for ANY byte
-    string this returns one complete dict and never raises (the broad
-    except is the contract: malformed input degrades to
-    ``parse_ok = false``, never a failed task)."""
-    out = {
-        "container": None,
-        "width": None,
-        "height": None,
-        "channels": None,
-        "sample_rate": None,
-        "bit_depth": None,
-        "duration_ms": None,
-        "parse_ok": False,
-    }
-    try:
-        if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 33 and b[12:16] == b"IHDR":
-            w, h = struct.unpack(">II", b[16:24])
-            color_type = b[25]
-            out.update(
-                container="png",
-                width=w,
-                height=h,
-                channels={0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type),
-                bit_depth=b[24],
-                parse_ok=True,
-            )
-        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-            pos, fmt, data_len = 12, None, None
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                sz = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-                if cid == b"fmt " and pos + 24 <= len(b):
-                    fmt = struct.unpack("<HHIIHH", b[pos + 8 : pos + 24])
-                elif cid == b"data":
-                    data_len = sz
-                pos += 8 + sz + (sz & 1)  # chunks are word-aligned
-            if fmt:
-                _, ch, sr, _, _, bits = fmt
-                out.update(
-                    container="wav",
-                    channels=ch,
-                    sample_rate=sr,
-                    bit_depth=bits,
-                    parse_ok=True,
-                )
-                if data_len and sr and ch and bits:
-                    out["duration_ms"] = int(data_len * 8000 // (sr * ch * bits))
-        elif len(b) >= 12 and b[4:8] == b"ftyp":
-            out.update(container="mp4", parse_ok=True)
-            pos = 0
-            while pos + 8 <= len(b):
-                sz, hdr = _mp4_box_size(b, pos, len(b))
-                if b[pos + 4 : pos + 8] == b"moov":
-                    inner = pos + hdr
-                    end = min(pos + sz, len(b))
-                    while inner + 8 <= end:
-                        isz, ihdr = _mp4_box_size(b, inner, end)
-                        # malformed/truncated box (incl. a truncated
-                        # largesize header) stops the scan BEFORE any
-                        # body read — same clean-break posture as the
-                        # outer walk, never the exception handler
-                        if isz < ihdr:
-                            break
-                        if b[inner + 4 : inner + 8] == b"mvhd":
-                            body = inner + ihdr
-                            # field reads are bounded by the mvhd box's
-                            # own end, not len(b): a too-small declared
-                            # size must not read sibling-box bytes
-                            bend = min(inner + isz, end)
-                            ts = 0
-                            if body < bend:
-                                ver = b[body]
-                                if ver == 0 and body + 20 <= bend:
-                                    ts, dur = struct.unpack(
-                                        ">II", b[body + 12 : body + 20]
-                                    )
-                                elif ver == 1 and body + 32 <= bend:
-                                    ts = struct.unpack(
-                                        ">I", b[body + 20 : body + 24]
-                                    )[0]
-                                    dur = struct.unpack(
-                                        ">Q", b[body + 24 : body + 32]
-                                    )[0]
-                            if ts:
-                                out["duration_ms"] = int(dur * 1000 // ts)
-                        inner += isz
-                if sz < hdr:
-                    break
-                pos += sz
-    except Exception:
-        out["parse_ok"] = False
-    return out
-
-
-def parse_media_headers(media: DataFrame) -> DataFrame:
-    """REAL (library-free) container-header decode over binary payloads:
-    PNG IHDR (width/height/bit depth/channels), WAV RIFF (channels, sample
-    rate, bit depth, duration from the data chunk), MP4 ftyp/moov/mvhd
-    (duration from timescale) — pure byte arithmetic, so unlike the
-    pixel/sample decode seams this path needs NO toolchain and runs
-    anywhere. Containers are sniffed from magic bytes (never trusted from a
-    metadata column); anything unrecognized or truncated degrades to
-    ``parse_ok = false`` with null fields, one row per input row
-    (``_parse_one_media`` — hypothesis-fuzzed at the unit level).
-
-    Scale shape: one mapInPandas projection — headers are read from the
-    payload's first bytes; nothing shuffles, and the output is a fixed
-    narrow row however large the blob."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _parse_one_media(bytes(p) if p is not None else b"")
-                for p in pdf["payload"]
-            ]
-            frame = pd.DataFrame(rows)
-            frame.insert(0, "doc_id", pdf["doc_id"].values)
-            yield frame
-
-    return media.select("doc_id", "payload").mapInPandas(run, schema=HEADER_SCHEMA)
-
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, offset_ms long, frame_bytes binary"
-THUMB_SCHEMA = "doc_id long, width int, height int, thumb binary"
 
 
 def frame_sample(
-    media: DataFrame, n_frames: int = 4, fake: bool = True, frame_len: int = 16
+    media: DataFrame, n_frames: int = 4, frame_len: int = 16
 ) -> DataFrame:
     """Video frame sampling: N evenly-spaced frames per payload — the 1→N
     mapInPandas shape (each input row yields n_frames output rows inside the
     same Arrow batch; no explode of raw bytes through a shuffle).
 
-    The ffmpeg seek+decode is stubbed: fake frames are deterministic byte
-    slices (``frame_len`` bytes at each offset — the oracle-pinned contract
+    The seek+decode is a deterministic fake: frames are byte slices
+    (``frame_len`` bytes at each offset — the oracle-pinned contract
     default is 16; perceptual-dedup tests use wider slices so the dHash
-    grid has real structure to hash) so the row-multiplication plumbing is
+    grid has real structure to hash), so the row-multiplication plumbing is
     pinned end-to-end.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not fake:
-            # Real path requires the ffmpeg binary on the executors: seek to
-            # each offset and decode one frame (subprocess per frame — the
-            # 1→N batch shape below is unchanged). Gate on availability so
-            # the smoke test runs wherever the toolchain exists.
-            import shutil
-
-            if shutil.which("ffmpeg") is None:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real frame decode requires the ffmpeg binary on the executors"
-                )
         for pdf in batches:
-            if not fake:
-                import subprocess
-                import tempfile
-
-                out = {"doc_id": [], "frame_idx": [], "offset_ms": [], "frame_bytes": []}
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    with tempfile.NamedTemporaryFile(suffix=".mp4") as tf:
-                        tf.write(bytes(payload))
-                        tf.flush()
-                        # undecodable payloads (the gate's passthrough lane
-                        # is deliberately unverified) skip the DOC, never
-                        # fail the task — one corrupt clip in 100 TB must
-                        # not abort the funnel
-                        try:
-                            probe = subprocess.run(
-                                ["ffprobe", "-v", "error", "-show_entries",
-                                 "format=duration", "-of", "csv=p=0", tf.name],
-                                capture_output=True, text=True, check=True,
-                            )
-                            dur_ms = int(float(probe.stdout.strip()) * 1000)
-                            doc_frames = []
-                            for i in range(n_frames):
-                                off = (i * dur_ms) // n_frames
-                                frame = subprocess.run(
-                                    ["ffmpeg", "-v", "error", "-ss",
-                                     f"{off / 1000:.3f}",
-                                     "-i", tf.name, "-frames:v", "1", "-f",
-                                     "image2", "-c:v", "png", "pipe:1"],
-                                    capture_output=True, check=True,
-                                ).stdout
-                                doc_frames.append((i, off, frame))
-                        except (subprocess.CalledProcessError, ValueError):
-                            continue
-                        for i, off, frame in doc_frames:
-                            out["doc_id"].append(doc_id)
-                            out["frame_idx"].append(i)
-                            out["offset_ms"].append(off)
-                            out["frame_bytes"].append(frame)
-                yield pd.DataFrame(out)
-                continue
             out = {"doc_id": [], "frame_idx": [], "offset_ms": [], "frame_bytes": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 raw = bytes(payload)
@@ -433,528 +77,11 @@ def frame_sample(
     )
 
 
-def resize_thumbnail(
-    media: DataFrame,
-    width: int = 32,
-    height: int = 32,
-    fake: bool = True,
-    fake_mode: str = "hash",
-) -> DataFrame:
-    """Image resize plumbing: fixed-size thumbnail per image row. The PIL
-    resize is stubbed deterministically; ``fake_mode`` picks the stub:
-    ``"hash"`` (default, the original sha256 byte fold — avalanche, right
-    for pure plumbing tests) or ``"sample"`` (the ``frame_thumbs``
-    locality-preserving nearest-sampling of the payload byte stream, so
-    nudged payloads yield nudged thumbs and the perceptual dedup stages are
-    exercisable end-to-end without a decoder)."""
-    if fake_mode not in ("hash", "sample"):
-        raise ValueError(f"fake_mode must be 'hash' or 'sample', got {fake_mode!r}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not fake:
-            try:
-                import io
-
-                from PIL import Image
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real resize requires Pillow (PIL) on the executors"
-                ) from e
-        import numpy as np
-
-        npx = width * height
-        for pdf in batches:
-            if not fake:
-                thumbs, ids = [], []
-                for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                    # undecodable bytes (corrupt jpeg in the unverified
-                    # passthrough lane) skip the ROW, never fail the task;
-                    # rows with no thumb produce no signature downstream
-                    # and survive dedup as keepers — the conservative call
-                    try:
-                        img = Image.open(io.BytesIO(bytes(p))).convert("RGB")
-                        thumbs.append(img.resize((width, height)).tobytes())
-                        ids.append(doc_id)
-                    except Exception:
-                        continue
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "width": width,
-                        "height": height,
-                        "thumb": pd.Series(thumbs, dtype="object"),
-                    }
-                )
-                continue
-            thumbs = []
-            for p in pdf["payload"]:
-                raw = bytes(p)
-                if fake_mode == "sample":
-                    if len(raw) == 0:
-                        thumbs.append(bytes(npx))
-                        continue
-                    buf = np.frombuffer(raw, dtype=np.uint8)
-                    idx = (np.arange(npx) * len(buf)) // npx
-                    thumbs.append(buf[idx].tobytes())
-                    continue
-                thumbs.append(
-                    bytes(
-                        (hashlib.sha256(raw + bytes([width, height])).digest() * (npx // 32 + 1))[:npx]
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": width,
-                    "height": height,
-                    "thumb": thumbs,
-                }
-            )
-
-    return (
-        media.filter(F.col("media_type").startswith("image/"))
-        .select("doc_id", "payload")
-        .mapInPandas(run, schema=THUMB_SCHEMA)
-    )
-
-
-def frame_dedup(frames: DataFrame) -> DataFrame:
-    """Exact frame dedup across the corpus (the multimodal face of the
-    chunk-dedup shape): per frame, (doc_id, frame_idx, frame_hash, keep)
-    where the keeper is the (doc_id, frame_idx)-min owner of each distinct
-    frame hash — static intros/outros and black frames collapse to one
-    representative before any expensive per-frame model runs.
-
-    Scale: the md5 is computed BEFORE the shuffle, so frame bytes never
-    move — the groupBy reduces (hash → min owner) with map-side combine
-    and joins back on the 16-byte hash key only. ``keepers`` is one row
-    per DISTINCT frame hash — corpus-scale, so no broadcast hint: both
-    sides hash-partition on frame_hash (AQE may still broadcast a small
-    keeper set at runtime, which is the right call only when it IS small)."""
-    hashed = frames.select(
-        "doc_id", "frame_idx", F.md5(F.col("frame_bytes")).alias("frame_hash")
-    )
-    keepers = hashed.groupBy("frame_hash").agg(
-        F.min(F.struct("doc_id", "frame_idx")).alias("keeper")
-    )
-    return hashed.join(keepers, "frame_hash").select(
-        "doc_id",
-        "frame_idx",
-        "frame_hash",
-        (
-            (F.col("doc_id") == F.col("keeper.doc_id"))
-            & (F.col("frame_idx") == F.col("keeper.frame_idx"))
-        ).alias("keep"),
-    )
-
-
-AUDIO_WINDOW_SCHEMA = (
-    "doc_id long, window_idx int, start_ms long, end_ms long, window_bytes binary"
-)
-
-
-def audio_windows(
-    media: DataFrame, window_ms: int = 1000, hop_ms: int = 500, fake: bool = True
-) -> DataFrame:
-    """Audio windowing: overlapping fixed-length windows per audio payload —
-    the 1→N mapInPandas shape (same discipline as ``frame_sample``; the
-    audio tier's segmentation step before any feature extractor runs).
-    Stride = hop_ms, final partial window kept. The real decode needs an
-    audio toolchain on the executors; the deterministic fake (1 ms per
-    byte) drives the row-multiplication plumbing end-to-end."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not fake:  # pragma: no cover - env-dependent
-            raise NotImplementedError(
-                "real audio decode requires an audio toolchain (ffmpeg/soundfile)"
-                " on the executors"
-            )
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "window_idx": [],
-                "start_ms": [],
-                "end_ms": [],
-                "window_bytes": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                dur = max(len(raw), 1)  # fake: 1 ms per byte
-                idx = 0
-                start = 0
-                while start < dur:
-                    end = min(start + window_ms, dur)
-                    out["doc_id"].append(doc_id)
-                    out["window_idx"].append(idx)
-                    out["start_ms"].append(start)
-                    out["end_ms"].append(end)
-                    out["window_bytes"].append(raw[start:end])
-                    if end == dur:
-                        break
-                    idx += 1
-                    start += hop_ms
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("media_type").startswith("audio/"))
-        .select("doc_id", "payload")
-        .mapInPandas(run, schema=AUDIO_WINDOW_SCHEMA)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Perceptual (near-duplicate) AUDIO dedup: a per-window energy-delta sign
-# fingerprint — the audio face of dHash. Exact sha256 dedup collapses
-# byte-identical clips only; one re-encode defeats it. Each fingerprint bit
-# is the SIGN of the energy difference between adjacent (resampled) windows,
-# stable under small amplitude noise, and candidate generation reuses
-# dedup.banded_hamming_pairs — completing the text/image/audio modality
-# triplet on ONE banded-hamming join.
-# ---------------------------------------------------------------------------
-
-AUDIO_FP_BITS = 56
-
-
-def _onset_start(x, ratio: float) -> int:
-    """First index whose amplitude reaches ``ratio`` of the clip peak —
-    the onset anchor. A silent (all-zero / empty) signal anchors at 0."""
-    import numpy as np
-
-    if x.size == 0:
-        return 0
-    peak = float(x.max())
-    if peak <= 0:
-        return 0
-    return int(np.argmax(x >= ratio * peak))
-
-
-def _wav_pcm_energies(
-    raw: bytes, window_ms: int, hop_ms: int, onset_ratio: "float | None" = None
-) -> "list[float] | None":
-    """Per-window mean absolute amplitude of a PCM WAV payload — REAL and
-    library-free (RIFF walk + numpy frombuffer; no ffmpeg/soundfile).
-    Returns None when the payload isn't parseable 8/16-bit PCM WAV so the
-    caller can fall back. Channels are mean-mixed; windows are cut by TIME
-    via the fmt chunk's sample rate (hop = ``hop_ms``, final partial window
-    kept — the ``audio_windows`` geometry). ``onset_ratio`` (r9): drop
-    samples before the first one reaching that fraction of the clip's peak
-    amplitude, so a clone with leading silence windows identically to the
-    original (the shift-robustness knob — see ``_audio_fp_bytes``)."""
-    import numpy as np
-
-    if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-        return None
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(raw):
-        cid = raw[pos : pos + 4]
-        sz = struct.unpack("<I", raw[pos + 4 : pos + 8])[0]
-        if cid == b"fmt " and pos + 24 <= len(raw):
-            fmt = struct.unpack("<HHIIHH", raw[pos + 8 : pos + 24])
-        elif cid == b"data":
-            data = raw[pos + 8 : pos + 8 + sz]
-        pos += 8 + sz + (sz & 1)
-    if fmt is None or data is None:
-        return None
-    audio_format, ch, sr, _, _, bits = fmt
-    if audio_format != 1 or ch < 1 or sr < 1 or bits not in (8, 16):
-        return None
-    if bits == 16:
-        samples = np.frombuffer(data[: len(data) - (len(data) % (2 * ch))], "<i2")
-        samples = samples.astype(np.float64)
-    else:  # 8-bit WAV is unsigned, midpoint 128
-        samples = np.frombuffer(data[: len(data) - (len(data) % ch)], np.uint8)
-        samples = samples.astype(np.float64) - 128.0
-    if samples.size == 0:
-        return None
-    mono = np.abs(samples.reshape(-1, ch).mean(axis=1))
-    if onset_ratio is not None:
-        mono = mono[_onset_start(mono, onset_ratio):]
-        if mono.size == 0:
-            return None
-    win = max(1, (sr * window_ms) // 1000)
-    hop = max(1, (sr * hop_ms) // 1000)
-    # the audio_windows geometry: stop at the first window reaching the end
-    # (final partial window kept, no extra window starting past coverage)
-    out: list[float] = []
-    start = 0
-    while start < mono.size:
-        end = min(start + win, mono.size)
-        out.append(float(mono[start:end].mean()))
-        if end == mono.size:
-            break
-        start += hop
-    return out
-
-
-def _audio_fp_bytes(
-    raw: bytes,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
-    bits: int = AUDIO_FP_BITS,
-    fake: bool = True,
-    onset_ratio: "float | None" = None,
-) -> int:
-    """Pure fingerprint of one audio payload: per-window energies (the
-    ``audio_windows`` geometry — window ``window_ms``, hop ``hop_ms``,
-    final partial window kept), resampled DOWN to ``bits + 1`` points when
-    the clip has more windows than bits, then bit i = [e(i) < e(i+1)]
-    packed little-endian. ``fake=True`` reads the byte stream as the 1 ms/
-    byte signal (energy = window mean byte value — the audio_windows fake);
-    ``fake=False`` decodes real PCM WAV amplitudes library-free
-    (``_wav_pcm_energies``), falling back to the byte path for payloads
-    that aren't parseable WAV (tolerant, named in the docstring, never a
-    failed task).
-
-    Short-clip floor (documented, the 56-bit selectivity story): a clip
-    with W windows carries min(bits, W−1) informative bits — below ~bits
-    windows (≈29 s at the 1000/500 defaults) the banded join's
-    false-positive rate rises. Shrink window_ms/hop_ms for short-clip
-    corpora; never resample UP (repeating windows would zero-fill the same
-    bit positions for every clip and collide distinct short clips).
-
-    Shift robustness (r9): the default windowing is anchored at CLIP START,
-    so a clone with ~100 ms of leading silence shifts every window and
-    misses the banded join. ``onset_ratio`` (e.g. 0.05) anchors windowing
-    at the ONSET instead — the first sample reaching that fraction of the
-    clip's peak amplitude — making leading-silence clones fingerprint
-    identically. Off by default: anchoring changes every stored signature,
-    so a store must be rebuilt (or grown from scratch) when flipping it —
-    the same frozen-parameter contract every signature family carries."""
-    energies: list[float] | None = None
-    if not fake:
-        energies = _wav_pcm_energies(raw, window_ms, hop_ms, onset_ratio)
-    if energies is None:
-        import numpy as np
-
-        if len(raw) == 0:
-            return 0  # one empty window, no deltas
-        # window means via one cumulative sum — O(bytes) once, O(1) per
-        # window, structurally distinct from the naive per-window oracle
-        buf = np.frombuffer(raw, dtype=np.uint8)
-        if onset_ratio is not None:
-            buf = buf[_onset_start(buf, onset_ratio):]
-            if buf.size == 0:
-                return 0
-        cs = np.concatenate(([0], np.cumsum(buf, dtype=np.int64)))
-        dur = int(buf.size)  # fake signal: 1 ms per byte (post-onset-trim)
-        energies = []
-        start = 0
-        while start < dur:
-            end = min(start + window_ms, dur)
-            energies.append(float(cs[end] - cs[start]) / (end - start))
-            if end == dur:
-                break
-            start += hop_ms
-    w = len(energies)
-    if w > bits + 1:
-        pts = [energies[(i * w) // (bits + 1)] for i in range(bits + 1)]
-    else:
-        pts = energies
-    sig = 0
-    for i in range(len(pts) - 1):
-        if pts[i] < pts[i + 1]:
-            sig |= 1 << i
-    return sig
-
-
-def audio_fingerprints(
-    media: DataFrame,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
-    bits: int = AUDIO_FP_BITS,
-    fake: bool = True,
-    onset_ratio: float | None = None,
-) -> DataFrame:
-    """(doc_id, simhash): the persistable perceptual audio signature —
-    Arrow-batched over ``audio/*`` payloads, column-named to feed
-    ``dedup.banded_hamming_pairs`` / ``incremental_hamming_pairs``
-    directly. One long per clip; raw audio bytes never leave the kernel.
-    The store compacts/expires with ``dedup.compact_simhash_store`` (same
-    (doc_id, simhash) schema — one lifecycle op for every bit-signature
-    family)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "simhash": [
-                        _audio_fp_bytes(
-                            bytes(p), window_ms, hop_ms, bits, fake, onset_ratio
-                        )
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return (
-        media.filter(F.col("media_type").startswith("audio/"))
-        .select("doc_id", "payload")
-        .mapInPandas(run, schema=DHASH_SCHEMA)
-    )
-
-
-def audio_fingerprints_wide(
-    media: DataFrame,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
-    bits: int = 120,
-    fake: bool = True,
-    onset_ratio: float | None = None,
-) -> DataFrame:
-    """(doc_id, sig array<long>): wide audio fingerprints for long clips,
-    where 56 resampled points blur hours of audio into too few sign bits —
-    same ``_audio_fp_bytes`` math (python ints are arbitrary-width), packed
-    into 60-bit words (``dedup.pack_sig_words``) for the multi-word banded
-    join. The multimodal twin of ``dhash_signatures_wide``."""
-    from pulsar_replay_spark.operators.dedup import pack_sig_words
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sig": [
-                        pack_sig_words(
-                            _audio_fp_bytes(
-                                bytes(p), window_ms, hop_ms, bits, fake,
-                                onset_ratio,
-                            ),
-                            bits,
-                        )
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return (
-        media.filter(F.col("media_type").startswith("audio/"))
-        .select("doc_id", "payload")
-        .mapInPandas(run, schema="doc_id long, sig array<long>")
-    )
-
-
-def audio_near_dup_pairs(
-    media: DataFrame,
-    max_hamming: int = 4,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
-    bits: int = AUDIO_FP_BITS,
-    fake: bool = True,
-    onset_ratio: float | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b, hamming): audio clip pairs within ``max_hamming``
-    fingerprint bits — re-encoded/amplitude-nudged clones collide (energy
-    delta signs survive small noise), distinct clips land ~bits/2 apart.
-    Candidates come from the pigeonhole banded equi-join; nothing all-pairs
-    ever runs. ``bits`` > 60 routes to the multi-word signature path
-    (long-clip corpora: more windows survive the resample, finer block
-    keys — the image family's grid>8 story)."""
-    from pulsar_replay_spark.operators.dedup import (
-        banded_hamming_pairs,
-        banded_hamming_pairs_multi,
-    )
-
-    if bits <= 60:
-        sigs = audio_fingerprints(media, window_ms, hop_ms, bits, fake, onset_ratio)
-        return banded_hamming_pairs(
-            sigs.localCheckpoint(eager=True), max_hamming, bits
-        )
-    sigs = audio_fingerprints_wide(media, window_ms, hop_ms, bits, fake, onset_ratio)
-    return banded_hamming_pairs_multi(
-        sigs.localCheckpoint(eager=True), max_hamming, bits
-    )
-
-
-def audio_dedup(
-    media: DataFrame,
-    max_hamming: int = 4,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
-    bits: int = AUDIO_FP_BITS,
-    fake: bool = True,
-    onset_ratio: float | None = None,
-) -> DataFrame:
-    """(doc_id, cluster_id, keep): perceptual audio dedup marks — the
-    ``image_dedup`` shape: near-dup clusters from the banded pairs'
-    transitive closure, keeper = min doc_id per cluster
-    (``connected_components``' label IS the min member, so keep =
-    (doc_id == cluster_id) with no keeper agg/join). ``bits`` > 60 routes
-    to the multi-word signature path."""
-    from pulsar_replay_spark.operators.dedup import (
-        banded_hamming_pairs,
-        banded_hamming_pairs_multi,
-        connected_components,
-    )
-
-    if bits <= 60:
-        sigs = audio_fingerprints(media, window_ms, hop_ms, bits, fake, onset_ratio)
-        sigs = sigs.localCheckpoint(eager=True)
-        pairs = banded_hamming_pairs(sigs, max_hamming, bits)
-    else:
-        sigs = audio_fingerprints_wide(media, window_ms, hop_ms, bits, fake, onset_ratio)
-        sigs = sigs.localCheckpoint(eager=True)
-        pairs = banded_hamming_pairs_multi(sigs, max_hamming, bits)
-    cc = connected_components(pairs)
-    return (
-        sigs.select("doc_id")
-        .join(cc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-        )
-        .withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
-    )
-
-
-def incremental_audio_pairs(
-    new_media: DataFrame,
-    existing_sigs: DataFrame,
-    max_hamming: int = 4,
-    window_ms: int = 1000,
-    hop_ms: int = 500,
-    bits: int = AUDIO_FP_BITS,
-    fake: bool = True,
-    onset_ratio: float | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental perceptual audio dedup — the ``incremental_image_pairs``
-    discipline: fingerprint only the NEW batch of clips, probe the
-    persisted (doc_id, simhash) store with the banded block join. Returns
-    (pairs, new_sigs); old clips are never re-fingerprinted, and
-    incremental == full recompute restricted to pairs touching the batch
-    (pinned in tests). ``bits`` > 60 routes to the multi-word path; the
-    store then holds (doc_id, sig array<long>) rows."""
-    from pulsar_replay_spark.operators.dedup import (
-        incremental_hamming_pairs,
-        incremental_hamming_pairs_multi,
-    )
-
-    if bits <= 60:
-        new_sigs = audio_fingerprints(
-            new_media, window_ms, hop_ms, bits, fake, onset_ratio
-        )
-        new_sigs = new_sigs.localCheckpoint(eager=True)
-        pairs = incremental_hamming_pairs(new_sigs, existing_sigs, max_hamming, bits)
-        return pairs, new_sigs
-    new_sigs = audio_fingerprints_wide(
-        new_media, window_ms, hop_ms, bits, fake, onset_ratio
-    )
-    new_sigs = new_sigs.localCheckpoint(eager=True)
-    pairs = incremental_hamming_pairs_multi(
-        new_sigs, existing_sigs, max_hamming, bits
-    )
-    return pairs, new_sigs
-
-
 # ---------------------------------------------------------------------------
 # Perceptual (near-duplicate) image/frame dedup: dHash over the thumbnail
-# grid + the banded hamming equi-join the text side already owns. Exact
-# frame_dedup collapses byte-identical frames only — one pixel of re-encode
-# noise defeats it; the dHash signature is stable under small pixel nudges
+# grid + the banded hamming equi-join the text side already owns. An exact
+# byte hash collapses identical frames only — one pixel of re-encode noise
+# defeats it; the dHash signature is stable under small pixel nudges
 # because each bit is a SIGN of an adjacent-cell luminance difference, and
 # candidate generation reuses dedup.banded_hamming_pairs (pigeonhole blocks,
 # never all-pairs).
@@ -962,7 +89,6 @@ def incremental_audio_pairs(
 
 DHASH_GRID = 8
 DHASH_BITS = DHASH_GRID * (DHASH_GRID - 1)  # 56: row-adjacent comparisons
-FRAME_ITEM_SPAN = 1 << 20  # composite frame id = doc_id * SPAN + frame_idx
 FRAME_THUMB_SCHEMA = (
     "doc_id long, frame_idx int, width int, height int, thumb binary"
 )
@@ -1011,7 +137,8 @@ def _dhash_bytes(thumb: bytes, width: int, height: int, grid: int = DHASH_GRID) 
 def dhash_signatures(thumbs: DataFrame, grid: int = DHASH_GRID) -> DataFrame:
     """(doc_id, simhash): the dHash of every thumbnail row — Arrow-batched,
     column-named to feed ``dedup.banded_hamming_pairs`` directly. Expects
-    the THUMB_SCHEMA shape (or FRAME_THUMB_SCHEMA re-keyed upstream)."""
+    (doc_id, width, height, thumb) rows, e.g. ``frame_thumbs`` output
+    re-keyed upstream."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1076,8 +203,8 @@ def image_near_dup_pairs(
     the 56-bit signature splits into max_hamming+1 blocks, so at k=4 each
     block key carries 11 bits — per-block bucket population ~N/2048. That
     is fine through hundreds of millions of images; at billions, run the
-    EXACT sha256 dedup first (``pipeline.curate_media`` does), lower the
-    radius (k=3 gives 14-bit blocks, 8× finer buckets), or raise ``grid``
+    EXACT sha256 dedup first, lower the radius (k=3 gives 14-bit blocks,
+    8× finer buckets), or raise ``grid``
     — grids wider than 8 route automatically to the multi-word signature
     path (``dedup.banded_hamming_pairs_multi``: array<long> signatures,
     same pigeonhole join; grid=12 → 132 bits → 26-bit block keys at k=4,
@@ -1095,56 +222,19 @@ def image_near_dup_pairs(
     return banded_hamming_pairs_multi(sigs, max_hamming, bits)
 
 
-def image_dedup(
-    thumbs: DataFrame, max_hamming: int = 4, grid: int = DHASH_GRID
-) -> DataFrame:
-    """(doc_id, cluster_id, keep): perceptual image dedup marks — near-dup
-    clusters from the banded pairs' transitive closure, keeper = min doc_id
-    per cluster (the ``dedup_corpus`` discipline); singletons keep
-    themselves. Only ids and 8-byte signatures ever shuffle.
-
-    ``connected_components``' cluster_id IS the min member id (and
-    singletons coalesce to their own id), so keep = (doc_id == cluster_id)
-    directly — no keeper agg/join shuffle."""
-    from pulsar_replay_spark.operators.dedup import connected_components
-
-    pairs = image_near_dup_pairs(thumbs, max_hamming, grid)
-    cc = connected_components(pairs)
-    return (
-        thumbs.select("doc_id")
-        .join(cc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-        )
-        .withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
-    )
-
-
 def frame_thumbs(
-    frames: DataFrame, width: int = 8, height: int = 8, fake: bool = True
+    frames: DataFrame, width: int = 8, height: int = 8
 ) -> DataFrame:
     """Per-frame grayscale thumbnails keyed by (doc_id, frame_idx) — the
-    resize step feeding perceptual frame dedup.
+    resize step feeding the dHash signatures.
 
-    The deterministic fake is LOCALITY-PRESERVING (unlike
-    ``resize_thumbnail``'s sha256 fold, whose avalanche is right for
-    plumbing tests but erases similarity): the frame's byte stream is
+    The deterministic fake resize is LOCALITY-PRESERVING (a hash fold's
+    avalanche would erase similarity): the frame's byte stream is
     nearest-sampled down/up to width·height gray pixels, so a few nudged
     payload bytes move a few pixels — letting the perceptual semantics be
-    tested end-to-end without a decoder. The real path (PIL grayscale
-    resize) slots into the same kernel."""
+    tested end-to-end without a decoder."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not fake:
-            try:
-                import io
-
-                from PIL import Image
-            except ImportError as e:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "real frame resize requires Pillow (PIL) on the executors"
-                ) from e
         import numpy as np
 
         npx = width * height
@@ -1152,10 +242,6 @@ def frame_thumbs(
             thumbs = []
             for p in pdf["frame_bytes"]:
                 raw = bytes(p)
-                if not fake:
-                    img = Image.open(io.BytesIO(raw)).convert("L")
-                    thumbs.append(img.resize((width, height)).tobytes())
-                    continue
                 if len(raw) == 0:
                     thumbs.append(bytes(npx))
                     continue
@@ -1175,301 +261,3 @@ def frame_thumbs(
     return frames.select("doc_id", "frame_idx", "frame_bytes").mapInPandas(
         run, schema=FRAME_THUMB_SCHEMA
     )
-
-
-def _frame_items(
-    frames: DataFrame, grid: int = DHASH_GRID, fake: bool = True
-) -> DataFrame:
-    """(item_id, doc_id, frame_idx, width, height, thumb): thumbnails keyed
-    by a single orderable frame id. item_id is the engine-wide 60-bit md5
-    content-address over "doc_id:frame_idx" (``token_hash60`` discipline) —
-    an ARITHMETIC doc·span+frame composite cannot host the engine's 60-bit
-    content-hash doc_ids inside one long (r7 review finding: the old 2^42
-    guard made the family raise on every real ingested id), while the md5
-    key carries exactly the same collision posture as every other 60-bit id
-    in the engine. The (item_id → doc_id, frame_idx) mapping rides this
-    frame; pair decoders join back on it (ids only, never bytes)."""
-    from pulsar_replay_spark.functions.text import token_hash60
-
-    thumbs = frame_thumbs(frames, width=grid, height=grid, fake=fake)
-    return thumbs.select(
-        token_hash60(
-            F.concat_ws(":", F.col("doc_id"), F.col("frame_idx"))
-        ).alias("item_id"),
-        "doc_id",
-        "frame_idx",
-        "width",
-        "height",
-        "thumb",
-    )
-
-
-def frame_signatures(
-    frames: DataFrame, grid: int = DHASH_GRID, fake: bool = True
-) -> DataFrame:
-    """(item_id, doc_id, frame_idx, simhash): the persistable perceptual
-    signature store — one long signature per frame plus the id mapping.
-    This is the state an incremental media-ingest pipeline appends per
-    batch (``incremental_frame_pairs`` probes it; the streaming sink lands
-    it as batch_id partitions)."""
-    items = _frame_items(frames, grid, fake)
-    thumb_side = items.select(
-        F.col("item_id").alias("doc_id"), "width", "height", "thumb"
-    )
-    if grid * (grid - 1) <= 60:
-        sigs = dhash_signatures(thumb_side, grid).toDF("item_id", "simhash")
-    else:  # wide grid: (item_id, sig array<long>) — the multi-word store
-        sigs = dhash_signatures_wide(thumb_side, grid).toDF("item_id", "sig")
-    return items.select("item_id", "doc_id", "frame_idx").join(sigs, "item_id")
-
-
-def _frame_raw_pairs(sigs: DataFrame, max_hamming: int, grid: int) -> DataFrame:
-    """(doc_a, doc_b, hamming) over ITEM ids from a frame-signature frame —
-    routes single-long vs multi-word on the grid width (shared by the batch
-    pair/dedup paths)."""
-    from pulsar_replay_spark.operators.dedup import (
-        banded_hamming_pairs,
-        banded_hamming_pairs_multi,
-    )
-
-    bits = grid * (grid - 1)
-    if bits <= 60:
-        return banded_hamming_pairs(
-            sigs.select(F.col("item_id").alias("doc_id"), "simhash"),
-            max_hamming,
-            bits,
-        )
-    return banded_hamming_pairs_multi(
-        sigs.select(F.col("item_id").alias("doc_id"), "sig"), max_hamming, bits
-    )
-
-
-def _decode_frame_pairs(raw: DataFrame, mapping: DataFrame) -> DataFrame:
-    """(doc_a, frame_a, doc_b, frame_b, hamming) from item-id pairs: two
-    id-only equi-joins against the (item_id, doc_id, frame_idx) mapping."""
-    ma = mapping.select(
-        F.col("item_id").alias("doc_a"),
-        F.col("doc_id").alias("_da"),
-        F.col("frame_idx").alias("_fa"),
-    )
-    mb = mapping.select(
-        F.col("item_id").alias("doc_b"),
-        F.col("doc_id").alias("_db"),
-        F.col("frame_idx").alias("_fb"),
-    )
-    return (
-        raw.join(ma, "doc_a")
-        .join(mb, "doc_b")
-        .select(
-            F.col("_da").alias("doc_a"),
-            F.col("_fa").alias("frame_a"),
-            F.col("_db").alias("doc_b"),
-            F.col("_fb").alias("frame_b"),
-            "hamming",
-        )
-    )
-
-
-def frame_near_dup_pairs(
-    frames: DataFrame,
-    max_hamming: int = 4,
-    grid: int = DHASH_GRID,
-    fake: bool = True,
-) -> DataFrame:
-    """(doc_a, frame_a, doc_b, frame_b, hamming): perceptual near-dup frame
-    pairs — thumbnails → dHash → ``banded_hamming_pairs`` over the 60-bit
-    item ids, decoded back through the id mapping. Raw frame bytes never
-    join or shuffle; everything past the thumbnail kernel is ids + longs.
-    Grids > 8 route to the multi-word signature path."""
-    sigs = frame_signatures(frames, grid, fake).localCheckpoint(eager=True)
-    raw = _frame_raw_pairs(sigs, max_hamming, grid)
-    return _decode_frame_pairs(raw, sigs)
-
-
-def frame_dedup_perceptual(
-    frames: DataFrame,
-    max_hamming: int = 4,
-    grid: int = DHASH_GRID,
-    fake: bool = True,
-) -> DataFrame:
-    """(doc_id, frame_idx, cluster_doc, cluster_frame, keep): the perceptual
-    twin of ``frame_dedup`` — near-dup frame clusters via the banded pairs'
-    transitive closure; byte-identical AND re-encode-nudged frames collapse
-    together. ``connected_components``' label is the min member item_id, so
-    keep = (item_id == cluster_id) with no keeper agg; the cluster's
-    (doc, frame) identity decodes through one mapping join. The keeper is
-    the cluster's min ITEM ID member — with hashed item ids that is a
-    uniform-random member, the right default when no quality score ranks
-    frames (any deterministic choice works; stability across reruns is what
-    matters, and md5 ids give exactly that)."""
-    from pulsar_replay_spark.operators.dedup import connected_components
-
-    sigs = frame_signatures(frames, grid, fake).localCheckpoint(eager=True)
-    raw = _frame_raw_pairs(sigs, max_hamming, grid)
-    cc = connected_components(raw)
-    marks = (
-        sigs.select("item_id", "doc_id", "frame_idx")
-        .join(cc, sigs["item_id"] == cc["doc_id"], "left")
-        .select(
-            sigs["doc_id"],
-            "frame_idx",
-            F.coalesce(F.col("cluster_id"), F.col("item_id")).alias("cluster_id"),
-            "item_id",
-        )
-    )
-    cmap = sigs.select(
-        F.col("item_id").alias("cluster_id"),
-        F.col("doc_id").alias("cluster_doc"),
-        F.col("frame_idx").alias("cluster_frame"),
-    )
-    return marks.join(cmap, "cluster_id").select(
-        "doc_id",
-        "frame_idx",
-        "cluster_doc",
-        "cluster_frame",
-        (F.col("item_id") == F.col("cluster_id")).alias("keep"),
-    )
-
-
-def incremental_frame_pairs(
-    new_frames: DataFrame,
-    existing_sigs: DataFrame,
-    max_hamming: int = 4,
-    grid: int = DHASH_GRID,
-    fake: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental perceptual frame dedup — the ``incremental_simhash_pairs``
-    discipline for the dHash family: signature only the NEW batch of
-    frames, probe the persisted (item_id, doc_id, frame_idx, simhash) store
-    with the banded block join (``dedup.incremental_hamming_pairs``), and
-    return (pairs, new_sigs) where pairs = (doc_a, frame_a, doc_b, frame_b,
-    hamming) touching ≥1 new frame and new_sigs is the batch's own store
-    rows to append. Old frames are never re-thumbnailed or re-hashed;
-    incremental == full recompute restricted to pairs touching the batch
-    (pinned in tests). Pair decode joins the union of the store's and the
-    batch's id mappings — ids only. Grids > 8 route to the multi-word
-    path; the store then holds (item_id, doc_id, frame_idx, sig
-    array<long>) rows."""
-    from pulsar_replay_spark.operators.dedup import (
-        incremental_hamming_pairs,
-        incremental_hamming_pairs_multi,
-    )
-
-    bits = grid * (grid - 1)
-    new_sigs = frame_signatures(new_frames, grid, fake).localCheckpoint(eager=True)
-    if bits <= 60:
-        raw = incremental_hamming_pairs(
-            new_sigs.select(F.col("item_id").alias("doc_id"), "simhash"),
-            existing_sigs.select(F.col("item_id").alias("doc_id"), "simhash"),
-            max_hamming,
-            bits,
-        )
-    else:
-        raw = incremental_hamming_pairs_multi(
-            new_sigs.select(F.col("item_id").alias("doc_id"), "sig"),
-            existing_sigs.select(F.col("item_id").alias("doc_id"), "sig"),
-            max_hamming,
-            bits,
-        )
-    mapping = existing_sigs.select("item_id", "doc_id", "frame_idx").unionByName(
-        new_sigs.select("item_id", "doc_id", "frame_idx")
-    )
-    return _decode_frame_pairs(raw, mapping), new_sigs
-
-
-def incremental_image_pairs(
-    new_thumbs: DataFrame,
-    existing_sigs: DataFrame,
-    max_hamming: int = 4,
-    grid: int = DHASH_GRID,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental perceptual IMAGE dedup: signature only the NEW batch of
-    thumbnails, probe the persisted (doc_id, simhash) dHash store with the
-    banded block join (``dedup.incremental_hamming_pairs``). Returns
-    (pairs, new_sigs) — (doc_a, doc_b, hamming) touching ≥1 new image, and
-    the batch's signature rows to append to the store. The image twin of
-    ``incremental_frame_pairs`` (images key directly on doc_id, so no
-    mapping join is needed); incremental == full recompute restricted to
-    the batch, pinned in tests. Wide grids (> 8) route to the multi-word
-    signature path; the store then holds (doc_id, sig array<long>) rows."""
-    from pulsar_replay_spark.operators.dedup import (
-        incremental_hamming_pairs,
-        incremental_hamming_pairs_multi,
-    )
-
-    bits = grid * (grid - 1)
-    if bits <= 60:
-        new_sigs = dhash_signatures(new_thumbs, grid).localCheckpoint(eager=True)
-        pairs = incremental_hamming_pairs(new_sigs, existing_sigs, max_hamming, bits)
-        return pairs, new_sigs
-    new_sigs = dhash_signatures_wide(new_thumbs, grid).localCheckpoint(eager=True)
-    pairs = incremental_hamming_pairs_multi(
-        new_sigs, existing_sigs, max_hamming, bits
-    )
-    return pairs, new_sigs
-
-
-def compact_frame_store(
-    store: DataFrame, retain_items: DataFrame | None = None
-) -> DataFrame:
-    """Lifecycle op for the (item_id, doc_id, frame_idx, simhash) store the
-    incremental frame pipeline grows — the ``compact_simhash_store``
-    discipline: DISTINCT rows (re-ingested identical frames contribute
-    exact duplicates; signatures are deterministic) plus an optional EXPIRY
-    semi-join against ``retain_items`` (item_id) so deleted/aged-out media
-    stop colliding with future batches. Writers must target a DIFFERENT
-    directory than the store was read from (lazy reads — see
-    ``dedup_index_compact``)."""
-    out = store.select("item_id", "doc_id", "frame_idx", "simhash").distinct()
-    if retain_items is not None:
-        out = out.join(retain_items.select("item_id").distinct(), "item_id", "semi")
-    return out
-
-
-def best_member_marks(
-    marks: DataFrame, scores: DataFrame, score_col: str = "byte_len"
-) -> DataFrame:
-    """Re-mark perceptual dedup output (doc_id, cluster_id, keep — the
-    ``image_dedup``/``audio_dedup`` shape) so each multi-doc cluster's
-    keeper is its BEST-scoring member (ties → min doc_id) —
-    ``dedup.dedup_corpus(score=)``'s keeper nuance for the media families:
-    among near-duplicate copies keep the highest-resolution/largest/longest
-    one (``byte_len`` from the media contract is the zero-cost default; any
-    (doc_id, score) frame works, e.g. width·height from
-    ``parse_media_headers``).
-
-    Plan shape: multi-doc clusters are the duplicates-only slice — a tiny
-    relation vs the corpus — so the member rows BROADCAST against the score
-    frame (semi-pruned to members first, so the re-attach join is
-    broadcast-sized on BOTH sides) and the re-ranking window runs over
-    CLUSTER MEMBERS only; singletons pass through untouched. Exactly one
-    keeper per cluster by construction (row_number, total order).
-
-    A PARTIAL score frame is safe: members with no score row stay in the
-    output (NULL score sorts last, so an unscored copy loses to any scored
-    sibling and is still marked a duplicate — it never silently un-marks).
-    A cluster whose members are ALL unscored degrades to the min-doc_id
-    keeper, i.e. the plain ``image_dedup`` policy."""
-    from pyspark.sql.window import Window
-
-    members = (
-        marks.filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("cluster_id")
-        .distinct()
-    )
-    multi = marks.join(F.broadcast(members), "cluster_id")
-    member_rows = multi.select("doc_id", "cluster_id")
-    member_scores = (
-        scores.select("doc_id", F.col(score_col).cast("double").alias("_score"))
-        .join(F.broadcast(member_rows.select("doc_id")), "doc_id", "semi")
-    )
-    scored = member_rows.join(F.broadcast(member_scores), "doc_id", "left")
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc_nulls_last("_score"), "doc_id"
-    )
-    remarked = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .select("doc_id", "cluster_id", (F.col("_rk") == 1).alias("keep"))
-    )
-    singles = marks.join(F.broadcast(members), "cluster_id", "left_anti")
-    return singles.unionByName(remarked)

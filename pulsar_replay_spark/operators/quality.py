@@ -210,25 +210,6 @@ def drop_bottom_quantile(
     )
 
 
-def drop_bottom_quantile_exact(
-    scored: DataFrame, q: float, score_col: str = "score", by: str = "source"
-) -> DataFrame:
-    """Spec twin (and the DuckDB-oracle formulation): keep rows whose
-    ``percent_rank`` within their group is ≥ q. Exact, but one window sort
-    per group — correct wherever a group fits a task's sort, which is the
-    same caveat as every exact-quantile engine; the approx path above is
-    what ships at 100 TB. Ties share a percent_rank, so threshold-value
-    ties are kept by both paths identically."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(by).orderBy(score_col)
-    return (
-        scored.withColumn("_pr", F.percent_rank().over(w))
-        .filter(F.col("_pr") >= q)
-        .drop("_pr")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Corpus vocabulary statistics: the Zipf curve + cumulative-coverage report a
 # tokenizer/vocab decision is actually made from ("how many types cover 95%

@@ -34,7 +34,7 @@ def _hyperplane_matrix(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[fl
     """Hyperplane components as driver-side constants: component j of plane p
     is +1 when the first md5 hex nibble of ``"p-j"`` is 0–7, else −1 — the
     exact formula the DuckDB oracle evaluates in SQL (queries_llm:
-    ``_lsh_bucket_sql``), precomputed here because it depends only on (p, j),
+    ``_lsh_sig_expr``), precomputed here because it depends only on (p, j),
     never on data. Evaluating md5 per vector-component would cost
     N·dim·planes hash calls for a constant 8×64 matrix."""
     import hashlib

@@ -326,185 +326,6 @@ def _funnel_report(stages: list[tuple[str, DataFrame]]) -> DataFrame:
     return out
 
 
-# Containers the library-free header decoder can actually verify
-# (multimodal._parse_one_media). Other recognized media types (jpeg, gif,
-# webm, …) have no parser here — the gate must not conflate "no parser for
-# this container" with "corrupt blob".
-_VERIFIABLE_CONTAINERS = ("image/png", "audio/wav", "video/mp4")
-
-
-def media_parse_gate(media: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(parsed, passthrough): the media funnel's admission gate, shared by
-    the one-shot ``curate_media`` and the streaming ``media_ingest_sink``
-    so both admit EXACTLY the same rows. ``parsed`` = rows whose sniffed
-    headers parse (corrupt blobs leave here) — including unrecognized
-    media_types (e.g. an extensionless PNG) whose magic bytes verify, with
-    media_type repaired from the sniffed container; ``passthrough`` =
-    recognized media types the header decoder has no parser for
-    (jpeg/gif/webm/…) — their own accounted lane, never conflated with
-    corrupt blobs. Row-local per doc: the gate commutes with any batching,
-    which is what makes the streaming twin exactly equal."""
-    from pulsar_replay_spark.operators import multimodal as mm
-
-    recognized = (
-        F.col("media_type").startswith("image/")
-        | F.col("media_type").startswith("audio/")
-        | F.col("media_type").startswith("video/")
-    )
-    passthrough = media.filter(
-        ~F.col("media_type").isin(*_VERIFIABLE_CONTAINERS) & recognized
-    )
-    # Everything else — verifiable containers AND unrecognized media_types —
-    # is admitted by CONTENT: media_type is a routing hint only
-    # (read_media_dir's contract), so an extensionless PNG whose magic bytes
-    # sniff fine belongs in `parsed`, not the corrupt lane. The passthrough
-    # lane skips the header kernel entirely (its result was never consulted
-    # for those rows — no full-payload Arrow pass wasted on them).
-    candidates = media.filter(
-        F.col("media_type").isin(*_VERIFIABLE_CONTAINERS) | ~recognized
-    )
-    # distinct: the sink's stream (and read_media_dir(dedupe_content=False))
-    # can carry the same content-hash doc_id on several rows — container is
-    # content-determined, so the fold is exact, and it keeps the admission
-    # join 1:n (like the old left_semi) instead of n:n row multiplication
-    sniffed_ok = (
-        mm.parse_media_headers(candidates)
-        .filter(F.col("parse_ok"))
-        .select("doc_id", "container")
-        .distinct()
-    )
-    sniffed_mime = (
-        F.when(F.col("container") == "png", F.lit("image/png"))
-        .when(F.col("container") == "wav", F.lit("audio/wav"))
-        .when(F.col("container") == "mp4", F.lit("video/mp4"))
-    )
-    # doc_id is the media contract's unique key (content-hash, deduped at
-    # ingest), so this inner join is 1:1 admission. Rows admitted by sniff
-    # alone get media_type repaired from the container so the downstream
-    # prefix-keyed stages (thumbnails, fingerprints, frames) cover them.
-    parsed = (
-        candidates.join(sniffed_ok, "doc_id")
-        .withColumn(
-            "media_type",
-            F.when(recognized, F.col("media_type")).otherwise(sniffed_mime),
-        )
-        .drop("container")
-    )
-    return parsed, passthrough
-
-
-def curate_media(
-    media: DataFrame,
-    max_hamming: int = 4,
-    n_frames: int = 4,
-    grid: int = 8,
-    fake: bool = True,
-    frame_len: int = 64,
-    audio_window_ms: int = 1000,
-    audio_hop_ms: int = 500,
-    keep_best: bool = False,
-) -> dict:
-    """End-to-end MEDIA curation — the multimodal twin of ``curate_corpus``,
-    wiring the media tier's stages in production order:
-
-        header parse gate → exact content dedup (sha256) →
-        perceptual image near-dedup (dHash marks) →
-        perceptual audio near-dedup (energy-fingerprint marks) →
-        video frame sampling → perceptual frame near-dedup
-
-    Input is the media-row contract (``read_media_dir`` / ``as_media``:
-    doc_id, payload, media_type, byte_len, sha256). Returns every stage
-    frame plus the funnel report:
-
-    - ``parsed``: verifiable-container rows whose headers parse
-      (``parse_ok`` — corrupt blobs leave the pipeline first, before any
-      byte-heavy work);
-    - ``passthrough``: recognized media types the header decoder has NO
-      parser for (jpeg/gif/webm/…) — routed past the gate as their own
-      accounted funnel stage, never conflated with corrupt blobs;
-    - ``exact_deduped``: one row per distinct sha256 (keeper = min doc_id);
-    - ``image_marks`` / ``audio_marks`` / ``deduped``: perceptual near-dup
-      marks over image thumbnails (dHash) and audio clips (energy
-      fingerprints), losers removed from the corpus — stage filters match
-      media_type PREFIXES, so every image/* and audio/* row is covered;
-    - ``frames`` / ``frame_marks``: sampled video frames and their
-      perceptual dedup marks — the keep set is what a per-frame model
-      (captioner, tagger) should actually run on;
-    - ``report``: (stage_idx, stage, n_docs) in pipeline order, plus the
-      frame stages at the end.
-
-    Scale posture: every stage communicates by ids (semi/anti joins on
-    doc_id); payload bytes are touched only by the Arrow kernels that need
-    them (header sniff, thumbnail, fingerprint, frame slice) and never
-    shuffle. ``fake`` switches EVERY decode seam together (thumbnails,
-    audio fingerprints, frame sampling + frame thumbs) so the real and
-    stubbed paths never mix within one run."""
-    from pyspark.sql.window import Window
-
-    from pulsar_replay_spark.operators import multimodal as mm
-
-    stages: list[tuple[str, DataFrame]] = [("input", media)]
-
-    parsed, passthrough = media_parse_gate(media)
-    stages.append(("parsed", parsed))
-    stages.append(("passthrough", passthrough))
-    gated = parsed.unionByName(passthrough)
-
-    w = Window.partitionBy("sha256").orderBy("doc_id")
-    exact = (
-        gated.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    stages.append(("exact_deduped", exact))
-
-    thumbs = mm.resize_thumbnail(exact, width=grid, height=grid, fake=fake,
-                                 fake_mode="sample")
-    image_marks = mm.image_dedup(thumbs, max_hamming=max_hamming, grid=grid)
-    if keep_best:
-        # quality-keeper nuance: within each perceptual cluster keep the
-        # LARGEST copy (byte_len ≈ resolution), not the lowest id — the
-        # dedup_corpus(score=) policy for media (best_member_marks)
-        image_marks = mm.best_member_marks(image_marks, exact)
-    image_losers = image_marks.filter(~F.col("keep")).select("doc_id")
-    image_deduped = exact.join(image_losers, "doc_id", "left_anti")
-    stages.append(("image_deduped", image_deduped))
-
-    audio_marks = mm.audio_dedup(
-        image_deduped, max_hamming=max_hamming,
-        window_ms=audio_window_ms, hop_ms=audio_hop_ms, fake=fake,
-    )
-    if keep_best:
-        audio_marks = mm.best_member_marks(audio_marks, image_deduped)
-    audio_losers = audio_marks.filter(~F.col("keep")).select("doc_id")
-    deduped = image_deduped.join(audio_losers, "doc_id", "left_anti")
-    stages.append(("audio_deduped", deduped))
-
-    frames = mm.frame_sample(deduped, n_frames=n_frames, fake=fake,
-                             frame_len=frame_len)
-    frame_marks = mm.frame_dedup_perceptual(
-        frames, max_hamming=max_hamming, grid=grid, fake=fake
-    )
-    frames_kept = frame_marks.filter(F.col("keep"))
-
-    report = _funnel_report(stages).unionByName(
-        _funnel_report([("frames", frame_marks), ("frames_kept", frames_kept)])
-        .withColumn("stage_idx", F.col("stage_idx") + len(stages))
-    )
-    return {
-        "parsed": parsed,
-        "passthrough": passthrough,
-        "exact_deduped": exact,
-        "image_marks": image_marks,
-        "audio_marks": audio_marks,
-        "deduped": deduped,
-        "frames": frames,
-        "frame_marks": frame_marks,
-        "frames_kept": frames_kept,
-        "report": report,
-    }
-
-
 def data_card(
     docs: DataFrame,
     length_bins: list[float] | None = None,

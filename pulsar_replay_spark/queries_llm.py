@@ -707,28 +707,6 @@ def q_bitext_mine(spark, sf_dir):
 # Similarity search: random-hyperplane LSH bucket assignment (the scale
 # path; ANN recall vs brute force is pinned in tests/test_similarity.py).
 # ---------------------------------------------------------------------------
-def _lsh_bucket_sql() -> str:
-    planes = []
-    for p in range(similarity.N_PLANES):
-        hp = (
-            f"list_transform(range(0, {similarity.DIM}), "
-            f"j -> CASE WHEN substr(md5('{p}-' || CAST(j AS VARCHAR)), 1, 1) "
-            f"IN ('0','1','2','3','4','5','6','7') THEN 1.0 ELSE -1.0 END)"
-        )
-        planes.append(
-            f"(CASE WHEN list_inner_product(vd, {hp}) > 0 THEN {2**p} ELSE 0 END)"
-        )
-    bucket = " + ".join(planes)
-    return f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd FROM embeddings
-),
-sig AS (SELECT vec_id, CAST({bucket} AS BIGINT) AS bucket FROM e)
-SELECT bucket, COUNT(*) AS n_vecs, MIN(vec_id) AS min_vec_id
-FROM sig GROUP BY bucket
-"""
-
-
 # Not registered: ann_lsh_topk drives the same signature pipeline end-to-end
 # with a full oracle; the histogram stays as a diagnostic (tests/test_similarity.py).
 def q_lsh_bucket_histogram(spark, sf_dir):
@@ -795,9 +773,9 @@ def q_ann_lsh_topk(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Multimodal: typed metadata over opaque binary payloads (decode/feature
-# extraction is the mapInPandas path in operators/multimodal.py, tested in
-# tests/test_multimodal.py).
+# Multimodal: typed metadata over opaque binary payloads (frame sampling and
+# the dHash thumbnails are the mapInPandas paths in operators/multimodal.py,
+# tested in tests/test_multimodal.py and tests/test_perceptual_dedup.py).
 # ---------------------------------------------------------------------------
 @register(
     "multimodal_meta",

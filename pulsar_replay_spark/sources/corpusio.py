@@ -184,7 +184,7 @@ def read_text_corpus(
     one document per LINE (the dump-of-sentences shape; blank lines
     dropped); ``whole_files=True``: one document per FILE via
     ``wholetext`` — files are then the parallelism unit, so individual
-    files must fit an executor (the ``read_media_dir`` caveat).
+    files must fit an executor.
 
     doc_id is the content hash — identical lines/files collapse under the
     exact-dedup tier rather than masquerading as distinct docs."""

@@ -516,60 +516,6 @@ def incremental_simhash_sink(
     )
 
 
-def incremental_frames_sink(
-    frame_stream: DataFrame,
-    store_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    max_hamming: int = 4,
-):
-    """Streaming incremental PERCEPTUAL frame dedup — the
-    ``incremental_simhash_sink`` shape for the dHash family: every
-    micro-batch of sampled frames thumbnails + signatures only itself,
-    block-probes the persisted (item_id, doc_id, frame_idx, simhash) store
-    (``multimodal.incremental_frame_pairs``), emits hamming≤k frame pairs
-    touching the batch, and appends its signature rows as an idempotent
-    batch_id partition. Raw frame bytes never land in state — the store is
-    one long per frame. Same exactly-once discipline throughout."""
-    from pulsar_replay_spark.operators.multimodal import incremental_frame_pairs
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        store = (
-            read_parquet_or_empty(
-                spark,
-                store_dir,
-                "item_id long, doc_id long, frame_idx int, simhash long, batch_id long",
-            )
-            .where(F.col("batch_id") != batch_id)  # retry safety
-            .select("item_id", "doc_id", "frame_idx", "simhash")
-        )
-        pairs, new_sigs = incremental_frame_pairs(
-            batch_df, store, max_hamming=max_hamming
-        )
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(pairs_dir)
-        )
-        (
-            new_sigs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
-        )
-
-    return (
-        frame_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 
@@ -1286,539 +1232,6 @@ def curation_ingest_sink(
     )
 
 
-# ---------------------------------------------------------------------------
-# Composed MEDIA ingest: the streaming twin of pipeline.curate_media — a
-# drop-folder of media files arrives batch by batch; the gate, exact sha256
-# dedup, and all three perceptual families (image dHash, audio energy
-# fingerprints, video frame dHash) maintain their stores incrementally, and
-# media_curation_read() serves the SAME stage frames the one-shot funnel
-# computes (equality pinned in tests, including transitive clone chains
-# split across batches — the label maintenance is CC-exact, not greedy).
-# ---------------------------------------------------------------------------
-
-MEDIA_SCHEMA = (
-    "doc_id long, payload binary, media_type string, byte_len int, sha256 string"
-)
-
-
-def media_dir_stream(
-    spark: SparkSession,
-    path: str,
-    pattern: str | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-based stream of raw media files — the streaming twin of
-    ``multimodal.read_media_dir`` (same content-hash doc_ids, extension
-    routing hint, contract columns), one file-listing micro-batch at a
-    time. Content-hash ids mean a re-dropped identical file is the SAME
-    doc_id — the sink's exact stage absorbs it instead of forking state."""
-    from pulsar_replay_spark.operators.multimodal import media_contract_projection
-
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    if pattern is not None:
-        reader = reader.option("pathGlobFilter", pattern)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return media_contract_projection(reader.load(path))
-
-
-def _media_state_dirs(state_dir: str) -> dict:
-    base = state_dir.rstrip("/")
-    return {
-        "media": f"{base}/media",
-        "image_sigs": f"{base}/image_sigs",
-        "image_labels": f"{base}/image_labels",
-        "audio_sigs": f"{base}/audio_sigs",
-        "audio_labels": f"{base}/audio_labels",
-        "frame_sigs": f"{base}/frame_sigs",
-        "frame_labels": f"{base}/frame_labels",
-    }
-
-
-def _frame_item_key(doc_col, frame_col):
-    from pulsar_replay_spark.functions.text import token_hash60
-
-    return token_hash60(F.concat_ws(":", doc_col, frame_col))
-
-
-def media_ingest_sink(
-    media_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_hamming: int = 4,
-    n_frames: int = 4,
-    grid: int = 8,
-    fake: bool = True,
-    frame_len: int = 64,
-    audio_window_ms: int = 1000,
-    audio_hop_ms: int = 500,
-):
-    """Per micro-batch of media rows (the ``read_media_dir``/``as_media``
-    contract), the ``curation_ingest_sink`` discipline applied to the
-    media funnel:
-
-    1. **gate** — ``pipeline.media_parse_gate`` (row-local, so the stream
-       admits exactly the one-shot funnel's rows); gated rows land in the
-       media store tagged with their lane (parsed/passthrough);
-    2. **exact dedup** — sha256 anti-join against prior batches' media
-       store + keep-min-doc_id within the batch; only exact-novel rows are
-       ever signatured (dup payloads are byte-identical, so their
-       signatures would add no connectivity — see the equality argument in
-       ``media_curation_read``);
-    3. **perceptual probes** — each modality signatures ONLY the batch and
-       block-probes its persisted store (``incremental_image_pairs`` /
-       ``incremental_audio_pairs`` / ``incremental_frame_pairs``), then
-       folds the new pairs into its maintained label table with
-       ``dedup.cluster_label_deltas`` — CC-exact across batches, including
-       transitive clone chains a greedy first-wins admission would split.
-
-    All stores are idempotent batch_id partitions; every read excludes the
-    current batch_id, so a crash-retry recomputes identical state. Knobs
-    mirror ``curate_media``; pass the same values to
-    ``media_curation_read`` for the equality guarantee.
-
-    One documented asymmetry: a sha256 first seen with doc_id X is keyed to
-    X forever; if a LATER batch brings the same bytes under a smaller
-    doc_id, the one-shot funnel would crown the newcomer. With content-hash
-    doc_ids (``read_media_dir`` / ``media_dir_stream``) identical bytes
-    share ONE id, so the case cannot occur; with caller-supplied ids,
-    deliver each payload's minimal id first (or accept first-wins)."""
-    from pulsar_replay_spark.operators import multimodal as mm
-    from pulsar_replay_spark.operators.dedup import cluster_label_deltas
-    from pulsar_replay_spark.pipeline import media_parse_gate
-
-    if grid * (grid - 1) > 60:
-        raise ValueError(
-            f"grid={grid} needs multi-word (array<long>) signatures, but the "
-            "streaming stores' schemas are single-long; keep grid <= 8 in the "
-            "sink (the batch family routes wide grids automatically)"
-        )
-    dirs = _media_state_dirs(state_dir)
-
-    def _write(df: DataFrame, batch_id: int, path: str) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        from pyspark.sql.window import Window
-
-        batch = batch_df.select(
-            "doc_id", "payload", "media_type", "byte_len", "sha256"
-        ).localCheckpoint(eager=True)
-
-        parsed, passthrough = media_parse_gate(batch)
-        gated = (
-            parsed.withColumn("lane", F.lit("parsed"))
-            .unionByName(passthrough.withColumn("lane", F.lit("passthrough")))
-            .localCheckpoint(eager=True)
-        )
-
-        seen = (
-            read_parquet_or_empty(
-                spark, dirs["media"], MEDIA_SCHEMA + ", lane string, batch_id long"
-            )
-            .where(F.col("batch_id") != batch_id)  # retry safety
-            .select("sha256")
-            .distinct()
-        )
-        wh = Window.partitionBy("sha256").orderBy("doc_id")
-        novel = (
-            gated.join(seen, "sha256", "left_anti")
-            .withColumn("_rn", F.row_number().over(wh))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "lane")
-            .localCheckpoint(eager=True)
-        )
-
-        # image family: thumbnails -> dHash -> banded probe -> label deltas
-        thumbs = mm.resize_thumbnail(
-            novel, width=grid, height=grid, fake=fake, fake_mode="sample"
-        )
-        istore = (
-            read_parquet_or_empty(
-                spark, dirs["image_sigs"], "doc_id long, simhash long, batch_id long"
-            )
-            .where(F.col("batch_id") != batch_id)
-            .select("doc_id", "simhash")
-        )
-        ipairs, isigs = mm.incremental_image_pairs(
-            thumbs, istore, max_hamming=max_hamming, grid=grid
-        )
-        ideltas = cluster_label_deltas(
-            read_cluster_labels(spark, dirs["image_labels"], exclude_batch_id=batch_id),
-            ipairs,
-        )
-
-        # audio family: energy fingerprints -> banded probe -> label deltas
-        astore = (
-            read_parquet_or_empty(
-                spark, dirs["audio_sigs"], "doc_id long, simhash long, batch_id long"
-            )
-            .where(F.col("batch_id") != batch_id)
-            .select("doc_id", "simhash")
-        )
-        apairs, asigs = mm.incremental_audio_pairs(
-            novel,
-            astore,
-            max_hamming=max_hamming,
-            window_ms=audio_window_ms,
-            hop_ms=audio_hop_ms,
-            fake=fake,
-        )
-        adeltas = cluster_label_deltas(
-            read_cluster_labels(spark, dirs["audio_labels"], exclude_batch_id=batch_id),
-            apairs,
-        )
-
-        # frame family: sample -> thumbnails -> dHash -> probe -> deltas
-        # (labels live on the 60-bit item ids; edges re-derive the item key
-        # from the decoded pair — token_hash60 is a pure expression)
-        frames = mm.frame_sample(novel, n_frames=n_frames, fake=fake, frame_len=frame_len)
-        fstore = (
-            read_parquet_or_empty(
-                spark,
-                dirs["frame_sigs"],
-                "item_id long, doc_id long, frame_idx int, simhash long, batch_id long",
-            )
-            .where(F.col("batch_id") != batch_id)
-            .select("item_id", "doc_id", "frame_idx", "simhash")
-        )
-        fpairs, fsigs = mm.incremental_frame_pairs(
-            frames, fstore, max_hamming=max_hamming, grid=grid, fake=fake
-        )
-        fedges = fpairs.select(
-            _frame_item_key(F.col("doc_a"), F.col("frame_a")).alias("doc_a"),
-            _frame_item_key(F.col("doc_b"), F.col("frame_b")).alias("doc_b"),
-        )
-        fdeltas = cluster_label_deltas(
-            read_cluster_labels(spark, dirs["frame_labels"], exclude_batch_id=batch_id),
-            fedges,
-        )
-
-        # probes all done — land the batch's partitions (any order: every
-        # read above excluded this batch_id, so a retry is a clean rewrite)
-        _write(gated, batch_id, dirs["media"])
-        _write(isigs, batch_id, dirs["image_sigs"])
-        _write(ideltas, batch_id, dirs["image_labels"])
-        _write(asigs, batch_id, dirs["audio_sigs"])
-        _write(adeltas, batch_id, dirs["audio_labels"])
-        _write(fsigs, batch_id, dirs["frame_sigs"])
-        _write(fdeltas, batch_id, dirs["frame_labels"])
-
-    return (
-        media_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def media_curation_read(spark: SparkSession, state_dir: str) -> dict:
-    """Serve the maintained media-curation state as the SAME stage frames
-    ``pipeline.curate_media`` returns (sans raw frame bytes — signatures,
-    ids and marks are the maintained state; bytes never enter state):
-    parsed/passthrough/exact_deduped/image_marks/audio_marks/deduped/
-    frame_marks/frames_kept/report.
-
-    Equality argument (pinned in tests): the gate is row-local; exact
-    winners = min doc_id per sha256 over ALL gated rows; each modality's
-    labels come from ``cluster_label_deltas`` over the incrementally-probed
-    pair stream, which equals from-scratch CC over all pairs — and because
-    only exact-novel rows are signatured, the pair graph is the one-shot
-    funnel's graph exactly (an exact dup's signature equals its keeper's,
-    so it adds no connectivity the keeper doesn't already have)."""
-    dirs = _media_state_dirs(state_dir)
-    from pyspark.sql.window import Window
-
-    media = (
-        read_parquet_or_empty(
-            spark, dirs["media"], MEDIA_SCHEMA + ", lane string, batch_id long"
-        )
-        .drop("batch_id")
-        # a byte-identical payload re-dropped in a later batch lands a second
-        # identical gated row (same content-hash doc_id); read_media_dir
-        # collapses those at the source, so collapse them here too
-        .dropDuplicates(["doc_id", "media_type", "sha256", "lane"])
-    )
-    parsed = media.filter(F.col("lane") == "parsed").drop("lane")
-    passthrough = media.filter(F.col("lane") == "passthrough").drop("lane")
-    gated = media.drop("lane")
-
-    wh = Window.partitionBy("sha256").orderBy("doc_id")
-    exact = (
-        gated.withColumn("_rn", F.row_number().over(wh))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-    def _marks(sigs_dir: str, labels_dir: str, sig_schema: str) -> DataFrame:
-        ids = read_parquet_or_empty(spark, sigs_dir, sig_schema).select("doc_id")
-        labels = read_cluster_labels(spark, labels_dir)
-        return (
-            ids.join(exact.select("doc_id"), "doc_id", "left_semi")
-            .join(labels, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-            )
-            .withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
-        )
-
-    sig_schema = "doc_id long, simhash long, batch_id long"
-    image_marks = _marks(dirs["image_sigs"], dirs["image_labels"], sig_schema)
-    audio_marks = _marks(dirs["audio_sigs"], dirs["audio_labels"], sig_schema)
-
-    losers = (
-        image_marks.filter(~F.col("keep"))
-        .select("doc_id")
-        .unionByName(audio_marks.filter(~F.col("keep")).select("doc_id"))
-    )
-    deduped = exact.join(losers, "doc_id", "left_anti")
-
-    fsigs = read_parquet_or_empty(
-        spark,
-        dirs["frame_sigs"],
-        "item_id long, doc_id long, frame_idx int, simhash long, batch_id long",
-    ).select("item_id", "doc_id", "frame_idx")
-    fsigs = fsigs.join(deduped.select("doc_id"), "doc_id", "left_semi")
-    flabels = read_cluster_labels(spark, dirs["frame_labels"]).select(
-        F.col("doc_id").alias("item_id"), "cluster_id"
-    )
-    fmarked = fsigs.join(flabels, "item_id", "left").select(
-        "doc_id",
-        "frame_idx",
-        F.coalesce(F.col("cluster_id"), F.col("item_id")).alias("cluster_id"),
-        "item_id",
-    )
-    cmap = fsigs.select(
-        F.col("item_id").alias("cluster_id"),
-        F.col("doc_id").alias("cluster_doc"),
-        F.col("frame_idx").alias("cluster_frame"),
-    )
-    frame_marks = fmarked.join(cmap, "cluster_id").select(
-        "doc_id",
-        "frame_idx",
-        "cluster_doc",
-        "cluster_frame",
-        (F.col("item_id") == F.col("cluster_id")).alias("keep"),
-    )
-    frames_kept = frame_marks.filter(F.col("keep"))
-
-    from pulsar_replay_spark.pipeline import _funnel_report
-
-    stages = [
-        ("gated", media),  # the stream never stores gate-rejected rows, so
-        # the serve report starts at the admitted set (one-shot "input"
-        # additionally counts corrupt/unrecognized rows)
-        ("parsed", parsed),
-        ("passthrough", passthrough),
-        ("exact_deduped", exact),
-        ("image_deduped", exact.join(
-            image_marks.filter(~F.col("keep")).select("doc_id"), "doc_id", "left_anti"
-        )),
-        ("audio_deduped", deduped),
-    ]
-    report = _funnel_report(stages).unionByName(
-        _funnel_report([("frames", frame_marks), ("frames_kept", frames_kept)])
-        .withColumn("stage_idx", F.col("stage_idx") + len(stages))
-    )
-    return {
-        "parsed": parsed,
-        "passthrough": passthrough,
-        "exact_deduped": exact,
-        "image_marks": image_marks,
-        "audio_marks": audio_marks,
-        "deduped": deduped,
-        "frame_marks": frame_marks,
-        "frames_kept": frames_kept,
-        "report": report,
-    }
-
-
-def media_state_compact(
-    spark: SparkSession, state_dir: str, compact_dir: str
-) -> None:
-    """Lifecycle op for the media funnel's seven stores: fold every store
-    under ``state_dir`` to its bounded form under ``compact_dir`` (same
-    layout, so ``media_curation_read`` serves the identical snapshot from
-    either root — pinned in tests):
-
-    - media: one gated row per (doc_id, media_type, sha256, lane) — a
-      re-dropped identical payload stops accumulating rows;
-    - image/audio/frame signature stores: distinct signature rows
-      (signatures are deterministic, so re-ingest duplicates are exact);
-    - the three label delta stores: per-key winners (``labels_compact``'s
-      latest-wins fold).
-
-    Rows keep their ORIGINAL batch_id (the ``labels_compact`` discipline),
-    so a sink resumed against the compacted root keeps its retry-exclusion
-    semantics. Same in-place guard as every compactor: lazy reads mean an
-    in-place overwrite would clobber its own input."""
-    if compact_dir.rstrip("/") == state_dir.rstrip("/"):
-        raise ValueError(
-            "compact_dir must differ from state_dir: an in-place overwrite "
-            "would read and clobber the same parquet files"
-        )
-    from pyspark.sql.window import Window
-
-    src, dst = _media_state_dirs(state_dir), _media_state_dirs(compact_dir)
-
-    def _fold(path: str, out: str, schema: str, keys: list[str]) -> None:
-        store = read_parquet_or_empty(spark, path, schema)
-        w = Window.partitionBy(*keys).orderBy(F.desc("batch_id"))
-        (
-            store.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
-
-    _fold(
-        src["media"], dst["media"],
-        MEDIA_SCHEMA + ", lane string, batch_id long",
-        ["doc_id", "media_type", "sha256", "lane"],
-    )
-    sig_schema = "doc_id long, simhash long, batch_id long"
-    _fold(src["image_sigs"], dst["image_sigs"], sig_schema, ["doc_id", "simhash"])
-    _fold(src["audio_sigs"], dst["audio_sigs"], sig_schema, ["doc_id", "simhash"])
-    _fold(
-        src["frame_sigs"], dst["frame_sigs"],
-        "item_id long, doc_id long, frame_idx int, simhash long, batch_id long",
-        ["item_id", "simhash"],
-    )
-    label_schema = "doc_id long, cluster_id long, batch_id long"
-    for store in ("image_labels", "audio_labels", "frame_labels"):
-        _fold(src[store], dst[store], label_schema, ["doc_id"])
-
-
-def media_state_expire(
-    spark: SparkSession,
-    state_dir: str,
-    out_dir: str,
-    drop_docs: DataFrame,
-    grid: int = 8,
-    max_hamming: int = 4,
-) -> None:
-    """Deletion ("right to be forgotten") for the media funnel's state:
-    remove ``drop_docs`` (doc_id) from every store under ``state_dir``,
-    writing the surviving state to ``out_dir``.
-
-    Media rows, signature rows, and frame rows are exact anti-join filters.
-    Cluster labels are REBUILT from the retained signatures (banded join →
-    CC, per modality) rather than filtered: a deleted doc can be a
-    cluster's bridge, so correct deletion may SPLIT clusters — and it can
-    be a cluster's keeper, so a surviving member must be promoted. Both
-    fall out of the rebuild for free; a filter would leave orphan labels
-    pointing at the deleted doc (keeperless clusters). The rebuild is
-    corpus-bound — the honest price of exact deletion; run it at takeout
-    cadence, not per ingest. ``grid``/``max_hamming`` must match the
-    sink's knobs (the stores carry single-long signatures at grid ≤ 8).
-
-    EVERY surviving row is folded (latest-wins per store key) and written
-    at the reserved ``batch_id = -1``: the expired output is a compacted
-    BASE state. Keeping original batch ids would re-open the
-    fresh-checkpoint hazard for the whole store — a sink resumed against
-    ``out_dir`` with a new checkpoint starts at micro-batch 0, whose retry
-    guard hides every batch-0-era row and whose dynamic overwrite then
-    wipes that partition.
-
-    Same in-place guard as every store rewriter."""
-    if out_dir.rstrip("/") == state_dir.rstrip("/"):
-        raise ValueError(
-            "out_dir must differ from state_dir: an in-place overwrite "
-            "would read and clobber the same parquet files"
-        )
-    from pulsar_replay_spark.operators.dedup import (
-        banded_hamming_pairs,
-        connected_components,
-    )
-
-    if grid * (grid - 1) > 60:
-        raise ValueError(
-            f"grid={grid} needs multi-word signatures; the funnel stores are "
-            "single-long (grid <= 8)"
-        )
-    src, dst = _media_state_dirs(state_dir), _media_state_dirs(out_dir)
-    drop = drop_docs.select("doc_id").distinct().localCheckpoint(eager=True)
-    from pyspark.sql.window import Window
-
-    def _filtered(path: str, schema: str, keys: list[str]) -> DataFrame:
-        # anti-join the forgotten docs, then fold latest-wins per store key
-        # and rebase to batch_id=-1 (see the docstring's resume argument)
-        store = read_parquet_or_empty(spark, path, schema).join(
-            drop, "doc_id", "left_anti"
-        )
-        w = Window.partitionBy(*keys).orderBy(F.desc("batch_id"))
-        return (
-            store.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .withColumn("batch_id", F.lit(-1))
-        )
-
-    def _write(df: DataFrame, out: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out)
-        )
-
-    _write(
-        _filtered(
-            src["media"],
-            MEDIA_SCHEMA + ", lane string, batch_id long",
-            ["doc_id", "media_type", "sha256", "lane"],
-        ),
-        dst["media"],
-    )
-
-    bits = grid * (grid - 1)
-    sig_schema = "doc_id long, simhash long, batch_id long"
-    for fam in ("image", "audio"):
-        kept = _filtered(
-            src[f"{fam}_sigs"], sig_schema, ["doc_id", "simhash"]
-        ).localCheckpoint(eager=True)
-        _write(kept, dst[f"{fam}_sigs"])
-        labels = connected_components(
-            banded_hamming_pairs(
-                kept.select("doc_id", "simhash").distinct(), max_hamming, bits
-            )
-        )
-        # reserved batch_id=-1 (the compactor convention): a sink resumed
-        # against out_dir with a FRESH checkpoint starts at micro-batch 0,
-        # whose retry guard excludes batch_id=0 and whose dynamic overwrite
-        # replaces that partition — rebuilt labels under 0 would be hidden
-        # then wiped; -1 can never collide with a real micro-batch id
-        _write(labels.withColumn("batch_id", F.lit(-1)), dst[f"{fam}_labels"])
-
-    fkept = _filtered(
-        src["frame_sigs"],
-        "item_id long, doc_id long, frame_idx int, simhash long, batch_id long",
-        ["item_id", "simhash"],
-    ).localCheckpoint(eager=True)
-    _write(fkept, dst["frame_sigs"])
-    flabels = connected_components(
-        banded_hamming_pairs(
-            fkept.select(F.col("item_id").alias("doc_id"), "simhash").distinct(),
-            max_hamming,
-            bits,
-        )
-    )
-    _write(flabels.withColumn("batch_id", F.lit(-1)), dst["frame_labels"])
-
-
 def curation_state_expire(
     spark: SparkSession,
     accepted_dir: str,
@@ -1993,8 +1406,8 @@ def semantic_state_expire(
     vector can flip its cell-mates drop→keep (their dominator left), and
     with frozen centroids the recompute over the cell's retained members
     reproduces the from-scratch verdicts exactly; every other cell is
-    untouched by cell independence. Unlike the media-label rebuild this is
-    AFFECTED-CELL-bound, not corpus-bound — SemDeDup deletion is cheap.
+    untouched by cell independence. This is AFFECTED-CELL-bound, not
+    corpus-bound — SemDeDup deletion is cheap.
 
     Both output stores are written compacted (one winner row per retained
     vec_id; the corpus rows verbatim) at the reserved ``batch_id = -1`` —
@@ -2052,7 +1465,7 @@ def semantic_state_expire(
     )
     # reserved batch_id=-1: a fresh-checkpoint resume's first micro-batch is
     # 0 — its retry guard would hide re-verdicts stored under 0 and its
-    # dynamic overwrite would then wipe them (see media_state_expire)
+    # dynamic overwrite would then wipe them
     redone = semantic_dedup(
         retained.join(members, "vec_id", "semi").select("vec_id", "embedding"),
         threshold=threshold,

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators import curation
 from tests.conftest import SF_SMOKE
+from tests.spec_reference import select_within_token_budget_naive
 
 BUDGET = 20_000
 
@@ -43,7 +44,7 @@ def test_scale_path_equals_spec_twin(documents, selected):
     naive = sorted(
         map(
             tuple,
-            curation.select_within_token_budget_naive(documents, BUDGET).collect(),
+            select_within_token_budget_naive(documents, BUDGET).collect(),
         )
     )
     assert selected == naive

@@ -1,19 +1,18 @@
-"""Perceptual (near-dup) image/frame dedup: dHash signatures + banded
-hamming pairs + cluster marks.
+"""Perceptual (near-dup) image dedup: dHash signatures + banded hamming
+pairs.
 
-The r6 gap this covers: exact frame_dedup collapses byte-identical frames
-only — one pixel of re-encode noise defeats it. These tests pin (a) the
-dHash kernel against an INDEPENDENT naive python oracle, (b) planted
-nudged-clone collapse / distinct survival semantics at the thumb level,
-(c) the no-cartesian candidate plan, and (d) the end-to-end frame pipeline
-through the locality-preserving fake resize.
+An exact byte hash collapses identical images only — one pixel of
+re-encode noise defeats it. These tests pin (a) the dHash kernel against
+an INDEPENDENT naive python oracle, (b) planted nudged-clone pairing /
+distinct survival semantics at the thumb level, (c) the no-cartesian
+candidate plan, (d) the locality-preserving fake frame resize, and (e) the
+wide-grid multi-word signature path.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators import multimodal as mm
 
@@ -125,103 +124,6 @@ def test_image_near_dup_pairs_planted_clones_collapse(spark):
     assert clone_ids is not None
 
 
-def test_image_dedup_marks_keep_one_per_cluster(spark):
-    base = _gradient_thumb(3)
-    rows = [
-        (5, 16, 16, base),
-        (6, 16, 16, _nudge(base, 1)),
-        (7, 16, 16, _nudge(base, 2)),
-        (40, 16, 16, np.random.default_rng(300).integers(0, 256, size=256).astype(np.uint8).tobytes()),
-    ]
-    marks = {r["doc_id"]: r for r in mm.image_dedup(_thumb_df(spark, rows)).collect()}
-    assert len(marks) == 4
-    assert marks[5]["keep"] and not marks[6]["keep"] and not marks[7]["keep"]
-    assert marks[5]["cluster_id"] == marks[6]["cluster_id"] == marks[7]["cluster_id"] == 5
-    assert marks[40]["keep"] and marks[40]["cluster_id"] == 40
-
-
-def test_frame_pipeline_end_to_end_collapses_nudged_videos(spark):
-    """frame_sample(fake) → frame_thumbs(locality-preserving fake) →
-    frame_dedup_perceptual: a video whose payload differs from another's by
-    a few nudged bytes collapses frame-wise with it, while a structurally
-    different video survives — the exact-hash frame_dedup misses ALL of
-    these (every payload differs byte-wise)."""
-    # seeded-random payloads: every 64-byte frame is distinct content (a
-    # gradient/ramp payload makes a video's own frames genuinely
-    # near-identical visually, which is honest perceptual behavior but not
-    # what this test plants); the nudge touches ≤1 byte per frame, flipping
-    # at most 2 sign bits
-    base = bytes(np.random.default_rng(42).integers(0, 256, size=4096).astype(np.uint8))
-    nudged = bytearray(base)
-    for i in range(0, len(nudged), 257):
-        nudged[i] = min(255, nudged[i] + 2)
-    nudged = bytes(nudged)
-    other = bytes(np.random.default_rng(43).integers(0, 256, size=4096).astype(np.uint8))
-    media = spark.createDataFrame(
-        [(1, "video/mp4", base), (2, "video/mp4", nudged), (3, "video/mp4", other)],
-        "doc_id long, media_type string, payload binary",
-    )
-    # 64-byte slices: the contract default (16) nearest-samples into only 8
-    # informative dHash bits — too coarse to separate distinct content
-    frames = mm.frame_sample(media, n_frames=4, frame_len=64).localCheckpoint(
-        eager=True
-    )
-
-    # exact dedup sees three byte-distinct payloads: nothing collapses
-    exact = mm.frame_dedup(frames).collect()
-    assert all(r["keep"] for r in exact)
-
-    marks_df = mm.frame_dedup_perceptual(frames, max_hamming=4)
-    plan = marks_df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    marks = {(r["doc_id"], r["frame_idx"]): r for r in marks_df.collect()}
-    assert len(marks) == 12
-    for i in range(4):
-        a, b, c = marks[(1, i)], marks[(2, i)], marks[(3, i)]
-        cluster = (a["cluster_doc"], a["cluster_frame"])
-        assert cluster == (b["cluster_doc"], b["cluster_frame"]), (
-            f"nudged frame {i} did not collapse"
-        )
-        # keeper = min-hash member (uniform-random but rerun-stable): exactly
-        # one of the pair keeps, and it IS the decoded cluster identity
-        assert a["keep"] != b["keep"]
-        keeper = (1, i) if a["keep"] else (2, i)
-        assert cluster == keeper
-        assert (c["cluster_doc"], c["cluster_frame"]) == (3, i)
-        assert c["keep"]
-
-    pairs = mm.frame_near_dup_pairs(frames, max_hamming=4).collect()
-    assert all(r["hamming"] <= 4 for r in pairs)
-    got_pairs = {
-        tuple(sorted([(r["doc_a"], r["frame_a"]), (r["doc_b"], r["frame_b"])]))
-        for r in pairs
-    }
-    assert got_pairs >= {((1, i), (2, i)) for i in range(4)}
-
-
-def test_frame_item_ids_host_60_bit_content_hash_doc_ids(spark):
-    """The frame family must work with the engine's real ids: 60-bit
-    content hashes (read_media_dir / corpusio). item_id is an md5 over
-    doc:frame (same collision posture as every other 60-bit id) — the old
-    arithmetic composite capped doc_id at 2^42 and raised on real data."""
-    big = (1 << 60) - 7
-    frames = spark.createDataFrame(
-        [(big, 0, 0, bytes(range(64))), (big, 1, 0, bytes(range(64)))],
-        "doc_id long, frame_idx int, offset_ms long, frame_bytes binary",
-    )
-    pairs = mm.frame_near_dup_pairs(frames, max_hamming=4).collect()
-    assert {(r["doc_a"], r["frame_a"], r["doc_b"], r["frame_b"]) for r in pairs} == {
-        (big, 0, big, 1)
-    } or {(r["doc_a"], r["frame_a"], r["doc_b"], r["frame_b"]) for r in pairs} == {
-        (big, 1, big, 0)
-    }
-    marks = mm.frame_dedup_perceptual(frames).collect()
-    assert len(marks) == 2 and sum(r["keep"] for r in marks) == 1
-    sigs = mm.frame_signatures(frames).collect()
-    assert {r["doc_id"] for r in sigs} == {big}
-    assert len({r["item_id"] for r in sigs}) == 2
-
-
 def test_frame_thumbs_fake_is_locality_preserving_and_sized(spark):
     frames = spark.createDataFrame(
         [(1, 0, 0, bytes(range(64))), (1, 1, 0, b""), (2, 0, 0, b"\x10")],
@@ -234,41 +136,6 @@ def test_frame_thumbs_fake_is_locality_preserving_and_sized(spark):
     assert rows[(2, 0)] == b"\x10" * 64  # single byte repeats (nearest sample)
     # nearest-sampling of 0..63 into 64 slots is the identity
     assert rows[(1, 0)] == bytes(range(64))
-
-
-def test_incremental_frame_pairs_equals_full_recompute(spark):
-    """The incremental perceptual probe (signature only the NEW batch,
-    banded-probe the persisted dHash store) must find EXACTLY the full
-    recompute's pairs that touch the batch — and the store union closes the
-    full pair set. The incremental≡full discipline for the dHash family."""
-    base = bytes(np.random.default_rng(7).integers(0, 256, size=4096).astype(np.uint8))
-    nudged = bytearray(base)
-    for i in range(0, len(nudged), 301):
-        nudged[i] = min(255, nudged[i] + 2)
-    media = spark.createDataFrame(
-        [(1, "video/mp4", base), (2, "video/mp4", bytes(nudged)),
-         (3, "video/mp4", bytes(np.random.default_rng(8).integers(0, 256, size=4096).astype(np.uint8)))],
-        "doc_id long, media_type string, payload binary",
-    )
-    frames = mm.frame_sample(media, n_frames=4, frame_len=64).localCheckpoint(eager=True)
-    batch1 = frames.filter("doc_id = 1")
-    batch2 = frames.filter("doc_id != 1")
-
-    def key(r):
-        return (r["doc_a"], r["frame_a"], r["doc_b"], r["frame_b"])
-
-    full = {key(r) for r in mm.frame_near_dup_pairs(frames, max_hamming=4).collect()}
-    b2_items = {(r["doc_id"], r["frame_idx"]) for r in batch2.select("doc_id", "frame_idx").collect()}
-    expected = {
-        p for p in full
-        if (p[0], p[1]) in b2_items or (p[2], p[3]) in b2_items
-    }
-
-    sigs1 = mm.frame_signatures(batch1).localCheckpoint(eager=True)
-    inc, sigs2 = mm.incremental_frame_pairs(batch2, sigs1, max_hamming=4)
-    got = {key(r) for r in inc.collect()}
-    assert got == expected and got  # the nudged clone pairs cross the batches
-    assert sigs1.unionByName(sigs2).count() == mm.frame_signatures(frames).count()
 
 
 def test_dhash_invariances_property():
@@ -298,73 +165,6 @@ def test_dhash_invariances_property():
         assert 0 <= sig < 1 << mm.DHASH_BITS
 
     fuzz()
-
-
-def test_incremental_image_pairs_equals_full_recompute(spark):
-    """The image-store incremental probe: full pairs restricted to the new
-    batch == incremental probe, and the store union closes the signing."""
-    base = _gradient_thumb(21)
-    rows = [
-        (1, 16, 16, base),
-        (2, 16, 16, _nudge(base, 1)),
-        (3, 16, 16, _nudge(base, 2)),
-        (9, 16, 16, np.random.default_rng(900).integers(0, 256, size=256).astype(np.uint8).tobytes()),
-    ]
-    thumbs = _thumb_df(spark, rows)
-    old = thumbs.filter("doc_id in (1, 9)")
-    new = thumbs.filter("doc_id in (2, 3)")
-
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in mm.image_near_dup_pairs(thumbs, max_hamming=4).collect()
-    }
-    expected = {p for p in full if p[0] in (2, 3) or p[1] in (2, 3)}
-
-    store = mm.dhash_signatures(old).localCheckpoint(eager=True)
-    inc, new_sigs = mm.incremental_image_pairs(new, store, max_hamming=4)
-    got = {(r["doc_a"], r["doc_b"]) for r in inc.collect()}
-    assert got == expected and (1, 2) in got  # cross-batch clone recovered
-    assert store.unionByName(new_sigs).count() == 4
-
-
-def test_compact_frame_store_probe_equality(spark):
-    """Compacting the frame-signature store (dup collapse + expiry) must not
-    change what a new batch's probe finds among RETAINED frames."""
-    base = bytes(np.random.default_rng(31).integers(0, 256, size=2048).astype(np.uint8))
-    media = spark.createDataFrame(
-        [(1, "video/mp4", base), (2, "video/mp4", base)],
-        "doc_id long, media_type string, payload binary",
-    )
-    frames = mm.frame_sample(media, n_frames=2, frame_len=64).localCheckpoint(eager=True)
-    sigs = mm.frame_signatures(frames)
-    grown = sigs.unionByName(sigs)  # simulated re-ingest duplicates
-    compact = mm.compact_frame_store(grown).localCheckpoint(eager=True)
-    assert compact.count() == sigs.count()
-
-    nudged = bytearray(base)
-    nudged[7] = min(255, nudged[7] + 2)
-    new_media = spark.createDataFrame(
-        [(9, "video/mp4", bytes(nudged))], "doc_id long, media_type string, payload binary"
-    )
-    new_frames = mm.frame_sample(new_media, n_frames=2, frame_len=64)
-    p_grown, _ = mm.incremental_frame_pairs(new_frames, grown)
-    p_compact, _ = mm.incremental_frame_pairs(new_frames, compact)
-    key = lambda r: (r["doc_a"], r["frame_a"], r["doc_b"], r["frame_b"])  # noqa: E731
-    assert {key(r) for r in p_grown.collect()} == {key(r) for r in p_compact.collect()} != set()
-
-    # expiry: retaining only doc 1's frames removes doc 2 from future probes
-    retain = compact.filter("doc_id = 1").select("item_id")
-    expired = mm.compact_frame_store(grown, retain_items=retain)
-    p_exp, _ = mm.incremental_frame_pairs(new_frames, expired.localCheckpoint(eager=True))
-    assert {r["doc_b"] for r in p_exp.collect()} <= {1, 9}
-
-
-# ---------------------------------------------------------------------------
-# r8: multi-word signatures — the 56-bit selectivity ceiling's mitigation
-# with code: grids wider than 8 pack grid·(grid−1) bits into 60-bit words
-# of an array<long> and route to dedup.banded_hamming_pairs_multi (same
-# pigeonhole join, block extraction may straddle a word boundary).
-# ---------------------------------------------------------------------------
 
 
 def test_multi_word_blocks_match_python_bit_slicing(spark):
@@ -437,81 +237,3 @@ def test_wide_dhash_matches_oracle_and_routes_multi(spark):
                 want[(ids[x], ids[y])] = h
     assert got == want
     assert {(0, 1), (0, 2), (10, 11)} <= set(want)  # planted clones load-bear
-
-
-def test_incremental_image_pairs_wide_equals_full_recompute(spark):
-    """Wide-grid incremental probe: batch-2 pairs == the full wide recompute
-    restricted to pairs touching batch 2; the appended store rows equal the
-    batch's own signatures."""
-    grid, k = 12, 4
-    base = _gradient_thumb(41, w=24, h=24)
-    b1 = [(0, 24, 24, base), (1, 24, 24, _nudge(base, 51))]
-    b2 = [(2, 24, 24, _nudge(base, 52)),
-          (3, 24, 24,
-           np.random.default_rng(300).integers(0, 256, size=24 * 24)
-           .astype(np.uint8).tobytes())]
-    store = mm.dhash_signatures_wide(_thumb_df(spark, b1), grid)
-    pairs, new_sigs = mm.incremental_image_pairs(
-        _thumb_df(spark, b2), store, max_hamming=k, grid=grid
-    )
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-
-    full = mm.image_near_dup_pairs(_thumb_df(spark, b1 + b2), max_hamming=k, grid=grid)
-    want = {
-        (r["doc_a"], r["doc_b"])
-        for r in full.collect()
-        if r["doc_a"] in (2, 3) or r["doc_b"] in (2, 3)
-    }
-    assert got == want and (0, 2) in got  # cross-batch clone recovered
-    assert {r["doc_id"] for r in new_sigs.collect()} == {2, 3}
-
-
-def test_frame_pipeline_wide_grid_routes_multi(spark):
-    """Wide-grid frame dedup end-to-end: grid=12 signatures are array<long>
-    rows, nudged clone frames still collapse cross-video, the plan has no
-    cartesian, and the wide incremental probe == full recompute restricted
-    to the batch."""
-    rng = np.random.default_rng(77)
-    base = bytes(rng.integers(0, 256, size=4096).astype(np.uint8))
-    nudged = bytearray(base)
-    for i in range(0, len(nudged), 301):
-        nudged[i] = min(255, nudged[i] + 2)
-    distinct = bytes(rng.integers(0, 256, size=4096).astype(np.uint8))
-    media = spark.createDataFrame(
-        [(1, bytes(base), "video/mp4"), (2, bytes(nudged), "video/mp4"),
-         (3, distinct, "video/mp4")],
-        "doc_id long, payload binary, media_type string",
-    )
-    frames = mm.frame_sample(media, n_frames=3, frame_len=576)  # 24x24 thumbs
-    grid = 12
-
-    sigs = mm.frame_signatures(frames, grid=grid)
-    assert dict(sigs.dtypes)["sig"] == "array<bigint>"
-
-    pairs_df = mm.frame_near_dup_pairs(frames, max_hamming=6, grid=grid)
-    plan = pairs_df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    pairs = {
-        ((r["doc_a"], r["frame_a"]), (r["doc_b"], r["frame_b"]))
-        for r in pairs_df.collect()
-    }
-    for idx in range(3):  # each nudged frame pairs with its original
-        assert ((1, idx), (2, idx)) in pairs or ((2, idx), (1, idx)) in pairs
-    assert not any(3 in (a[0], b[0]) for a, b in pairs)
-
-    marks = mm.frame_dedup_perceptual(frames, max_hamming=6, grid=grid)
-    keep = {(r["doc_id"], r["frame_idx"]): r["keep"] for r in marks.collect()}
-    assert sum(keep.values()) == 6  # 3 clone-pair keepers + 3 distinct frames
-
-    # incremental: probe video 2+3's frames against video 1's store
-    f1 = mm.frame_sample(media.filter("doc_id = 1"), n_frames=3, frame_len=576)
-    f23 = mm.frame_sample(media.filter("doc_id != 1"), n_frames=3, frame_len=576)
-    store = mm.frame_signatures(f1, grid=grid)
-    ipairs, new_sigs = mm.incremental_frame_pairs(f23, store, max_hamming=6, grid=grid)
-    got = {
-        ((r["doc_a"], r["frame_a"]), (r["doc_b"], r["frame_b"]))
-        for r in ipairs.collect()
-    }
-    want = {p for p in pairs if 2 in (p[0][0], p[1][0]) or 3 in (p[0][0], p[1][0])}
-    assert got == want
-    assert new_sigs.count() == 6

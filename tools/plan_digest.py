@@ -266,15 +266,6 @@ def main() -> None:
     llm_serving["span_scrub_corpus (serve)"] = _dd.span_decon_scrub(
         docs, _span_bench
     )
-    from pulsar_replay_spark.operators import multimodal
-
-    media = multimodal.as_media(docs).filter(F.col("media_type") == "video/mp4")
-    frames = multimodal.frame_sample(media, n_frames=2, frame_len=64).localCheckpoint(
-        eager=True
-    )
-    llm_serving["frame_dedup_perceptual (serve)"] = multimodal.frame_dedup_perceptual(
-        frames
-    )
     for name, df in {**serving, **llm_serving}.items():
         lines.append(row(name, executed_plan(df)))
     import shutil as _sh
