@@ -38,7 +38,6 @@ def as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-
 FRAME_SCHEMA = "doc_id long, frame_idx int, offset_ms long, frame_bytes binary"
 
 
@@ -204,8 +203,8 @@ def image_near_dup_pairs(
     block key carries 11 bits — per-block bucket population ~N/2048. That
     is fine through hundreds of millions of images; at billions, run the
     EXACT sha256 dedup first, lower the radius (k=3 gives 14-bit blocks,
-    8× finer buckets), or raise ``grid``
-    — grids wider than 8 route automatically to the multi-word signature
+    8× finer buckets), or raise ``grid`` — grids wider than 8 route
+    automatically to the multi-word signature
     path (``dedup.banded_hamming_pairs_multi``: array<long> signatures,
     same pigeonhole join; grid=12 → 132 bits → 26-bit block keys at k=4,
     ~32,000× finer buckets than the 8-grid)."""
