@@ -204,9 +204,9 @@ def image_near_dup_pairs(
     is fine through hundreds of millions of images; at billions, run the
     EXACT sha256 dedup first, lower the radius (k=3 gives 14-bit blocks,
     8× finer buckets), or raise ``grid`` — grids wider than 8 route
-    automatically to the multi-word signature
-    path (``dedup.banded_hamming_pairs_multi``: array<long> signatures,
-    same pigeonhole join; grid=12 → 132 bits → 26-bit block keys at k=4,
+    automatically to the multi-word signature path
+    (``dedup.banded_hamming_pairs_multi``: array<long> signatures, same
+    pigeonhole join; grid=12 → 132 bits → 26-bit block keys at k=4,
     ~32,000× finer buckets than the 8-grid)."""
     from pulsar_replay_spark.operators.dedup import (
         banded_hamming_pairs,
