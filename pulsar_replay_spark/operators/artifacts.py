@@ -1,7 +1,6 @@
 """Model-artifact persistence: every build-once index/model in the engine
-(IVF coarse quantizer, PQ index, DSIR ratio table, PCA model, linear
-classifier, Bloom filter) saved to and loaded from a plain parquet
-directory layout.
+(IVF coarse quantizer, PQ index, DSIR ratio table, PCA model, Bloom
+filter) saved to and loaded from a plain parquet directory layout.
 
 This is the production seam the serving operators document ("at 100 TB the
 index lives as a parquet artifact; the localCheckpoint is the in-session
@@ -118,24 +117,6 @@ def load_pca_model(spark: SparkSession, path: str) -> dict:
         "explained_var_ratio": np.asarray(r.evr),
         "whiten": r.whiten,
     }
-
-
-# --- Linear quality classifier (weights + bias) ----------------------------
-
-
-def save_lr_model(weights: DataFrame, bias: float, path: str) -> None:
-    _write(weights, f"{path}/weights")
-    spark = weights.sparkSession
-    _write(
-        spark.createDataFrame([(float(bias),)], "bias double"), f"{path}/_meta"
-    )
-
-
-def load_lr_model(spark: SparkSession, path: str) -> tuple[DataFrame, float]:
-    """(weights, bias) — feed straight into ``classifier.lr_score``."""
-    weights = _read(spark, f"{path}/weights")
-    bias = spark.read.parquet(f"{path}/_meta").first()["bias"]
-    return weights, bias
 
 
 # --- Bloom filter (history-membership state) -------------------------------

@@ -272,7 +272,7 @@ def dsir_bucket_log_ratio(
     unseen in BOTH corpora — the constant an unseen bucket's smoothed
     probabilities reduce to, used when scoring future/held-out docs against
     a prebuilt ratio table). The two corpus totals are build-time scalars
-    (same posture as ``quality.lm_counts``' vocab size); the ratio frame is
+    (one action over the pinned bucket counts); the ratio frame is
     ≤ 16^hex_chars rows — an always-broadcastable model artifact."""
     import math
 
@@ -546,34 +546,6 @@ def merge_upsert(
     return survivors.unionByName(upserts)
 
 
-def split_leakage_report(docs: DataFrame, split: DataFrame) -> DataFrame:
-    """Eval-hygiene check: near-duplicate pairs that CROSS split boundaries
-    (a train doc near-identical to a val/test doc leaks the eval). Returns
-    (doc_a, split_a, doc_b, split_b) for every crossing MinHash candidate
-    pair — run after ``hash_split`` before any eval number is trusted.
-
-    Pure composition: the persisted band-bucket self-join from the dedup
-    tier (shuffles the compact bucket relation, never text) + two
-    broadcast-able split joins + one inequality filter.
-    """
-    from pulsar_replay_spark.operators.dedup import minhash_candidate_pairs
-
-    pairs = minhash_candidate_pairs(docs)
-    s = split.select("doc_id", "split")
-    return (
-        pairs.join(
-            s.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")),
-            "doc_a",
-        )
-        .join(
-            s.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b")),
-            "doc_b",
-        )
-        .filter(F.col("split_a") != F.col("split_b"))
-        .select("doc_a", "split_a", "doc_b", "split_b")
-    )
-
-
 def leakage_free_split(
     docs: DataFrame,
     weights: dict[str, float] | None = None,
@@ -581,8 +553,8 @@ def leakage_free_split(
     clusters: DataFrame | None = None,
 ) -> DataFrame:
     """Cluster-atomic train/val/test split: every near-duplicate cluster is
-    assigned to ONE split, so ``split_leakage_report`` on the result is empty
-    by construction (the report is the audit; this is the fix).
+    assigned to ONE split, so no near-duplicate candidate pair crosses a
+    split boundary on the result, by construction.
 
     ``hash_split`` alone is re-ingest-stable but blind to near-duplicates —
     two 99%-similar crawls of the same page can land in train and test and

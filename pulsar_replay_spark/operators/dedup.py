@@ -1700,11 +1700,9 @@ def dup_span_scrub(
     round-trip); a fully-duplicated doc keeps an empty cleaned_text (the
     corpus writer drops it — the established scrub contract).
 
-    Composes with the curation funnel via
-    ``pipeline.curate_corpus(dup_span_tokens=...)``. Reconstruction is the
-    ``span_decon_scrub`` higher-order filter against the MERGED maximal
-    intervals: O(tokens · spans) per row in whole-stage codegen, no token
-    explode, no per-token shuffle."""
+    Reconstruction is the ``span_decon_scrub`` higher-order filter
+    against the MERGED maximal intervals: O(tokens · spans) per row in
+    whole-stage codegen, no token explode, no per-token shuffle."""
     return _scrub_against_spans(
         docs, dup_span_marks(docs, min_tokens, keep, casefold)
     )

@@ -382,24 +382,6 @@ def host_expr(url) -> "F.Column":
     return F.when(h != "", h).otherwise(F.lit(None).cast("string"))
 
 
-def with_domain_prior(docs: DataFrame, domain_ranks: DataFrame) -> DataFrame:
-    """docs + (host, domain_rank_fp): join each document's source-URL host
-    against a ``domain_rank`` table. LEFT join — documents from hosts the
-    link graph never saw carry NULL, and the drop policy belongs to the
-    caller (a missing prior is absence of evidence, not low quality).
-
-    Scale shape: the rank table is host-scale (corpus/10³–10⁴); the join
-    key is a short string and Spark's AQE will broadcast it when it fits —
-    no hint needed, no Python kernel anywhere (``host_expr`` is pure
-    Catalyst)."""
-    ranks = domain_ranks.select(
-        F.col("host"), F.col("rank_fp").alias("domain_rank_fp")
-    )
-    return docs.withColumn("host", host_expr(F.col("source"))).join(
-        ranks, "host", "left"
-    )
-
-
 def hits(
     edges: DataFrame,
     n_iter: int = 10,

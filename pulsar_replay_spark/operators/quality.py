@@ -82,103 +82,6 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus-trained bigram language-model scoring (perplexity-style quality
-# filtering — the CCNet/RefinedWeb pipeline step): train token/bigram counts
-# on the corpus itself, score each document by mean negative log-probability
-# of its bigrams under add-k smoothing. Low-score docs read like the corpus;
-# high-score docs are noise/outliers — the standard LM-filter signal without
-# an external model artifact.
-# ---------------------------------------------------------------------------
-
-LM_K = 0.5  # add-k smoothing
-
-
-def lm_counts(docs: DataFrame) -> tuple[DataFrame, DataFrame, int]:
-    """(unigram counts, bigram counts, vocab size) trained on the corpus.
-
-    Scale shape: both count tables reduce to the VOCABULARY keyspace
-    (map-side combined), not the corpus — at 100 TB the token explode is the
-    map work and the shuffled relation is |vocab| / |distinct bigrams| rows.
-    vocab_size is one scalar action on the already-aggregated unigram frame.
-    """
-    from pulsar_replay_spark.functions.text import bigrams, tokens
-
-    # Count-table keys are fixed 16-byte md5 slices of the token/bigram, not
-    # the strings themselves — the same bounded-shuffle-key trick as the
-    # n-gram dedup index (the corpus-wide explode is the biggest shuffle in
-    # this operator, and raw bigram strings are unbounded). The DuckDB twin
-    # mirrors the identical slice, so the gate stays exact.
-    uni = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("w"))
-        .select(F.substring(F.md5("w"), 1, 16).alias("wh"))
-        .groupBy("wh")
-        .agg(F.count("*").alias("c1"))
-        .localCheckpoint(eager=True)  # feeds the score join AND vocab count
-    )
-    bi = (
-        docs.select(F.explode(bigrams(F.col("text"))).alias("bg"))
-        .select(F.substring(F.md5("bg"), 1, 16).alias("bgh"))
-        .groupBy("bgh")
-        .agg(F.count("*").alias("c2"))
-    )
-    return uni, bi, uni.count()
-
-
-def lm_doc_scores(
-    docs: DataFrame,
-    uni: DataFrame | None = None,
-    bi: DataFrame | None = None,
-    vocab: int | None = None,
-    k: float = LM_K,
-) -> DataFrame:
-    """(doc_id, n_bigrams, nll): mean −ln P(w2|w1) per document under the
-    corpus bigram LM with add-k smoothing:
-
-        P(w2|w1) = (c(w1 w2) + k) / (c(w1) + k·V)
-
-    Join shape: the doc's exploded bigrams equi-join the bigram count table
-    on the bigram string and the unigram table on the first token — both
-    shuffles are on vocabulary-sized keys (hot stop-words combine map-side
-    on the count side; the per-doc mean shuffles doc_id only). Docs with <2
-    tokens score NULL (no bigrams), surfaced not dropped.
-    """
-    from pulsar_replay_spark.functions.text import bigrams
-
-    if uni is None or bi is None or vocab is None:
-        uni, bi, vocab = lm_counts(docs)
-    doc_bg = (
-        docs.select("doc_id", F.explode(bigrams(F.col("text"))).alias("bg"))
-        .withColumn("bgh", F.substring(F.md5("bg"), 1, 16))
-        .withColumn("wh", F.substring(F.md5(F.split(F.col("bg"), " ")[0]), 1, 16))
-        .drop("bg")
-    )
-    scored = (
-        doc_bg.join(bi, "bgh", "left")
-        .join(uni, "wh", "left")
-        .withColumn(
-            "nll_term",
-            -F.log(
-                (F.coalesce(F.col("c2"), F.lit(0)) + F.lit(k))
-                / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(k * vocab))
-            ),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_bigrams"),
-        F.round(F.avg("nll_term"), 6).alias("nll"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-            F.col("nll"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # Per-group adaptive quantile thresholds — "drop each source's bottom q
 # fraction by score" (the CCNet head/middle/tail split generalized): the
 # cutoff adapts to every source's own score distribution instead of one
@@ -246,97 +149,6 @@ def vocab_stats(docs: DataFrame, top_k: int = 100) -> DataFrame:
         "word",
         "cnt",
         F.round(F.sum("cnt").over(w) / F.lit(float(total)), 6).alias("cum_share"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# CCNet-style perplexity bucketing (Wenzek et al., arXiv:1911.00359): score
-# every document under the corpus bigram LM, then label each one head /
-# middle / tail by its position in its LANGUAGE's own score distribution --
-# the published recipe assigns web documents to quality tiers per language
-# before sampling, rather than dropping outright. Buckets come from the same
-# approx_percentile sketch as drop_bottom_quantile (|langs|-key agg,
-# broadcast join-back): no per-language sort of the corpus, any group size.
-# ---------------------------------------------------------------------------
-
-
-def ccnet_buckets(
-    docs: DataFrame,
-    scores: DataFrame | None = None,
-    by: str = "lang",
-) -> DataFrame:
-    """(doc_id, lang, nll, bucket): bucket is 'head' (nll <= group 1/3
-    quantile -- most fluent under the LM), 'middle', 'tail', or 'short' for
-    docs too short to score (nll NULL, surfaced not dropped). Pass a
-    prebuilt ``scores`` frame (lm_doc_scores output) to reuse a trained LM
-    across calls -- the build-once/serve-forever split every other model
-    artifact here follows."""
-    if scores is None:
-        scores = lm_doc_scores(docs)
-    scored = docs.select("doc_id", by).join(scores.select("doc_id", "nll"), "doc_id")
-    th = scored.filter(F.col("nll").isNotNull()).groupBy(by).agg(
-        F.expr("approx_percentile(nll, array(0.3333333, 0.6666667), 10000)").alias("th")
-    )
-    return scored.join(F.broadcast(th), by, "left").select(
-        "doc_id",
-        by,
-        "nll",
-        F.when(F.col("nll").isNull(), F.lit("short"))
-        .when(F.col("nll") <= F.col("th")[0], F.lit("head"))
-        .when(F.col("nll") <= F.col("th")[1], F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Feature-hashed document vectors (the "hashing trick", Weinberger et al.
-# 2009): model-free dense doc embeddings from token hashes — signed counts
-# over md5 buckets. The bridge from the text tier to the vector tier: every
-# embedding operator (brute force / IVF / SemDeDup / MMR / near-dup) runs
-# unchanged over these vectors when no learned encoder exists, which is
-# exactly the bootstrap situation of a fresh 100 TB corpus.
-# ---------------------------------------------------------------------------
-
-
-def hashed_doc_vectors(docs: DataFrame, dim: int = 64) -> DataFrame:
-    """(vec_id = doc_id, embedding: array<float>): component b sums a ±1
-    sign over every token hashing to bucket b (bucket = first 4 md5 hex
-    chars mod dim; sign = 5th hex char < '8'). Pure md5 expressions — the
-    DuckDB twin reproduces every component exactly; no Python, no model.
-
-    Scale shape: token explode → (doc_id, bucket) partial-summed shuffle
-    (map-side combined, fan-in dim per doc), then one doc_id-keyed map
-    assembly. Dense output is dim floats/doc regardless of doc length."""
-    from pulsar_replay_spark.functions.text import tokens
-
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("w")
-    ).filter(F.col("w") != "")
-    hashed = tok.select(
-        "doc_id",
-        (F.conv(F.substring(F.md5("w"), 1, 4), 16, 10).cast("int") % dim).alias("b"),
-        F.when(
-            F.conv(F.substring(F.md5("w"), 5, 1), 16, 10).cast("int") < 8, F.lit(1)
-        ).otherwise(F.lit(-1)).alias("s"),
-    )
-    per_bucket = hashed.groupBy("doc_id", "b").agg(F.sum("s").alias("v"))
-    maps = per_bucket.groupBy("doc_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("b", "v"))).alias("m")
-    )
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.coalesce(F.element_at(F.col("m"), i), F.lit(0)).cast("float"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(maps, "doc_id", "left")
-        .select(
-            F.col("doc_id").alias("vec_id"),
-            F.coalesce(
-                dense, F.array_repeat(F.lit(0.0).cast("float"), dim)
-            ).alias("embedding"),
-        )
     )
 
 
@@ -555,78 +367,3 @@ def psi_from_window_hist(
         )
         .orderBy("window_start")
     )
-
-
-# ---------------------------------------------------------------------------
-# Compression-ratio quality signal (r8): deflate ratio per document — the
-# classic cheap detector the repetition signals can't replace: templated/
-# boilerplate text (machine-generated spam, scraped nav chrome, keyword
-# stuffing) compresses FAR below natural prose, while encoding junk (base64
-# blobs, minified bundles, binary-in-text) barely compresses at all. Used as
-# a two-sided gate (too compressible OR too incompressible = suspect) in
-# C4-descendant pipelines. zlib has no Catalyst expression, so this is an
-# Arrow-batched kernel — the sanctioned Python seam (one batch per call,
-# fixed narrow output, text never shuffles: the signal rides the scan).
-# ---------------------------------------------------------------------------
-
-
-def compression_signals(docs: DataFrame, level: int = 6) -> DataFrame:
-    """(doc_id, n_bytes, n_compressed, compression_ratio): per-doc deflate
-    ratio (compressed/raw UTF-8 bytes, round 4; empty docs ratio NULL).
-    Natural prose lands ~0.3–0.6; heavily templated text < ~0.2; base64/
-    minified junk > ~0.9. zlib's fixed header/dictionary overhead dominates
-    SHORT documents (a 100-byte prose doc reads ~0.8), so apply the
-    two-sided gate only above a length floor — pair with the Gopher length
-    check, don't replace it. ``level`` is zlib's (6 = the default
-    trade-off; the RATIO is what matters, so don't chase 9). Deterministic:
-    zlib output for one (input, level) is stable across CPython builds."""
-    import pandas as pd
-
-    def run(batches):
-        import zlib
-
-        for pdf in batches:
-            raw = [t.encode("utf-8") if t is not None else b"" for t in pdf["text"]]
-            n = [len(b) for b in raw]
-            c = [len(zlib.compress(b, level)) if b else None for b in raw]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pd.Series(n, dtype="int64"),
-                    "n_compressed": pd.Series(c, dtype="Int64"),
-                    "compression_ratio": [
-                        round(ci / ni, 4) if ci is not None else None
-                        for ci, ni in zip(c, n)
-                    ],
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        run,
-        schema="doc_id long, n_bytes long, n_compressed long, "
-        "compression_ratio double",
-    )
-
-
-def compression_gate(
-    docs: DataFrame,
-    min_ratio: float = 0.15,
-    max_ratio: float = 0.95,
-    level: int = 6,
-) -> tuple[DataFrame, DataFrame]:
-    """(kept, rejected): the two-sided compression filter — rejected rows
-    carry (doc_id, compression_ratio, reason ∈ {'too_compressible',
-    'too_incompressible'}); empty docs pass (nothing to judge — the length
-    floor is a different check). Composes like ``quarantine``: ids only,
-    text never shuffles."""
-    sig = compression_signals(docs, level)
-    reason = (
-        F.when(F.col("compression_ratio") < min_ratio, F.lit("too_compressible"))
-        .when(F.col("compression_ratio") > max_ratio, F.lit("too_incompressible"))
-    )
-    marked = sig.withColumn("reason", reason)
-    rejected = marked.filter(F.col("reason").isNotNull()).select(
-        "doc_id", "compression_ratio", "reason"
-    )
-    kept = docs.join(rejected.select("doc_id"), "doc_id", "left_anti")
-    return kept, rejected

@@ -98,10 +98,11 @@ def query_postings(
     keys costs nothing and saves a corpus-sized re-join.
 
     ``broadcast_queries=False`` is the escape hatch for query sets whose
-    DISTINCT vocabulary is itself corpus-scale (``lexical_decontaminate``
-    with a huge eval suite): every query-side join downgrades to a shuffle
-    equi-join — the token explode then shuffles on term, so prefer the
-    broadcast path whenever the vocabulary fits an executor."""
+    DISTINCT vocabulary is itself corpus-scale
+    (``lexical_decontaminate_from_index`` with a huge eval suite): every
+    query-side join downgrades to a shuffle equi-join — the token explode
+    then shuffles on term, so prefer the broadcast path whenever the
+    vocabulary fits an executor."""
     vocab = query_terms(queries).select("term").distinct()
     toks = F.filter(tokens(F.col("text")), lambda t: t != "")
     return (
@@ -246,38 +247,6 @@ def bm25_topk(
     the exact integer). Deterministic total order: (score_u DESC, doc_id)."""
     return _topk_of_scores(
         bm25_scores(docs, queries, k1, b, max_df_ratio, broadcast_queries), k
-    )
-
-
-def lexical_decontaminate(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    k: int = 5,
-    min_score: float = 0.0,
-    k1: float = K1,
-    b: float = B,
-    max_df_ratio: float | None = None,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """Lexical decontamination: every eval document becomes a BM25 query
-    against the training corpus; training docs ranking in any eval doc's
-    top-k above ``min_score`` are flagged. Complements the shingle/MinHash
-    decontamination tier — BM25 catches the paraphrase that shares its rare
-    vocabulary but no exact 5-gram. Returns (doc_id, eval_id, score) — one
-    row per flagged training doc with its STRONGEST accusing eval doc
-    (min eval_id on score ties, total order). Anti-join the result's doc_id
-    against the corpus to scrub."""
-    queries = eval_docs.select(
-        F.col("doc_id").alias("query_id"), F.col("text").alias("query")
-    )
-    hits = bm25_topk(docs, queries, k, k1, b, max_df_ratio, broadcast_queries).filter(
-        F.col("score") >= F.lit(min_score)
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), "query_id")
-    return (
-        hits.withColumn("pick", F.row_number().over(w))
-        .filter(F.col("pick") == 1)
-        .select("doc_id", F.col("query_id").alias("eval_id"), "score")
     )
 
 
@@ -786,11 +755,15 @@ def lexical_decontaminate_from_index(
     max_df_ratio: float | None = None,
     broadcast_queries: bool = True,
 ) -> DataFrame:
-    """``lexical_decontaminate`` against the maintained store — the
-    continuous-decontamination serve path: a FIXED eval suite probed after
-    every ingest touches only its own buckets instead of rescanning the
-    grown corpus. Same output contract: (doc_id, eval_id, score), one row
-    per flagged indexed doc with its strongest accusing eval doc."""
+    """Lexical decontamination against the maintained store: every eval
+    document becomes a BM25 query, and indexed docs ranking in any eval
+    doc's top-k at or above ``min_score`` are flagged. BM25 catches the
+    paraphrase that shares an eval doc's rare vocabulary but no exact
+    shingle run. This is the continuous-decontamination serve path: a
+    FIXED eval suite probed after every ingest touches only its own
+    buckets instead of rescanning the grown corpus. Returns (doc_id,
+    eval_id, score), one row per flagged indexed doc with its strongest
+    accusing eval doc (min eval_id on score ties)."""
     queries = eval_docs.select(
         F.col("doc_id").alias("query_id"), F.col("text").alias("query")
     )

@@ -1,43 +1,20 @@
-"""Unicode repair for crawled text: NFC normalization + mojibake fixing.
+"""Mojibake detection for crawled text.
 
 Web crawls are full of text that was decoded with the wrong charset
 somewhere upstream — UTF-8 bytes read as cp1252/latin-1 ("Ã©" where "é"
-belongs, "â€™" where "'" belongs), sometimes twice. Every serious corpus
-pipeline runs an ftfy-style repair pass before tokenization: mojibake
-splits tokens, poisons dedup hashes (the clean and mangled copies of one
-page stop colliding), and skews language ID. This module is that pass,
-library-free and exactly testable:
+belongs, "â€™" where "'" belongs), sometimes twice. Mojibake splits
+tokens, poisons dedup hashes (the clean and mangled copies of one page stop
+colliding), and skews language ID. This module measures it:
 
-- ``fix_mojibake_text`` (pure python, the kernel AND the test oracle's
-  subject): re-encode the text as cp1252 (latin-1 for the 0x80–0x9F gap
-  cp1252 doesn't map), decode as UTF-8, and ACCEPT the round-trip only if
-  it strictly succeeds and strictly reduces the mojibake-marker count —
-  a conservative fixed point (≤2 rounds, double-encoded text is real) that
-  never touches clean text: if the text doesn't look mangled, or the
-  repair doesn't make it look less mangled, the original comes back.
-- ``nfc_text``: canonical composition (NFC) via stdlib unicodedata — the
-  normalization every tokenizer assumes; decomposed "e"+COMBINING ACUTE
-  and composed "é" hash identically after it.
-- ``repair_corpus``: the DataFrame op — one Arrow-batched pandas_udf over
-  the text column (text-local, zero shuffles, the cheapest possible scale
-  shape), recomputing n_chars. Optional ``curate_corpus(fix_text=True)``
-  stage runs it FIRST: repaired text is what dedup/quality/lang stages
-  should see.
+- ``mojibake_marker_count``: a pure-Catalyst count (``regexp_count``) of
+  the classic wrong-charset fingerprints in a text column;
+- ``mojibake_report``: the per-source mojibake rate the data card reports.
 
-Correctness gates are python-twin + property based (pytest), not a DuckDB
-oracle: SQL has no cp1252 transcode or NFC — the same named-reason tier as
-the streaming ops.
-
-Scale note: the marker scan (``mojibake_marker_count``) is pure Catalyst
-(``regexp_count``), so the data card can report corpus mojibake rates
-without a Python kernel; only the REPAIR itself needs the UDF.
+The marker scan needs no Python kernel, so the card costs one aggregate.
 """
 
 from __future__ import annotations
 
-import unicodedata
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,12 +23,9 @@ from pyspark.sql import functions as F
 # "\u00c3"/"\u00c2"), "\u00e2\u20ac" (the 0xE2 0x80 prefix of smart
 # quotes/dashes), "\u00c2" + NBSP/space, and the Cyrillic/Greek lead bytes
 # ("\u00d0\u00d1\u00ce\u00cf") followed by a Latin-1-supplement char.
-# False positives (all-caps Portuguese "S\u00c3O", Spanish "A\u00d1OS")
-# are harmless: the repair only applies when a STRICT re-encode ->
-# UTF-8-decode round-trip succeeds AND reduces the marker count -- those
-# words fail the strict decode and pass through untouched (pinned in
-# tests). Same pattern string for Catalyst regexp_count and the python
-# kernel, so the two counts can never drift.
+# All-caps Portuguese "S\u00c3O" or Spanish "A\u00d1OS" count too: a
+# marker is evidence of mojibake, not proof. The tests hold a Python count
+# over the same pattern string as the Catalyst count's reference.
 _MARKER_RE = (
     "\u00c3.|\u00e2\u20ac|\u00c2[\u00a0 ]"
     "|[\u00d0\u00d1\u00ce\u00cf][\u0080-\u00ff]"
@@ -61,74 +35,6 @@ _MARKER_RE = (
 def mojibake_marker_count(text) -> "F.Column":
     """Pure-Catalyst count of mojibake fingerprints in a text column."""
     return F.regexp_count(text, F.lit(_MARKER_RE))
-
-
-def _marker_count_py(s: str) -> int:
-    import re
-
-    return len(re.findall(_MARKER_RE, s))
-
-
-def fix_mojibake_text(s: str, max_rounds: int = 2) -> str:
-    """Repair UTF-8-read-as-cp1252 mojibake; returns the input unchanged
-    when no strict, marker-reducing repair exists. Total: never raises."""
-    if not s:
-        return s
-    cur = s
-    for _ in range(max_rounds):
-        n_before = _marker_count_py(cur)
-        if n_before == 0:
-            break
-        try:
-            # cp1252 first (what the bad decoder almost always was); the
-            # five 0x80–0x9F codepoints cp1252 leaves undefined fall back
-            # to latin-1's direct byte mapping
-            raw = cur.encode("cp1252")
-        except UnicodeEncodeError:
-            try:
-                raw = cur.encode("latin-1")
-            except UnicodeEncodeError:
-                break  # genuine non-Latin text that happens to contain Ã
-        try:
-            cand = raw.decode("utf-8")
-        except UnicodeDecodeError:
-            break  # the bytes were never UTF-8 — leave the text alone
-        if _marker_count_py(cand) >= n_before:
-            break  # repair didn't help; don't "fix" clean text
-        cur = cand
-    return cur
-
-
-def nfc_text(s: str, form: str = "NFC") -> str:
-    """Canonical Unicode normalization (stdlib). Total on any str."""
-    return unicodedata.normalize(form, s)
-
-
-def repair_text(s: str, form: str = "NFC", max_rounds: int = 2) -> str:
-    """The full repair: mojibake fix, then normalization — this exact
-    function is both the Spark kernel's per-value body and the object the
-    tests mirror, so the DataFrame op can never drift from the contract."""
-    return nfc_text(fix_mojibake_text(s, max_rounds), form)
-
-
-def repair_corpus(
-    docs: DataFrame, form: str = "NFC", max_rounds: int = 2
-) -> DataFrame:
-    """documents → documents with repaired ``text`` and recomputed
-    ``n_chars``; every other column passes through. One Arrow-batched
-    scalar pandas_udf — text-local, no shuffle, no collect."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def fix(col: pd.Series) -> pd.Series:
-        return col.map(
-            lambda s: repair_text(s, form, max_rounds) if s is not None else None
-        )
-
-    fixed = docs.withColumn("text", fix(F.col("text")))
-    if "n_chars" in docs.columns:
-        fixed = fixed.withColumn("n_chars", F.length("text").cast("long"))
-    return fixed
 
 
 def mojibake_report(docs: DataFrame) -> DataFrame:

@@ -1576,8 +1576,8 @@ def domain_rank_refresh(
     spark: SparkSession, store_dir: str, n_iter: int = 10
 ) -> DataFrame:
     """(host, rank_fp) over everything the link store has accumulated —
-    run at takeout cadence, serve the result as the ``curate_corpus``
-    domain floor (``domain_ranks=``) or any per-host quality join."""
+    run at takeout cadence and serve the result to any per-host quality
+    join."""
     from pulsar_replay_spark.operators.graph import domain_rank
 
     return domain_rank(read_link_store(spark, store_dir), n_iter=n_iter)
@@ -1968,51 +1968,6 @@ def dup_span_store_expire(
         )
     n = spark.read.parquet(out_dir).count()
     _dup_span_store_count_write(spark, out_dir, -1, n)
-
-
-def lang_drift_sink(
-    docs_stream: DataFrame,
-    model: dict,
-    monitor_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    ts_col: str = "ts",
-    threshold: "float | None" = None,
-    min_coverage: float = 0.2,
-):
-    """The lang-share twin of ``drift_monitor_sink`` (r10): per micro-batch,
-    classify the batch under a TRAINED lang model
-    (``operators/classifier.py``) and append its per-(event-time window,
-    lang bin) counts as one idempotent batch_id partition — the same store
-    schema the scalar monitor uses, so ``drift_monitor_read`` serves the
-    per-window PSI unchanged against a frozen ``lang_share_counts``
-    reference. Counts are ADDITIVE and classification is row-local, so the
-    accumulated store re-aggregates to exactly the one-shot
-    ``lang_window_counts`` of the same docs (pinned in tests). A crawl
-    frontier drifting into a new region, or an encoder starting to mangle
-    charsets (predictions collapse into the abstain bin), crosses the PSI
-    0.25 rule here before any per-doc quality score moves."""
-    from pulsar_replay_spark.operators.classifier import lang_window_counts
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = lang_window_counts(
-            batch_df, model, window=window, ts_col=ts_col,
-            threshold=threshold, min_coverage=min_coverage,
-        )
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(monitor_dir)
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def embedding_drift_sink(

@@ -75,25 +75,6 @@ def test_pca_model_roundtrip_and_projection(spark, embeddings, tmp_path):
     ) == _rows(pca.pca_project(embeddings, model).select("vec_id", "proj"))
 
 
-def test_lr_model_roundtrip_and_serving(spark, documents, tmp_path):
-    from pulsar_replay_spark.operators import classifier
-
-    pos = documents.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
-    neg = documents.filter(F.col("doc_id") % 2 == 1).select("doc_id", "text")
-    weights, bias = classifier.train_quality_classifier(pos, neg, n_iter=3)
-    artifacts.save_lr_model(weights, bias, str(tmp_path / "lr"))
-    lw, lb = artifacts.load_lr_model(spark, str(tmp_path / "lr"))
-    assert _rows(lw) == _rows(weights)
-    assert lb == bias
-
-    feats = classifier.doc_features(documents.select("doc_id", "text"))
-    built = classifier.lr_score(feats, weights, bias)
-    served = classifier.lr_score(feats, lw, lb)
-    got_b = {r["doc_id"]: round(r["score"], 9) for r in built.collect()}
-    got_s = {r["doc_id"]: round(r["score"], 9) for r in served.collect()}
-    assert got_b == got_s
-
-
 def test_bloom_roundtrip_and_serving(spark, documents, tmp_path):
     from pulsar_replay_spark.operators import bloom
 

@@ -11,7 +11,10 @@ from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators import curation
 from tests.conftest import SF_SMOKE
-from tests.spec_reference import select_within_token_budget_naive
+from tests.spec_reference import (
+    select_within_token_budget_naive,
+    split_leakage_report,
+)
 
 BUDGET = 20_000
 
@@ -311,7 +314,7 @@ def test_temperature_mixture_flattens_proportions(documents):
 
 
 def test_leakage_free_split_is_cluster_atomic(spark, documents):
-    """Near-duplicate clusters move as a unit: the split_leakage_report on a
+    """Near-duplicate clusters move as a unit: the split leakage report on a
     leakage_free_split is empty by construction, every MinHash candidate pair
     shares a split, and docs OUTSIDE any cluster keep exactly their plain
     hash_split assignment (same salt -> same deal for the clean majority)."""
@@ -332,7 +335,7 @@ def test_leakage_free_split_is_cluster_atomic(spark, documents):
     assert set(split_of.values()) <= set(weights)
 
     # no candidate pair crosses a split boundary
-    rep = curation.split_leakage_report(docs, out.select("doc_id", "split"))
+    rep = split_leakage_report(docs, out.select("doc_id", "split"))
     assert rep.count() == 0
     pairs = dedup.minhash_candidate_pairs(docs).collect()
     assert pairs, "fixture must produce candidate pairs"

@@ -1311,74 +1311,3 @@ def test_incremental_dup_span_bloom_casefold_equals_one_shot(spark, gram_key):
             got[r.doc_id] = (r.cleaned_text, r.n_tokens, r.n_kept_tokens)
         idx = idx.unionByName(new_grams).localCheckpoint(eager=True)
     assert got == one_shot
-
-
-def test_curate_corpus_dup_span_policy(spark):
-    """dup_span_tokens composes into the funnel after doc-level dedup: the
-    later copy of a >=k-token repeated passage loses exactly that span,
-    fully-duplicated docs leave the corpus, and the stage is reported."""
-    from pulsar_replay_spark import pipeline
-
-    # two DIFFERENT 12-token passages so no doc pair is a doc-level
-    # near-dup (Jaccard stays under the MinHash bands), while doc 3 is
-    # still built entirely of spans that occur earlier
-    pa = " ".join(f"boilA{i}" for i in range(12))
-    pb = " ".join(f"boilB{i}" for i in range(12))
-    own1 = " ".join(f"one{i}" for i in range(36))
-    own2 = " ".join(f"two{i}" for i in range(36))
-    docs = spark.createDataFrame(
-        [
-            (1, f"{own1} {pa}", "web"),  # first occurrence of A: untouched
-            (2, f"{own2} {pb}", "web"),  # first occurrence of B: untouched
-            (3, f"{pa} {pb}", "web"),  # nothing but later copies: leaves
-        ],
-        "doc_id long, text string, source string",
-    )
-    out = pipeline.curate_corpus(
-        docs, dup_span_tokens=10, budget_tokens=10_000, drop_quantile=0.0
-    )
-    stages = {r.stage: r.n_docs for r in out["report"].collect()}
-    assert stages["deduped"] == 3
-    assert stages["dup_span_scrubbed"] == 2  # doc 3 scrubbed to empty
-    texts = {r.doc_id: r.text for r in out["deduped"].collect()}
-    assert texts[1] == f"{own1} {pa}"
-    assert texts[2] == f"{own2} {pb}"
-    assert 3 not in texts
-
-
-def test_curate_corpus_span_scrub_policy(spark):
-    """decontaminate_policy='scrub' keeps the quoting page (minus the
-    quote) where the drop policy would discard it entirely."""
-    from pulsar_replay_spark import pipeline
-
-    filler = " ".join(f"filler{i}" for i in range(30))
-    quote = "the capital of france is paris since the middle ages period"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{filler} {quote}", "web"),
-            (2, "a clean unrelated document about sailing boats at sea", "web"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    bench = spark.createDataFrame([(900, quote)], "doc_id long, text string")
-
-    dropped = pipeline.curate_corpus(
-        docs, benchmark=bench, budget_tokens=1_000, min_overlap=8
-    )
-    drop_stages = {r.stage: r.n_docs for r in dropped["report"].collect()}
-    assert drop_stages["decontaminated"] == 1  # doc 1 discarded wholesale
-
-    scrubbed = pipeline.curate_corpus(
-        docs,
-        benchmark=bench,
-        budget_tokens=1_000,
-        min_overlap=8,
-        decontaminate_policy="scrub",
-    )
-    stages = {r.stage: r.n_docs for r in scrubbed["report"].collect()}
-    assert stages["decontaminated"] == 2  # doc 1 kept, quote removed
-    texts = {
-        r.doc_id: r.text for r in scrubbed["decontaminated"].collect()
-    }
-    assert texts[1] == filler
-    assert "paris" not in texts[1]

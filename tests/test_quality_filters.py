@@ -78,100 +78,6 @@ def test_benchmark_overlap_broadcasts_bench_side(spark, documents):
     assert "CartesianProduct" not in plan
 
 
-def test_lm_doc_scores_match_duckdb_twin(spark, documents):
-    """Bigram-LM perplexity scoring must match an independent DuckDB
-    formulation exactly (round 6) — counts, smoothing, and the null story
-    for <2-token docs."""
-    import duckdb
-
-    from pulsar_replay_spark.operators.quality import LM_K, lm_doc_scores
-
-    got = {
-        r.doc_id: (r.n_bigrams, r.nll)
-        for r in lm_doc_scores(documents).collect()
-    }
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    sql = f"""
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-uni AS (SELECT substr(md5(w), 1, 16) AS wh, COUNT(*) AS c1
-        FROM (SELECT UNNEST(toks) AS w FROM t) GROUP BY 1),
-v AS (SELECT COUNT(*) AS vocab FROM uni),
-bg AS (
-  SELECT doc_id, UNNEST(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS bg
-  FROM t WHERE len(toks) >= 2
-),
-bic AS (SELECT substr(md5(bg), 1, 16) AS bgh, COUNT(*) AS c2 FROM bg GROUP BY 1),
-scored AS (
-  SELECT bg.doc_id,
-         -ln((bic.c2 + {LM_K}) / (uni.c1 + {LM_K} * v.vocab)) AS nll_term
-  FROM bg
-  JOIN bic ON bic.bgh = substr(md5(bg.bg), 1, 16)
-  JOIN uni ON uni.wh = substr(md5(string_split(bg.bg, ' ')[1]), 1, 16)
-  CROSS JOIN v
-)
-SELECT d.doc_id,
-       COALESCE(s.n_bigrams, 0) AS n_bigrams,
-       s.nll
-FROM (SELECT doc_id FROM documents) d
-LEFT JOIN (
-  SELECT doc_id, COUNT(*) AS n_bigrams, ROUND(AVG(nll_term), 6) AS nll
-  FROM scored GROUP BY doc_id
-) s USING (doc_id)
-"""
-    expect = {int(r[0]): (int(r[1]), r[2]) for r in con.execute(sql).fetchall()}
-    assert set(got) == set(expect)
-    for d in got:
-        assert got[d][0] == expect[d][0], (d, got[d], expect[d])
-        a, b = got[d][1], expect[d][1]
-        assert (a is None) == (b is None), (d, a, b)
-        if a is not None:
-            assert abs(a - b) < 1e-9, (d, a, b)
-
-
-def test_lm_scores_rank_noise_above_corpus_text(spark, documents):
-    """Held-out scoring: an exact corpus document must score lower (more
-    in-distribution) than out-of-vocabulary noise, which under add-k lands
-    at exactly ln(V) per bigram (P = k/(k*V) = 1/V) — both the ordering and
-    that closed form are asserted."""
-    import math
-
-    from pulsar_replay_spark.operators.quality import lm_counts, lm_doc_scores
-
-    uni, bi, vocab = lm_counts(documents)
-    from pyspark.sql import functions as F
-
-    # the corpus's most over-represented bigram is the strongest
-    # in-distribution signal this (near-uniform synthetic) corpus carries
-    # (recomputed from raw text: the count tables carry hashed keys only)
-    from pulsar_replay_spark.functions.text import bigrams as bigrams_expr
-
-    top_bg = (
-        documents.select(F.explode(bigrams_expr(F.col("text"))).alias("bg"))
-        .groupBy("bg")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.desc("c"), "bg")
-        .first()
-        .bg
-    )
-    probe = documents.sparkSession.createDataFrame(
-        [
-            (900001, top_bg, "en", "probe", len(top_bg)),
-            (900002, "zxqv wkjh qpzm vvtt nnrr ggha", "xx", "probe", 29),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    scores = {
-        r.doc_id: r.nll
-        for r in lm_doc_scores(probe, uni=uni, bi=bi, vocab=vocab).collect()
-    }
-    assert scores[900002] > scores[900001]
-    assert abs(scores[900002] - round(math.log(vocab), 6)) < 1e-6
-
-
 # --- per-source adaptive quantile thresholds -------------------------------
 
 Q = 0.25
@@ -450,46 +356,3 @@ def test_embedding_drift_vector_twin_of_psi(spark):
     assert contrib[2]["n_ref"] == 0 and contrib[2]["n_cur"] == 20
     assert abs(contrib[1]["psi_term"]) < 1e-9  # the stable cell contributes ~0
     assert contrib[0]["psi_term"] > 0 and contrib[2]["psi_term"] > 0
-
-
-def test_compression_signals_match_python_zlib_and_gate(spark):
-    """Compression ratio: exact equality vs direct python zlib on every row;
-    the two-sided gate drops the templated doc (too compressible) and the
-    base64-ish blob (too incompressible) while natural prose passes; empty
-    text rides through with a NULL ratio."""
-    import zlib
-
-    from pulsar_replay_spark.operators import quality
-
-    rows = [
-        # long enough that zlib's fixed overhead doesn't dominate: natural
-        # prose lands mid-range (measured 0.63 here)
-        (1, "the committee reviewed the proposal and requested two revisions "
-            "before the next quarterly meeting in september and the finance "
-            "team prepared an independent analysis of vendor costs while "
-            "legal examined the licensing implications for each deployment "
-            "region separately"),
-        (2, "buy now " * 200),                       # templated spam (0.018)
-        (3, "QmFzZTY0IGp1bmsgaXMgaW5jb21wcmVzc2libGUgbm9uc2Vuc2U4f9a0Zz"
-            "Kq7Lw2Xp1Rt5Vu3Yw6Ee8Ii0Oo2Aa4Ss6Dd8Ff0Gg2Hh4Jj6Kk8Ll0Mm2"),
-        (4, ""),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = {r.doc_id: r for r in quality.compression_signals(docs).collect()}
-    for doc_id, text in rows:
-        b = text.encode("utf-8")
-        assert sig[doc_id].n_bytes == len(b)
-        if b:
-            want = len(zlib.compress(b, 6))
-            assert sig[doc_id].n_compressed == want
-            assert sig[doc_id].compression_ratio == round(want / len(b), 4)
-        else:
-            assert sig[doc_id].n_compressed is None
-            assert sig[doc_id].compression_ratio is None
-    assert sig[2].compression_ratio < 0.15 < sig[1].compression_ratio < 0.95
-    assert sig[3].compression_ratio > 0.95
-
-    kept, rejected = quality.compression_gate(docs)
-    assert {r.doc_id for r in kept.collect()} == {1, 4}
-    reasons = {r.doc_id: r.reason for r in rejected.collect()}
-    assert reasons == {2: "too_compressible", 3: "too_incompressible"}

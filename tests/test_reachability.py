@@ -20,6 +20,12 @@ caller outside ``tests/``.
 The allowlist can only shrink: an entry that a root now reaches, or that
 no longer exists, fails the gate too. Delete the entry with the code, or
 once a root reaches it.
+
+A second pass checks parameters: every defaulted parameter of a reached
+public function is set at some call site of that name, in a root or a
+reached engine body, by keyword or by position (a ``*args``/``**kwargs``
+call sets them all), or is named in ``PARAM_ALLOWLIST``. That list can
+only shrink in the same way.
 """
 
 from __future__ import annotations
@@ -51,10 +57,6 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
         # pending deletion (ROADMAP item 5): UDF plug-in stubs
         "quality_score_udf", "topic_parts_udtf", "ws_token_count_udf",
     ),
-    "functions.urls": (
-        # pending deletion (ROADMAP item 5): python twin of canonical_url
-        "canonical_url_py",
-    ),
     "functions.vectors": (
         # IVF/BM25 stores: vector kernels
         "cosine",
@@ -63,9 +65,8 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
         # IVF store and curation (DSIR) artifacts
         "load_dsir_model", "load_ivf_index", "load_pq_index",
         "save_dsir_model", "save_ivf_index", "save_pq_index",
-        # pending deletion (ROADMAP item 5): PCA, classifier, Bloom
-        "load_bloom", "load_lr_model", "load_pca_model", "save_bloom",
-        "save_lr_model", "save_pca_model",
+        # pending deletion (ROADMAP item 5): PCA, Bloom
+        "load_bloom", "load_pca_model", "save_bloom", "save_pca_model",
     ),
     "operators.asof": (
         # pending deletion (ROADMAP item 5)
@@ -85,13 +86,6 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
         # capture/replay/generator
         "observed_capture",
     ),
-    "operators.classifier": (
-        # quality: quality and language classifiers
-        "calibration_report", "doc_features", "lang_classifier_train",
-        "lang_psi_contributions", "lang_share_counts", "lang_window_counts",
-        "load_lang_model", "lr_score", "lr_train", "save_lang_model",
-        "sigmoid", "train_quality_classifier",
-    ),
     "operators.curation": (
         # curation
         "chunk_documents", "corpus_drift", "dataset_diff",
@@ -110,6 +104,9 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
         "simhash_near_pairs_multi",
     ),
     "operators.graph": (
+        # curation: the source-URL host column of data_card and
+        # retrieval.anchor_retrieval_pairs
+        "host_expr",
         # pending deletion (ROADMAP item 5): link graph
         "domain_rank", "personalized_pagerank",
     ),
@@ -246,10 +243,79 @@ ALLOWLIST: dict[str, tuple[str, ...]] = {
         "cdc_apply_sink", "cdc_compact", "cdc_read", "continuous_rollup_sink",
         "domain_rank_refresh", "drift_monitor_read", "drift_monitor_sink",
         "embedding_drift_from_index", "embedding_drift_read",
-        "embedding_drift_sink", "lang_drift_sink", "link_graph_sink",
+        "embedding_drift_sink", "link_graph_sink",
         "read_link_store", "rollup_compact", "rollup_ewma", "rollup_read",
         "rollup_read_coarse", "rollup_topk", "sample_read", "sample_sink",
     ),
+}
+
+
+# Defaulted parameters of reached public functions that no root or reached
+# body sets, by (module, function). They are tuning knobs and test seams
+# that only tests move; each group names the north-star family that keeps
+# them.
+PARAM_ALLOWLIST: dict[tuple[str, str], tuple[str, ...]] = {
+    # capture/replay/generator: catalog listing, capture and broker I/O
+    ("catalog", "top_n_topics"): ("limit", "per_ns", "per_tenant"),
+    ("catalog_ddl", "execute_plan"): ("token",),
+    ("envelope", "with_envelope"): ("raw_col",),
+    ("operators.capture", "bounded_scan"): ("topic_col",),
+    ("operators.capture", "capture_pipeline"): ("max_per_topic",),
+    ("sources.pulsar_connector", "admin_list_namespaces"): ("token",),
+    ("sources.pulsar_connector", "admin_list_tenants"): ("token",),
+    ("sources.pulsar_connector", "admin_list_topics"): ("token",),
+    ("sources.pulsar_connector", "read_topics"): (
+        "starting_offsets", "topics_pattern",
+    ),
+    ("sources.pulsar_connector", "write_replay_paced"): ("partitions",),
+    # capture/replay/generator: the pacing test seams (injected clock)
+    ("sources.pulsar_connector", "paced_publish"): ("clock", "sleep"),
+    ("operators.asof", "asof_join"): ("direction",),
+    # streaming ingest and dedup
+    ("streaming.pipelines", "deduped_stream"): ("watermark",),
+    ("streaming.pipelines", "foreach_batch_idempotent"): (
+        "output_mode", "processing_time",
+    ),
+    # dedup
+    ("functions.text", "shingles"): ("k",),
+    ("operators.dedup", "connected_components"): (
+        "max_iter", "small_graph_edges",
+    ),
+    ("operators.dedup", "dedup_corpus"): ("clusters", "score"),
+    ("operators.dedup", "dup_span_scrub"): ("casefold",),
+    ("operators.dedup", "simhash_expr"): ("salt",),
+    ("operators.multimodal", "frame_sample"): ("frame_len",),
+    ("operators.multimodal", "image_near_dup_pairs"): ("grid",),
+    # quality and curation
+    ("operators.quality", "drop_bottom_quantile"): ("by", "score_col"),
+    ("operators.curation", "dsir_log_weights"): ("alpha", "hex_chars"),
+    ("operators.curation", "hash_split"): ("id_col", "salt", "weights"),
+    # IVF/BM25 stores: BM25 constants, index shapes and probe knobs
+    ("operators.retrieval", "bm25_topk"): (
+        "b", "broadcast_queries", "k1", "max_df_ratio",
+    ),
+    ("operators.retrieval", "bm25_topk_from_index"): (
+        "b", "broadcast_queries", "k1", "max_df_ratio",
+    ),
+    ("operators.retrieval", "postings_index_build"): ("batch_id", "n_buckets"),
+    ("operators.similarity", "bitext_mine"): ("candidates", "mutual"),
+    ("operators.similarity", "ivf_params"): ("target_frac",),
+    ("operators.similarity", "ivf_topk"): (
+        "corpus_cells", "n_cells", "n_probe",
+    ),
+    ("operators.similarity", "lsh_topk"): (
+        "bits_per_table", "multiprobe", "n_shards", "n_tables",
+    ),
+    ("operators.similarity", "semantic_dedup"): (
+        "block_rows", "cells", "centroids", "n_cells",
+    ),
+    ("operators.vecstore", "ivf_index_build"): (
+        "kmeans_iters", "n_cells", "pq", "pq_iters",
+    ),
+    # pending deletion (ROADMAP item 5): link graph
+    ("operators.graph", "hits"): ("checkpoint_interval", "n_iter", "scale"),
+    ("operators.graph", "pagerank"): ("checkpoint_interval",),
+    ("operators.graph", "pagerank_adaptive"): ("checkpoint_interval",),
 }
 
 
@@ -271,11 +337,9 @@ def _is_register(decorator: ast.expr) -> bool:
     return getattr(f, "id", getattr(f, "attr", None)) == "register"
 
 
-def _unreached(
-    engine: Path = ENGINE, root_files: list[Path] = ROOT_FILES, seeds=()
-):
-    """{(module, name)} of the top-level definitions that neither a root
-    nor a name in ``seeds`` reaches."""
+def _reach(engine: Path, root_files: list[Path], seeds=()):
+    """(defs, roots, reached): the top-level definitions by name, the root
+    nodes, and the names that a root or a name in ``seeds`` reaches."""
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     roots: list[ast.AST] = [ast.parse(p.read_text()) for p in root_files]
     registered: set[str] = set()
@@ -308,12 +372,80 @@ def _unreached(
         reached.add(name)
         for _, node in defs.get(name, ()):
             todo.extend(_identifiers([node]))
+    return defs, roots, reached
+
+
+def _unreached(
+    engine: Path = ENGINE, root_files: list[Path] = ROOT_FILES, seeds=()
+):
+    """{(module, name)} of the top-level definitions that neither a root
+    nor a name in ``seeds`` reaches."""
+    defs, _, reached = _reach(engine, root_files, seeds)
     return {
         (module, name)
         for name, found in defs.items()
         for module, _ in found
         if name not in reached
     }
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position or None for keyword-only, name) of each defaulted
+    parameter of ``fn``."""
+    positional = fn.args.posonlyargs + fn.args.args
+    first = len(positional) - len(fn.args.defaults)
+    out = [(i, a.arg) for i, a in enumerate(positional) if i >= first]
+    out += [
+        (None, a.arg)
+        for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _unset_params(engine: Path = ENGINE, root_files: list[Path] = ROOT_FILES):
+    """{(module, function, param)}: the defaulted parameters of reached
+    public top-level functions that no call site sets. A call site is any
+    call of the function's name in a root or a reached engine body; it
+    sets a parameter by keyword or by position, and a ``*args`` or
+    ``**kwargs`` call sets every parameter."""
+    defs, roots, reached = _reach(engine, root_files)
+    bodies = roots + [node for n in reached for _, node in defs.get(n, ())]
+    by_keyword: dict[str, set[str]] = {}
+    max_positional: dict[str, int] = {}
+    star: set[str] = set()
+    for node in bodies:
+        for call in ast.walk(node):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = getattr(f, "id", getattr(f, "attr", None))
+            if name is None:
+                continue
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                star.add(name)
+            by_keyword.setdefault(name, set()).update(
+                k.arg for k in call.keywords
+            )
+            max_positional[name] = max(
+                max_positional.get(name, 0), len(call.args)
+            )
+    unset = set()
+    for name in reached:
+        if name.startswith("_") or name in star:
+            continue
+        for module, fn in defs.get(name, ()):
+            if isinstance(fn, ast.ClassDef):
+                continue
+            for pos, param in _defaulted(fn):
+                if param in by_keyword.get(name, ()):
+                    continue
+                if pos is not None and pos < max_positional.get(name, 0):
+                    continue
+                unset.add((module, name, param))
+    return unset
 
 
 def test_every_public_engine_name_is_reached_or_allowlisted():
@@ -353,10 +485,42 @@ def test_allowlist_only_shrinks():
         assert len(names) == len(set(names)), f"duplicate entry in {module}"
 
 
+def test_every_defaulted_param_of_a_reached_function_is_set():
+    unset = _unset_params()
+    allowed = {
+        (m, f, p) for (m, f), params in PARAM_ALLOWLIST.items() for p in params
+    }
+    missing = sorted(unset - allowed)
+    assert not missing, (
+        "defaulted parameters of reached functions that no root or reached "
+        "body sets (drop the parameter, set it from a root, or allowlist it "
+        f"with a reason): {missing}"
+    )
+
+
+def test_param_allowlist_only_shrinks():
+    unset = _unset_params()
+    stale = sorted(
+        (m, f, p)
+        for (m, f), params in PARAM_ALLOWLIST.items()
+        for p in params
+        if (m, f, p) not in unset
+    )
+    assert not stale, (
+        "allowlisted parameters that a call site now sets or that no longer "
+        f"exist (drop them from PARAM_ALLOWLIST): {stale}"
+    )
+    for key, params in PARAM_ALLOWLIST.items():
+        assert len(params) == len(set(params)), f"duplicate entry in {key}"
+
+
 def test_gate_sees_an_unreached_function(tmp_path):
-    """The pass itself: a function only a test calls is unreached;
+    """The passes themselves. A function only a test calls is unreached;
     calling it from a root, from a reached function, or (for the helpers
-    of an allowlisted name) from a seed reaches it."""
+    of an allowlisted name) from a seed reaches it. A defaulted parameter
+    counts as set when some reached call passes it by keyword or by
+    position, or splats ``*args``/``**kwargs`` into the function; an
+    unreached function and a private one are not checked."""
     engine = tmp_path / "pkg"
     engine.mkdir()
     (engine / "queries_x.py").write_text(
@@ -384,3 +548,31 @@ def test_gate_sees_an_unreached_function(tmp_path):
     assert _unreached(engine, [root], seeds={"orphan"}) == {("ops", "_dead")}
     root.write_text("import pkg.ops as o\no.Tool\no.orphan()\n")
     assert _unreached(engine, [root]) == {("ops", "_dead")}
+
+    # the parameter pass
+    engine = tmp_path / "params" / "pkg"
+    engine.mkdir(parents=True)
+    (engine / "ops.py").write_text(
+        "def served(df, k=10, b=0.75, *, probe=1, mode='a'):\n"
+        "    return df\n\n"
+        "def splat(df, k=10, b=0.75):\n    return df\n\n"
+        "def orphan(df, k=10):\n    return df\n\n"
+        "def _private(df, k=10):\n    return df\n\n"
+        "def wrapper(*args, **kwargs):\n    return splat(*args, **kwargs)\n"
+    )
+    root = tmp_path / "params" / "cli.py"
+    root.write_text(
+        "import pkg.ops as o\n"
+        "o.served(df, 5, probe=2)\n"
+        "o.wrapper(df)\n"
+        "o._private(df)\n"
+    )
+    assert _unset_params(engine, [root]) == {
+        ("ops", "served", "b"), ("ops", "served", "mode")
+    }
+    root.write_text(
+        "import pkg.ops as o\n"
+        "o.served(df, 5, 0.5, mode='b', probe=2)\n"
+        "o.wrapper(df)\n"
+    )
+    assert _unset_params(engine, [root]) == set()

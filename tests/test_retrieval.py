@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators import retrieval
+from tests.spec_reference import lexical_decontaminate
 
 K1, B, SCALE = retrieval.K1, retrieval.B, retrieval.SCALE
 
@@ -106,26 +107,6 @@ def test_bm25_df_cap_drops_stopword_postings(spark, planted):
         k for k, v in _naive_bm25(DOCS, QUERIES, max_df_ratio=0.4).items() if v > 0
     }
     assert got == want
-
-
-def test_lexical_decontaminate_flags_shared_rare_vocab(spark):
-    train = spark.createDataFrame(
-        [
-            (1, "the mitochondria is the powerhouse of the cell"),
-            (2, "photosynthesis converts sunlight into chemical energy"),
-            (3, "completely unrelated text about sailing boats"),
-        ],
-        "doc_id long, text string",
-    )
-    eval_docs = spark.createDataFrame(
-        # paraphrase sharing rare vocabulary with train doc 1, no exact 5-gram
-        [(900, "which organelle is called powerhouse of a cell mitochondria")],
-        "doc_id long, text string",
-    )
-    flagged = retrieval.lexical_decontaminate(
-        train, eval_docs, k=1, min_score=0.1
-    ).collect()
-    assert [(r.doc_id, r.eval_id) for r in flagged] == [(1, 900)]
 
 
 def test_bm25_plan_has_no_cartesian_and_broadcasts_query_side(spark, planted):
@@ -456,7 +437,7 @@ def test_streaming_ingest_compact_and_expire(spark, planted, tmp_path):
 
 def test_lexical_decontaminate_from_index_matches_rescan(spark, tmp_path):
     """The continuous-decontamination serve path flags the same docs with
-    the same strongest accuser as the full-scan lexical_decontaminate."""
+    the same strongest accuser as the full-rescan reference."""
     docs = spark.createDataFrame(
         [
             (1, "mitochondria are the powerhouse of the cell"),
@@ -479,9 +460,7 @@ def test_lexical_decontaminate_from_index_matches_rescan(spark, tmp_path):
     }
     want = {
         (r.doc_id, r.eval_id, r.score)
-        for r in retrieval.lexical_decontaminate(
-            docs, evals, k=5, min_score=0.1
-        ).collect()
+        for r in lexical_decontaminate(docs, evals, k=5, min_score=0.1).collect()
     }
     assert got == want and got
 

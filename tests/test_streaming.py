@@ -1631,120 +1631,6 @@ def test_dup_span_store_compact_and_expire(spark, tmp_path_factory):
         pipelines.dup_span_store_expire(spark, store, store, one)
 
 
-@pytest.mark.slow
-def test_lang_drift_sink_flags_planted_lang_shift(spark, tmp_path_factory):
-    """r10 lang-share drift: a crawl that starts in English and drifts into
-    Spanish mid-stream crosses the PSI 0.25 rule in the drifted window and
-    stays quiet in the stable one; the sink's accumulated counts fold to
-    EXACTLY the one-shot lang_window_counts of the same docs (stream ≡
-    batch), and abstained/OOV predictions occupy their own bin."""
-    import datetime as dt
-
-    from pulsar_replay_spark.operators import classifier, quality
-
-    en = ["the house is on the hill and it was warm for the people",
-          "this is not the only way to do it in the house",
-          "we have seen that it was good for the people and the dog",
-          "the dog and the cat are in the garden with the children"]
-    es = ["el perro y el gato están en la casa con los niños",
-          "esto es muy bueno para los que no tienen nada en la casa",
-          "la vida es como una caja de sorpresas para todos los niños",
-          "los libros están sobre la mesa de madera en la casa"]
-    train = spark.createDataFrame(
-        [(i, t, "en") for i, t in enumerate(en)]
-        + [(100 + i, t, "es") for i, t in enumerate(es)],
-        "doc_id long, text string, lang string",
-    )
-    model = classifier.lang_classifier_train(train, n_iter=10)
-
-    # frozen reference: a vetted, English-dominant corpus
-    ref_docs = spark.createDataFrame(
-        [(i, en[i % 4] + f" r{i}") for i in range(40)]
-        + [(100 + i, es[i % 4] + f" r{i}") for i in range(4)],
-        "doc_id long, text string",
-    )
-    ref_h = classifier.lang_share_counts(ref_docs, model).localCheckpoint(
-        eager=True
-    )
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    stable = [
-        (1000 + i, en[i % 4] + f" s{i}", base + dt.timedelta(seconds=30 * i))
-        for i in range(40)
-    ] + [
-        (1100 + i, es[i % 4] + f" s{i}", base + dt.timedelta(seconds=40 * i))
-        for i in range(4)
-    ]
-    drifted = [
-        (2000 + i, es[i % 4] + f" d{i}",
-         base + dt.timedelta(hours=1, seconds=30 * i))
-        for i in range(40)
-    ]
-    src = str(tmp_path_factory.mktemp("lang_src"))
-    schema = "doc_id long, text string, ts timestamp"
-    # the drifted hour split across batches, straggler included
-    for fname, part in (
-        ("b0", stable), ("b1", drifted[:30]), ("b2", drifted[30:39]),
-        ("b3", drifted[39:]),
-    ):
-        spark.createDataFrame(part, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/{fname}")
-
-    monitor = str(tmp_path_factory.mktemp("lang_mon"))
-    ck = str(tmp_path_factory.mktemp("lang_ck"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    pipelines.lang_drift_sink(
-        stream, model, monitor, ck, window="1 hour"
-    ).awaitTermination()
-
-    got = {r["window_start"]: r for r in
-           pipelines.drift_monitor_read(spark, monitor, ref_h).collect()}
-    assert len(got) == 2
-    assert got[base]["psi"] < 0.1
-    assert got[base + dt.timedelta(hours=1)]["psi"] > 0.25
-    assert got[base + dt.timedelta(hours=1)]["n_cur"] == 40
-
-    # stream ≡ one-shot over all rows despite the multi-batch split
-    one_shot = {
-        r["window_start"]: r["psi"]
-        for r in quality.psi_from_window_hist(
-            classifier.lang_window_counts(
-                spark.read.parquet(f"{src}/*"), model, window="1 hour"
-            ),
-            ref_h,
-        ).collect()
-    }
-    assert {w: r["psi"] for w, r in got.items()} == one_shot
-
-    # the abstain bin: gibberish lands at index len(langs), not in a lang
-    gib = spark.createDataFrame(
-        [(9000, "zzqx wqv kkjj pzt 0192 8374")], "doc_id long, text string"
-    )
-    bins = {r.bin: r.n for r in classifier.lang_share_counts(gib, model).collect()}
-    assert bins == {len(model["langs"]): 1}
-
-    # the labeled breakdown names WHICH language moved: es absorbs the
-    # drifted window's share, en loses it, labels are language names
-    drift_docs = spark.read.parquet(f"{src}/*").filter(
-        F.col("ts") >= base + dt.timedelta(hours=1)
-    )
-    cur = classifier.lang_share_counts(drift_docs, model)
-    contrib = {
-        r.lang: r for r in classifier.lang_psi_contributions(
-            model, ref_h, cur
-        ).collect()
-    }
-    assert set(contrib) <= set(model["langs"]) | {"__abstain__"}
-    assert contrib["es"].p_cur > contrib["es"].p_ref
-    assert contrib["en"].p_cur < contrib["en"].p_ref
-    assert contrib["es"].psi_term > 0
-
-
 def test_compactors_refuse_in_place_overwrite(spark, tmp_path_factory):
     """rollup_compact and cdc_compact must refuse out_dir == source dir —
     lazy parquet reads would clobber their own input mid-fold."""

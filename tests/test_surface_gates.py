@@ -1,8 +1,8 @@
 """Gates for the last unexercised public surface: the SimHash hamming-0
-cluster operator, the sigmoid closed form, the streaming console sink, the
-availableNow drain helpers, and the broker-facing reader/writer option
-mapping (drivable without a broker only up to plan construction — asserted
-to fail on the CONNECTOR boundary, not inside the engine).
+cluster operator, the streaming console sink, the availableNow drain
+helpers, and the broker-facing reader/writer option mapping (drivable
+without a broker only up to plan construction — asserted to fail on the
+CONNECTOR boundary, not inside the engine).
 """
 
 from __future__ import annotations
@@ -27,31 +27,6 @@ def test_simhash_dup_clusters_find_planted_identicals(spark, documents):
     assert originals <= keeps
     for r in clusters:
         assert r["n_docs"] > 1
-
-
-def test_sigmoid_matches_lr_score(spark, documents):
-    """lr_score's inline expression must equal the exported closed form."""
-    import math
-
-    from pulsar_replay_spark.operators import classifier
-
-    feats = classifier.doc_features(documents.limit(20))
-    weights = feats.select("bucket").distinct().withColumn("w", F.lit(0.1))
-    scored = {r["doc_id"]: r["score"] for r in classifier.lr_score(feats, weights, bias=-0.5).collect()}
-    margins = {
-        r["doc_id"]: r["m"]
-        for r in feats.join(weights, "bucket")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("w") * F.col("x")).alias("m"))
-        .collect()
-    }
-    assert scored
-    for d, s in scored.items():
-        assert abs(s - classifier.sigmoid(margins[d] - 0.5)) < 1e-12
-        assert abs(classifier.sigmoid(0.0) - 0.5) < 1e-15
-        assert math.isclose(
-            classifier.sigmoid(3.0) + classifier.sigmoid(-3.0), 1.0, abs_tol=1e-12
-        )
 
 
 def test_console_stream_drains(spark, tmp_path):

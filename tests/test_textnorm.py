@@ -1,16 +1,13 @@
-"""Unicode repair (operators/textnorm.py): mojibake fix + NFC — python-twin
-equality for the DataFrame op, Catalyst marker count == python count,
-planted single/double/Cyrillic mojibake restored byte-exact, clean text
-(including the SÃO/AÑOS false-positive lookalikes) untouched, hypothesis
-totality, and the funnel's fix_text stage re-colliding a mangled duplicate
-in exact dedup."""
+"""Mojibake detection (operators/textnorm.py): the Catalyst marker count
+equals a Python count over the same pattern, and the per-source rates the
+data card reports."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators import textnorm
+from tests.spec_reference import marker_count_py
 
 ORIG = "l'été — déjà vu"
 MOJI = ORIG.encode("utf-8").decode("cp1252")
@@ -19,34 +16,6 @@ CYR = "привет мир"
 CYR_MOJI = CYR.encode("utf-8").decode("latin-1")
 CLEAN = ["SÃO PAULO", "AÑOS despues", "hello world", "café au lait", ""]
 DECOMPOSED = "éclair"  # e + combining acute
-
-
-def test_fix_mojibake_python_kernel():
-    assert textnorm.fix_mojibake_text(MOJI) == ORIG
-    assert textnorm.fix_mojibake_text(DOUBLE) == ORIG  # two rounds
-    assert textnorm.fix_mojibake_text(CYR_MOJI) == CYR
-    for s in CLEAN:
-        assert textnorm.fix_mojibake_text(s) == s
-    # NFC composes the decomposed form; repair_text = fix + NFC
-    assert textnorm.repair_text(DECOMPOSED) == "éclair"
-
-
-def test_repair_corpus_matches_python_twin(spark):
-    rows = [(i, t) for i, t in enumerate(
-        [ORIG, MOJI, DOUBLE, CYR_MOJI, DECOMPOSED, *CLEAN]
-    )]
-    docs = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
-        "n_chars", F.length("text").cast("long")
-    )
-    got = {
-        r.doc_id: (r.text, r.n_chars)
-        for r in textnorm.repair_corpus(docs).collect()
-    }
-    for i, t in rows:
-        want = textnorm.repair_text(t)
-        assert got[i] == (want, len(want)), (i, t)
-    # the planted repairs actually landed
-    assert got[1][0] == ORIG and got[2][0] == ORIG and got[3][0] == CYR
 
 
 def test_marker_count_catalyst_equals_python(spark):
@@ -60,48 +29,9 @@ def test_marker_count_catalyst_equals_python(spark):
             "i", textnorm.mojibake_marker_count(F.col("text")).alias("n")
         ).collect()
     }
-    want = {i: textnorm._marker_count_py(t) for i, t in rows}
+    want = {i: marker_count_py(t) for i, t in rows}
     assert got == want
     assert want[1] > 0 and want[0] == 0  # mojibake detected, clean not
-
-
-def test_repair_is_total_and_idempotent_on_fuzz():
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.text(max_size=60))
-    def fuzz(s):
-        r = textnorm.repair_text(s)
-        assert isinstance(r, str)
-        # idempotence: a repaired text needs no further repair
-        assert textnorm.repair_text(r) == r
-
-    fuzz()
-
-
-def test_curate_corpus_fix_text_recollides_mangled_duplicate(spark):
-    """The operational story: a mojibake copy of a clean doc has a
-    different content hash and survives exact dedup — unless fix_text
-    repairs it first, after which the two collapse to one."""
-    from pulsar_replay_spark import pipeline
-
-    base = "the décor of the café was déjà vu all over again " * 3
-    rows = [
-        (1, base, "web"),
-        (2, base.encode("utf-8").decode("cp1252"), "web"),  # mangled copy
-        (3, "a completely different document about sailing boats", "web"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-
-    plain = pipeline.curate_corpus(docs, budget_tokens=1_000)
-    plain_stages = {r.stage: r.n_docs for r in plain["report"].collect()}
-    assert plain_stages["deduped"] == 3  # mangled copy NOT caught
-
-    fixed = pipeline.curate_corpus(docs, budget_tokens=1_000, fix_text=True)
-    stages = {r.stage: r.n_docs for r in fixed["report"].collect()}
-    assert stages["text_repaired"] == 3  # repair never drops rows
-    assert stages["deduped"] == 2  # repaired copy re-collided
 
 
 def test_mojibake_report_rates(spark):

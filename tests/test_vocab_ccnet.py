@@ -1,16 +1,12 @@
-"""Vocabulary Zipf/coverage report + CCNet perplexity buckets.
+"""Vocabulary Zipf/coverage report.
 
 Gates: exact DuckDB-twin equality for vocab_stats (counts, rank order,
-cumulative coverage), coverage monotonicity, CCNet bucket partition
-invariants (ordering between tiers, ~1/3 shares, short==NULL surfacing),
-prebuilt-LM reuse equality, and the broadcast-threshold plan shape.
+cumulative coverage) and coverage monotonicity.
 """
 
 from __future__ import annotations
 
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators import quality
 
@@ -48,48 +44,3 @@ def test_vocab_stats_coverage_monotone_and_bounded(spark, documents):
     assert 0 < shares[0] and shares[-1] <= 1.0
     cnts = [r["cnt"] for r in rows]
     assert cnts == sorted(cnts, reverse=True)
-
-
-@pytest.fixture(scope="module")
-def buckets(spark, documents):
-    return quality.ccnet_buckets(documents).localCheckpoint(eager=True)
-
-
-def test_ccnet_buckets_partition_and_ordering(spark, documents, buckets):
-    rows = buckets.collect()
-    assert len(rows) == documents.count()
-    assert {r["bucket"] for r in rows} <= {"head", "middle", "tail", "short"}
-    for r in rows:
-        assert (r["bucket"] == "short") == (r["nll"] is None)
-    by_lang: dict[str, dict[str, list[float]]] = {}
-    for r in rows:
-        if r["nll"] is not None:
-            by_lang.setdefault(r["lang"], {}).setdefault(r["bucket"], []).append(r["nll"])
-    for lang, tiers in by_lang.items():
-        if "head" in tiers and "middle" in tiers:
-            assert max(tiers["head"]) <= min(tiers["middle"])
-        if "middle" in tiers and "tail" in tiers:
-            assert max(tiers["middle"]) <= min(tiers["tail"])
-        # tiers are ~tertiles of each language's own distribution
-        n = sum(len(v) for v in tiers.values())
-        for tier, vals in tiers.items():
-            assert abs(len(vals) / n - 1 / 3) < 0.2, (lang, tier, len(vals), n)
-
-
-def test_ccnet_buckets_reuse_prebuilt_lm(spark, documents, buckets):
-    scores = quality.lm_doc_scores(documents)
-    reused = quality.ccnet_buckets(documents, scores=scores)
-    assert sorted(map(tuple, reused.collect())) == sorted(
-        map(tuple, buckets.collect())
-    )
-
-
-def test_ccnet_threshold_join_is_broadcast(spark, documents):
-    plan = (
-        quality.ccnet_buckets(documents)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan

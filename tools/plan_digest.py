@@ -205,7 +205,6 @@ def main() -> None:
         "pca_project (serve)": pca.pca_project(emb, model),
         "mmr_rerank (serve)": similarity.mmr_rerank(emb, mmr_pool, k=5),
         "vocab_stats": quality.vocab_stats(docs, top_k=100),
-        "ccnet_buckets": quality.ccnet_buckets(docs),
         "merge_upsert": curation.merge_upsert(docs, feed),
         "scd2_lookup": __import__(
             "pulsar_replay_spark.operators.asof", fromlist=["scd2_lookup"]
@@ -221,7 +220,6 @@ def main() -> None:
             "ts",
         ),
         "length_bucketed_batches": packing.length_bucketed_batches(docs),
-        "hashed_doc_vectors": quality.hashed_doc_vectors(docs),
     }
     # r8: BM25 serving over 32 queries — expected: every
     # query-side join a BroadcastHashJoin, one BNLJ (the 1-row stats frame)
@@ -248,10 +246,6 @@ def main() -> None:
     llm_serving["bm25_topk_from_index (serve)"] = retrieval.bm25_topk_from_index(
         spark, _idx_dir, _bm25_queries, k=10
     )
-    # r9: Unicode repair — expected: one scan + ArrowEvalPython, no shuffle
-    from pulsar_replay_spark.operators import textnorm
-
-    llm_serving["unicode_repair_corpus"] = textnorm.repair_corpus(docs)
     # r9: span decontamination — expected: broadcast bench-shingle join,
     # contamination-bounded agg, one doc_id re-join, no token explode in
     # the reconstruction (HOF filter)
