@@ -25,7 +25,7 @@ gate in tests proves the scale path implements exactly this semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -271,25 +271,27 @@ def dsir_bucket_log_ratio(
     Returns (ratio frame (bucket, log_ratio), default log-ratio for buckets
     unseen in BOTH corpora — the constant an unseen bucket's smoothed
     probabilities reduce to, used when scoring future/held-out docs against
-    a prebuilt ratio table). The two corpus totals are build-time scalars
-    (one action over the pinned bucket counts); the ratio frame is
-    ≤ 16^hex_chars rows — an always-broadcastable model artifact."""
+    a prebuilt ratio table). The two corpus totals are build-time scalars,
+    observed inside the job that pins the bucket counts (no action of
+    their own); the ratio frame is ≤ 16^hex_chars rows — an
+    always-broadcastable model artifact."""
     import math
 
     n_buckets = 16**hex_chars
-    # (bucket, tc, rc) is ≤ 16^hex rows: pinned once, it feeds both totals
-    # (one action) and the ratio, so each corpus's feature explode runs
-    # exactly once in here
+    # (bucket, tc, rc) is ≤ 16^hex rows: pinned once, its checkpoint job
+    # observes both totals and the ratio projects it, so each corpus's
+    # feature explode runs exactly once in here
+    totals = Observation("dsir-totals")
     counts = (
         target_feats.groupBy("bucket")
         .agg(F.sum("cnt").alias("tc"))
         .join(raw_feats.groupBy("bucket").agg(F.sum("cnt").alias("rc")),
               "bucket", "full")
+        .observe(totals, F.sum("tc").alias("tc"), F.sum("rc").alias("rc"))
         .localCheckpoint(eager=True)
     )
-    totals = counts.agg(F.sum("tc"), F.sum("rc")).first()
-    t_total = totals[0] or 0
-    r_total = totals[1] or 0
+    t_total = totals.get["tc"] or 0
+    r_total = totals.get["rc"] or 0
     log_ratio = F.log(
         (F.coalesce(F.col("tc"), F.lit(0)) + F.lit(alpha))
         / F.lit(float(t_total + alpha * n_buckets))

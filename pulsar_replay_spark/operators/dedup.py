@@ -165,12 +165,14 @@ def minhash_candidate_pairs(
     """Near-duplicate candidate pairs: docs sharing any LSH band bucket —
     (bands, rows_per_band) is ``lsh_plan``'s geometry knob, default 4×2.
 
-    The bucket DataFrame is persisted before the self-join so the shingle →
-    signature pipeline runs once, not once per join side. At 100 TB the same
-    plan holds: the persisted buckets relation is (doc_id, band, band_key) —
-    tiny relative to the corpus — and the join shuffles only that."""
-    buckets = minhash_band_buckets(docs, bands, rows_per_band).persist()
-    buckets.count()  # materialize so both join sides reuse the cache
+    The bucket DataFrame is locally checkpointed before the self-join so
+    the shingle → signature pipeline runs once, not once per join side. At
+    100 TB the same plan holds: the pinned buckets relation is (doc_id,
+    band, band_key) — tiny relative to the corpus — and the join shuffles
+    only that."""
+    buckets = minhash_band_buckets(docs, bands, rows_per_band).localCheckpoint(
+        eager=True
+    )
     a = buckets.alias("a")
     b = buckets.alias("b")
     pairs = (
@@ -183,12 +185,12 @@ def minhash_candidate_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    # Truncate lineage and RELEASE the bucket cache: pairs is tiny (dups
-    # only); without this, composed pipelines (cluster → anti-join → re-dedup)
-    # accumulate every intermediate cache for the session's lifetime.
-    pairs = pairs.localCheckpoint(eager=True)
-    buckets.unpersist()
-    return pairs
+    # Truncate lineage: pairs is tiny (dups only), and once it is pinned
+    # nothing refers to the bucket checkpoint, whose blocks the
+    # ContextCleaner then reclaims. Composed pipelines (cluster → anti-join
+    # → re-dedup) so never accumulate intermediate caches for the session's
+    # lifetime.
+    return pairs.localCheckpoint(eager=True)
 
 
 def incremental_minhash_pairs(
@@ -833,26 +835,32 @@ def connected_components(
 
     Hybrid finish: the dedup *edge* relation (LSH collisions above
     threshold) is orders of magnitude smaller than the corpus; when the
-    materialized edge count — already an action this operator pays — is
-    ≤ ``small_graph_edges`` (~16 MB of longs), the closure runs as a
-    driver-side union-find instead of diameter× cluster rounds that would
-    be pure shuffle overhead on a near-empty frame. Same size-gated
-    strategy switch as Spark's broadcast threshold, and the same shape real
-    hybrid-CC systems use (finish locally once the frontier is small); the
-    distributed loop remains the path for graphs past the gate, and both
-    paths are equality-tested. ``small_graph_edges=0`` forces distributed.
+    raw ``pairs`` frame holds ≤ ``small_graph_edges`` rows (~16 MB of
+    longs), the closure runs as a driver-side union-find instead of
+    diameter× cluster rounds that would be pure shuffle overhead on a
+    near-empty frame. The gate counts raw pairs, not symmetric edges: one
+    collect of at most ``small_graph_edges + 1`` pairs both decides it and
+    feeds the union-find, so a small graph costs that one job. Same
+    size-gated strategy switch as Spark's broadcast threshold, and the same
+    shape real hybrid-CC systems use (finish locally once the frontier is
+    small); the distributed loop remains the path for graphs past the gate,
+    and both paths are equality-tested. ``small_graph_edges=0`` forces
+    distributed. Past the gate the loop reads ``pairs`` a second time, so a
+    lazy ``pairs`` lineage runs twice there; ``minhash_candidate_pairs``
+    returns a checkpoint, which makes that second read a block scan.
 
     The reference has no graph ops (SURVEY §2.3); this is the engine's
     iterative-algorithm seam (same pattern serves PageRank-style scoring).
     """
-    sym = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    sym = sym.distinct().persist()
-    n_edges = sym.count()  # materialize once: the upstream pair pipeline
-    # (minhash etc.) must never re-run inside the loop
-
-    if n_edges <= small_graph_edges:
+    # one bounded collect decides the gate and, under it, is the
+    # union-find's whole input. Through the RDD: a DataFrame
+    # limit(n).collect() scans 1, then 4, 16, … partitions in one job each
+    # until it has n rows, which a graph below the gate never fills
+    # (toLocalIterator would pay one job per partition)
+    edges = (
+        pairs.select("doc_a", "doc_b").limit(small_graph_edges + 1).rdd.collect()
+    )
+    if len(edges) <= small_graph_edges:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -863,17 +871,21 @@ def connected_components(
                 parent[x], x = root, parent[x]
             return root
 
-        # one collect — the gate bounds it to ≤ small_graph_edges rows
-        # (~16 MB of longs); toLocalIterator would pay one job per partition
-        for r in sym.collect():
-            ra, rb = find(r.src), find(r.dst)
+        for a, b in edges:
+            ra, rb = find(a), find(b)
             if ra != rb:  # union by min so labels match the distributed path
                 parent[max(ra, rb)] = min(ra, rb)
         rows = [(v, find(v)) for v in parent]
-        dt = sym.schema["src"].dataType.simpleString()  # match distributed-path types
-        sym.unpersist()
+        dt = pairs.schema["doc_a"].dataType.simpleString()  # match distributed-path types
         spark = pairs.sparkSession
         return spark.createDataFrame(rows, f"doc_id {dt}, cluster_id {dt}")
+
+    sym = pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+    sym = sym.distinct().persist()
+    sym.count()  # materialize once: the upstream pair pipeline (minhash etc.)
+    # must never re-run inside the loop
 
     labels = (
         sym.select(F.col("src").alias("v")).distinct().withColumn("label", F.col("v"))

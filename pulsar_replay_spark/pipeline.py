@@ -18,15 +18,17 @@ partition the selection, packed tokens conserve the train split).
 Scale posture: stages communicate by doc_id frames (anti-join / semi-join
 joins on the primary key) and no stage re-reads text it does not need.
 Each reported stage of ``curate_corpus`` is computed once: it is locally
-checkpointed as it is built, so the next stage, the funnel report's count
-and the caller's collects read its blocks. Lazy stage frames would re-run
-the whole upstream lineage (shingles, MinHash, DSIR features) once per
-consumer; the operators' own caches pin only their internal artifacts.
+checkpointed as it is built, so the next stage and the caller's collects
+read its blocks. Lazy stage frames would re-run the whole upstream lineage
+(shingles, MinHash, DSIR features) once per consumer; the operators' own
+caches pin only their internal artifacts. Each checkpoint job also
+observes its stage's row count, so the funnel report is a local relation
+of counts and not a lazy projection that counts every stage again.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_replay_spark.operators import curation, dedup, packing, quality
@@ -54,15 +56,18 @@ def curate_corpus(
     report (stage, n_docs rows in pipeline order). Each returned stage
     frame is the frame its report row counts.
 
-    Every reported stage frame (``deduped``, ``decontaminated``,
-    ``filtered``, ``selected`` and the train docs packing reads) is an eager
-    local checkpoint: the call runs the funnel's heavy work, and the
-    returned frames only read stored blocks. ``split``, ``packed`` and
-    ``report`` stay lazy projections of them. The blocks live until the
-    returned frames are garbage-collected. That suits ``local[N]``; on a
-    cluster a lost executor loses its blocks, and a frame that read them
-    fails."""
-    stages: list[tuple[str, DataFrame]] = [("input", docs)]
+    The input and every reported stage frame (``deduped``,
+    ``decontaminated``, ``filtered``, ``selected`` and the train docs
+    packing reads) is an eager local checkpoint: the call runs the funnel's
+    heavy work, and the returned frames only read stored blocks. Each
+    stage's row count is observed inside its checkpoint job, so ``report``
+    is a local relation of those counts and collecting it runs no job.
+    ``split`` and ``packed`` stay lazy projections of the stages. The blocks
+    live until the returned frames are garbage-collected. That suits
+    ``local[N]``; on a cluster a lost executor loses its blocks, and a frame
+    that read them fails. A narrow input is spread first (``_spread``)."""
+    stages: list[tuple[str, Observation]] = []
+    docs = _stage(stages, "input", _spread(docs))
 
     deduped = _stage(stages, "deduped", dedup.dedup_corpus(docs))
 
@@ -75,15 +80,17 @@ def curate_corpus(
     decontaminated = _stage(stages, "decontaminated", decontaminated)
 
     # per-source quality floor on TTR — cheap, text-local, runs before any
-    # model scoring so the scorer never sees the bottom tail
-    ttr = decontaminated.select(
-        "doc_id",
-        "source",
-        curation.default_quality_score(F.col("text")).alias("score"),
+    # model scoring so the scorer never sees the bottom tail; the floor
+    # filters the stage's own rows, so no join back by doc_id is needed
+    ttr = decontaminated.withColumn(
+        "score", curation.default_quality_score(F.col("text"))
     )
-    kept_ids = quality.drop_bottom_quantile(ttr, DROP_QUANTILE).select("doc_id")
     filtered = _stage(
-        stages, "filtered", decontaminated.join(kept_ids, "doc_id", "left_semi")
+        stages,
+        "filtered",
+        quality.drop_bottom_quantile(ttr, DROP_QUANTILE).select(
+            *decontaminated.columns
+        ),
     )
 
     # selection score: DSIR log importance weight against the target corpus
@@ -118,40 +125,54 @@ def curate_corpus(
         "selected": selected,
         "split": split,
         "packed": packed,
-        "report": _funnel_report(stages),
+        "report": _funnel_report(docs.sparkSession, stages),
     }
 
 
-def _stage(
-    stages: list[tuple[str, DataFrame]], name: str, df: DataFrame
-) -> DataFrame:
-    """Materialize one reported funnel stage and record it under ``name``.
+def _spread(docs: DataFrame) -> DataFrame:
+    """``docs`` round-robined over the session's default parallelism when it
+    has fewer partitions, else ``docs`` itself. One small file is one
+    partition, and would put every MinHash and DSIR explode of the funnel
+    on one task. A plan that holds a shuffle is adaptive and would run that
+    shuffle just to report its width, so it is left as its shuffle laid it
+    out; a scan reports its width without a job."""
+    width = docs.sparkSession.sparkContext.defaultParallelism
+    plan = docs._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan" or docs.rdd.getNumPartitions() >= width:
+        return docs
+    return docs.repartition(width)
 
-    Every later stage, the report's count and the caller's collects then
-    read the stage's blocks instead of re-running its lineage (shingles,
-    MinHash, the benchmark overlap, the quality quantile). A local
-    checkpoint, not persist: the frame outlives this call, so nothing here
-    could know when to release a cache."""
-    df = df.localCheckpoint(eager=True)
-    stages.append((name, df))
+
+def _stage(
+    stages: list[tuple[str, Observation]], name: str, df: DataFrame
+) -> DataFrame:
+    """Materialize one reported funnel stage and record its row count under
+    ``name``.
+
+    Every later stage and the caller's collects then read the stage's
+    blocks instead of re-running its lineage (shingles, MinHash, the
+    benchmark overlap, the quality quantile). A local checkpoint, not
+    persist: the frame outlives this call, so nothing here could know when
+    to release a cache. The count is an observation at the top of the
+    checkpointed plan: it runs in the checkpoint's own result stage, no
+    extra job, and a retried task's rows count once."""
+    obs = Observation(name)
+    df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    stages.append((name, obs))
     return df
 
 
-def _funnel_report(stages: list[tuple[str, DataFrame]]) -> DataFrame:
-    """(stage_idx, stage, n_docs): one count per stage, unioned in pipeline
-    order — the curation funnel a data card reports."""
-    parts = [
-        df.agg(
-            F.lit(i).alias("stage_idx"),
-            F.lit(name).alias("stage"),
-            F.count("*").cast("bigint").alias("n_docs"),
-        )
-        for i, (name, df) in enumerate(stages)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def _funnel_report(
+    spark: SparkSession, stages: list[tuple[str, Observation]]
+) -> DataFrame:
+    """(stage_idx, stage, n_docs): one row per stage in pipeline order — the
+    curation funnel a data card reports. A SQL ``VALUES`` relation of the
+    observed counts: collecting it runs no job."""
+    rows = ", ".join(
+        f"({i}, '{name}', {int(obs.get['n'])}L)"
+        for i, (name, obs) in enumerate(stages)
+    )
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(stage_idx, stage, n_docs)")
 
 
 def data_card(

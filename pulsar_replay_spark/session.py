@@ -11,6 +11,9 @@ logical plans scale to a multi-executor cluster reading ~100 TB:
   AQE's coalescing makes the initial number mostly irrelevant.
 - Broadcast threshold left at default (10 MB) — dimension tables (region,
   nation, supplier, catalog listings) broadcast; fact tables never do.
+- The whole-stage codegen cache holds 1024 compiled classes, not Spark's
+  100, so a repeated pipeline reuses its classes instead of recompiling
+  them on every call (``maxEntries`` below).
 """
 
 from __future__ import annotations
@@ -54,6 +57,14 @@ def get_spark(app_name: str = "pulsar-replay-spark", cpus: int | None = None) ->
         # raising it.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Generated classes are cached per (classloader, source), and Spark
+        # keeps 100. One curate_corpus call generates about 150 distinct
+        # classes, so at 100 the LRU evicts each class before the next call
+        # asks for it again (measured: 186 Janino compiles, 1.7-2.2 s on 4
+        # cores, per warm call); at 1024 a warm call compiles none.
+        # perfbench's serving op fell from 40-55 compiles to 10-19; the rest
+        # carry data literals (watermark, batch_id) and never hit the cache.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # Partition discovery lists a directory level on the driver while it
         # holds at most this many children; above it Spark starts a listing
         # JOB (64 tasks, ~0.5 s here) per level. Spark's default of 32 made

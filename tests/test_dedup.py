@@ -135,6 +135,25 @@ def test_connected_components_matches_union_find(spark, documents):
     ]
 
 
+def test_connected_components_small_graph_runs_one_job(spark, documents):
+    """Below the gate one bounded collect of the raw pairs feeds the
+    union-find: 1 job on a checkpointed pairs frame. The symmetric edge
+    frame it replaced (union, distinct, persist, count, collect) ran 5.
+    Labels still equal the distributed path's."""
+    pairs = dedup.minhash_candidate_pairs(documents)
+    sc = spark.sparkContext
+    group = "test-cc-small-graph-job-count"
+    sc.setJobGroup(group, "connected_components")
+    try:
+        small = dedup.connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    dist = dedup.connected_components(pairs, small_graph_edges=0)
+    assert small.count() > 0
+    assert sorted(small.collect()) == sorted(dist.collect())
+
+
 def test_connected_components_log_rounds_on_deep_chain(spark):
     """Pointer jumping must collapse a DEEP chain in O(log diameter) rounds:
     a 200-vertex path converges inside max_iter=12 (log2(200) ~ 8 + slack)

@@ -138,11 +138,12 @@ def test_unseen_buckets_score_default(spark):
 
 
 def test_bucket_log_ratio_takes_both_totals_in_one_action(spark, documents, target):
-    """Both corpus totals come from ONE aggregate over the checkpointed
+    """Both corpus totals are observed inside the job that checkpoints the
     (bucket, tc, rc) counts, and the ratio is a projection of them. Before
     the fold each side's bucket aggregate was persisted and summed by its
-    own first() job: 10 jobs for this call, now 6. The weights built on
-    this ratio stay pinned to the DuckDB oracle above."""
+    own first() job: 10 jobs for this call. One first() over the
+    checkpoint: 6 jobs. The observation: 4. The weights built on this
+    ratio stay pinned to the DuckDB oracle above."""
     sc = spark.sparkContext
     group = "test-dsir-ratio-job-count"
     sc.setJobGroup(group, "dsir_bucket_log_ratio")
@@ -152,7 +153,7 @@ def test_bucket_log_ratio_takes_both_totals_in_one_action(spark, documents, targ
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
 
 
 def test_deterministic_under_repartition(documents, target, weights):

@@ -27,22 +27,28 @@ def funnel(spark, documents):
         (F.col("doc_id") + 500_000).alias("doc_id"), "text"
     )
     target = documents.filter(F.col("lang") == "es")
-    sc = spark.sparkContext
-    group = "test-curate-corpus-job-count"
-    sc.setJobGroup(group, "curate_corpus")
-    try:
+
+    def run():
         res = pipeline.curate_corpus(
             documents, benchmark=benchmark, target=target, budget_tokens=BUDGET
         )
         res["packed"].collect()
         res["report"].collect()
+        return res
+
+    res, jobs = _jobs_in_group(spark, "test-curate-corpus-job-count", run)
+    return SimpleNamespace(res=res, benchmark=benchmark, jobs=jobs, run=run)
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return SimpleNamespace(
-        res=res,
-        benchmark=benchmark,
-        jobs=len(sc.statusTracker().getJobIdsForGroup(group)),
-    )
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -52,10 +58,46 @@ def result(funnel, documents):
 
 def test_funnel_job_count(funnel):
     """Each reported stage is checkpointed once inside curate_corpus, so
-    the call plus the packed and report collects runs 54 jobs. With lazy
+    the call plus the packed and report collects runs 41 jobs. With lazy
     stage frames the two collects re-ran the dedup, overlap, quality and
-    DSIR lineages: 85 jobs."""
-    assert funnel.jobs == 54
+    DSIR lineages: 85 jobs. Checkpointed stages with a lazy counting
+    report: 54. Counts observed in the checkpoint jobs, a job-free report,
+    a one-collect small-graph finish and a spread input: 41."""
+    assert funnel.jobs == 41
+
+
+def test_second_call_compiles_nothing(spark, funnel):
+    """A repeated call finds every generated class in the codegen cache.
+    Under Spark's 100-entry default the funnel's classes evicted each
+    other, and each warm call compiled about 186 of them again."""
+    cg = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = cg.METRIC_COMPILATION_TIME().getCount()
+    funnel.run()
+    assert cg.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
+def test_report_collect_runs_no_job(spark, funnel):
+    """The report is a local relation of the counts the stage checkpoints
+    observed. As a union of per-stage counts its collect ran 7 jobs."""
+    rows, jobs = _jobs_in_group(
+        spark, "test-report-collect", funnel.res["report"].collect
+    )
+    assert jobs == 0
+    assert len(rows) == 6
+
+
+def test_spread_leaves_a_wide_input_alone(spark):
+    """An input with at least the default parallelism in partitions keeps
+    its plan: no Exchange. A one-partition input is spread round-robin."""
+    width = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 4 * width, 1, width).select(
+        F.col("id").alias("doc_id"), F.lit("a b c").alias("text")
+    )
+    plan = pipeline._spread(wide)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    narrow = pipeline._spread(wide.coalesce(1))
+    plan = narrow._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan
 
 
 def test_collects_rerun_no_stage_lineage(funnel):
